@@ -70,9 +70,29 @@ def layout_grain(base_partitions: int, parallelism: int, n_docs: int) -> int:
     need = -(-DESIGN_BATCH_WIDTH * max(0, n_docs) // SPILL_FREE_ENTRIES_PER_TASK)
     if need > base_partitions:
         need = -(-need // base_partitions) * base_partitions
-    return int(
-        min(4 * max(base_partitions, parallelism), max(base_partitions, need))
+    # the cap is rounded DOWN to the grain so it stays an even multiple
+    cap = 4 * max(base_partitions, parallelism) // base_partitions * base_partitions
+    return int(min(cap, max(base_partitions, need)))
+
+
+def cached_layout(
+    df: DataFrame,
+    n_docs: int,
+    key: str = "doc_id",
+    layout_partitions: Optional[int] = None,
+) -> DataFrame:
+    """The one layout rule for every cached postings-shaped table:
+    hash-partition by `key` into layout_grain(...) partitions (or an
+    explicit layout_partitions) and sort by term_id within partitions,
+    so query-time term In-filters prune whole cached columnar batches
+    via in-memory stats. Callers decide whether to persist."""
+    spark = df.sparkSession
+    n_part = layout_partitions or layout_grain(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+        spark.sparkContext.defaultParallelism,
+        n_docs,
     )
+    return df.repartition(n_part, key).sortWithinPartitions("term_id")
 
 
 def idf_column(df_col, n_docs: int, method: str):
@@ -88,7 +108,7 @@ def idf_column(df_col, n_docs: int, method: str):
     raise ValueError(f"method must be one of {VALID_METHODS}, got {method!r}")
 
 
-@dataclass
+@dataclass(eq=False)
 class InvertedIndex:
     """Distributed index state: three tables + driver scalars."""
 
@@ -158,8 +178,6 @@ def build_inverted_index(
     b: float = 0.75,
     method: str = "robertson",
     cache: bool = True,
-    vocab_broadcast_threshold: int = 2_000_000,
-    partition_by_doc: bool = True,
     layout_partitions: int | None = None,
 ) -> InvertedIndex:
     """docs (doc_id, tokens array<string>) -> InvertedIndex.
@@ -251,21 +269,7 @@ def build_inverted_index(
     #     scoring shuffle carries one row per matched (query, doc)
     #     instead of one per (query, doc, partition-of-term)
     #     (profiled: 107M partial rows -> 3.1M unique groups).
-    if partition_by_doc:
-        n_part = layout_partitions or layout_grain(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            spark.sparkContext.defaultParallelism,
-            n_docs,
-        )
-        # sortWithinPartitions("term"): cached columnar batches then
-        # cover narrow term ranges, so a query-time
-        # postings.filter(term IN (...)) prunes whole batches via
-        # in-memory stats (spark.sql.inMemoryColumnarStorage.
-        # partitionPruning) — the cache-side analogue of the
-        # term-bucketed parquet layout's bucket pruning.
-        postings = postings.repartition(n_part, "doc_id").sortWithinPartitions(
-            "term_id"
-        )
+    postings = cached_layout(postings, n_docs, layout_partitions=layout_partitions)
 
     if cache:
         postings = postings.persist()

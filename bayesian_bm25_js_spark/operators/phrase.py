@@ -28,9 +28,9 @@ whole batch of phrases and runs ONE plan; per-batch cost amortizes
 across queries exactly as in operators/scoring.score_queries.
 
 Scale notes (100 TB): the positional cache layout is hash-partitioned
-by doc_id with the same 4×-cores grain as the main postings cache, so
-the phrase-match groupBy(query_id, doc_id) combines map-side and the
-shuffle carries one row per matched (query, doc); the slot pivot is a
+by doc_id by the same rule as the main postings cache
+(index_build.cached_layout), so the phrase-match groupBy(query_id,
+doc_id) combines map-side and the shuffle carries one row per matched (query, doc); the slot pivot is a
 conditional max, never a collect over docs. The join's query side is
 broadcast (slots × batch rows). Skewed phrase terms ("the", "table")
 cost a wide scan but never a single-task funnel: matching is
@@ -47,21 +47,21 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bayesian_bm25_js_spark.operators.index_build import idf_column
+from bayesian_bm25_js_spark.operators.index_build import cached_layout, idf_column
 from bayesian_bm25_js_spark.operators.scoring import isin_filter, top_k
 
 # Corpus-size floor for the rarest-term candidate pruning (see
 # _slot_pivot): below this the pruning's two fixed driver actions cost
 # more than the whole fan-in (measured at 5k docs: 1.7s vs 1.0s).
 CANDIDATE_PRUNE_MIN_DOCS = 50_000
-# Per-query selectivity gate: a query joins the candidate probe only
-# when its RAREST term's df is under this fraction of the corpus —
-# the same "nothing selective to exploit" threshold the WAND router
-# uses (route_queries hot_df_frac). All-hot queries skip the probe.
+# Selectivity gate: a batch probes the candidate set only when EVERY
+# query's rarest term's df is under this fraction of the corpus — the
+# same "nothing selective to exploit" threshold the WAND router uses
+# (route_queries hot_df_frac).
 PRUNE_HOT_DF_FRAC = 0.10
 
 
-@dataclass
+@dataclass(eq=False)
 class PositionalIndex:
     """Positional postings + the corpus constants BM25 needs."""
 
@@ -76,8 +76,8 @@ class PositionalIndex:
     # a groupBy+collect on EVERY phrase/proximity call was the round-5
     # perf-weak (~1s fixed driver cost per batch at >=50k docs). Keyed
     # by the query-side vocabulary actually seen, so it stays tiny.
-    _df_cache: dict = field(default_factory=dict, repr=False, compare=False)
-    _max_doc_id: Optional[int] = field(default=None, repr=False, compare=False)
+    _df_cache: dict = field(default_factory=dict, repr=False)
+    _doc_id_range: Optional[tuple] = field(default=None, repr=False)
 
     def df_lookup_ids(self, term_ids: Sequence[int]) -> dict:
         """term_id -> df for the given ids, memoized across batches.
@@ -102,16 +102,16 @@ class PositionalIndex:
                 self._df_cache.setdefault(t, 0)
         return {t: self._df_cache[t] for t in want}
 
-    def max_doc_id(self) -> int:
-        """Largest doc_id in the index (memoized; one column-pruned agg).
-
-        Sizes the candidate-pruning pack shift: doc ids need not be
-        dense (hash-derived 64-bit ids), so bounding by n_docs could
-        silently collide packed (query_id << shift) + doc_id keys."""
-        if self._max_doc_id is None:
-            row = self.postings.agg(F.max("doc_id").alias("m")).collect()[0]
-            self._max_doc_id = int(row["m"] or 0)
-        return self._max_doc_id
+    def doc_id_range(self) -> tuple:
+        """(min, max) doc_id in the index (memoized; one column-pruned
+        agg). Bounds-checks the candidate-pruning pack key: doc ids need
+        not be dense or non-negative (hash-derived 64-bit ids)."""
+        if self._doc_id_range is None:
+            row = self.postings.agg(
+                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+            ).collect()[0]
+            self._doc_id_range = (int(row["lo"] or 0), int(row["hi"] or 0))
+        return self._doc_id_range
 
     def unpersist(self) -> None:
         try:
@@ -126,7 +126,6 @@ def build_positional_index(
     b: float = 0.75,
     method: str = "robertson",
     cache: bool = True,
-    partition_by_doc: bool = True,
     layout_partitions: Optional[int] = None,
 ) -> PositionalIndex:
     """docs (doc_id, tokens array<string>) -> PositionalIndex.
@@ -140,11 +139,9 @@ def build_positional_index(
     one source row, so partial aggregation builds each list inside a
     single map task; array_sort pins the order deterministically
     regardless of merge order. Layout shuffle (paid once, cached):
-    hash-partition by doc_id at the same 4×-parallelism grain as the
-    main postings cache (see build_inverted_index's layout rationale)
-    so phrase matching's (query, doc)-keyed agg combines map-side.
+    index_build.cached_layout, the main postings cache's rule, so
+    phrase matching's (query, doc)-keyed agg combines map-side.
     """
-    spark = docs.sparkSession
     base = docs.select("doc_id", F.size("tokens").alias("dl"), "tokens")
 
     stats = base.agg(
@@ -160,14 +157,7 @@ def build_positional_index(
         .withColumn("term_id", F.xxhash64("term"))
         .select("term_id", "term", "doc_id", "dl", "positions")
     )
-    if partition_by_doc:
-        n_part = layout_partitions or max(
-            4 * spark.sparkContext.defaultParallelism,
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
-        postings = postings.repartition(n_part, "doc_id").sortWithinPartitions(
-            "term_id"
-        )
+    postings = cached_layout(postings, n_docs, layout_partitions=layout_partitions)
     if cache:
         postings = postings.persist()
     return PositionalIndex(postings, n_docs, avgdl, k1, b, method)
@@ -196,7 +186,7 @@ def _slot_pivot(
     (query, doc)-keyed agg pivots each slot's position array via
     conditional max. Returns (g, max_len) where g has columns
     (query_id, doc_id, dl, plen, p0..p{max_len-1}) and keeps only
-    docs where every slot matched (countDistinct(slot) == plen).
+    docs where every slot matched (count(slot) == plen).
 
     Rarest-term candidate pruning (the phrase analogue of WAND's
     survivor probe): a doc can only match query q if it contains q's
@@ -211,17 +201,18 @@ def _slot_pivot(
     cache (probe columns term_id/doc_id precede the array access in
     the codegen'd join stage).
 
-    Per-query gating (same hot_df_frac spirit as the WAND router): a
-    query whose RAREST term is still ubiquitous (min-df ≥
-    PRUNE_HOT_DF_FRAC × n_docs) gains ~nothing from the probe while its
-    near-corpus-sized candidate rows dominate the broadcast build —
-    measured ~1.3s of pure cand-build cost per hot-pair batch at 100k
-    docs with the kernel saving a wash. Such queries bypass the probe
-    (a left probe + pass-through filter when the batch mixes both
-    kinds; no probe at all when every query is hot). Pruning is also
-    skipped entirely when Σ min-df over the gated queries exceeds
-    candidate_limit (the broadcast would cost more than the fan-in it
-    kills)."""
+    Per-batch gate (a binary decision, like the WAND router's
+    route_queries): the whole batch probes only when EVERY query's
+    rarest term is selective (min-df < PRUNE_HOT_DF_FRAC × n_docs) and
+    Σ min-df ≤ candidate_limit; otherwise it plans no probe at all. A
+    query whose rarest term is ubiquitous gains ~nothing from the probe
+    while its near-corpus-sized candidate rows dominate the broadcast
+    build (measured ~1.3s of pure cand-build cost per hot-pair batch at
+    100k docs with the kernel saving a wash), and splitting a batch
+    into probed and pass-through queries costs a left probe plus a
+    filter over every joined row. The probe is also skipped when the
+    packed key would not fit 63 bits (negative doc ids, or query and
+    doc id bits overflowing) — it is only ever an optimization."""
     spark = index.postings.sparkSession
     slots = _phrases_to_slots(spark, slot_lists)
     max_len = max(len(p) for p in slot_lists)
@@ -237,73 +228,41 @@ def _slot_pivot(
         "query_id", "slot", "plen", "doc_id", "dl", "positions"
     )
 
-    # The routing decision needs df per batch term; the memoized
-    # index-side sidecar (df_lookup_ids) makes it a driver dict lookup
-    # on warm batches — r5 paid a per-call groupBy+collect here (~1s
-    # fixed driver cost on every batch, the round's perf-weak). Below
-    # ~50k docs the whole fan-in costs less than the candidate
+    # The gate needs df per batch term; the memoized index-side sidecar
+    # (df_lookup_ids) makes it a driver dict lookup on warm batches.
+    # Below ~50k docs the whole fan-in costs less than the candidate
     # broadcast build (measured: 5k docs — pruned 1.7s vs unpruned
     # 1.0s), so small corpora skip straight to the plain join.
-    if (
-        candidate_limit
-        and candidate_limit > 0
-        and index.n_docs >= CANDIDATE_PRUNE_MIN_DOCS
-    ):
+    if candidate_limit > 0 and index.n_docs >= CANDIDATE_PRUNE_MIN_DOCS:
         df_by_id = index.df_lookup_ids(ids)
-        term_ids = {t: i for t, i in zip(all_terms, ids)}
-        # per-query gate: only queries with a genuinely SELECTIVE
-        # rarest term join the probe — a query whose min-df is already
-        # ≥ hot_floor keeps ~its full fan-in either way, while its
-        # near-corpus-sized candidate rows would dominate the broadcast
-        # build cost (the WAND router's hot_df_frac rationale).
+        term_ids = dict(zip(all_terms, ids))
         hot_floor = PRUNE_HOT_DF_FRAC * index.n_docs
-        rare = []  # (query_id, rare_term_id) — gated queries only
-        total = 0
+        rare = []  # (min_df, query_id, rare_term_id)
         for qid, terms in enumerate(slot_lists):
-            dfs = [(df_by_id.get(term_ids[t], 0), term_ids[t]) for t in set(terms)]
-            min_df, rare_id = min(dfs)
-            if min_df < hot_floor:
-                total += min_df
-                rare.append((qid, rare_id))
-        if rare and total <= candidate_limit:
-            # shift sized from the ACTUAL max doc id, not n_docs: a
-            # corpus with sparse (e.g. hash-derived) doc ids would
-            # otherwise collide packed keys silently (ADVICE r5). One
-            # bounded column-pruned agg per index lifetime, memoized.
-            shift = max(32, max(1, index.max_doc_id()).bit_length() + 1)
-            rare_df = spark.createDataFrame(
-                rare, "query_id long, term_id long"
+            min_df, rare_id = min(
+                (df_by_id.get(term_ids[t], 0), term_ids[t]) for t in set(terms)
             )
-            cand = (
-                post.join(F.broadcast(rare_df), "term_id")
-                .select(
-                    (F.shiftleft(F.col("query_id"), shift) + F.col("doc_id"))
-                    .alias("__qd")
+            rare.append((min_df, qid, rare_id))
+        if (
+            all(df < hot_floor for df, _, _ in rare)
+            and sum(df for df, _, _ in rare) <= candidate_limit
+        ):
+            # shift sized from the ACTUAL max doc id, not n_docs: sparse
+            # (e.g. hash-derived) ids would otherwise collide packed keys
+            lo, hi = index.doc_id_range()
+            shift = max(32, max(1, hi).bit_length() + 1)
+            if lo >= 0 and shift + len(slot_lists).bit_length() <= 63:
+                rare_df = spark.createDataFrame(
+                    [(qid, tid) for _, qid, tid in rare],
+                    "query_id long, term_id long",
                 )
-            )
-            pack = F.shiftleft(F.col("query_id"), shift) + F.col("doc_id")
-            if len(rare) == len(slot_lists):
-                # every query gated in: plain inner probe
+                pack = F.shiftleft(F.col("query_id"), shift) + F.col("doc_id")
+                cand = post.join(F.broadcast(rare_df), "term_id").select(
+                    pack.alias("__qd")
+                )
                 joined = joined.withColumn("__qd", pack).join(
                     F.broadcast(cand), "__qd"
                 ).drop("__qd")
-            else:
-                # mixed batch: gated queries probe the candidate set,
-                # ungated (all-hot) queries pass through untouched
-                gated = {qid for qid, _ in rare}
-                joined = (
-                    joined.withColumn("__qd", pack)
-                    .join(
-                        F.broadcast(cand.withColumn("__hit", F.lit(1))),
-                        "__qd",
-                        "left",
-                    )
-                    .filter(
-                        F.col("__hit").isNotNull()
-                        | ~isin_filter("query_id", sorted(gated))
-                    )
-                    .drop("__qd", "__hit")
-                )
     pivots = [
         F.max(F.when(F.col("slot") == i, F.col("positions"))).alias(f"p{i}")
         for i in range(max_len)
@@ -372,17 +331,25 @@ def phrase_topk(
     k: int = 10,
     candidate_limit: int = 2_000_000,
 ) -> DataFrame:
-    """-> (query_id, rank, doc_id, tf, score): exact-phrase BM25 top-k.
+    """-> (query_id, rank, doc_id, tf, score): exact-phrase BM25 top-k
+    (the phrase scored as a pseudo-term, see _pseudo_term_topk)."""
+    return _pseudo_term_topk(
+        index, phrase_match(index, phrases, candidate_limit), len(phrases), k
+    )
 
-    The phrase is scored as a pseudo-term: df = matched-doc count per
-    query (a window count over the already-(query)-keyed match output —
-    no second match pass, no driver action), idf via the index's idf
-    policy, standard tf normalization, then the engine's two-phase
-    salted top-k with the (desc round(score,6), asc doc_id) tie-break.
-    """
+
+def _pseudo_term_topk(
+    index: PositionalIndex, matched: DataFrame, n_queries: int, k: int
+) -> DataFrame:
+    """Shared scoring tail of phrase_topk/proximity_topk: matched
+    (query_id, doc_id, dl, tf) scored as a pseudo-term — df =
+    matched-doc count per query (a window count over the already-
+    (query)-keyed match output — no second match pass, no driver
+    action), idf via the index's idf policy, standard tf
+    normalization, then the engine's two-phase salted top-k with the
+    (desc round(score,6), asc doc_id) tie-break."""
     from pyspark.sql.window import Window
 
-    matched = phrase_match(index, phrases, candidate_limit)
     pdf = F.count(F.lit(1)).over(Window.partitionBy("query_id"))
     k1, b, avgdl = F.lit(index.k1), F.lit(index.b), F.lit(index.avgdl)
     tf = F.col("tf").cast("double")
@@ -396,7 +363,7 @@ def phrase_topk(
     out = top_k(
         scored.select("query_id", "doc_id", "tf", "score"),
         k,
-        est_rows=len(phrases) * max(1, index.n_docs),
+        est_rows=n_queries * max(1, index.n_docs),
     )
     return out.select(
         "query_id",
@@ -595,31 +562,10 @@ def proximity_topk(
     """-> (query_id, rank, doc_id, tf, score): proximity BM25 top-k.
 
     Same pseudo-term scoring as phrase_topk — df = docs with ≥1
-    qualifying window (window count per query, no driver action), idf
-    by the index's policy, tf = minimal-cover count, engine tie-break
-    (desc round(score, 6), asc doc_id)."""
-    from pyspark.sql.window import Window
-
-    matched = proximity_match(index, queries, window)
-    pdf = F.count(F.lit(1)).over(Window.partitionBy("query_id"))
-    k1, b, avgdl = F.lit(index.k1), F.lit(index.b), F.lit(index.avgdl)
-    tf = F.col("tf").cast("double")
-    tf_norm = (tf * (k1 + F.lit(1.0))) / (
-        tf + k1 * (F.lit(1.0) - b + b * (F.col("dl") / avgdl))
-    )
-    scored = matched.withColumn(
-        "score",
-        idf_column(pdf, index.n_docs, index.method) * tf_norm,
-    )
-    out = top_k(
-        scored.select("query_id", "doc_id", "tf", "score"),
+    qualifying window, tf = minimal-cover count (_pseudo_term_topk)."""
+    return _pseudo_term_topk(
+        index,
+        proximity_match(index, queries, window, candidate_limit),
+        len(queries),
         k,
-        est_rows=len(queries) * max(1, index.n_docs),
-    )
-    return out.select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        "doc_id",
-        "tf",
-        "score",
     )

@@ -29,6 +29,7 @@ from bayesian_bm25_js_spark.operators.index_build import (
     SPILL_FREE_ENTRIES_PER_TASK,
     InvertedIndex,
     build_inverted_index,
+    cached_layout,
 )
 from bayesian_bm25_js_spark.operators.scoring import (
     calibrate,
@@ -254,7 +255,6 @@ class BayesianBM25SparkScorer:
         still prune row groups pre-decode)."""
         import dataclasses
 
-        from bayesian_bm25_js_spark.operators.index_build import layout_grain
         from bayesian_bm25_js_spark.sources.index_store import (
             load_index,
             load_packed_index,
@@ -263,14 +263,10 @@ class BayesianBM25SparkScorer:
         loader = load_packed_index if packed else load_index
         index, params = loader(spark, path)
         if not packed:
-            n_part = layout_partitions or layout_grain(
-                int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-                spark.sparkContext.defaultParallelism,
-                index.n_docs,
+            postings = cached_layout(
+                index.postings, index.n_docs,
+                layout_partitions=layout_partitions,
             )
-            postings = index.postings.repartition(
-                n_part, "doc_id"
-            ).sortWithinPartitions("term_id")
             if cache:
                 postings = postings.persist()
             index = dataclasses.replace(index, postings=postings)
@@ -303,20 +299,11 @@ class BayesianBM25SparkScorer:
                 block_max_table,
             )
 
-            spark = self._index.spark
-            # term_id-partitioned + sorted cache layout: query-time
-            # bounds joins filter on term_id, and the sorted columnar
-            # batches let the In-filter skip whole batches via
-            # in-memory stats (same layout rule as the bench harness);
-            # 4x-parallelism grain mirrors the postings layout rule
-            # (see build_inverted_index.layout_partitions).
-            n_part = max(4 * spark.sparkContext.defaultParallelism, 32)
-            self._block_max = (
-                block_max_table(self._index)
-                .repartition(n_part, "term_id")
-                .sortWithinPartitions("term_id")
-                .persist()
-            )
+            # keyed by term_id: query-time bounds joins filter on it
+            self._block_max = cached_layout(
+                block_max_table(self._index), self._index.n_docs,
+                key="term_id",
+            ).persist()
         return self._block_max
 
     # One scoring-agg combine-map entry per (query, matched doc) per

@@ -116,7 +116,6 @@ def score_queries(
     query_terms: DataFrame,
     exact_order: bool = False,
     terms_filter: Optional[Sequence[str]] = None,
-    carry_idf: bool = False,
 ) -> DataFrame:
     """-> (query_id, doc_id, score, tf_overlap, dl) for matched docs only.
 
@@ -142,32 +141,9 @@ def score_queries(
     if "is_first" not in qt.columns:
         qt = qt.withColumn("is_first", F.lit(True))
     postings = index.postings
-    # carry_idf=False (default since r5): r4 moved idf to the broadcast
-    # query side (vocab-sized term_stats join per batch) to avoid
-    # decompressing the postings cache's idf column per row, but
-    # same-session A/Bs read it as a per-batch FIXED cost with no
-    # measurable scan saving: 50k docs/200 q — warm WAND CPU 12.4s vs
-    # 8.2s with it off (-34%); 300k docs/2000 q — 374.6/382.6 vs 376.8
-    # (neutral, inside noise). Off wins or ties everywhere measured;
-    # carry_idf=True is the explicit A/B knob for larger-shape re-runs
-    # (was the invisible SPARK_CARRY_IDF env switch, VERDICT r5 #2).
-    # The packed layout keeps its own vocab join (push_string_filter
-    # marks it): its postings view already attaches idf post-decode,
-    # and dropping the column there would not remove the join.
-    carry_idf = (
-        carry_idf
-        and "idf" in postings.columns
-        and index.term_stats is not None
-        and not getattr(index, "push_string_filter", False)
-    )
-    if carry_idf:
-        # hint-broadcast the tiny query side: at 100M+ vocab the
-        # static planner must never pick a sort-merge join that
-        # shuffles term_stats per batch
-        qt = F.broadcast(qt).join(
-            index.term_stats.select("term", "idf"), "term"
-        )
-        postings = postings.drop("idf")
+    # idf is read straight from the denormalized postings cache: carrying
+    # it on the query side (a term_stats join per batch) measured a fixed
+    # per-batch cost with no scan saving (50k docs: warm WAND CPU +51%).
     join_key = "term"
     if (
         terms_filter is not None

@@ -70,21 +70,12 @@ def _term_key(block_max: DataFrame, query_terms: DataFrame):
     return "term", query_terms
 
 
-def wand_block_bounds(block_max: DataFrame, query_terms: DataFrame) -> DataFrame:
-    """Phase A only (kept for API/tests): per-(query, block) bounds.
-    ub sums over query TOKENS (duplicates double-count, bm25.ts:110)."""
-    key, qt = _term_key(block_max, query_terms)
-    qb = block_max.join(F.broadcast(qt.select("query_id", key)), key)
-    return qb.groupBy("query_id", "block_id").agg(
-        F.sum("max_contrib").alias("ub"),
-        F.max("max_contrib").alias("lb"),
-    )
-
-
 def _bounds_and_tau(
     block_max: DataFrame, query_terms: DataFrame, k: int
 ) -> tuple[DataFrame, DataFrame]:
-    """One block_max scan -> (bounds, tau).
+    """One block_max scan -> (bounds, tau): the pure-Catalyst reference
+    formulation of the phases _fused_survivors runs in production (the
+    parity tests compare the two).
 
     τ(q) = max of two witness rules:
 
@@ -157,15 +148,6 @@ def _bounds_and_tau(
         )
     )
     return bounds, tau
-
-
-def wand_thresholds(
-    block_max: DataFrame, query_terms: DataFrame, bounds: DataFrame, k: int
-) -> DataFrame:
-    """Back-compat wrapper: τ per query (bounds arg kept for signature
-    stability; the fused path recomputes internally)."""
-    _, tau = _bounds_and_tau(block_max, query_terms, k)
-    return tau
 
 
 def _fused_survivors(
@@ -387,10 +369,10 @@ def auto_topk(
     exact_order: bool = False,
     block_max_provider=None,
 ) -> DataFrame:
-    """Selectivity router: per query, pick block-max-WAND or the salted
-    exhaustive scorer — both rank-identical under the 6-dp policy, so
-    routing is purely a cost decision (see route_queries for the
-    two-term cost model).
+    """Selectivity router: pick block-max-WAND or the salted exhaustive
+    scorer for the batch — both rank-identical under the 6-dp policy,
+    so routing is purely a cost decision (see route_queries for the
+    binary per-batch cost model).
 
     BENCH_r02 measured the crossover: on a stop-word workload (every
     query's min-df term in 88% of docs) WAND was 3.8x SLOWER than the
@@ -400,78 +382,40 @@ def auto_topk(
     queries keep ~20% of blocks and skip 80% of the scoring fan-out.
 
     queries: the batch as Python token lists (driver knowledge — the
-    same shape retrieve() takes). Routing costs one bounded df lookup
-    (route_queries); each branch then scans ONLY ITS OWN terms (the
-    In-filter that reaches the columnar scans is per-branch, so the two
-    branches split the postings scan instead of each paying the full
-    batch's). Both ranked outputs union into ONE plan — one job, both
-    branches' stages scheduled concurrently. query_id in the result
-    indexes into `queries`. A fully one-sided batch skips the other
-    branch entirely.
+    same shape retrieve() takes); query_id in the result indexes into
+    `queries`. Routing costs one bounded df lookup (route_queries); a
+    batch routed to the exhaustive path never builds block-max
+    (block_max_provider is called lazily).
     """
     from bayesian_bm25_js_spark.operators.scoring import (
         queries_to_df,
         score_queries,
     )
 
-    hot_ids, rare_ids = route_queries(
+    _, wand_ids = route_queries(
         index, queries, hot_df_frac, min_prunable_postings
     )
-
-    def _qdf(ids):
-        rows = []
-        for qid in ids:
-            seen: set = set()
-            for pos, term in enumerate(queries[qid]):
-                rows.append((qid, pos, term, term not in seen))
-                seen.add(term)
-        return index.spark.createDataFrame(
-            rows, "query_id long, pos int, term string, is_first boolean"
-        )
-
-    parts = []
-    if hot_ids:
-        hot_terms = sorted({t for i in hot_ids for t in queries[i]})
-        parts.append(
-            top_k(
-                score_queries(
-                    index,
-                    _qdf(hot_ids),
-                    exact_order=exact_order,
-                    terms_filter=hot_terms,
-                ),
-                k,
-                est_rows=len(hot_ids) * index.n_docs,
-            )
-        )
-    if rare_ids:
-        rare_terms = sorted({t for i in rare_ids for t in queries[i]})
-        if block_max is None and block_max_provider is not None:
-            # lazy: the (possibly persisted) metadata table is only
-            # built when the batch actually routes through WAND
-            block_max = block_max_provider()
-        parts.append(
-            wand_topk(
-                index,
-                _qdf(rare_ids),
-                k,
-                block_max=block_max,
-                block_size=block_size,
-                exact_order=exact_order,
-                terms_filter=rare_terms,
-                est_rows=len(rare_ids) * index.n_docs,
-            )
-        )
-    if not parts:
+    qdf = queries_to_df(index.spark, queries)
+    terms = sorted({t for q in queries for t in q})
+    est = len(queries) * index.n_docs
+    if not wand_ids:
         return top_k(
-            score_queries(index, queries_to_df(index.spark, queries)),
+            score_queries(index, qdf, exact_order=exact_order, terms_filter=terms),
             k,
-            est_rows=len(queries) * index.n_docs,
+            est_rows=est,
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    if block_max is None and block_max_provider is not None:
+        block_max = block_max_provider()
+    return wand_topk(
+        index,
+        qdf,
+        k,
+        block_max=block_max,
+        block_size=block_size,
+        exact_order=exact_order,
+        terms_filter=terms,
+        est_rows=est,
+    )
 
 
 def _survivor_pack_shift(n_docs: int, block_size: int) -> int:
@@ -495,10 +439,7 @@ def wand_topk(
     return_stats: bool = False,
     exact_order: bool = False,
     terms_filter: Optional[Sequence[str]] = None,
-    broadcast_survivors: bool = True,
     est_rows: Optional[int] = None,
-    fused: bool = True,
-    carry_idf: bool = False,
 ):
     """Pruned top-k: rank-identical to the exhaustive scorer under the
     engine's 6-dp rounded ranking.
@@ -507,21 +448,15 @@ def wand_topk(
     terms_filter: the workload's distinct terms, when known client-side
       — prunes the cached columnar scans batch-wise (sorted-by-term
       caches make the In-filter stats-effective).
-    broadcast_survivors: hint-broadcast the surviving token×block side
-      of the scoring join (bounded by Σ_q tokens(q)·blocks(q); disable
-      at extreme batch sizes and let AQE decide).
     est_rows: scored-stream size bound (n_queries × n_docs) for the
       final top-k's phase-1 grain (scoring.top_k) — callers that know
       the batch width should pass it so narrow batches keep the coarse
       exchange.
-    fused: True (default) runs the bounds/τ/survivor phases as ONE
-      applyInPandas exchange (_fused_survivors); False forces the
-      pure-Catalyst phases (_bounds_and_tau) — an explicit A/B knob
-      (was the invisible WAND_FUSED env switch; both paths are
-      rank-identical and tested).
-    Returns the ranked DataFrame (query_id, doc_id, score, tf_overlap,
-    dl, rank); with return_stats=True also (blocks_total, blocks_kept)
-    measured on the SAME survivor path the ranking used.
+    The bounds/τ/survivor phases run as ONE applyInPandas exchange
+    (_fused_survivors). Returns the ranked DataFrame (query_id, doc_id,
+    score, tf_overlap, dl, rank); with return_stats=True also
+    (blocks_total, blocks_kept) measured on the SAME survivor path the
+    ranking used.
     """
     if block_max is None:
         block_max = block_max_table(index, block_size)
@@ -540,17 +475,7 @@ def wand_topk(
         block_max = _isin_key(block_max)
 
     stats = None
-    if not fused:
-        bounds, tau = _bounds_and_tau(block_max, query_terms, k)
-        keep = F.col("ub") >= F.col("tau") - F.lit(ROUND_SLACK)
-        bt = bounds.join(tau, "query_id")
-        surviving = bt.filter(keep).select("query_id", "block_id")
-        if return_stats:
-            stats = bt.groupBy("query_id").agg(
-                F.count(F.lit(1)).alias("blocks_total"),
-                F.sum(F.when(keep, 1).otherwise(0)).alias("blocks_kept"),
-            )
-    elif return_stats:
+    if return_stats:
         # stats ride the PRODUCTION fused kernel: kept rows double as
         # the survivor set, the per-query blocks_total rides each row.
         # localCheckpoint (eager), not persist: the materialized blocks
@@ -572,7 +497,6 @@ def wand_topk(
             F.count("block_id").alias("blocks_kept"),
         )
     else:
-        # production path: one fused exchange instead of ~6 small stages
         surviving = _fused_survivors(block_max, query_terms, k)
 
     contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
@@ -581,26 +505,6 @@ def wand_topk(
         qt = qt.withColumn("is_first", F.lit(True))
 
     postings = index.postings
-    # carry_idf=False (default since r5): the denormalized idf column is
-    # read straight from the postings cache. carry_idf=True rides idf on
-    # the broadcast query side instead (vocab-sized term_stats join per
-    # batch) — same measured trade-off, rationale, and packed-layout
-    # carve-out as score_queries; the explicit parameter replaces the
-    # invisible SPARK_CARRY_IDF env switch (VERDICT r5 #2).
-    carry_idf = (
-        carry_idf
-        and "idf" in postings.columns
-        and index.term_stats is not None
-        and not getattr(index, "push_string_filter", False)
-    )
-    if carry_idf:
-        # hint-broadcast the tiny query side: at 100M+ vocab the
-        # static planner must never pick a sort-merge join that
-        # shuffles term_stats per batch
-        qt = F.broadcast(qt).join(
-            index.term_stats.select("term", "idf"), "term"
-        )
-        postings = postings.drop("idf")
     join_key = "term"
     if "term_id" in postings.columns:
         join_key = "term_id"
@@ -620,7 +524,8 @@ def wand_topk(
     # ~125 MB and ~1.5 s of serial build per 2000-query batch at 300k
     # docs; the two small sides are ~6k rows + ~8 MB packed longs).
     # Broadcasting keeps postings doc_id-partitioned -> full map-side
-    # combining of the score aggregation.
+    # combining of the score aggregation. The survivor side is bounded
+    # by Σ_q tokens(q)·blocks(q) of one spill-free-width batch.
     #
     # The shift is sized from the index itself (_survivor_pack_shift):
     # block ids reach n_docs // block_size, which overflows the 32 low
@@ -631,37 +536,19 @@ def wand_topk(
     # (shift 40 -> 8M ids).
     shift = _survivor_pack_shift(index.n_docs, block_size)
     pack = F.shiftleft(F.col("query_id"), shift) + F.col("block_id")
-    if broadcast_survivors:
-        surv = F.broadcast(surviving.select(pack.alias("__qb")))
-        joined = (
-            postings.withColumn(
-                "block_id", F.floor(F.col("doc_id") / block_size).cast("long")
-            )
-            .join(F.broadcast(qt), join_key)
-            .withColumn("__qb", pack)
-            .join(surv, "__qb")
-            .select(
-                "query_id", "doc_id", "pos", "is_first", "dl",
-                contrib.alias("contrib"),
-            )
+    surv = F.broadcast(surviving.select(pack.alias("__qb")))
+    joined = (
+        postings.withColumn(
+            "block_id", F.floor(F.col("doc_id") / block_size).cast("long")
         )
-    else:
-        # shuffle fallback for extreme batch sizes: one combined join
-        # keyed on (term, block) so the shuffled side stays bounded
-        qt_blocks = qt.join(surviving, "query_id").select(
-            "query_id", "pos", "is_first", join_key, "block_id",
-            *(["idf"] if carry_idf else []),
+        .join(F.broadcast(qt), join_key)
+        .withColumn("__qb", pack)
+        .join(surv, "__qb")
+        .select(
+            "query_id", "doc_id", "pos", "is_first", "dl",
+            contrib.alias("contrib"),
         )
-        joined = (
-            postings.withColumn(
-                "block_id", F.floor(F.col("doc_id") / block_size).cast("long")
-            )
-            .join(qt_blocks, [join_key, "block_id"])
-            .select(
-                "query_id", "doc_id", "pos", "is_first", "dl",
-                contrib.alias("contrib"),
-            )
-        )
+    )
     if exact_order:
         score_agg = F.aggregate(
             F.array_sort(F.collect_list(F.struct("pos", "contrib"))),

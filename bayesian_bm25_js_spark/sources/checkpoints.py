@@ -3,16 +3,18 @@
 The reference rebuilds its whole in-memory index on every change
 (scorer.ts:453-459); a 10^12-file build must instead survive driver
 restarts. Strategy: the build is a DAG of stages, each materialized to
-parquet and sealed with a `_DONE.json` marker carrying metrics
-(row count, elapsed, input fingerprint). On resume, sealed stages load
-from parquet; unsealed stages recompute. Within a stage, Spark's task
-retry + parquet job commit protocol give partition-level atomicity; the
-markers give job-level idempotence.
+storage and sealed with a marker under `<path>/_stages/` carrying
+metrics (row count, elapsed, per-partition lineage). On resume, sealed
+stages load from storage; unsealed stages recompute. Within a stage,
+Spark's task retry + parquet job commit protocol give partition-level
+atomicity; the markers give job-level idempotence.
 
 Stages:
-  docs        tokenized (doc_id, tokens, dl)
-  postings    (term, doc_id, tf, dl, idf) + term_stats + scalars
-  params      estimated (alpha, beta, base_rate)
+  docs        tokenized (doc_id, tokens) parquet under <path>/docs
+  postings    build_inverted_index + save_index(path): the queryable
+              index layout (sources/index_store.py) at <path> itself
+  params      estimated (alpha, beta, base_rate), written into
+              meta.json's "transform" so from_saved/load_index see them
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from pyspark.sql import functions as F
 
 
 def _marker(path: str, stage: str) -> str:
-    return f"{path}/{stage}/_DONE.json"
+    return f"{path}/_stages/{stage}.json"
 
 
 def stage_done(path: str, stage: str) -> bool:
@@ -35,7 +37,7 @@ def stage_done(path: str, stage: str) -> bool:
 
 
 def seal_stage(path: str, stage: str, metrics: dict) -> None:
-    os.makedirs(f"{path}/{stage}", exist_ok=True)
+    os.makedirs(f"{path}/_stages", exist_ok=True)
     with open(_marker(path, stage), "w") as f:
         json.dump({"stage": stage, "sealed_at": time.time(), **metrics}, f, indent=2)
 
@@ -57,22 +59,23 @@ def checkpointed_build(
     base_rate_method: str = "percentile",
     alpha: Optional[float] = None,
     beta: Optional[float] = None,
+    packed: bool = False,
 ):
-    """Build (or resume) a full index + calibration params at `path`.
+    """Build (or resume) a queryable index + calibration params at `path`.
 
-    Returns (InvertedIndex, transform_params). Safe to re-invoke after a
-    crash: finished stages are loaded, not recomputed.
+    Returns (InvertedIndex, transform_params), the index loaded from the
+    saved layout. Safe to re-invoke after a crash: finished stages are
+    loaded, not recomputed. `path` is afterwards a save_index layout
+    (packed sidecar when packed=True) that from_saved reads directly.
     """
     from bayesian_bm25_js_spark.operators.estimate import (
         estimate_base_rate,
         estimate_parameters,
         sample_pseudo_query_scores,
     )
-    from bayesian_bm25_js_spark.operators.index_build import (
-        InvertedIndex,
-        build_inverted_index,
-    )
+    from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
     from bayesian_bm25_js_spark.operators.tokenize import tokenize_column
+    from bayesian_bm25_js_spark.sources.index_store import load_index, save_index
 
     os.makedirs(path, exist_ok=True)
 
@@ -80,14 +83,12 @@ def checkpointed_build(
     docs_path = f"{path}/docs"
     if not stage_done(path, "docs"):
         t0 = time.time()
-        docs = corpus.select(
+        corpus.select(
             F.col("doc_id"),
             tokenize_column(F.col(content_col)).alias("tokens"),
-        )
-        docs.write.mode("overwrite").parquet(docs_path + "/data")
-        n = spark.read.parquet(docs_path + "/data").count()
+        ).write.mode("overwrite").parquet(docs_path)
         per_part = (
-            spark.read.parquet(docs_path + "/data")
+            spark.read.parquet(docs_path)
             .groupBy(F.spark_partition_id().alias("pid"))
             .agg(F.count(F.lit(1)).alias("rows"))
             .collect()
@@ -96,7 +97,7 @@ def checkpointed_build(
             path,
             "docs",
             {
-                "rows": n,
+                "rows": sum(int(r["rows"]) for r in per_part),
                 "elapsed": round(time.time() - t0, 3),
                 "partitions": [
                     {"partition": int(r["pid"]), "rows": int(r["rows"])}
@@ -104,40 +105,27 @@ def checkpointed_build(
                 ],
             },
         )
-    docs = spark.read.parquet(docs_path + "/data")
+    docs = spark.read.parquet(docs_path)
 
     # -- stage: postings -------------------------------------------------------
-    postings_path = f"{path}/postings"
     if not stage_done(path, "postings"):
         t0 = time.time()
-        index = build_inverted_index(docs, k1=k1, b=b, method=method, cache=False)
-        index.postings.repartition(32, "term").sortWithinPartitions(
-            "term", "doc_id"
-        ).write.mode("overwrite").parquet(postings_path + "/data")
-        index.term_stats.write.mode("overwrite").parquet(postings_path + "/term_stats")
-        index.doc_stats.write.mode("overwrite").parquet(postings_path + "/doc_stats")
+        built = build_inverted_index(docs, k1=k1, b=b, method=method)
+        try:
+            meta = save_index(built, path, packed=packed)
+        finally:
+            built.unpersist()
         seal_stage(
             path,
             "postings",
             {
-                "rows": spark.read.parquet(postings_path + "/data").count(),
-                "n_docs": index.n_docs,
-                "avgdl": index.avgdl,
+                "rows": sum(p["rows"] for p in meta["lineage"]),
+                "n_docs": meta["n_docs"],
+                "avgdl": meta["avgdl"],
                 "elapsed": round(time.time() - t0, 3),
             },
         )
-    pm = read_metrics(path, "postings")
-    index = InvertedIndex(
-        spark=spark,
-        postings=spark.read.parquet(postings_path + "/data"),
-        term_stats=spark.read.parquet(postings_path + "/term_stats"),
-        doc_stats=spark.read.parquet(postings_path + "/doc_stats"),
-        n_docs=pm["n_docs"],
-        avgdl=pm["avgdl"],
-        k1=k1,
-        b=b,
-        method=method,
-    )
+    index, _ = load_index(spark, path)
 
     # -- stage: params ----------------------------------------------------------
     if not stage_done(path, "params"):
@@ -149,13 +137,18 @@ def checkpointed_build(
             br = estimate_base_rate(pqs, index.n_docs, base_rate_method)
         elif isinstance(base_rate, (int, float)) and not isinstance(base_rate, bool):
             br = float(base_rate)
+        transform = {"alpha": a, "beta": bta, "base_rate": br}
+        with open(f"{path}/meta.json") as f:
+            meta = json.load(f)
+        meta["transform"] = transform
+        with open(f"{path}/meta.json.tmp", "w") as f:
+            json.dump(meta, f, indent=2)
+        os.replace(f"{path}/meta.json.tmp", f"{path}/meta.json")
         seal_stage(
             path,
             "params",
             {
-                "alpha": a,
-                "beta": bta,
-                "base_rate": br,
+                **transform,
                 "n_pseudo_queries": len(pqs),
                 "elapsed": round(time.time() - t0, 3),
             },

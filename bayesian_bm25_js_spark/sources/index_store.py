@@ -28,7 +28,7 @@ from typing import Optional
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from bayesian_bm25_js_spark.operators.index_build import InvertedIndex
+from bayesian_bm25_js_spark.operators.index_build import InvertedIndex, cached_layout
 
 # Version of the PACKED blob layout (meta.json "packed_format"). 2 added
 # the third varint stream (`dls`) inside each block blob; 3 re-encoded
@@ -248,14 +248,14 @@ def load_positional_index(
     spark: SparkSession,
     path: str,
     cache: bool = True,
-    partition_by_doc: bool = True,
     layout_partitions: Optional[int] = None,
 ):
     """-> PositionalIndex over the saved layout. The scan stays
     term-bucketed on disk (phrase term In-filters prune row groups);
-    the runtime cache re-partitions by doc_id at the usual 4x-cores
-    grain so phrase/proximity matching's (query, doc)-keyed agg
-    combines map-side (same trade as build_positional_index)."""
+    the runtime cache takes the one cached layout rule
+    (index_build.cached_layout) so phrase/proximity matching's
+    (query, doc)-keyed agg combines map-side, as after
+    build_positional_index."""
     from bayesian_bm25_js_spark.operators.phrase import PositionalIndex
 
     meta_path = f"{path}/positional_meta.json"
@@ -273,15 +273,10 @@ def load_positional_index(
             f"reads {POSITIONAL_FORMAT_VERSION} — re-run "
             "save_positional_index with the current code"
         )
-    postings = spark.read.parquet(f"{path}/positional")
-    if partition_by_doc:
-        n_part = layout_partitions or max(
-            4 * spark.sparkContext.defaultParallelism,
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
-        postings = postings.repartition(n_part, "doc_id").sortWithinPartitions(
-            "term_id"
-        )
+    postings = cached_layout(
+        spark.read.parquet(f"{path}/positional"), meta["n_docs"],
+        layout_partitions=layout_partitions,
+    )
     if cache:
         postings = postings.persist()
     return PositionalIndex(

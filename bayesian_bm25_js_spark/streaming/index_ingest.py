@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from bayesian_bm25_js_spark.operators.index_build import (
     VALID_METHODS,
     InvertedIndex,
+    cached_layout,
     idf_column,
 )
 
@@ -151,19 +152,16 @@ def load_streaming_index(spark: SparkSession, path: str) -> InvertedIndex:
         .withColumn("term_id", F.xxhash64("term"))
     )
 
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    postings = (
-        deltas.join(term_stats.select("term", "idf"), "term")
-        .select(
+    postings = cached_layout(
+        deltas.join(term_stats.select("term", "idf"), "term").select(
             F.xxhash64("term").alias("term_id"),
             "term",
             "doc_id",
             "tf",
             "dl",
             "idf",
-        )
-        .repartition(n_part, "doc_id")
-        .sortWithinPartitions("term_id")
+        ),
+        n_docs,
     )
 
     return InvertedIndex(

@@ -11,9 +11,11 @@ Usage (cluster):
 Local smoke:
   spark-submit jobs/build_index_job.py --synthesize 2000 --out /tmp/idx
 
-The job is idempotent: re-submitting after a failure resumes from the
-last sealed stage (sources/checkpoints.py) and finishes by writing the
-queryable index layout + meta/lineage (sources/index_store.py).
+--out is the queryable index itself (the sources/index_store.py layout
+that jobs/query_job.py and BayesianBM25SparkScorer.from_saved read). The
+job is idempotent: re-submitting after a failure resumes from the last
+sealed stage (sources/checkpoints.py); a finished build re-submits as a
+no-op.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ import json
 import sys
 
 
-def main() -> int:
+def main(argv=None) -> int:
     parser = argparse.ArgumentParser()
     parser.add_argument("--corpus", help="input parquet path or (with --format table/iceberg) catalog table name")
     parser.add_argument("--format", default="parquet",
@@ -50,15 +52,13 @@ def main() -> int:
                              "= current snapshot, recorded in lineage")
     parser.add_argument("--packed", action="store_true",
                         help="also write delta+varint packed postings")
-    args = parser.parse_args()
+    args = parser.parse_args(argv)
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     spark = SparkSession.builder.appName("bb25-index-build").getOrCreate()
 
     from bayesian_bm25_js_spark.sources.checkpoints import checkpointed_build
-    from bayesian_bm25_js_spark.sources.index_store import save_index
 
     snapshot_id = None
     if args.synthesize:
@@ -85,12 +85,17 @@ def main() -> int:
             corpus = spark.read.table(args.corpus)
         else:
             corpus = spark.read.parquet(args.corpus)
-        if "doc_id" not in corpus.columns:
-            from bayesian_bm25_js_spark.operators.tokenize import corpus_to_docs
-            # natural-key dense rank for deterministic ids
-            corpus = corpus_to_docs(corpus, content_col=args.content_col)
     else:
         parser.error("one of --corpus or --synthesize is required")
+    if "doc_id" not in corpus.columns:
+        from bayesian_bm25_js_spark.operators.tokenize import zip_with_index_docs
+
+        # dense per-partition offsets, stable for a fixed input
+        # partitioning; content rides along for the docs stage
+        corpus = zip_with_index_docs(
+            corpus, content_col=args.content_col,
+            extra_cols=(args.content_col,),
+        )
 
     base_rate = args.base_rate
     if base_rate not in (None, "auto"):
@@ -99,23 +104,24 @@ def main() -> int:
     index, params = checkpointed_build(
         spark,
         corpus,
-        f"{args.out}/build",
+        args.out,
         k1=args.k1,
         b=args.b,
         method=args.method,
         content_col=args.content_col,
         base_rate=base_rate,
         base_rate_method=args.base_rate_method,
+        packed=args.packed,
     )
-    meta = save_index(
-        index, f"{args.out}/index", transform_params=params, packed=args.packed
-    )
-    print(json.dumps({"status": "ok", "n_docs": meta["n_docs"],
-                      "avgdl": meta["avgdl"], "params": params,
+    print(json.dumps({"status": "ok", "n_docs": index.n_docs,
+                      "avgdl": index.avgdl, "params": params,
                       "snapshot_id": snapshot_id}))
-    spark.stop()
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    rc = main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.builder.getOrCreate().stop()
+    sys.exit(rc)

@@ -13,10 +13,12 @@ Local smoke:
   spark-submit jobs/query_job.py --index /tmp/idx --queries /tmp/q.txt
 
 Results: (query_id, rank, doc_id, score, probability) — query_id indexes
-into the input line order. --strategy auto routes each query between
-block-max WAND and the salted exhaustive scorer by measured cost
-(operators/wand.route_queries); wand/exhaustive force one path. All
-strategies are rank-identical under the engine's round(score, 6) policy.
+into the input line order. The job is
+BayesianBM25SparkScorer.from_saved(...).retrieve(...): --strategy auto
+routes each batch between block-max WAND and the salted exhaustive
+scorer (operators/wand.route_queries); wand/exhaustive force one path.
+All strategies are rank-identical under the engine's round(score, 6)
+policy.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ import argparse
 import sys
 
 
-def main() -> int:
+def main(argv=None) -> int:
     parser = argparse.ArgumentParser()
     parser.add_argument("--index", required=True, help="saved index path")
     parser.add_argument("--queries", required=True,
@@ -37,34 +39,13 @@ def main() -> int:
                         help="query through the delta+varint packed layout")
     parser.add_argument("--out", default=None,
                         help="write results parquet here (default: show)")
-    args = parser.parse_args()
+    args = parser.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("bb25-query").getOrCreate()
 
-    from bayesian_bm25_js_spark.operators.scoring import (
-        calibrate,
-        queries_to_df,
-        score_queries,
-        top_k,
-    )
-    from bayesian_bm25_js_spark.sources.index_store import (
-        load_index,
-        load_packed_index,
-    )
-
-    import os
-
-    loader = load_packed_index if args.packed else load_index
-    # accept either a direct index layout or a build_index_job --out
-    # root (which nests the queryable layout under <out>/index)
-    idx_path = args.index
-    if not os.path.exists(f"{idx_path}/meta.json") and os.path.exists(
-        f"{idx_path}/index/meta.json"
-    ):
-        idx_path = f"{idx_path}/index"
-    index, params = loader(spark, idx_path)
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
 
     with open(args.queries) as f:
         queries = [line.split() for line in f if line.strip()]
@@ -72,28 +53,9 @@ def main() -> int:
         print("no queries", file=sys.stderr)
         return 1
 
-    if args.strategy == "exhaustive":
-        qdf = queries_to_df(spark, queries)
-        terms = sorted({t for q in queries for t in q})
-        ranked = top_k(score_queries(index, qdf, terms_filter=terms), args.k)
-    elif args.strategy == "wand":
-        from bayesian_bm25_js_spark.operators.wand import wand_topk
-
-        qdf = queries_to_df(spark, queries)
-        terms = sorted({t for q in queries for t in q})
-        ranked = wand_topk(index, qdf, args.k, terms_filter=terms)
-    else:
-        from bayesian_bm25_js_spark.operators.wand import auto_topk
-
-        ranked = auto_topk(index, queries, args.k)
-
-    out = calibrate(
-        ranked,
-        index,
-        params.get("alpha", 1.0),
-        params.get("beta", 0.0),
-        params.get("base_rate"),
-    ).select("query_id", "rank", "doc_id", "score", "probability")
+    out = BayesianBM25SparkScorer.from_saved(
+        spark, args.index, packed=args.packed
+    ).retrieve(queries, k=args.k, strategy=args.strategy)
 
     if args.out:
         out.repartition(1).sortWithinPartitions("query_id", "rank").write.mode(
@@ -106,4 +68,8 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    rc = main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.builder.getOrCreate().stop()
+    sys.exit(rc)

@@ -481,29 +481,44 @@ def test_fused_survivors_matches_catalyst_phases(spark, rnd_index):
 
 
 def test_fused_stats_match_catalyst_stats(spark, rnd_index):
-    """return_stats now rides the PRODUCTION fused kernel (ADVICE r4);
-    its (blocks_total, blocks_kept) must equal the Catalyst phases' —
-    including for queries that keep zero blocks (the null-marker row)
-    and unknown-term queries (no candidate blocks at all)."""
+    """return_stats rides the PRODUCTION fused kernel (ADVICE r4); its
+    (blocks_total, blocks_kept) must equal the ones derived from the
+    Catalyst reference phases (_bounds_and_tau) — including for queries
+    that keep zero blocks (the null-marker row) and unknown-term
+    queries (no candidate blocks at all)."""
     from bayesian_bm25_js_spark.operators.compression import block_max_table
-    from bayesian_bm25_js_spark.operators.wand import wand_topk
+    from bayesian_bm25_js_spark.operators.wand import (
+        ROUND_SLACK,
+        _bounds_and_tau,
+        wand_topk,
+    )
 
     corpus, idx = rnd_index
     queries = [["w0", "w1"], ["w40", "w49"], ["nope"], ["w2", "w2", "w3"]]
     qdf = queries_to_df(spark, queries)
     bm = block_max_table(idx, 64)
 
-    def stats_of(fused):
-        _, stats = wand_topk(
-            idx, qdf, 3, block_max=bm, block_size=64,
-            return_stats=True, fused=fused,
-        )
-        return {
-            r["query_id"]: (r["blocks_total"], r["blocks_kept"])
-            for r in stats.collect()
-        }
+    _, stats = wand_topk(
+        idx, qdf, 3, block_max=bm, block_size=64, return_stats=True
+    )
+    got = {
+        r["query_id"]: (r["blocks_total"], r["blocks_kept"])
+        for r in stats.collect()
+    }
 
-    assert stats_of(True) == stats_of(False)
+    bounds, tau = _bounds_and_tau(bm, qdf, 3)
+    keep = F.col("ub") >= F.col("tau") - F.lit(ROUND_SLACK)
+    expected = {
+        r["query_id"]: (r["blocks_total"], r["blocks_kept"])
+        for r in bounds.join(tau, "query_id")
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("blocks_total"),
+            F.sum(F.when(keep, 1).otherwise(0)).alias("blocks_kept"),
+        )
+        .collect()
+    }
+    assert got == expected
 
 
 def test_survivor_pack_shift_scales_past_int32_blocks():
@@ -519,3 +534,74 @@ def test_survivor_pack_shift_scales_past_int32_blocks():
     assert shift > 32 and max_block < (1 << shift)
     # query ids keep a workable range even at extreme scale
     assert (1 << (63 - shift)) >= 1_000_000
+
+
+def test_one_cached_layout_rule(spark, tmp_path):
+    """Every cached postings-shaped table takes the same partition count
+    for the same corpus and config: the in-memory build, from_saved, the
+    positional build and load, the streaming reader and the facade's
+    block-max cache all go through index_build.cached_layout."""
+    import json
+
+    from bayesian_bm25_js_spark.operators.index_build import layout_grain
+    from bayesian_bm25_js_spark.operators.phrase import build_positional_index
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+    from bayesian_bm25_js_spark.sources.index_store import (
+        load_positional_index,
+        save_positional_index,
+    )
+    from bayesian_bm25_js_spark.streaming.index_ingest import (
+        ingest_epoch,
+        load_streaming_index,
+    )
+
+    docs = docs_df(spark, SMALL_CORPUS)
+    n_parts = lambda df: df.rdd.getNumPartitions()  # noqa: E731
+
+    idx = build_inverted_index(docs, method="lucene", cache=False)
+    scorer = BayesianBM25SparkScorer(method="lucene", alpha=1.0, beta=0.5).index(docs)
+    scorer.save(str(tmp_path / "idx"))
+    loaded = BayesianBM25SparkScorer.from_saved(spark, str(tmp_path / "idx"), cache=False)
+    pidx = build_positional_index(docs, method="lucene", cache=False)
+    save_positional_index(pidx, str(tmp_path / "pidx"), n_buckets=2)
+    pload = load_positional_index(spark, str(tmp_path / "pidx"), cache=False)
+    spath = str(tmp_path / "stream")
+    ingest_epoch(docs, 0, spath)
+    with open(f"{spath}/meta.json", "w") as f:
+        json.dump({"k1": 1.2, "b": 0.75, "method": "lucene"}, f)
+    streamed = load_streaming_index(spark, spath)
+
+    counts = {
+        "build_inverted_index": n_parts(idx.postings),
+        "from_saved": n_parts(loaded.index_.postings),
+        "build_positional_index": n_parts(pidx.postings),
+        "load_positional_index": n_parts(pload.postings),
+        "load_streaming_index": n_parts(streamed.postings),
+        "block_max_cache": n_parts(scorer._block_max_cached()),
+    }
+    scorer.index_.unpersist()
+    scorer._block_max.unpersist()
+    expected = layout_grain(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+        len(SMALL_CORPUS),
+    )
+    assert counts == dict.fromkeys(counts, expected), counts
+
+
+def test_index_dataclasses_compare_by_identity(spark):
+    """InvertedIndex / PositionalIndex hold DataFrames and driver memos:
+    they hash and compare by identity, never field-wise."""
+    import dataclasses
+
+    from bayesian_bm25_js_spark.operators.phrase import build_positional_index
+
+    docs = docs_df(spark, SMALL_CORPUS)
+    for built in (
+        build_inverted_index(docs, cache=False),
+        build_positional_index(docs, cache=False),
+    ):
+        twin = dataclasses.replace(built)
+        assert built == built and built != twin
+        assert len({built, twin, built}) == 2
+        assert hash(built) == hash(built) != hash(twin)

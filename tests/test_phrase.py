@@ -415,40 +415,52 @@ def test_min_cover_vectorized_kernel_parity():
             assert (ref == vec).all(), (w, rows)
 
 
-def test_prune_hot_query_gate(spark):
-    """Per-query selectivity gate (r6): queries whose RAREST term is
-    ubiquitous (min-df >= PRUNE_HOT_DF_FRAC * n_docs) must bypass the
-    candidate probe — an all-hot batch plans NO probe join at all —
-    and a mixed batch's hot queries pass through the left probe with
-    results identical to pruning disabled."""
-    import random
+def _gate_corpus_index(spark):
+    """60 docs: `hot` and `warm` in every doc, `rare` in 3 (df 5% of
+    the corpus, under PRUNE_HOT_DF_FRAC) next to a `hot`."""
+    rng = random.Random(11)
+    corpus = []
+    for i in range(60):
+        doc = ["hot", "warm"] * rng.randint(1, 3)  # both terms everywhere
+        if i % 20 == 0:
+            doc += ["rare", "hot"]
+        rng.shuffle(doc)
+        corpus.append(doc)
+    return build_positional_index(_docs_df(spark, corpus), cache=False)
 
+
+def _plans_probe(df):
+    return "__qd" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_prune_hot_query_gate(spark):
+    """Per-batch selectivity gate: the candidate probe is planned only
+    when EVERY query's rarest term is selective (min-df <
+    PRUNE_HOT_DF_FRAC * n_docs). An all-hot batch and a mixed batch
+    both plan NO probe join at all, with results identical to pruning
+    disabled; an all-selective batch probes."""
     import bayesian_bm25_js_spark.operators.phrase as _ph
     from bayesian_bm25_js_spark.operators.phrase import (
         _slot_pivot,
         proximity_match,
     )
 
-    rng = random.Random(11)
-    corpus = []
-    for i in range(60):
-        doc = ["hot", "warm"] * rng.randint(1, 3)  # both terms everywhere
-        if i % 7 == 0:
-            doc += ["rare", "hot"]
-        rng.shuffle(doc)
-        corpus.append(doc)
-    idx = build_positional_index(_docs_df(spark, corpus), cache=False)
-
+    idx = _gate_corpus_index(spark)
     orig = _ph.CANDIDATE_PRUNE_MIN_DOCS
     _ph.CANDIDATE_PRUNE_MIN_DOCS = 0
     try:
         # all-hot batch: no probe join in the plan (no broadcast of a
         # packed candidate column)
         g, _ = _slot_pivot(idx, [["hot", "warm"], ["warm", "hot"]])
-        assert "__qd" not in g._jdf.queryExecution().analyzed().toString()
+        assert not _plans_probe(g)
+        # all-selective batch: the probe is planned
+        g, _ = _slot_pivot(idx, [["rare", "hot"], ["warm", "rare"]])
+        assert _plans_probe(g)
 
-        # mixed batch: parity with pruning disabled
+        # mixed batch: no probe either, parity with pruning disabled
         queries = [["hot", "warm"], ["rare", "hot"], ["hot"]]
+        g, _ = _slot_pivot(idx, queries)
+        assert not _plans_probe(g)
         base = {
             (r["query_id"], r["doc_id"]): r["tf"]
             for r in proximity_match(idx, queries, 4).collect()
@@ -457,6 +469,61 @@ def test_prune_hot_query_gate(spark):
             (r["query_id"], r["doc_id"]): r["tf"]
             for r in proximity_match(idx, queries, 4, candidate_limit=0).collect()
         }
-        assert base == off
+        assert base and base == off
+    finally:
+        _ph.CANDIDATE_PRUNE_MIN_DOCS = orig
+
+
+def test_proximity_topk_passes_candidate_limit(spark):
+    """proximity_topk forwards candidate_limit to the match frontend:
+    with the limit at 0 an all-selective batch plans no probe."""
+    import bayesian_bm25_js_spark.operators.phrase as _ph
+
+    idx = _gate_corpus_index(spark)
+    queries = [["rare", "hot"], ["warm", "rare"]]
+    orig = _ph.CANDIDATE_PRUNE_MIN_DOCS
+    _ph.CANDIDATE_PRUNE_MIN_DOCS = 0
+    try:
+        assert _plans_probe(proximity_topk(idx, queries, 4))
+        off = proximity_topk(idx, queries, 4, candidate_limit=0)
+        assert not _plans_probe(off)
+        on = proximity_topk(idx, queries, 4).orderBy("query_id", "rank").collect()
+        assert on and on == off.orderBy("query_id", "rank").collect()
+    finally:
+        _ph.CANDIDATE_PRUNE_MIN_DOCS = orig
+
+
+def test_candidate_pack_key_bounds_fall_back(spark):
+    """The packed (query_id << shift) + doc_id probe key is checked on
+    the driver: negative doc ids, or ids too wide for the shift, fall
+    back to the unpruned join with identical results."""
+    import bayesian_bm25_js_spark.operators.phrase as _ph
+
+    rng = random.Random(5)
+    corpus = []
+    for i in range(40):
+        doc = ["hot", "warm"] * rng.randint(1, 3)
+        if i % 20 == 0:
+            doc += ["rare", "hot", "warm"]
+        corpus.append(doc)
+    phrases = [["rare", "hot"], ["hot", "warm", "rare"]]
+    orig = _ph.CANDIDATE_PRUNE_MIN_DOCS
+    _ph.CANDIDATE_PRUNE_MIN_DOCS = 0
+    try:
+        for ids, probes in (
+            (list(range(len(corpus))), True),  # control: dense ids probe
+            ([-(i + 1) * 7919 for i in range(len(corpus))], False),
+            ([(1 << 62) - i for i in range(len(corpus))], False),  # 63-bit
+        ):
+            docs = spark.createDataFrame(
+                list(zip(ids, corpus)), "doc_id long, tokens array<string>"
+            )
+            idx = build_positional_index(docs, cache=False)
+            pruned = phrase_topk(idx, phrases, k=5)
+            assert _plans_probe(pruned) == probes, ids[:2]
+            rows = pruned.orderBy("query_id", "rank").collect()
+            off = phrase_topk(idx, phrases, k=5, candidate_limit=0)
+            assert rows and rows == off.orderBy("query_id", "rank").collect()
+            assert {r["doc_id"] for r in rows} <= set(ids)
     finally:
         _ph.CANDIDATE_PRUNE_MIN_DOCS = orig

@@ -161,47 +161,17 @@ def test_packed_query_path_has_no_doc_stats_join(spark, idx, tmp_path):
 
 
 def test_postings_scan_idf_carry_modes(spark, idx):
-    """carry_idf default (r5): OFF — the idf column is read straight
-    out of the denormalized postings cache and score_queries adds NO
-    per-batch term_stats scan (same-session A/Bs measured the carried
-    variant as a fixed per-batch cost with no scan saving: warm WAND
-    CPU 12.4s->8.2s off at 50k docs, neutral at 300k). The opt-in
-    carry_idf=True parameter (r6: was the invisible SPARK_CARRY_IDF
-    env switch) must still column-prune idf out of the postings scan
-    leaves — the variant a larger-shape A/B would re-enable."""
+    """The idf column is read straight out of the denormalized postings
+    cache and score_queries adds NO per-batch term_stats scan
+    (same-session A/Bs measured carrying idf on the query side as a
+    fixed per-batch cost with no scan saving: warm WAND CPU
+    12.4s->8.2s without it at 50k docs, neutral at 300k)."""
     from bayesian_bm25_js_spark.plans.audit import inmemory_scan_columns
-    from bayesian_bm25_js_spark.operators.compression import block_max_table
-    from bayesian_bm25_js_spark.operators.wand import wand_topk
 
-    # default: idf comes from the cache scan
     scores = score_queries(idx, queries_to_df(spark, [["cat", "dog"]]))
     scans = [c for c in inmemory_scan_columns(scores) if "tf" in c]
     assert scans, "no postings InMemoryTableScan found in plan"
     assert any("idf" in names for names in scans), scans
-
-    # opt-in carry: postings scan leaves are idf-free (column pruned)
-    scores = score_queries(
-        idx, queries_to_df(spark, [["cat", "dog"]]), carry_idf=True
-    )
-    scans = [c for c in inmemory_scan_columns(scores) if "tf" in c]
-    assert scans, "no postings InMemoryTableScan found in plan"
-    for names in scans:
-        assert "idf" not in names, names
-
-    # persist block-max as production does: its BUILD legitimately
-    # reads idf (max_contrib); cached, the wand plan's only postings
-    # scan is the scoring join side, which must be idf-free under carry
-    bm = block_max_table(idx, 16).persist()
-    bm.count()
-    ranked = wand_topk(
-        idx, queries_to_df(spark, [["cat", "dog"]]), 3, block_max=bm,
-        carry_idf=True,
-    )
-    wscans = [c for c in inmemory_scan_columns(ranked) if "tf" in c]
-    bm.unpersist()
-    assert wscans, "no postings InMemoryTableScan found in wand plan"
-    for names in wscans:
-        assert "idf" not in names, names
 
 
 def test_topk_phase1_single_fine_exchange(spark, idx):
@@ -259,6 +229,8 @@ def test_layout_grain_sizing():
     assert layout_grain(32, 32, 300_000) == 128
     assert layout_grain(32, 32, 100_000) == 64
     assert layout_grain(32, 32, 10_000_000) == 128
+    # the 4x cap is rounded down to the grain (4 x 36 = 144 -> 128)
+    assert layout_grain(32, 36, 10_000_000) == 128
     assert layout_grain(32, 2, 300_000) == layout_grain(32, 32, 300_000)
 
 
