@@ -2,18 +2,21 @@
 
 The reference keeps plain {docId, tf} arrays (bm25.ts:20-23) and a
 separate dense BlockMaxIndex (scorer.ts:624-711). At 10^12-doc scale
-postings dominate storage, so the engine packs them into fixed
-doc-range blocks:
+postings dominate storage, so the engine packs them into fixed-count
+blocks:
 
   packed (term, block_id, n, min_doc_id, max_doc_id, max_contrib,
           doc_deltas BINARY, tfs BINARY, dls BINARY, dl_min, dl_width)
 
-* block_id = doc_id // block_size — the reference's block rule
-  (scorer.ts:659-661), so block membership is a pure function of
-  doc_id and packing is an ordinary groupBy (skew-proof: every group
-  holds ≤ block_size postings regardless of term frequency).
+* The count rule is the packing rule: block_id = the posting's ordinal
+  within its term's docID-sorted list // block_size, so every block but
+  a term's last holds exactly block_size postings (skew-proof: no group
+  outgrows block_size regardless of term frequency). Doc-range blocks
+  (block_id = doc_id // block_size, the reference's rule,
+  scorer.ts:659-661) belong to block_max_table only — the WAND metadata,
+  where block membership must be a pure function of doc_id.
 * doc_deltas: varint gaps of ascending doc_ids within the block
-  (first gap is from the block base, doc_id - block_id*block_size);
+  (the first gap is 0: the block's min_doc_id is stored);
   tfs / dls: frame-of-reference bit-packed term frequencies and doc
   lengths (residuals from the block min at a fixed per-block bit
   width — tf and dl cluster, so residuals fit 2-8 bits where varint
@@ -25,13 +28,14 @@ doc-range blocks:
 * max_contrib: the block's max BM25 contribution idf*tf_norm — the
   BMW bound input (Corollary 7.4.2), computed at pack time.
 
-Pack/unpack run as Arrow-vectorized pandas UDFs over per-block struct
-arrays; the varint codec touches ≤ block_size values per call.
+Pack runs as one mapInPandas over the term-sorted postings stream,
+unpack as an Arrow-vectorized pandas UDF; both codecs work on a whole
+Arrow batch per call.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import List, Optional
 
 import numpy as np
 import pandas as pd
@@ -236,34 +240,46 @@ def _for_decode_rows(blobs, mins, widths, counts) -> np.ndarray:
     return out
 
 
-def _pack_sorted_stream(
-    index: InvertedIndex, block_size: int, n_partitions: int
+def pack_postings(
+    index: InvertedIndex,
+    block_size: int = DEFAULT_BLOCK_SIZE,
+    n_partitions: Optional[int] = None,
 ) -> DataFrame:
-    """pack_by="count" as ONE shuffle + a streaming Arrow pass.
+    """postings -> packed block table: ONE shuffle + a streaming Arrow
+    pass.
 
-    Repartition postings by hash(term) into n_partitions buckets and
-    sort each (term, doc_id); block membership is then just position in
-    the sorted run (ordinal // block_size), so a mapInPandas over the
-    sorted stream emits finished blocks directly — no per-slice count
-    window, no offsets join, no collect_list re-grouping (the previous
-    formulation shuffled the corpus-sized postings three times and
-    buffered every block through an ObjectHashAggregate; measured 7-16s
-    vs ~3s at 100k docs / 11.5M postings). Output rows ride in
-    (term asc, block_id asc) order inside each bucket — exactly the
-    layout save_index wants on disk, so the caller writes the result
-    with NO further exchange.
+    block_id is the posting's ordinal within its term's docID-sorted
+    list // block_size — every block holds exactly block_size postings
+    (last one excepted), so sparse tail terms still fill blocks and
+    varint deltas amortize (doc-range blocking left one-posting blocks
+    whose per-row metadata outweighed the payload — measured packed/row
+    ≈ 1.39 on the long-tail corpus). The first delta is from min_doc_id
+    (stored), so unpack never needs the blocking rule back.
+
+    Postings are repartitioned by hash(term) into n_partitions buckets
+    (default spark.sql.shuffle.partitions; pass the store's bucket count
+    to write the result with no further exchange) and sorted by
+    (term, doc_id); block membership is then just position in the
+    sorted run, so a mapInPandas over the sorted stream emits finished
+    blocks directly — no per-slice count window, no offsets join, no
+    collect_list re-grouping (a windowed formulation shuffled the
+    corpus-sized postings three times and buffered every block through
+    an ObjectHashAggregate; measured 7-16s vs ~3s at 100k docs / 11.5M
+    postings). Output rows ride in (term asc, block_id asc) order inside
+    each bucket — exactly the layout save_index wants on disk.
 
     Per-task memory is bounded: the packer keeps at most block_size - 1
     carry rows between Arrow batches (the unfinished trailing block of
     the batch's last term); a df≈n_docs hot term streams through in
-    batch-sized chunks. Blob bytes are identical to the previous
-    formulation: same doc-sorted block contents, same codecs, and the
-    per-row contrib is computed with the same float64 operation order
-    as the Catalyst expression it replaces.
+    batch-sized chunks, never buffered whole in one task (ADVICE r02).
+    The per-row contrib is computed with the same float64 operation
+    order as tf_norm_column * idf.
     """
-    import numpy as _np
-    import pandas as _pd
-
+    if block_size < 1:
+        raise ValueError(f"block_size must be >= 1, got {block_size}")
+    n_partitions = n_partitions or int(
+        index.postings.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    )
     k1, b, avgdl = float(index.k1), float(index.b), float(index.avgdl)
     bs = block_size
 
@@ -279,35 +295,35 @@ def _pack_sorted_stream(
 
     def _emit(term, doc, tf, dl, idf, ordinals):
         """Rows (sorted, ordinals ≡ 0 mod bs at run starts) -> block df."""
-        starts = _np.nonzero(ordinals % bs == 0)[0]
-        lens = _np.diff(_np.append(starts, len(doc)))
-        tfd = tf.astype(_np.float64)
-        dld = dl.astype(_np.float64)
+        starts = np.nonzero(ordinals % bs == 0)[0]
+        lens = np.diff(np.append(starts, len(doc)))
+        tfd = tf.astype(np.float64)
+        dld = dl.astype(np.float64)
         # same float64 op order as tf_norm_column * idf
         contrib = (
             (tfd * (k1 + 1.0)) / (tfd + k1 * ((1.0 - b) + b * (dld / avgdl)))
         ) * idf
-        gaps = _np.empty_like(doc)
+        gaps = np.empty_like(doc)
         if len(doc) > 1:
             gaps[1:] = doc[1:] - doc[:-1]
         gaps[starts] = 0  # first delta is from min_doc_id (stored)
         tf_blobs, tf_mins, tf_widths = _for_encode_rows(tf, starts, lens)
         dl_blobs, dl_mins, dl_widths = _for_encode_rows(dl, starts, lens)
-        return _pd.DataFrame(
+        return pd.DataFrame(
             {
                 "term": term[starts],
-                "block_id": (ordinals[starts] // bs).astype(_np.int64),
-                "n": lens.astype(_np.int32),
+                "block_id": (ordinals[starts] // bs).astype(np.int64),
+                "n": lens.astype(np.int32),
                 "min_doc_id": doc[starts],
                 "max_doc_id": doc[starts + lens - 1],
-                "max_contrib": _np.maximum.reduceat(contrib, starts),
-                "doc_deltas": _encode_rows(gaps.astype(_np.uint64), starts, lens),
+                "max_contrib": np.maximum.reduceat(contrib, starts),
+                "doc_deltas": _encode_rows(gaps.astype(np.uint64), starts, lens),
                 "tfs": tf_blobs,
                 "dls": dl_blobs,
                 "tf_min": tf_mins,
-                "tf_width": tf_widths.astype(_np.int32),
+                "tf_width": tf_widths.astype(np.int32),
                 "dl_min": dl_mins,
-                "dl_width": dl_widths.astype(_np.int32),
+                "dl_width": dl_widths.astype(np.int32),
             },
             columns=out_cols,
         )
@@ -325,20 +341,20 @@ def _pack_sorted_stream(
             if not len(pdf):
                 continue
             if carry is not None:
-                pdf = _pd.concat([carry, pdf], ignore_index=True)
+                pdf = pd.concat([carry, pdf], ignore_index=True)
             term = pdf["term"].to_numpy()
-            doc = pdf["doc_id"].to_numpy(dtype=_np.int64)
+            doc = pdf["doc_id"].to_numpy(dtype=np.int64)
             m = len(term)
             # per-run ordinals: arange minus each run's start offset,
             # plus the carried continuation offset when the first run
             # continues the previous batch's last term
-            change = _np.empty(m, dtype=bool)
+            change = np.empty(m, dtype=bool)
             change[0] = True
             change[1:] = term[1:] != term[:-1]
-            run_starts = _np.nonzero(change)[0]
-            idx = _np.arange(m, dtype=_np.int64)
-            ordinals = idx - _np.repeat(
-                run_starts, _np.diff(_np.append(run_starts, m))
+            run_starts = np.nonzero(change)[0]
+            idx = np.arange(m, dtype=np.int64)
+            ordinals = idx - np.repeat(
+                run_starts, np.diff(np.append(run_starts, m))
             )
             if pending_term is not None and term[0] == pending_term:
                 first_run_end = run_starts[1] if len(run_starts) > 1 else m
@@ -352,9 +368,9 @@ def _pack_sorted_stream(
                 yield _emit(
                     term[:cut],
                     doc[:cut],
-                    pdf["tf"].to_numpy(dtype=_np.int64)[:cut],
-                    pdf["dl"].to_numpy(dtype=_np.int64)[:cut],
-                    pdf["idf"].to_numpy(dtype=_np.float64)[:cut],
+                    pdf["tf"].to_numpy(dtype=np.int64)[:cut],
+                    pdf["dl"].to_numpy(dtype=np.int64)[:cut],
+                    pdf["idf"].to_numpy(dtype=np.float64)[:cut],
                     ordinals[:cut],
                 )
             pending_term = term[-1]
@@ -367,11 +383,11 @@ def _pack_sorted_stream(
         if carry is not None and len(carry):
             yield _emit(
                 carry["term"].to_numpy(),
-                carry["doc_id"].to_numpy(dtype=_np.int64),
-                carry["tf"].to_numpy(dtype=_np.int64),
-                carry["dl"].to_numpy(dtype=_np.int64),
-                carry["idf"].to_numpy(dtype=_np.float64),
-                _np.arange(len(carry), dtype=_np.int64) + carry_ord,
+                carry["doc_id"].to_numpy(dtype=np.int64),
+                carry["tf"].to_numpy(dtype=np.int64),
+                carry["dl"].to_numpy(dtype=np.int64),
+                carry["idf"].to_numpy(dtype=np.float64),
+                np.arange(len(carry), dtype=np.int64) + carry_ord,
             )
 
     schema = (
@@ -380,148 +396,6 @@ def _pack_sorted_stream(
         "tf_min bigint, tf_width int, dl_min bigint, dl_width int"
     )
     return srt.mapInPandas(pack_partition, schema)
-
-
-def pack_postings(
-    index: InvertedIndex,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    pack_by: str = "count",
-    n_partitions: Optional[int] = None,
-) -> DataFrame:
-    """postings -> packed block table. One shuffle on the pack key.
-
-    pack_by="count" (default): block_id is the posting's ordinal within
-    its term's docID-sorted list // block_size — every block holds
-    exactly block_size postings (last one excepted), so sparse tail
-    terms still fill blocks and varint deltas amortize (doc-range
-    blocking left one-posting blocks whose per-row metadata outweighed
-    the payload — measured packed/row ≈ 1.39 on the long-tail corpus).
-    Runs as ONE term-bucketed shuffle + a streaming Arrow packer over
-    the sorted buckets (_pack_sorted_stream) — block contents and blob
-    bytes are identical to the former windowed formulation (positions
-    in the per-term doc-sorted order), without its two extra
-    postings-sized shuffles and collect_list buffering.
-    pack_by="range": the reference BlockMaxIndex rule
-    block_id = doc_id // block_size (scorer.ts:659-661) — block ids
-    line up with the WAND metadata, at the storage cost above.
-
-    Either way the first delta is from min_doc_id (stored), so unpack
-    never needs the blocking rule back.
-
-    n_partitions (count mode): bucket count of the packing shuffle and
-    of the result (defaults to spark.sql.shuffle.partitions) — pass the
-    store's bucket count to write the result with no further exchange.
-    Skew note: a df≈n_docs hot term lands in one bucket, but the
-    streaming packer holds at most block_size - 1 rows of it between
-    Arrow batches — no single-task buffering of a full posting list
-    (the property the old two-level window bought; ADVICE r02).
-    """
-    if block_size < 1:
-        raise ValueError(f"block_size must be >= 1, got {block_size}")
-    if pack_by not in ("count", "range"):
-        raise ValueError(f"pack_by must be 'count' or 'range', got {pack_by!r}")
-    if pack_by == "count":
-        spark = index.postings.sparkSession
-        n_part = n_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        return _pack_sorted_stream(index, block_size, n_part)
-    contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
-
-    @pandas_udf(
-        "struct<doc_deltas:binary,tfs:binary,dls:binary,"
-        "tf_min:bigint,tf_width:int,dl_min:bigint,dl_width:int>"
-    )
-    def _pack(
-        doc_arrs: pd.Series, tf_arrs: pd.Series, dl_arrs: pd.Series, bases: pd.Series
-    ) -> pd.DataFrame:
-        # primitive array inputs (entries.doc_id / entries.tf projected
-        # JVM-side): Arrow hands each row as a numpy array — no
-        # per-posting Python. Whole batch encoded in one pass.
-        lens = np.fromiter(
-            (len(a) for a in doc_arrs), dtype=np.int64, count=len(doc_arrs)
-        )
-        row_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        if lens.sum() == 0:
-            empty = [b""] * len(lens)
-            zeros = np.zeros(len(lens), dtype=np.int64)
-            return pd.DataFrame(
-                {"doc_deltas": empty, "tfs": empty, "dls": empty,
-                 "tf_min": zeros, "tf_width": zeros.astype(np.int32),
-                 "dl_min": zeros, "dl_width": zeros.astype(np.int32)}
-            )
-        all_docs = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in doc_arrs]
-        )
-        all_tfs = np.concatenate([np.asarray(a, dtype=np.int64) for a in tf_arrs])
-        all_dls = np.concatenate([np.asarray(a, dtype=np.int64) for a in dl_arrs])
-        gaps = np.empty_like(all_docs)
-        gaps[1:] = all_docs[1:] - all_docs[:-1]
-        nz = lens > 0
-        gaps[row_starts[nz]] = all_docs[row_starts[nz]] - np.asarray(
-            bases, dtype=np.int64
-        )[nz]
-        # tf + dl: frame-of-reference bit-packing, not varint — both
-        # cluster tightly within a block (tf mostly 1-4 -> 2-3 bits
-        # where varint pays 8; dl residuals fit ~8 bits where varint
-        # paid 16), and an all-equal block stores ZERO payload bytes.
-        # Deltas stay varint: doc-gap distributions are outlier-heavy
-        # (one cross-segment jump in a block of gap-1s would blow a
-        # fixed FOR width for all 128 values; varint adapts per value).
-        tf_blobs, tf_mins, tf_widths = _for_encode_rows(all_tfs, row_starts, lens)
-        dl_blobs, dl_mins, dl_widths = _for_encode_rows(all_dls, row_starts, lens)
-        return pd.DataFrame(
-            {
-                "doc_deltas": _encode_rows(gaps, row_starts, lens),
-                "tfs": tf_blobs,
-                "dls": dl_blobs,
-                "tf_min": tf_mins,
-                "tf_width": tf_widths.astype(np.int32),
-                "dl_min": dl_mins,
-                "dl_width": dl_widths.astype(np.int32),
-            }
-        )
-
-    with_block = index.postings.withColumn(
-        "block_id", F.floor(F.col("doc_id") / block_size).cast("long")
-    )
-    grouped = (
-        with_block.withColumn("contrib", contrib)
-        .groupBy("term", "block_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n"),
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
-            F.max("contrib").alias("max_contrib"),
-            F.array_sort(
-                F.collect_list(F.struct("doc_id", "tf", "dl"))
-            ).alias("entries"),
-        )
-    )
-    packed = grouped.withColumn(
-        "blob",
-        _pack(
-            F.col("entries.doc_id"),
-            F.col("entries.tf"),
-            F.col("entries.dl"),
-            F.col("min_doc_id"),
-        ),
-    ).select(
-        "term",
-        "block_id",
-        "n",
-        "min_doc_id",
-        "max_doc_id",
-        "max_contrib",
-        F.col("blob.doc_deltas").alias("doc_deltas"),
-        F.col("blob.tfs").alias("tfs"),
-        F.col("blob.dls").alias("dls"),
-        F.col("blob.tf_min").alias("tf_min"),
-        F.col("blob.tf_width").alias("tf_width"),
-        F.col("blob.dl_min").alias("dl_min"),
-        F.col("blob.dl_width").alias("dl_width"),
-    )
-    return packed
 
 
 def unpack_postings(packed: DataFrame) -> DataFrame:

@@ -28,7 +28,6 @@ full shuffle (see sources/index_store.py).
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
@@ -108,6 +107,59 @@ def idf_column(df_col, n_docs: int, method: str):
     raise ValueError(f"method must be one of {VALID_METHODS}, got {method!r}")
 
 
+def bm25_tf_norm(tf_col, dl_col, k1: float, b: float, avgdl: float):
+    """BM25 term-frequency normalisation (bm25.ts:119-121):
+    tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))."""
+    k1, b, avgdl = F.lit(k1), F.lit(b), F.lit(avgdl)
+    return (tf_col * (k1 + F.lit(1.0))) / (
+        tf_col + k1 * (F.lit(1.0) - b + b * (dl_col / avgdl))
+    )
+
+
+def doc_length_stats(doc_lengths: DataFrame) -> tuple:
+    """(doc_id, dl) rows -> (n_docs, avgdl) in one tiny agg action;
+    avgdl = total/n (bm25.ts:60), 0.0 for an empty corpus."""
+    row = doc_lengths.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("total")
+    ).collect()[0]
+    n_docs = int(row["n"] or 0)
+    return n_docs, (int(row["total"] or 0) / n_docs if n_docs > 0 else 0.0)
+
+
+def attach_idf(tf: DataFrame, term_stats: DataFrame) -> DataFrame:
+    """(term, doc_id, tf, dl) rows -> the denormalized postings
+    (term_id, term, doc_id, tf, dl, idf): idf joined on from the
+    vocab-sized term_stats. term_id is the interned 64-bit term key
+    (xxhash64, seed 42): scoring and WAND probe/filter on longs, so the
+    columnar scan never touches the string column and the hot-path
+    InSet/join hashing works on 8-byte keys."""
+    return tf.join(term_stats.select("term", "idf"), "term").select(
+        F.xxhash64("term").alias("term_id"), "term", "doc_id", "tf", "dl", "idf"
+    )
+
+
+def memo_df(cache: dict, table: DataFrame, key: str, keys: Sequence) -> dict:
+    """key -> df for `keys`, memoized in `cache` across calls.
+
+    `table` is a (key, df) table. First sight of a key costs one bounded
+    In-filtered collect over it; keys absent from it cache df=0 so they
+    never re-trigger a lookup, and a warm batch (every key seen before)
+    runs ZERO Spark jobs — routing and prune-gate decisions then happen
+    entirely at plan-construction time. The cache is bounded by the
+    query-side vocabulary actually seen, not by the index."""
+    want = set(keys)
+    missing = sorted(want - cache.keys())
+    if missing:
+        from bayesian_bm25_js_spark.operators.scoring import isin_filter
+
+        rows = table.filter(isin_filter(key, missing)).select(key, "df").collect()
+        for r in rows:
+            cache[r[key]] = int(r["df"])
+        for t in missing:
+            cache.setdefault(t, 0)
+    return {t: cache[t] for t in want}
+
+
 @dataclass(eq=False)
 class InvertedIndex:
     """Distributed index state: three tables + driver scalars."""
@@ -125,44 +177,17 @@ class InvertedIndex:
     # store): scoring then ALSO applies the string term In-filter so
     # the predicate reaches parquet row-group stats (see score_queries)
     push_string_filter: bool = False
-    # Driver-side term -> df cache for the selectivity router. Bounded
-    # by the query-side vocabulary actually seen (terms, not postings),
-    # so it stays tiny even against a 10^9-term index; terms absent
-    # from the vocab cache df=0 so they never re-trigger a lookup.
+    # Driver-side term -> df cache for the selectivity router (memo_df)
     _df_cache: dict = field(default_factory=dict, repr=False, compare=False)
 
     def df_lookup(self, terms: Sequence[str]) -> dict:
-        """term -> df for the given terms, cached across batches.
-
-        First sight of a term costs one bounded In-filter collect over
-        the vocab-sized term_stats table; a warm batch (every term
-        seen before) costs ZERO driver actions — the router's routing
-        decision then happens entirely at plan-construction time."""
-        want = set(terms)
-        missing = sorted(want - self._df_cache.keys())
-        if missing:
-            from bayesian_bm25_js_spark.operators.scoring import isin_filter
-
-            rows = (
-                self.term_stats.filter(isin_filter("term", missing))
-                .select("term", "df")
-                .collect()
-            )
-            for r in rows:
-                self._df_cache[r["term"]] = int(r["df"])
-            for t in missing:
-                self._df_cache.setdefault(t, 0)
-        return {t: self._df_cache[t] for t in want}
+        """term -> df for the given terms, memoized across batches over
+        the vocab-sized term_stats table (memo_df)."""
+        return memo_df(self._df_cache, self.term_stats, "term", terms)
 
     def tf_norm_column(self, tf_col, dl_col):
-        """BM25 term-frequency normalisation (bm25.ts:119-121):
-        tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))."""
-        k1 = F.lit(self.k1)
-        b = F.lit(self.b)
-        avgdl = F.lit(self.avgdl)
-        return (tf_col * (k1 + F.lit(1.0))) / (
-            tf_col + k1 * (F.lit(1.0) - b + b * (dl_col / avgdl))
-        )
+        """bm25_tf_norm with this index's k1, b and avgdl."""
+        return bm25_tf_norm(tf_col, dl_col, self.k1, self.b, self.avgdl)
 
     def unpersist(self) -> None:
         for df in (self.postings, self.term_stats, self.doc_stats):
@@ -222,12 +247,7 @@ def build_inverted_index(
     doc_stats = base.select("doc_id", "dl")
     if cache:
         doc_stats = doc_stats.persist()
-    stats_row = doc_stats.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("total")
-    ).collect()[0]
-    n_docs = int(stats_row["n"] or 0)
-    total_len = int(stats_row["total"] or 0)
-    avgdl = total_len / n_docs if n_docs > 0 else 0.0
+    n_docs, avgdl = doc_length_stats(doc_stats)
 
     # shuffle 1: per-(doc, term) tf with map-side partial aggregation
     tf_df = (
@@ -247,17 +267,11 @@ def build_inverted_index(
     # idf join: AQE converts to broadcast at runtime when the vocab side
     # is under spark.sql.autoBroadcastJoinThreshold, and splits skewed
     # term partitions otherwise — no extra sizing probe job needed.
-    join_stats = term_stats.select("term", "idf")
-    # term_id: interned 64-bit term key (xxhash64, seed 42). Scoring and
-    # WAND probe/filter on longs — the columnar scan then never touches
-    # the string column (column pruning) and the hot-path InSet/join
-    # hashing works on 8-byte keys. Collision risk is the 64-bit
-    # birthday bound (~n_terms^2 / 2^65); build-time uniqueness is
-    # asserted cheaply over term_stats (see below) so a collision fails
-    # loudly instead of silently merging two terms' postings.
-    postings = tf_df.join(join_stats, "term").select(
-        F.xxhash64("term").alias("term_id"), "term", "doc_id", "tf", "dl", "idf"
-    )
+    # term_id collision risk is the 64-bit birthday bound
+    # (~n_terms^2 / 2^65); build-time uniqueness is asserted cheaply
+    # over term_stats (see below) so a collision fails loudly instead
+    # of silently merging two terms' postings.
+    postings = attach_idf(tf_df, term_stats)
 
     # Layout shuffle, paid once per build: hash-partition postings by
     # doc_id. Two effects measured at 400k docs / 150 queries:

@@ -47,7 +47,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bayesian_bm25_js_spark.operators.index_build import cached_layout, idf_column
+from bayesian_bm25_js_spark.operators.index_build import (
+    bm25_tf_norm,
+    cached_layout,
+    doc_length_stats,
+    idf_column,
+    memo_df,
+)
 from bayesian_bm25_js_spark.operators.scoring import isin_filter, top_k
 
 # Corpus-size floor for the rarest-term candidate pruning (see
@@ -71,36 +77,23 @@ class PositionalIndex:
     k1: float
     b: float
     method: str
-    # Driver-side term_id -> df memo for the rarest-term candidate
-    # pruning: the routing decision needs df per batch term, and paying
-    # a groupBy+collect on EVERY phrase/proximity call was the round-5
-    # perf-weak (~1s fixed driver cost per batch at >=50k docs). Keyed
-    # by the query-side vocabulary actually seen, so it stays tiny.
+    # Driver-side term_id -> df cache for the rarest-term candidate
+    # pruning (memo_df): paying a groupBy+collect on EVERY
+    # phrase/proximity call was the round-5 perf-weak (~1s fixed driver
+    # cost per batch at >=50k docs).
     _df_cache: dict = field(default_factory=dict, repr=False)
     _doc_id_range: Optional[tuple] = field(default=None, repr=False)
 
-    def df_lookup_ids(self, term_ids: Sequence[int]) -> dict:
-        """term_id -> df for the given ids, memoized across batches.
-
-        First sight of an id costs one bounded In-filtered,
-        column-pruned agg over the positional postings (term_id column
-        only — position arrays are never touched); a warm batch costs
-        ZERO driver actions, making the pruning decision pure
-        plan-construction time."""
-        want = set(term_ids)
-        missing = sorted(want - self._df_cache.keys())
-        if missing:
-            rows = (
-                self.postings.filter(isin_filter("term_id", missing))
-                .groupBy("term_id")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .collect()
-            )
-            for r in rows:
-                self._df_cache[r["term_id"]] = int(r["df"])
-            for t in missing:
-                self._df_cache.setdefault(t, 0)
-        return {t: self._df_cache[t] for t in want}
+    def df_lookup(self, term_ids: Sequence[int]) -> dict:
+        """term_id -> df for the given ids, memoized across batches
+        (memo_df) over the per-term posting counts. The In-filter on
+        the grouping key sits below the aggregate in the optimized
+        plan, so the lookup scans only the term_id column of the
+        matching postings — position arrays are never read."""
+        df_table = self.postings.groupBy("term_id").agg(
+            F.count(F.lit(1)).alias("df")
+        )
+        return memo_df(self._df_cache, df_table, "term_id", term_ids)
 
     def doc_id_range(self) -> tuple:
         """(min, max) doc_id in the index (memoized; one column-pruned
@@ -144,11 +137,7 @@ def build_positional_index(
     """
     base = docs.select("doc_id", F.size("tokens").alias("dl"), "tokens")
 
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("total")
-    ).collect()[0]
-    n_docs = int(stats["n"] or 0)
-    avgdl = (int(stats["total"] or 0) / n_docs) if n_docs > 0 else 0.0
+    n_docs, avgdl = doc_length_stats(base)
 
     postings = (
         base.select("doc_id", "dl", F.posexplode("tokens").alias("pos", "term"))
@@ -229,12 +218,12 @@ def _slot_pivot(
     )
 
     # The gate needs df per batch term; the memoized index-side sidecar
-    # (df_lookup_ids) makes it a driver dict lookup on warm batches.
+    # (df_lookup) makes it a driver dict lookup on warm batches.
     # Below ~50k docs the whole fan-in costs less than the candidate
     # broadcast build (measured: 5k docs — pruned 1.7s vs unpruned
     # 1.0s), so small corpora skip straight to the plain join.
     if candidate_limit > 0 and index.n_docs >= CANDIDATE_PRUNE_MIN_DOCS:
-        df_by_id = index.df_lookup_ids(ids)
+        df_by_id = index.df_lookup(ids)
         term_ids = dict(zip(all_terms, ids))
         hot_floor = PRUNE_HOT_DF_FRAC * index.n_docs
         rare = []  # (min_df, query_id, rare_term_id)
@@ -351,10 +340,8 @@ def _pseudo_term_topk(
     from pyspark.sql.window import Window
 
     pdf = F.count(F.lit(1)).over(Window.partitionBy("query_id"))
-    k1, b, avgdl = F.lit(index.k1), F.lit(index.b), F.lit(index.avgdl)
-    tf = F.col("tf").cast("double")
-    tf_norm = (tf * (k1 + F.lit(1.0))) / (
-        tf + k1 * (F.lit(1.0) - b + b * (F.col("dl") / avgdl))
+    tf_norm = bm25_tf_norm(
+        F.col("tf").cast("double"), F.col("dl"), index.k1, index.b, index.avgdl
     )
     scored = matched.withColumn(
         "score",

@@ -28,7 +28,7 @@ Float64 parity details:
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -111,6 +111,84 @@ def probability_udf(
     return _prob
 
 
+def _terms_filtered(
+    index: InvertedIndex,
+    table: DataFrame,
+    terms_filter: Optional[Sequence[str]],
+) -> DataFrame:
+    """The term-key In-filter for one of the index's postings-shaped
+    tables (postings or block-max), or the table itself when
+    terms_filter is None.
+
+    Layouts whose term_id only exists POST-scan (the packed
+    delta+varint store computes it after decode) set
+    index.push_string_filter and ALSO get a STRING In-predicate:
+    term IN (...) reaches the parquet row-group stats, so non-matching
+    blocks are skipped before any varint decode runs. The interned row cache skips
+    it — its term_id filter already batch-prunes, and an extra per-row
+    string compare would cost the hot path. Layouts with NO term_id at
+    all fall back to the string filter unconditionally so terms_filter
+    is never a silent no-op (the only pruning such a layout can get)."""
+    if terms_filter is None:
+        return table
+    if "term" in table.columns and (
+        getattr(index, "push_string_filter", False)
+        or "term_id" not in table.columns
+    ):
+        table = table.filter(isin_filter("term", terms_filter))
+    if "term_id" in table.columns:
+        from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64
+
+        ids = [spark_xxhash64(t) for t in terms_filter]
+        table = table.filter(isin_filter("term_id", ids))
+    return table
+
+
+def _probe(table: DataFrame, query_terms: DataFrame) -> tuple:
+    """-> (join_key, table, query side): the interned hot path probes on
+    8-byte term_id keys (the columnar scan then prunes the string column
+    entirely) whenever the table carries term_id; else on term.
+
+    A query frame without is_first (the documented (query_id, pos, term)
+    input) gets it from a row_number over (query_id, term) by pos, so a
+    duplicate token still counts once in tf_overlap and in the WAND
+    per-term witnesses; queries_to_df frames carry it already."""
+    qt = query_terms
+    if "is_first" not in qt.columns:
+        w = Window.partitionBy("query_id", "term").orderBy("pos")
+        qt = qt.withColumn("is_first", F.row_number().over(w) == 1)
+    if "term_id" not in table.columns:
+        return "term", table, qt
+    qt = qt.withColumn("term_id", F.xxhash64("term")).drop("term")
+    return "term_id", table.drop("term"), qt
+
+
+def _score_aggregate(
+    index: InvertedIndex, joined: DataFrame, exact_order: bool = False
+) -> DataFrame:
+    """(query_id, doc_id, pos, is_first, tf, dl, idf) rows -> per-(query,
+    doc) (score, tf_overlap, dl); see score_queries for exact_order."""
+    contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
+    joined = joined.select(
+        "query_id", "doc_id", "pos", "is_first", "dl", contrib.alias("contrib")
+    )
+    if exact_order:
+        score_agg = F.aggregate(
+            F.array_sort(F.collect_list(F.struct("pos", "contrib"))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["contrib"],
+        )
+    else:
+        score_agg = F.sum("contrib")
+    return joined.groupBy("query_id", "doc_id").agg(
+        score_agg.alias("score"),
+        F.sum(F.when(F.col("is_first"), 1).otherwise(0))
+        .cast("int")
+        .alias("tf_overlap"),
+        F.first("dl").alias("dl"),
+    )
+
+
 def score_queries(
     index: InvertedIndex,
     query_terms: DataFrame,
@@ -136,68 +214,13 @@ def score_queries(
     (SURVEY §4.4; bm25.ts:117-123). ObjectHashAggregate, memory-heavy:
     fixture-parity runs only.
     """
-    contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
-    qt = query_terms
-    if "is_first" not in qt.columns:
-        qt = qt.withColumn("is_first", F.lit(True))
-    postings = index.postings
     # idf is read straight from the denormalized postings cache: carrying
     # it on the query side (a term_stats join per batch) measured a fixed
     # per-batch cost with no scan saving (50k docs: warm WAND CPU +51%).
-    join_key = "term"
-    if (
-        terms_filter is not None
-        and "term" in postings.columns
-        and (
-            getattr(index, "push_string_filter", False)
-            or "term_id" not in postings.columns
-        )
-    ):
-        # Layouts whose term_id only exists POST-scan (the packed
-        # delta+varint store computes it after decode) opt in to a
-        # STRING In-predicate too: term IN (...) reaches the parquet
-        # row-group stats, so non-matching blocks are skipped before
-        # any varint decode runs. The interned row cache skips this —
-        # its term_id filter below already batch-prunes, and an extra
-        # per-row string compare would cost the hot path. Custom
-        # layouts with NO term_id at all fall back to the string
-        # filter unconditionally so terms_filter is never a silent
-        # no-op (the only pruning such a layout can get).
-        postings = postings.filter(isin_filter("term", terms_filter))
-    if "term_id" in postings.columns:
-        # Interned hot path: probe/filter on 8-byte keys; the columnar
-        # scan prunes the string column entirely.
-        join_key = "term_id"
-        qt = qt.withColumn("term_id", F.xxhash64("term")).drop("term")
-        postings = postings.drop("term")
-        if terms_filter is not None:
-            from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64
-
-            ids = [spark_xxhash64(t) for t in terms_filter]
-            postings = postings.filter(isin_filter("term_id", ids))
-
-    joined = postings.join(F.broadcast(qt), join_key).select(
-        "query_id",
-        "doc_id",
-        "pos",
-        "is_first",
-        "dl",
-        contrib.alias("contrib"),
-    )
-    if exact_order:
-        score_agg = F.aggregate(
-            F.array_sort(F.collect_list(F.struct("pos", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        )
-    else:
-        score_agg = F.sum("contrib")
-    return joined.groupBy("query_id", "doc_id").agg(
-        score_agg.alias("score"),
-        F.sum(F.when(F.col("is_first"), 1).otherwise(0))
-        .cast("int")
-        .alias("tf_overlap"),
-        F.first("dl").alias("dl"),
+    postings = _terms_filtered(index, index.postings, terms_filter)
+    key, postings, qt = _probe(postings, query_terms)
+    return _score_aggregate(
+        index, postings.join(F.broadcast(qt), key), exact_order
     )
 
 
@@ -233,7 +256,6 @@ def top_k(
     two_phase: bool = True,
     salt: int = 64,
     round_dp: Optional[int] = 6,
-    phase1_partitions: Optional[int] = None,
     est_rows: Optional[int] = None,
 ) -> DataFrame:
     """Per-query top-k with the mandatory (desc score, asc doc_id)
@@ -283,9 +305,7 @@ def top_k(
         base = int(
             scores.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-        if phase1_partitions is not None:
-            n_p1 = phase1_partitions
-        elif est_rows is None:
+        if est_rows is None:
             n_p1 = 4 * base
         else:
             n_p1 = base * min(

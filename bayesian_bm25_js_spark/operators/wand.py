@@ -49,7 +49,14 @@ from bayesian_bm25_js_spark.operators.compression import (
     block_max_table,
 )
 from bayesian_bm25_js_spark.operators.index_build import InvertedIndex
-from bayesian_bm25_js_spark.operators.scoring import top_k
+from bayesian_bm25_js_spark.operators.scoring import (
+    _probe,
+    _score_aggregate,
+    _terms_filtered,
+    queries_to_df,
+    score_queries,
+    top_k,
+)
 
 # One 6-dp rounding quantum: ranking is on round(score, 6) (top_k float
 # policy). Pruning at raw τ could drop a doc whose raw score is < τ but
@@ -60,14 +67,14 @@ from bayesian_bm25_js_spark.operators.scoring import top_k
 ROUND_SLACK = 1e-6
 
 
-def _term_key(block_max: DataFrame, query_terms: DataFrame):
-    """-> (join_key, qt): intern query terms when the metadata table is
-    term_id-keyed (preferred — long keys, string column pruned)."""
-    if "term_id" in block_max.columns:
-        return "term_id", query_terms.withColumn(
-            "term_id", F.xxhash64("term")
-        ).drop("term")
-    return "term", query_terms
+def _query_blocks(block_max: DataFrame, query_terms: DataFrame) -> tuple:
+    """-> (join_key, qb): the block-max rows of every query token, each
+    carrying (query_id, is_first) from the broadcast query side — the
+    shared preamble of _bounds_and_tau and _fused_survivors."""
+    key, block_max, qt = _probe(block_max, query_terms)
+    return key, block_max.join(
+        F.broadcast(qt.select("query_id", key, "is_first")), key
+    )
 
 
 def _bounds_and_tau(
@@ -90,17 +97,11 @@ def _bounds_and_tau(
     the best term maximizes the bound; witnesses never mix terms, so
     no doc is double-counted.
     """
-    qt = query_terms
-    if "is_first" not in qt.columns:
-        w_first = Window.partitionBy("query_id", "term").orderBy("pos")
-        qt = qt.withColumn("is_first", F.row_number().over(w_first) == 1)
-    key, qt = _term_key(block_max, qt)
     # ONE scan of block_max; the repartition materializes an exchange
     # that both downstream aggregations reuse (profiled: without it the
     # 20M-row cache is scanned once per phase).
-    qb = block_max.join(
-        F.broadcast(qt.select("query_id", key, "is_first")), key
-    ).repartition("query_id")
+    key, qb = _query_blocks(block_max, query_terms)
+    qb = qb.repartition("query_id")
 
     bounds = qb.groupBy("query_id", "block_id").agg(
         F.sum("max_contrib").alias("ub"),
@@ -181,14 +182,10 @@ def _fused_survivors(
     """
     import pandas as pd
 
-    qt = query_terms
-    if "is_first" not in qt.columns:
-        w_first = Window.partitionBy("query_id", "term").orderBy("pos")
-        qt = qt.withColumn("is_first", F.row_number().over(w_first) == 1)
-    key, qt = _term_key(block_max, qt)
-    qb = block_max.join(
-        F.broadcast(qt.select("query_id", key, "is_first")), key
-    ).select("query_id", key, "block_id", "max_contrib", "min_contrib", "n", "is_first")
+    key, qb = _query_blocks(block_max, query_terms)
+    qb = qb.select(
+        "query_id", key, "block_id", "max_contrib", "min_contrib", "n", "is_first"
+    )
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         by_block = pdf.groupby("block_id")["max_contrib"]
@@ -366,7 +363,6 @@ def auto_topk(
     block_size: int = DEFAULT_BLOCK_SIZE,
     hot_df_frac: float = 0.10,
     min_prunable_postings: int = 50_000_000,
-    exact_order: bool = False,
     block_max_provider=None,
 ) -> DataFrame:
     """Selectivity router: pick block-max-WAND or the salted exhaustive
@@ -387,11 +383,6 @@ def auto_topk(
     batch routed to the exhaustive path never builds block-max
     (block_max_provider is called lazily).
     """
-    from bayesian_bm25_js_spark.operators.scoring import (
-        queries_to_df,
-        score_queries,
-    )
-
     _, wand_ids = route_queries(
         index, queries, hot_df_frac, min_prunable_postings
     )
@@ -400,7 +391,7 @@ def auto_topk(
     est = len(queries) * index.n_docs
     if not wand_ids:
         return top_k(
-            score_queries(index, qdf, exact_order=exact_order, terms_filter=terms),
+            score_queries(index, qdf, terms_filter=terms),
             k,
             est_rows=est,
         )
@@ -412,7 +403,6 @@ def auto_topk(
         k,
         block_max=block_max,
         block_size=block_size,
-        exact_order=exact_order,
         terms_filter=terms,
         est_rows=est,
     )
@@ -437,14 +427,16 @@ def wand_topk(
     block_max: DataFrame = None,
     block_size: int = DEFAULT_BLOCK_SIZE,
     return_stats: bool = False,
-    exact_order: bool = False,
     terms_filter: Optional[Sequence[str]] = None,
     est_rows: Optional[int] = None,
 ):
     """Pruned top-k: rank-identical to the exhaustive scorer under the
     engine's 6-dp rounded ranking.
 
-    query_terms: (query_id, pos, term) with duplicates preserved.
+    query_terms: (query_id, pos, term[, is_first]) with duplicates
+      preserved — the exhaustive scorer's input (score_queries); the
+      probe, term-key filter and score aggregate are score_queries' own,
+      plus one survivor broadcast join.
     terms_filter: the workload's distinct terms, when known client-side
       — prunes the cached columnar scans batch-wise (sorted-by-term
       caches make the In-filter stats-effective).
@@ -461,18 +453,7 @@ def wand_topk(
     if block_max is None:
         block_max = block_max_table(index, block_size)
 
-    from bayesian_bm25_js_spark.operators.scoring import isin_filter
-
-    def _isin_key(df: DataFrame):
-        if "term_id" in df.columns:
-            from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64
-
-            ids = [spark_xxhash64(t) for t in terms_filter]
-            return df.filter(isin_filter("term_id", ids))
-        return df.filter(isin_filter("term", terms_filter))
-
-    if terms_filter is not None:
-        block_max = _isin_key(block_max)
+    block_max = _terms_filtered(index, block_max, terms_filter)
 
     stats = None
     if return_stats:
@@ -499,19 +480,10 @@ def wand_topk(
     else:
         surviving = _fused_survivors(block_max, query_terms, k)
 
-    contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
-    qt = query_terms
-    if "is_first" not in qt.columns:
-        qt = qt.withColumn("is_first", F.lit(True))
-
-    postings = index.postings
-    join_key = "term"
-    if "term_id" in postings.columns:
-        join_key = "term_id"
-        qt = qt.withColumn("term_id", F.xxhash64("term")).drop("term")
-        postings = postings.drop("term")
-    if terms_filter is not None:
-        postings = _isin_key(postings)
+    # the exhaustive scorer's probe: same term-key filter, same query
+    # side (score_queries)
+    postings = _terms_filtered(index, index.postings, terms_filter)
+    join_key, postings, qt = _probe(postings, query_terms)
 
     # Push the pruning into the scoring stage as TWO chained broadcast
     # hash joins: postings probe the (tiny, token-count-sized) query
@@ -544,27 +516,8 @@ def wand_topk(
         .join(F.broadcast(qt), join_key)
         .withColumn("__qb", pack)
         .join(surv, "__qb")
-        .select(
-            "query_id", "doc_id", "pos", "is_first", "dl",
-            contrib.alias("contrib"),
-        )
     )
-    if exact_order:
-        score_agg = F.aggregate(
-            F.array_sort(F.collect_list(F.struct("pos", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        )
-    else:
-        score_agg = F.sum("contrib")
-    scores = joined.groupBy("query_id", "doc_id").agg(
-        score_agg.alias("score"),
-        F.sum(F.when(F.col("is_first"), 1).otherwise(0))
-        .cast("int")
-        .alias("tf_overlap"),
-        F.first("dl").alias("dl"),
-    )
-    ranked = top_k(scores, k, est_rows=est_rows)
+    ranked = top_k(_score_aggregate(index, joined), k, est_rows=est_rows)
     if not return_stats:
         return ranked
     return ranked, stats

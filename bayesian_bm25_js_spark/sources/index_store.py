@@ -28,7 +28,11 @@ from typing import Optional
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from bayesian_bm25_js_spark.operators.index_build import InvertedIndex, cached_layout
+from bayesian_bm25_js_spark.operators.index_build import (
+    InvertedIndex,
+    attach_idf,
+    cached_layout,
+)
 
 # Version of the PACKED blob layout (meta.json "packed_format"). 2 added
 # the third varint stream (`dls`) inside each block blob; 3 re-encoded
@@ -182,18 +186,7 @@ def load_packed_index(spark: SparkSession, path: str) -> tuple:
     packed = spark.read.parquet(f"{path}/packed")
     term_stats = spark.read.parquet(f"{path}/term_stats")
     doc_stats = spark.read.parquet(f"{path}/doc_stats")
-    unpacked = unpack_postings(packed).drop("block_id")
-    postings = (
-        unpacked.join(term_stats.select("term", "idf"), "term")
-        .select(
-            F.xxhash64("term").alias("term_id"),
-            "term",
-            "doc_id",
-            "tf",
-            "dl",
-            "idf",
-        )
-    )
+    postings = attach_idf(unpack_postings(packed).drop("block_id"), term_stats)
     index = InvertedIndex(
         spark=spark,
         postings=postings,

@@ -49,7 +49,9 @@ from pyspark.sql import functions as F
 from bayesian_bm25_js_spark.operators.index_build import (
     VALID_METHODS,
     InvertedIndex,
+    attach_idf,
     cached_layout,
+    doc_length_stats,
     idf_column,
 )
 
@@ -139,11 +141,7 @@ def load_streaming_index(spark: SparkSession, path: str) -> InvertedIndex:
         "doc_id", "dl"
     )
 
-    stats = doc_stats.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("total")
-    ).collect()[0]
-    n_docs = int(stats["n"] or 0)
-    avgdl = (int(stats["total"] or 0) / n_docs) if n_docs > 0 else 0.0
+    n_docs, avgdl = doc_length_stats(doc_stats)
 
     term_stats = (
         deltas.groupBy("term")
@@ -152,17 +150,7 @@ def load_streaming_index(spark: SparkSession, path: str) -> InvertedIndex:
         .withColumn("term_id", F.xxhash64("term"))
     )
 
-    postings = cached_layout(
-        deltas.join(term_stats.select("term", "idf"), "term").select(
-            F.xxhash64("term").alias("term_id"),
-            "term",
-            "doc_id",
-            "tf",
-            "dl",
-            "idf",
-        ),
-        n_docs,
-    )
+    postings = cached_layout(attach_idf(deltas, term_stats), n_docs)
 
     return InvertedIndex(
         spark=spark,

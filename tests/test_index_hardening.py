@@ -73,7 +73,7 @@ def test_pack_unpack_roundtrip(rnd_index):
 
 def test_packed_blocks_are_small_and_sorted(rnd_index):
     _, idx = rnd_index
-    # count-chunked (default storage layout): full blocks, deltas from
+    # count-chunked blocks (the packing rule): full blocks, deltas from
     # min_doc_id
     packed = pack_postings(idx, block_size=64).collect()
     per_term: dict = {}
@@ -91,14 +91,6 @@ def test_packed_blocks_are_small_and_sorted(rnd_index):
         assert [r["block_id"] for r in rows] == list(range(len(rows)))
         for r in rows[:-1]:
             assert r["n"] == 64, term
-
-    # doc-range mode (reference BlockMaxIndex blocking, scorer.ts:659-661)
-    packed_range = pack_postings(idx, block_size=64, pack_by="range").collect()
-    for r in packed_range:
-        assert r["block_id"] == r["min_doc_id"] // 64 == r["max_doc_id"] // 64
-        gaps = varint_decode(bytes(r["doc_deltas"]))
-        doc_ids = np.cumsum(gaps) + r["min_doc_id"]
-        assert doc_ids[0] == r["min_doc_id"] and doc_ids[-1] == r["max_doc_id"]
 
 
 def test_block_count_rule(spark):
@@ -263,6 +255,40 @@ def test_packed_index_query_parity(spark, rnd_index, tmp_path):
     ]
 
 
+def test_packed_wand_pushes_term_filter(spark, rnd_index, tmp_path):
+    """WAND over the packed store gets the exhaustive scorer's parquet
+    term pruning: term IN (...) is pushed into every packed and
+    term_stats scan (term_id only exists after decode), and the pruned
+    ranking still equals the exhaustive one."""
+    import re
+
+    from bayesian_bm25_js_spark.sources.index_store import (
+        load_packed_index,
+        save_index,
+    )
+
+    _, idx = rnd_index
+    path = str(tmp_path / "pidx")
+    save_index(idx, path, packed=True, block_size=64)
+    pidx, _ = load_packed_index(spark, path)
+    queries = [["w1", "w2", "w30"], ["w3", "w3", "w44"], ["w0", "w12"]]
+    terms = sorted({t for q in queries for t in q})
+    qdf = queries_to_df(spark, queries)
+    ranked = wand_topk(pidx, qdf, 5, block_size=64, terms_filter=terms)
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    pushed = re.findall(r"PushedFilters: \[[^\]]*\]", plan)
+    assert pushed and all("In(term" in p for p in pushed), pushed
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
+            for r in df.collect()
+        )
+
+    exhaustive = top_k(score_queries(pidx, qdf, terms_filter=terms), 5)
+    assert rows(ranked) == rows(exhaustive)
+
+
 def test_packed_format_version_check(spark, rnd_index, tmp_path):
     """An index packed by an older layout (no packed_format / stale
     version in meta.json) fails loudly with a re-pack message instead
@@ -348,20 +374,60 @@ def test_checkpointed_build_resumes(spark, tmp_path):
     assert docs_metrics["partitions"]
 
 
-def test_df_lookup_caches_across_batches(rnd_index):
-    """Router v2: the driver-side term->df cache makes a warm batch's
-    routing decision free of Spark jobs — re-lookups are served from
-    the dict (proved by poisoning the cache), and terms absent from
-    the vocab cache df=0 instead of re-collecting every batch."""
-    _, idx = rnd_index
-    first = idx.df_lookup(["w0", "w7", "definitely-absent"])
-    assert first["w0"] > 0 and first["definitely-absent"] == 0
-    # poison the cache: if the second lookup hit Spark it would return
-    # the true df again, not the sentinel
-    idx._df_cache["w0"] = -123
-    second = idx.df_lookup(["w0", "definitely-absent"])
-    assert second == {"w0": -123, "definitely-absent": 0}
-    idx._df_cache["w0"] = first["w0"]  # restore for other tests
+@pytest.mark.parametrize("kind", ["inverted", "positional"])
+def test_df_lookup_caches_across_batches(spark, rnd_index, kind, monkeypatch):
+    """One df memo for both index types: a warm batch's lookup (routing
+    or the phrase prune gate) starts no Spark job, and keys absent from
+    the index cache df=0 instead of re-collecting every batch. The
+    positional lookup's In-filter sits below its aggregate, so it never
+    reads position arrays."""
+    import dataclasses
+    import re
+
+    from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64
+    from bayesian_bm25_js_spark.operators.phrase import build_positional_index
+
+    corpus, idx = rnd_index
+    keys = ["w0", "w7", "definitely-absent"]
+    if kind == "positional":
+        idx = build_positional_index(docs_df(spark, corpus), method="lucene")
+        keys = [spark_xxhash64(t) for t in keys]
+    else:
+        idx = dataclasses.replace(idx, _df_cache={})  # cold memo
+    want = {t: sum(t in doc for doc in corpus) for t in ["w0", "w7"]}
+
+    plans = []
+    DataFrame = type(spark.range(1))
+    collect = DataFrame.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    first = idx.df_lookup(keys)
+    assert [first[k] for k in keys] == [want["w0"], want["w7"], 0]
+    assert len(plans) == 1
+    if kind == "positional":
+        # above the cached relation: Aggregate over the filtered,
+        # term_id-only projection
+        plan = re.sub(r"#\d+L?", "", plans[0])
+        top = plan[: plan.index("InMemoryRelation")]
+        assert top.index("Aggregate") < top.index("Filter term_id IN"), plan
+        assert "positions" not in top, plan
+
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("df-lookup-warm", "warm df lookup")
+    try:
+        second = idx.df_lookup([keys[0], keys[2]])
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        spark.sparkContext.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("df-lookup-warm") == []
+    assert len(plans) == 1
+    assert second == {keys[0]: want["w0"], keys[2]: 0}
+    if kind == "positional":
+        idx.unpersist()
 
 
 def test_fit_router_floor():

@@ -203,3 +203,26 @@ def test_score_queries_empty_terms_filter(spark, small_idx):
         small_idx, queries_to_df(spark, [["cat"]]), terms_filter=[]
     )
     assert out.count() == 0
+
+
+def test_query_frame_without_is_first(spark):
+    """The documented (query_id, pos, term) input without is_first
+    scores like queries_to_df's full frame: a duplicate query token
+    contributes twice to the score but counts once in tf_overlap (the
+    tf prior's overlap count), on the exhaustive and the WAND path."""
+    from tests.conftest import SMALL_CORPUS, docs_df
+
+    idx = build_inverted_index(docs_df(spark, SMALL_CORPUS), method="lucene")
+    full = queries_to_df(spark, [["cat", "cat", "dog"]])
+    bare = full.drop("is_first")
+
+    def rows(df):
+        return sorted(
+            (r["doc_id"], r["tf_overlap"], round(r["score"], 9))
+            for r in df.collect()
+        )
+
+    assert rows(score_queries(idx, bare)) == rows(score_queries(idx, full))
+    assert rows(wand_topk(idx, bare, 10)) == rows(wand_topk(idx, full, 10))
+    overlap = {d: t for d, t, _ in rows(score_queries(idx, bare))}
+    assert overlap[0] == 1 and overlap[1] == 2  # cat only; cat + dog
