@@ -11,6 +11,9 @@ Port of the reference's pseudo-query sampling + estimators
 4. exact driver NumPy estimators — percentile / mixture-EM / elbow are
    order-of-operations ports; Spark's approximate percentiles are NOT
    used (parity requirement, SURVEY §2.4).
+
+fit_transform is the one entry point: BayesianBM25SparkScorer.index()
+and the build job's params stage (sources/checkpoints.py) both call it.
 """
 
 from __future__ import annotations
@@ -33,6 +36,9 @@ VALID_BASE_RATE_METHODS = ("percentile", "mixture", "elbow")
 SAMPLE_SEED = 42  # scorer.ts:204
 SAMPLE_CAP = 50  # scorer.ts:203
 PSEUDO_QUERY_LEN = 5  # scorer.ts:212
+# Positive pseudo-query scores the driver estimators may collect; past
+# it, fit_transform switches to the distributed estimators.
+ESTIMATION_CAP = 2_000_000
 
 
 def median_js(values: np.ndarray) -> float:
@@ -100,7 +106,7 @@ def sample_pseudo_query_scores(
 ) -> List[np.ndarray]:
     """Per-pseudo-query positive score arrays (scorer.ts:199-226) —
     DRIVER materialization: bit-exact reference estimator input, but
-    bounded only by the pseudo-queries' match counts. The scorer
+    bounded only by the pseudo-queries' match counts. fit_transform
     switches to the distributed estimators past `estimation_cap`
     positives (see estimate_parameters_distributed).
 
@@ -390,3 +396,61 @@ def estimate_base_rate_distributed(
         return 1e-6
     fn = base_rate_mixture if method == "mixture" else base_rate_elbow
     return fn([arr])
+
+
+def fit_transform(
+    index: InvertedIndex,
+    docs,
+    alpha: Optional[float],
+    beta: Optional[float],
+    base_rate,
+    base_rate_method: str,
+    estimation_cap: Optional[int] = None,
+) -> Tuple[float, float, Optional[float]]:
+    """The calibration fit (scorer.ts:163-197) -> (alpha, beta,
+    base_rate): user values where given, pseudo-query estimates for the
+    rest (base_rate None | float | "auto").
+
+    estimation_cap (default ESTIMATION_CAP): when the pseudo-query
+    sample matches more than this many positive (query, doc) scores,
+    estimation switches from the bit-exact driver estimators to the
+    distributed ones (exact median/std; percentile thresholds via
+    streaming windows; EM/elbow over a bounded deterministic
+    reservoir) so a hot pseudo-query over a 10^12-doc corpus can never
+    OOM the driver."""
+    if estimation_cap is None:
+        estimation_cap = ESTIMATION_CAP
+    fitted_rate = None
+    if alpha is None or beta is None or base_rate == "auto":
+        # ONE scoring pipeline per fit: the pseudo-query scored DF is
+        # persisted across the cap-probe count and whichever estimator
+        # path reads it (ADVICE r02: the driver path used to rebuild
+        # and re-execute it from scratch).
+        scored = pseudo_query_scored_df(index, docs)
+        if scored is not None:
+            scored = scored.persist()
+        try:
+            n_pos = (
+                0 if scored is None else scored.filter(F.col("score") > 0).count()
+            )
+            if n_pos <= estimation_cap:
+                per_query_scores = sample_pseudo_query_scores(
+                    index, docs, scored=scored
+                )
+                alpha, beta = estimate_parameters(per_query_scores, alpha, beta)
+                if base_rate == "auto":
+                    fitted_rate = estimate_base_rate(
+                        per_query_scores, index.n_docs, base_rate_method
+                    )
+            else:
+                alpha, beta = estimate_parameters_distributed(scored, alpha, beta)
+                if base_rate == "auto":
+                    fitted_rate = estimate_base_rate_distributed(
+                        scored, index.n_docs, base_rate_method
+                    )
+        finally:
+            if scored is not None:
+                scored.unpersist()
+    if isinstance(base_rate, (int, float)) and not isinstance(base_rate, bool):
+        fitted_rate = float(base_rate)
+    return alpha, beta, fitted_rate

@@ -203,71 +203,39 @@ class MultiFieldSparkScorer:
         self, query_tokens: Sequence[str], dense: bool = True
     ) -> DataFrame:
         """-> (doc_id, prob_<field>..., probability), fused
-        (multi_field.ts:125-161).
+        (multi_field.ts:125-161): get_probabilities_batch of one query.
 
         dense=True: one row per corpus doc (reference contract; inner
         joins — every field frame is full). dense=False, the scale
         shape: per-field SPARSE candidates (matched docs only), full
-        outer-joined on doc_id with absent fields at probability 0.0 —
-        exactly the value the dense path assigns zero-score docs
+        outer-joined with absent fields at probability 0.0 — exactly
+        the value the dense path assigns zero-score docs
         (scorer.ts:577-593) — so any doc matched in >=1 field fuses to
         the identical probability; only never-matched docs (constant
         all-zero fusion) are absent.
         """
-        self._ensure_indexed()
-        joined = None
-        for field in self._fields:
-            pf = (
-                self._scorers[field]
-                .get_probabilities(query_tokens, dense=dense)
-                .select("doc_id", F.col("probability").alias(f"prob_{field}"))
-            )
-            joined = (
-                pf
-                if joined is None
-                else joined.join(pf, "doc_id", "inner" if dense else "outer")
-            )
-        if not dense:
-            joined = joined.fillna(
-                0.0, subset=[f"prob_{f}" for f in self._fields]
-            )
-
-        weights = [self._field_weights[f] for f in self._fields]
-        effective_alpha = resolve_alpha(self._alpha, 0.5)
-        fuse = fused_probability_udf(weights, effective_alpha)
-        arr = F.array(*[F.col(f"prob_{f}") for f in self._fields])
-        return joined.withColumn("probability", fuse(arr))
+        return self.get_probabilities_batch(
+            [list(query_tokens)], dense=dense
+        ).drop("query_id")
 
     def retrieve(
         self, query_tokens: Sequence[str], k: int = 10, dense: bool = False
     ) -> DataFrame:
         """-> (rank, doc_id, probability) top-k by fused probability,
-        ties by ascending doc_id (multi_field.ts:164-180).
+        ties by ascending doc_id (multi_field.ts:164-180):
+        retrieve_batch of one query.
 
         dense=False (default): ranks only docs matched in >=1 field —
         identical to the dense ranking whenever k <= that candidate
         count (no dense per-field materialization; scale path).
 
-        Top-k runs through the salted two-phase kernel (scoring.top_k,
-        a constant query_id partitions phase 2): a hot term in any
-        field no longer funnels every candidate through one window task
-        (VERDICT r02 "What's wrong" #4). Ranking is on the raw fused
-        probability (round_dp=None) — exactly the single-window order."""
-        probs = self.get_probabilities(query_tokens, dense=dense)
-        from bayesian_bm25_js_spark.operators.scoring import top_k
-
-        ranked = top_k(
-            probs.select(
-                F.lit(0).alias("query_id"),
-                "doc_id",
-                F.col("probability").alias("score"),
-            ),
-            k,
-            round_dp=None,
-            est_rows=max(1, self._num_docs),
-        )
-        return ranked.select(
-            "rank", "doc_id", F.col("score").alias("probability")
+        Top-k runs through the salted two-phase kernel (scoring.top_k):
+        a hot term in any field no longer funnels every candidate
+        through one window task (VERDICT r02 "What's wrong" #4).
+        Ranking is on the raw fused probability (round_dp=None) —
+        exactly the single-window order."""
+        return self.retrieve_batch([list(query_tokens)], k, dense=dense).drop(
+            "query_id"
         )
 
     def add_documents(self, new_docs: DataFrame) -> "MultiFieldSparkScorer":

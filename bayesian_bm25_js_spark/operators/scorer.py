@@ -21,9 +21,7 @@ from bayesian_bm25_js_spark.functions.transform import (
 )
 from bayesian_bm25_js_spark.operators.estimate import (
     VALID_BASE_RATE_METHODS,
-    estimate_base_rate,
-    estimate_parameters,
-    sample_pseudo_query_scores,
+    fit_transform,
 )
 from bayesian_bm25_js_spark.operators.index_build import (
     SPILL_FREE_ENTRIES_PER_TASK,
@@ -109,24 +107,11 @@ class BayesianBM25SparkScorer:
 
     # -- build ----------------------------------------------------------------
     def index(
-        self, docs: DataFrame, estimation_cap: int = 2_000_000
+        self, docs: DataFrame, estimation_cap: Optional[int] = None
     ) -> "BayesianBM25SparkScorer":
         """docs (doc_id long, tokens array<string>) -> build index +
-        estimate parameters (scorer.ts:163-197).
-
-        estimation_cap: when the pseudo-query sample matches more than
-        this many positive (query, doc) scores, parameter estimation
-        switches from the bit-exact driver estimators to the
-        distributed ones (exact median/std; percentile thresholds via
-        streaming windows; EM/elbow over a bounded deterministic
-        reservoir) so a hot pseudo-query over a 10^12-doc corpus can
-        never OOM the driver."""
-        from bayesian_bm25_js_spark.operators.estimate import (
-            estimate_base_rate_distributed,
-            estimate_parameters_distributed,
-            pseudo_query_scored_df,
-        )
-
+        estimate parameters (scorer.ts:163-197; estimate.fit_transform,
+        which also documents estimation_cap)."""
         self._docs = docs
         if self._block_max is not None:
             self._block_max.unpersist()
@@ -135,63 +120,12 @@ class BayesianBM25SparkScorer:
             docs, k1=self.k1, b=self.b, method=self.method
         )
         self._layout_parts = None
-
-        need_estimation = (
-            self._user_alpha is None
-            or self._user_beta is None
-            or self._user_base_rate == "auto"
-        )
-        alpha, beta = self._user_alpha, self._user_beta
-        base_rate = None
-        if need_estimation:
-            # ONE scoring pipeline per index(): the pseudo-query scored
-            # DF is persisted across the cap-probe count and whichever
-            # estimator path reads it (ADVICE r02: the driver path used
-            # to rebuild and re-execute it from scratch).
-            scored = pseudo_query_scored_df(self._index, docs)
-            if scored is not None:
-                scored = scored.persist()
-            try:
-                n_pos = (
-                    0
-                    if scored is None
-                    else scored.filter(F.col("score") > 0).count()
-                )
-                if n_pos <= estimation_cap:
-                    per_query_scores = sample_pseudo_query_scores(
-                        self._index, docs, scored=scored
-                    )
-                    alpha, beta = estimate_parameters(
-                        per_query_scores, self._user_alpha, self._user_beta
-                    )
-                    if self._user_base_rate == "auto":
-                        base_rate = estimate_base_rate(
-                            per_query_scores,
-                            self._index.n_docs,
-                            self._base_rate_method,
-                        )
-                else:
-                    alpha, beta = estimate_parameters_distributed(
-                        scored, self._user_alpha, self._user_beta
-                    )
-                    if self._user_base_rate == "auto":
-                        base_rate = estimate_base_rate_distributed(
-                            scored, self._index.n_docs, self._base_rate_method
-                        )
-            finally:
-                if scored is not None:
-                    scored.unpersist()
-        else:
-            alpha, beta = estimate_parameters(
-                [], self._user_alpha, self._user_beta
+        self._transform = BayesianProbabilityTransform(
+            *fit_transform(
+                self._index, docs, self._user_alpha, self._user_beta,
+                self._user_base_rate, self._base_rate_method, estimation_cap,
             )
-
-        if isinstance(self._user_base_rate, (int, float)) and not isinstance(
-            self._user_base_rate, bool
-        ):
-            base_rate = float(self._user_base_rate)
-
-        self._transform = BayesianProbabilityTransform(alpha, beta, base_rate)
+        )
         return self
 
     def add_documents(self, new_docs: DataFrame) -> "BayesianBM25SparkScorer":
@@ -335,30 +269,26 @@ class BayesianBM25SparkScorer:
         strategy: str,
         router_floor: Optional[int] = None,
     ) -> DataFrame:
-        """Strategy dispatch for ONE width-capped query batch:
-        -> top_k frame (query_id local to the batch)."""
-        est = len(qlists) * max(1, self._index.n_docs)
-        if dense or strategy == "exhaustive":
+        """ONE width-capped query batch -> top_k frame (query_id local
+        to the batch). Every sparse batch goes through the router; a
+        forced strategy is its degenerate floor (0: every batch clears
+        it, WAND; inf: none does, exhaustive). Only the densified
+        scorer, which pruning cannot serve, bypasses it."""
+        if dense:
+            est = len(qlists) * max(1, self._index.n_docs)
             return top_k(self._score(qlists, dense), k, est_rows=est)
-        from bayesian_bm25_js_spark.operators.wand import auto_topk, wand_topk
+        from bayesian_bm25_js_spark.operators.wand import (
+            DEFAULT_ROUTER_FLOOR,
+            auto_topk,
+        )
 
-        if strategy == "wand":
-            qdf = queries_to_df(self._index.spark, qlists)
-            terms = sorted({tok for q in qlists for tok in q})
-            return wand_topk(
-                self._index, qdf, k,
-                block_max=self._block_max_cached(), terms_filter=terms,
-                est_rows=est,
-            )
+        floor = {"wand": 0, "exhaustive": float("inf")}.get(strategy, router_floor)
         # provider keeps block-max construction lazy: batches the
         # router sends to the exhaustive path never build it
-        kw = {}
-        if router_floor is not None:
-            kw["min_prunable_postings"] = router_floor
         return auto_topk(
             self._index, qlists, k,
             block_max_provider=self._block_max_cached,
-            **kw,
+            min_prunable_postings=DEFAULT_ROUTER_FLOOR if floor is None else floor,
         )
 
     def retrieve(
@@ -385,12 +315,14 @@ class BayesianBM25SparkScorer:
         block-max WAND for selective queries, the salted exhaustive
         scorer when even the rarest term is ubiquitous (wand.auto_topk;
         all three strategies are rank-identical under the 6-dp policy).
-        "wand" / "exhaustive" force one path. dense=True implies
-        exhaustive (pruning cannot zero-fill). router_floor overrides
-        the router's min_prunable_postings with a box-fitted value
-        (wand.fit_router_floor with proxy_volume — fit it once from one
-        measured wand/exhaustive pair on a representative batch; the
-        floor must be in the proxy units of estimate_prunable_volume).
+        "wand" / "exhaustive" force one path: the same router with its
+        floor at 0 / infinity. dense=True implies exhaustive (pruning
+        cannot zero-fill). router_floor overrides the router's
+        min_prunable_postings (wand.DEFAULT_ROUTER_FLOOR) with a
+        box-fitted value (wand.fit_router_floor with proxy_volume — fit
+        it once from one measured wand/exhaustive pair on a
+        representative batch; the floor must be in the proxy units of
+        estimate_prunable_volume).
 
         Batch width: throughput rises with queries-per-call (the
         per-batch plan/broadcast cost amortizes) until the scoring

@@ -66,6 +66,10 @@ from bayesian_bm25_js_spark.operators.scoring import (
 # kth score, so pruned ≡ exhaustive under the rounded ranking.
 ROUND_SLACK = 1e-6
 
+# The router's hand-set min_prunable_postings (route_queries), in the
+# proxy units of estimate_prunable_volume.
+DEFAULT_ROUTER_FLOOR = 50_000_000
+
 
 def _query_blocks(block_max: DataFrame, query_terms: DataFrame) -> tuple:
     """-> (join_key, qb): the block-max rows of every query token, each
@@ -233,7 +237,7 @@ def route_queries(
     index: InvertedIndex,
     queries,
     hot_df_frac: float = 0.10,
-    min_prunable_postings: int = 50_000_000,
+    min_prunable_postings: int = DEFAULT_ROUTER_FLOOR,
 ) -> tuple:
     """Route a query batch -> (exhaustive_ids, wand_ids); one side is
     always empty — routing is BINARY per batch, by a measured cost
@@ -317,7 +321,7 @@ def fit_router_floor(
     batch_volume: int,
     kept_frac: float,
     safety: float = 1.0,
-    default: int = 50_000_000,
+    default: int = DEFAULT_ROUTER_FLOOR,
     proxy_volume: Optional[float] = None,
 ) -> int:
     """Fit min_prunable_postings from one measured pair of branch
@@ -362,7 +366,7 @@ def auto_topk(
     block_max: DataFrame = None,
     block_size: int = DEFAULT_BLOCK_SIZE,
     hot_df_frac: float = 0.10,
-    min_prunable_postings: int = 50_000_000,
+    min_prunable_postings: int = DEFAULT_ROUTER_FLOOR,
     block_max_provider=None,
 ) -> DataFrame:
     """Selectivity router: pick block-max-WAND or the salted exhaustive

@@ -13,8 +13,10 @@ Stages:
   docs        tokenized (doc_id, tokens) parquet under <path>/docs
   postings    build_inverted_index + save_index(path): the queryable
               index layout (sources/index_store.py) at <path> itself
-  params      estimated (alpha, beta, base_rate), written into
-              meta.json's "transform" so from_saved/load_index see them
+  params      (alpha, beta, base_rate) from estimate.fit_transform,
+              the fit BayesianBM25SparkScorer.index() runs, written
+              into meta.json's "transform" so from_saved/load_index
+              see them
 """
 
 from __future__ import annotations
@@ -26,6 +28,9 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+_PARAMS = ("alpha", "beta", "base_rate")
 
 
 def _marker(path: str, stage: str) -> str:
@@ -68,14 +73,14 @@ def checkpointed_build(
     loaded, not recomputed. `path` is afterwards a save_index layout
     (packed sidecar when packed=True) that from_saved reads directly.
     """
-    from bayesian_bm25_js_spark.operators.estimate import (
-        estimate_base_rate,
-        estimate_parameters,
-        sample_pseudo_query_scores,
-    )
+    from bayesian_bm25_js_spark.operators.estimate import fit_transform
     from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
     from bayesian_bm25_js_spark.operators.tokenize import tokenize_column
-    from bayesian_bm25_js_spark.sources.index_store import load_index, save_index
+    from bayesian_bm25_js_spark.sources.index_store import (
+        _partition_lineage,
+        load_index,
+        save_index,
+    )
 
     os.makedirs(path, exist_ok=True)
 
@@ -87,22 +92,14 @@ def checkpointed_build(
             F.col("doc_id"),
             tokenize_column(F.col(content_col)).alias("tokens"),
         ).write.mode("overwrite").parquet(docs_path)
-        per_part = (
-            spark.read.parquet(docs_path)
-            .groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
+        lineage = _partition_lineage(spark.read.parquet(docs_path), "docs")
         seal_stage(
             path,
             "docs",
             {
-                "rows": sum(int(r["rows"]) for r in per_part),
+                "rows": sum(p["rows"] for p in lineage),
                 "elapsed": round(time.time() - t0, 3),
-                "partitions": [
-                    {"partition": int(r["pid"]), "rows": int(r["rows"])}
-                    for r in per_part
-                ],
+                "partitions": lineage,
             },
         )
     docs = spark.read.parquet(docs_path)
@@ -130,14 +127,9 @@ def checkpointed_build(
     # -- stage: params ----------------------------------------------------------
     if not stage_done(path, "params"):
         t0 = time.time()
-        pqs = sample_pseudo_query_scores(index, docs)
-        a, bta = estimate_parameters(pqs, alpha, beta)
-        br = None
-        if base_rate == "auto":
-            br = estimate_base_rate(pqs, index.n_docs, base_rate_method)
-        elif isinstance(base_rate, (int, float)) and not isinstance(base_rate, bool):
-            br = float(base_rate)
-        transform = {"alpha": a, "beta": bta, "base_rate": br}
+        transform = dict(zip(_PARAMS, fit_transform(
+            index, docs, alpha, beta, base_rate, base_rate_method
+        )))
         with open(f"{path}/meta.json") as f:
             meta = json.load(f)
         meta["transform"] = transform
@@ -147,16 +139,7 @@ def checkpointed_build(
         seal_stage(
             path,
             "params",
-            {
-                **transform,
-                "n_pseudo_queries": len(pqs),
-                "elapsed": round(time.time() - t0, 3),
-            },
+            {**transform, "elapsed": round(time.time() - t0, 3)},
         )
     params = read_metrics(path, "params")
-    transform_params = {
-        "alpha": params["alpha"],
-        "beta": params["beta"],
-        "base_rate": params["base_rate"],
-    }
-    return index, transform_params
+    return index, {k: params[k] for k in _PARAMS}

@@ -6,7 +6,6 @@ Layout under <path>/:
                    each term's postings for merge/compaction and keeps
                    doc-sorted order for delta encoding
   packed/          optional delta+varint block table (compression.py)
-  block_max/       (term, block_id, max_contrib) BMW metadata
   term_stats/      (term, df, idf)
   doc_stats/       (doc_id, dl)
   meta.json        scalars (n_docs, avgdl, k1, b, method), calibration
@@ -16,6 +15,8 @@ Layout under <path>/:
                    optional positional postings for phrase/proximity
                    retrieval (save_positional_index), same term-bucketed
                    layout
+No block-max table is stored: from_saved rebuilds it lazily from the
+postings on the first batch routed to WAND.
 """
 
 from __future__ import annotations
@@ -100,23 +101,14 @@ def save_index(
             "overwrite"
         ).option("compression", "zstd").parquet(f"{path}/packed")
 
-    def _write_block_max():
-        from bayesian_bm25_js_spark.operators.compression import block_max_table
-
-        block_max_table(index, block_size).write.mode("overwrite").parquet(
-            f"{path}/block_max"
-        )
-
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         lineage_f = pool.submit(_write_postings)
         packed_f = pool.submit(_write_packed)
-        bm_f = pool.submit(_write_block_max)
         stats_f = pool.submit(_write_stats)
         lineage = lineage_f.result()
         packed_f.result()
-        bm_f.result()
         stats_f.result()
 
     meta = {

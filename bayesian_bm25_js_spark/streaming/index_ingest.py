@@ -29,8 +29,8 @@ Design notes for 100 TB:
   its previous attempt instead of double-appending.
 * **Compaction.** Delta piles accrete small files; `compact_streaming
   _index` folds the piles into the canonical term-bucketed layout of
-  sources/index_store.py (bucket-pruned query scans, packed/block-max
-  sidecars), after which query traffic moves to the compacted copy.
+  sources/index_store.py (bucket-pruned query scans, optional packed
+  postings), after which query traffic moves to the compacted copy.
 
 Doc-id contract: ids must be unique across the stream's lifetime
 (same as addDocuments — re-sending an id double-counts the document;
@@ -174,8 +174,8 @@ def compact_streaming_index(
     block_size: int = 128,
 ) -> dict:
     """Fold the delta piles into the canonical term-bucketed store
-    (sources/index_store.save_index): bucket-pruned scans, block-max
-    sidecar, optional packed postings. Returns the written meta."""
+    (sources/index_store.save_index): bucket-pruned scans, optional
+    packed postings. Returns the written meta."""
     from bayesian_bm25_js_spark.sources.index_store import save_index
 
     index = load_streaming_index(spark, path)

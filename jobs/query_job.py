@@ -16,7 +16,8 @@ Results: (query_id, rank, doc_id, score, probability) — query_id indexes
 into the input line order. The job is
 BayesianBM25SparkScorer.from_saved(...).retrieve(...): --strategy auto
 routes each batch between block-max WAND and the salted exhaustive
-scorer (operators/wand.route_queries); wand/exhaustive force one path.
+scorer (operators/wand.route_queries); wand/exhaustive force one path
+by pinning the router's floor at 0 / infinity.
 All strategies are rank-identical under the engine's round(score, 6)
 policy.
 """

@@ -224,6 +224,12 @@ def test_save_load_roundtrip(spark, rnd_index, tmp_path):
                       packed=True, block_size=64)
     assert meta["n_docs"] == idx.n_docs
     assert meta["lineage"]
+    # exactly what the loaders read back: no write-only component
+    import os
+
+    assert sorted(os.listdir(path)) == [
+        "doc_stats", "meta.json", "packed", "postings", "term_stats",
+    ]
     idx2, params = load_index(spark, path)
     assert params == {"alpha": 1.5, "beta": 0.2}
     assert idx2.n_docs == idx.n_docs and idx2.avgdl == idx.avgdl
@@ -372,6 +378,76 @@ def test_checkpointed_build_resumes(spark, tmp_path):
     docs_metrics = read_metrics(path, "docs")
     assert docs_metrics["rows"] == len(SMALL_CORPUS)
     assert docs_metrics["partitions"]
+
+
+def test_checkpointed_build_shares_the_scorer_fit(spark, tmp_path, monkeypatch):
+    """The build job's params stage is the facade's calibration fit:
+    the same (alpha, beta, base_rate) as index() on the same docs, and
+    past the estimation cap the same distributed estimators."""
+    from bayesian_bm25_js_spark.operators import estimate
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+    from bayesian_bm25_js_spark.sources.checkpoints import checkpointed_build
+
+    corpus = spark.createDataFrame(
+        [(i, " ".join(doc)) for i, doc in enumerate(random_corpus(120, seed=11))],
+        "doc_id long, content string",
+    )
+
+    def fit(path, **kw):
+        _, params = checkpointed_build(
+            spark, corpus, str(tmp_path / path), method="lucene", base_rate="auto"
+        )
+        docs = spark.read.parquet(str(tmp_path / path / "docs"))
+        t = BayesianBM25SparkScorer(method="lucene", base_rate="auto").index(
+            docs, **kw
+        ).transform
+        want = {"alpha": t.alpha, "beta": t.beta, "base_rate": t.base_rate}
+        assert params == pytest.approx(want, rel=1e-12)
+
+    fit("driver")
+
+    calls = []
+    distributed = estimate.estimate_parameters_distributed
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return distributed(*a, **kw)
+
+    monkeypatch.setattr(estimate, "ESTIMATION_CAP", 0)
+    monkeypatch.setattr(estimate, "estimate_parameters_distributed", spy)
+    fit("distributed", estimation_cap=0)
+    assert len(calls) == 2  # the build job and index() both took it
+
+
+def test_forced_strategy_is_a_router_floor(spark, rnd_index):
+    """retrieve(strategy=...) is one dispatch: "wand" and "exhaustive"
+    are the router at floor 0 / inf, rank-identical to "auto", and the
+    forced exhaustive plan gets the routed path's term In-filter."""
+    import re
+
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+
+    corpus, _ = rnd_index
+    scorer = BayesianBM25SparkScorer(
+        method="lucene", alpha=1.0, beta=0.5, base_rate=0.05
+    ).index(docs_df(spark, corpus))
+    queries = [["w1", "w2", "w30"], ["w3", "w3", "w44"], ["w0", "w12"]]
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6),
+             round(r["probability"], 6))
+            for r in df.collect()
+        )
+
+    out = {s: scorer.retrieve(queries, k=5, strategy=s)
+           for s in ("auto", "wand", "exhaustive")}
+    assert rows(out["auto"]) == rows(out["wand"]) == rows(out["exhaustive"])
+    plan = re.sub(
+        r"#\d+L?", "",
+        out["exhaustive"]._jdf.queryExecution().executedPlan().toString(),
+    )
+    assert "term_id IN (" in plan, plan
 
 
 @pytest.mark.parametrize("kind", ["inverted", "positional"])
