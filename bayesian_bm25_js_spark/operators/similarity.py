@@ -419,11 +419,16 @@ def ivf_recall(
 
         # the probe levels are independent latency-bound jobs over the
         # cached baseline/assignment; overlap them so one level's
-        # stage tail back-fills with the next level's tasks
+        # stage tail back-fills with the next level's tasks (the
+        # wrapped target carries this thread's job group/description
+        # and session tags into the pool threads)
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
+        hits = inheritable_thread_target(queries.sparkSession)(_probe_hits)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            for np_, hit in zip(n_probes, pool.map(_probe_hits, n_probes)):
+            for np_, hit in zip(n_probes, pool.map(hits, n_probes)):
                 out[int(np_)] = round(hit / denom, 4) if denom else None
     finally:
         exact.unpersist()

@@ -25,9 +25,11 @@ of round; see the surviving-filter comment). Verified in
 tests/test_index_hardening.py.
 
 Physical shape (profiled at 400k docs / 150 queries / local[32]):
-  * block_max is scanned ONCE per batch — the token join result is
-    repartitioned by query_id so phases A and B read one reused
-    exchange instead of re-scanning the 20M-row cache each;
+  * block_max is scanned ONCE per batch, and phases A-C run in ONE
+    exchange: the token join result is repartitioned by query_id,
+    sorted by it, and one mapInPandas computes bounds, τ and the kept
+    blocks for every complete query of an Arrow batch in a segmented
+    NumPy pass (_fused_survivors) — no per-query Python call;
   * the surviving (query, token, block) table is BROADCAST into the
     postings join, so postings keep their doc_id partitioning (full
     map-side combining) and pruned blocks never emit a fan-out row;
@@ -40,6 +42,8 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -163,16 +167,23 @@ def _fused_survivors(
 
     Semantically identical to _bounds_and_tau + the ub ≥ τ − ε filter
     (same two witness rules, same tie-breaks — see _bounds_and_tau's
-    docstring for the math), but fused into a single applyInPandas
-    keyed on query_id: the Catalyst formulation costs ~6 small stages
-    (bounds groupBy, two τ windows + three aggregations, the τ join)
-    whose walls are scheduling latency, not work — a fixed per-batch
-    tail that caps N→4N scaling (profiled: ~4s of the 13.4s routed
-    1000-query batch at local[32] sits in sub-second stages). Here the
-    per-query bounds/τ math is a few thousand NumPy rows — microseconds
-    per group — and the whole phase is one exchange.
+    docstring for the math), but run as one segmented NumPy pass per
+    Arrow batch: the rows are exchanged on query_id, sorted by it, and
+    a mapInPandas hands every complete query group of a batch to
+    _kept_blocks at once. The Catalyst formulation costs ~6 small
+    stages (bounds groupBy, two τ windows + three aggregations, the τ
+    join) whose walls are scheduling latency, not work; a grouped
+    pandas UDF pays 7-11 ms of Python per query, run back to back in
+    one task (measured at 3000 files / 200-query batches / local[4]:
+    1.45-2.25 s of survivor stage against 20-80 ms of JVM CPU). Here
+    the per-query work is a few NumPy rows inside one pass over the
+    whole batch (the same stage: 0.23-0.27 s).
 
-    Float caveat: pandas sums ub in a different order than Spark's
+    A batch's last query may continue in the next batch, so its rows
+    are carried forward (the carry of compression.pack_postings):
+    per-task memory is one Arrow batch plus one query's rows.
+
+    Float caveat: NumPy sums ub in a different order than Spark's
     partial aggregation; differences are ≤ a few ulps (~1e-13 relative)
     and ROUND_SLACK (1e-6, one ranking quantum) dwarfs them, so the
     pruned ≡ exhaustive guarantee is unaffected (verified by the
@@ -184,53 +195,100 @@ def _fused_survivors(
     re-derivation (ADVICE r4: the stats path must not validate a path
     the default query never runs).
     """
-    import pandas as pd
-
     key, qb = _query_blocks(block_max, query_terms)
     qb = qb.select(
         "query_id", key, "block_id", "max_contrib", "min_contrib", "n", "is_first"
     )
 
-    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        by_block = pdf.groupby("block_id")["max_contrib"]
-        ub = by_block.sum()  # duplicate query tokens double-count (bm25.ts:110)
-        taus = []
-        if len(ub) >= k:
-            lbs = by_block.max().to_numpy()
-            lbs.sort()
-            taus.append(float(lbs[-k]))  # rule 1: kth largest lb
-        first = pdf[pdf["is_first"]]
-        if len(first):
-            f = first.sort_values(
-                [key, "min_contrib", "block_id"], ascending=[True, False, True]
-            )
-            cum = f.groupby(key, sort=False)["n"].cumsum()
-            crossing = (cum >= k) & (cum - f["n"] < k)
-            if crossing.any():  # rule 2: best single-term count witness
-                taus.append(float(f.loc[crossing, "min_contrib"].max()))
-        tau = max(taus) if taus else float("-inf")
-        kept = ub[ub.to_numpy() >= tau - ROUND_SLACK]
-        out = pd.DataFrame(
-            {
-                "query_id": pdf["query_id"].iloc[0],
-                "block_id": kept.index.to_numpy().astype("int64"),
-            }
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        qids, gq, gblk, n_blocks, keep = _kept_blocks(pdf, key, k)
+        out = pd.DataFrame({"query_id": qids[gq[keep]], "block_id": gblk[keep]})
+        if not with_stats:
+            return out
+        out["blocks_total"] = n_blocks[gq[keep]]
+        none = np.bincount(gq[keep], minlength=len(qids)) == 0
+        if not none.any():
+            return out
+        # marker rows so zero-keep queries still report a total
+        marker = pd.DataFrame(
+            {"query_id": qids[none],
+             "block_id": pd.array([None] * int(none.sum()), dtype="Int64"),
+             "blocks_total": n_blocks[none]}
         )
-        if with_stats:
-            out["blocks_total"] = len(ub)
-            if not len(out):
-                # marker row so zero-keep queries still report a total
-                out = pd.DataFrame(
-                    {"query_id": [pdf["query_id"].iloc[0]],
-                     "block_id": pd.array([None], dtype="Int64"),
-                     "blocks_total": [len(ub)]}
-                )
-        return out
+        return pd.concat([out, marker], ignore_index=True)
+
+    def survivors(batches):
+        pending = []  # rows of the last query seen: it may continue
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            qid = pdf["query_id"].to_numpy()
+            cut = int(np.searchsorted(qid, qid[-1]))  # sorted by query_id
+            if cut:
+                yield kernel(pd.concat([*pending, pdf.iloc[:cut]]))
+                pending = []
+            pending.append(pdf.iloc[cut:])
+        if pending:
+            yield kernel(pd.concat(pending))
 
     schema = "query_id long, block_id long" + (
         ", blocks_total long" if with_stats else ""
     )
-    return qb.groupBy("query_id").applyInPandas(kernel, schema)
+    return (
+        qb.repartition("query_id")
+        .sortWithinPartitions("query_id")
+        .mapInPandas(survivors, schema)
+    )
+
+
+def _kept_blocks(pdf: pd.DataFrame, key: str, k: int) -> tuple:
+    """Rows of complete query groups (any order) -> (qids, gq, gblk,
+    n_blocks, keep): one entry of gq (index into qids), gblk and keep
+    per (query, block), n_blocks per query. Every step is a segmented
+    NumPy pass over all the queries at once."""
+    q = pdf["query_id"].to_numpy(np.int64)
+    blk = pdf["block_id"].to_numpy(np.int64)
+    mx = pdf["max_contrib"].to_numpy(np.float64)
+
+    # bounds per (query, block): ub sums every token row (duplicate
+    # query tokens double-count, bm25.ts:110), lb is the max
+    o = np.lexsort((blk, q))
+    qs, bs, ms = q[o], blk[o], mx[o]
+    starts = np.flatnonzero(
+        np.r_[True, (qs[1:] != qs[:-1]) | (bs[1:] != bs[:-1])]
+    )
+    ub = np.add.reduceat(ms, starts)
+    lb = np.maximum.reduceat(ms, starts)
+    qids, gq = np.unique(qs[starts], return_inverse=True)
+    gblk = bs[starts]
+    n_blocks = np.bincount(gq)
+    tau = np.full(len(qids), -np.inf)
+
+    # rule 1: the kth largest lb, for queries with ≥ k blocks
+    by_lb = lb[np.lexsort((-lb, gq))]
+    has_k = n_blocks >= k
+    first_block = np.cumsum(n_blocks) - n_blocks
+    tau[has_k] = by_lb[first_block[has_k] + k - 1]
+
+    # rule 2: per (query, term) over is_first rows, walk blocks by
+    # min_contrib desc, block_id asc; the block whose cumulative n
+    # crosses k is a witness (the best term wins)
+    f = pdf["is_first"].to_numpy(bool)
+    tq = np.searchsorted(qids, q[f])
+    term = pd.factorize(pdf[key].to_numpy()[f])[0]
+    mn = pdf["min_contrib"].to_numpy(np.float64)[f]
+    n = pdf["n"].to_numpy(np.int64)[f]
+    o = np.lexsort((blk[f], -mn, term, tq))
+    tq, term, mn, n = tq[o], term[o], mn[o], n[o]
+    seg = np.flatnonzero(
+        np.r_[True, (tq[1:] != tq[:-1]) | (term[1:] != term[:-1])]
+    )
+    cum = np.cumsum(n)
+    cum -= np.repeat(cum[seg] - n[seg], np.diff(np.r_[seg, len(n)]))
+    cross = (cum >= k) & (cum - n < k)
+    np.maximum.at(tau, tq[cross], mn[cross])
+
+    return qids, gq, gblk, n_blocks, ub >= tau[gq] - ROUND_SLACK
 
 
 def route_queries(
@@ -385,11 +443,18 @@ def auto_topk(
     same shape retrieve() takes); query_id in the result indexes into
     `queries`. Routing costs one bounded df lookup (route_queries); a
     batch routed to the exhaustive path never builds block-max
-    (block_max_provider is called lazily).
+    (block_max_provider is called lazily). A batch wider than the
+    packed survivor key's query_id range (_survivor_pack_shift) routes
+    exhaustive; _last_route then carries that range as key_bound.
     """
     _, wand_ids = route_queries(
         index, queries, hot_df_frac, min_prunable_postings
     )
+    # the packed survivor key leaves 63 - shift bits for query_id
+    max_ids = 1 << (63 - _survivor_pack_shift(index.n_docs, block_size))
+    if wand_ids and len(queries) > max_ids:
+        wand_ids = []
+        index._last_route.update(decision="exhaustive", key_bound=max_ids)
     qdf = queries_to_df(index.spark, queries)
     terms = sorted({t for q in queries for t in q})
     est = len(queries) * index.n_docs
@@ -416,11 +481,13 @@ def _survivor_pack_shift(n_docs: int, block_size: int) -> int:
     """Bits reserved for block_id in the packed (query_id << shift) +
     block_id survivor key: enough for the largest possible block_id of
     THIS index, never fewer than the historical 32. The remaining
-    63 - shift bits bound the batch-local query_id range — NOT runtime-
-    checked (wand_topk sees only a DataFrame; an extra driver action or
-    per-row guard would tax every batch): callers must keep batch-local
-    query ids under 2^(63 - shift), which spill-free batch widths
-    (thousands) clear by orders of magnitude even at 10^14 docs."""
+    63 - shift bits bound the batch-local query_id range: auto_topk
+    checks it on the driver from the batch width and routes a wider
+    batch exhaustive. wand_topk sees only a DataFrame (an extra driver
+    action or per-row guard would tax every batch), so its direct
+    callers must keep query ids under 2^(63 - shift), which spill-free
+    batch widths (thousands) clear by orders of magnitude even at
+    10^14 docs."""
     return max(32, (max(1, n_docs) // block_size).bit_length() + 1)
 
 
@@ -448,11 +515,11 @@ def wand_topk(
       final top-k's phase-1 grain (scoring.top_k) — callers that know
       the batch width should pass it so narrow batches keep the coarse
       exchange.
-    The bounds/τ/survivor phases run as ONE applyInPandas exchange
-    (_fused_survivors). Returns the ranked DataFrame (query_id, doc_id,
-    score, tf_overlap, dl, rank); with return_stats=True also
-    (blocks_total, blocks_kept) measured on the SAME survivor path the
-    ranking used.
+    The bounds/τ/survivor phases run as ONE exchange and one
+    vectorized mapInPandas pass (_fused_survivors). Returns the ranked
+    DataFrame (query_id, doc_id, score, tf_overlap, dl, rank); with
+    return_stats=True also (blocks_total, blocks_kept) measured on the
+    SAME survivor path the ranking used.
     """
     if block_max is None:
         block_max = block_max_table(index, block_size)

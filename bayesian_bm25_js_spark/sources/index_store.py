@@ -103,10 +103,15 @@ def save_index(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    # the wrapped targets carry this thread's job group/description
+    # and session tags into the pool threads
+    tagged = inheritable_thread_target(index.spark)
     with ThreadPoolExecutor(max_workers=3) as pool:
-        lineage_f = pool.submit(_write_postings)
-        packed_f = pool.submit(_write_packed)
-        stats_f = pool.submit(_write_stats)
+        lineage_f = pool.submit(tagged(_write_postings))
+        packed_f = pool.submit(tagged(_write_packed))
+        stats_f = pool.submit(tagged(_write_stats))
         lineage = lineage_f.result()
         packed_f.result()
         stats_f.result()

@@ -73,20 +73,25 @@ def ingest_epoch(batch_df: DataFrame, epoch_id: int, path: str) -> None:
     # the two delta writes are independent jobs over the same batch;
     # overlapping them lets the (tiny) doc_stats write back-fill the
     # executor slots freed by the tf job's tail instead of running as
-    # its own serial latency-bound job afterwards
+    # its own serial latency-bound job afterwards. The wrapped targets
+    # carry this thread's job group/description and session tags into
+    # the pool threads.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    tagged = inheritable_thread_target(batch_df.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(
+        f1 = pool.submit(tagged(
             lambda: tf.write.mode("overwrite").parquet(
                 f"{path}/postings_delta/epoch={int(epoch_id)}"
             )
-        )
-        f2 = pool.submit(
+        ))
+        f2 = pool.submit(tagged(
             lambda: base.select("doc_id", "dl")
             .write.mode("overwrite")
             .parquet(f"{path}/doc_stats_delta/epoch={int(epoch_id)}")
-        )
+        ))
         f1.result()
         f2.result()
 

@@ -1,6 +1,8 @@
 """M3/M4 tests: posting compression, block-max, WAND pruning safety,
 index persistence, checkpointed resumable builds."""
 
+import contextlib
+import itertools
 import shutil
 
 import numpy as np
@@ -450,6 +452,55 @@ def test_forced_strategy_is_a_router_floor(spark, rnd_index):
     assert "term_id IN (" in plan, plan
 
 
+def test_wand_key_bound_routes_exhaustive(spark, rnd_index, monkeypatch):
+    """The packed survivor key's query_id range is checked on the
+    driver: a batch wider than it routes exhaustive even when WAND is
+    forced, and answers like the exhaustive strategy."""
+    from bayesian_bm25_js_spark.operators import wand
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+
+    corpus, _ = rnd_index
+    scorer = BayesianBM25SparkScorer(
+        method="lucene", alpha=1.0, beta=0.5, base_rate=0.05
+    ).index(docs_df(spark, corpus))
+    queries = [["w1", "w2", "w30"], ["w3", "w3", "w44"], ["w0", "w12"]]
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6),
+             round(r["probability"], 6))
+            for r in df.collect()
+        )
+
+    want = rows(scorer.retrieve(queries, k=5, strategy="exhaustive"))
+    # shift 62 leaves one bit: room for query ids 0 and 1 only
+    monkeypatch.setattr(wand, "_survivor_pack_shift", lambda n, bs: 62)
+    got = rows(scorer.retrieve(queries, k=5, strategy="wand"))
+    route = scorer.index_._last_route
+    assert (route["decision"], route["key_bound"]) == ("exhaustive", 2), route
+    assert got == want
+
+
+def test_save_jobs_join_the_callers_job_group(spark, rnd_index, tmp_path):
+    """save_index writes its components from a thread pool; the pool
+    threads carry the caller's job group, so every write job is
+    attributed to it."""
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+
+    corpus, _ = rnd_index
+    scorer = BayesianBM25SparkScorer(
+        method="lucene", alpha=1.0, beta=0.5, base_rate=0.05
+    ).index(docs_df(spark, corpus))
+    sc = spark.sparkContext
+    sc.setJobGroup("save-group", "packed save")
+    try:
+        scorer.save(str(tmp_path / "idx"), packed=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("save-group")) >= 3
+
+
 @pytest.mark.parametrize("kind", ["inverted", "positional"])
 def test_df_lookup_caches_across_batches(spark, rnd_index, kind, monkeypatch):
     """One df memo for both index types: a warm batch's lookup (routing
@@ -585,11 +636,29 @@ def test_query_mode_toggles_and_restores(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled", "true") == prev
 
 
+@contextlib.contextmanager
+def _arrow_batch_rows(spark, rows):
+    """Run the body with spark.sql.execution.arrow.maxRecordsPerBatch at
+    `rows` (None: leave it as is), restoring the previous value."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf, None)
+    if rows is not None:
+        spark.conf.set(conf, str(rows))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+
+
 def test_fused_survivors_matches_catalyst_phases(spark, rnd_index):
-    """The applyInPandas survivors kernel must keep exactly the blocks
-    the Catalyst bounds/tau phases keep — same witness rules, same
+    """The fused survivors kernel must keep exactly the blocks the
+    Catalyst bounds/tau phases keep — same witness rules, same
     tie-breaks — for every query shape (hot, rare, mixed, duplicate
-    tokens, unknown terms, k larger than the candidate set)."""
+    tokens, unknown terms, k larger than the candidate set), also when
+    2-row Arrow batches split every query across batches."""
     from bayesian_bm25_js_spark.operators.compression import block_max_table
     from bayesian_bm25_js_spark.operators.wand import (
         ROUND_SLACK,
@@ -608,18 +677,19 @@ def test_fused_survivors_matches_catalyst_phases(spark, rnd_index):
     ]
     bm = block_max_table(idx, 64)
     qdf = queries_to_df(spark, queries)
-    for k in (1, 5, 100):
+    for batch_rows, k in itertools.product((None, 2), (1, 5, 100)):
         bounds, tau = _bounds_and_tau(bm, qdf, k)
         keep = F.col("ub") >= F.col("tau") - F.lit(ROUND_SLACK)
         catalyst = {
             (r["query_id"], r["block_id"])
             for r in bounds.join(tau, "query_id").filter(keep).collect()
         }
-        fused = {
-            (r["query_id"], r["block_id"])
-            for r in _fused_survivors(bm, qdf, k).collect()
-        }
-        assert fused == catalyst, k
+        with _arrow_batch_rows(spark, batch_rows):
+            fused = {
+                (r["query_id"], r["block_id"])
+                for r in _fused_survivors(bm, qdf, k).collect()
+            }
+        assert fused == catalyst, (batch_rows, k)
 
 
 def test_fused_stats_match_catalyst_stats(spark, rnd_index):
@@ -640,13 +710,16 @@ def test_fused_stats_match_catalyst_stats(spark, rnd_index):
     qdf = queries_to_df(spark, queries)
     bm = block_max_table(idx, 64)
 
-    _, stats = wand_topk(
-        idx, qdf, 3, block_max=bm, block_size=64, return_stats=True
-    )
-    got = {
-        r["query_id"]: (r["blocks_total"], r["blocks_kept"])
-        for r in stats.collect()
-    }
+    got = {}
+    for batch_rows in (None, 2):
+        with _arrow_batch_rows(spark, batch_rows):
+            _, stats = wand_topk(
+                idx, qdf, 3, block_max=bm, block_size=64, return_stats=True
+            )
+            got[batch_rows] = {
+                r["query_id"]: (r["blocks_total"], r["blocks_kept"])
+                for r in stats.collect()
+            }
 
     bounds, tau = _bounds_and_tau(bm, qdf, 3)
     keep = F.col("ub") >= F.col("tau") - F.lit(ROUND_SLACK)
@@ -660,7 +733,7 @@ def test_fused_stats_match_catalyst_stats(spark, rnd_index):
         )
         .collect()
     }
-    assert got == expected
+    assert got == {None: expected, 2: expected}
 
 
 def test_survivor_pack_shift_scales_past_int32_blocks():

@@ -254,3 +254,16 @@ def test_wand_join_chains_small_broadcasts(spark, idx):
     # product table was built and broadcast.
     for keys in re.findall(r"BroadcastHashJoin \[([^\]]*)\]", plan):
         assert not ("term" in keys and "block_id" in keys), keys
+
+
+def test_wand_survivors_are_one_arrow_pass(spark, idx):
+    """The WAND survivor stage is one mapInPandas over query_id-sorted
+    Arrow batches, never a per-query grouped pandas call."""
+    from bayesian_bm25_js_spark.operators.wand import wand_topk
+
+    qdf = queries_to_df(spark, [["cat", "dog"], ["the", "cat"]])
+    ranked = wand_topk(idx, qdf, 3)
+    ranked.collect()
+    plan = plan_string(ranked)
+    assert "MapInPandas" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
