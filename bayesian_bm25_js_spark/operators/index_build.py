@@ -173,10 +173,6 @@ class InvertedIndex:
     k1: float
     b: float
     method: str
-    # True for layouts whose term_id exists only post-scan (packed
-    # store): scoring then ALSO applies the string term In-filter so
-    # the predicate reaches parquet row-group stats (see score_queries)
-    push_string_filter: bool = False
     # Driver-side term -> df cache for the selectivity router (memo_df)
     _df_cache: dict = field(default_factory=dict, repr=False, compare=False)
 

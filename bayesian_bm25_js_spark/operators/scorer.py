@@ -144,14 +144,12 @@ class BayesianBM25SparkScorer:
         return self
 
     # -- persistence -----------------------------------------------------------
-    def save(
-        self, path: str, n_buckets: int = 32, packed: bool = False,
-        block_size: int = 128,
-    ) -> dict:
+    def save(self, path: str, n_buckets: int = 32, packed: bool = False) -> dict:
         """Persist index + estimated calibration under <path>/ (the
-        save_index layout: term-bucketed parquet, meta.json carrying
-        the transform params). Round-trips through from_saved with no
-        re-estimation."""
+        save_index layout: term-bucketed zstd parquet, meta.json
+        carrying the transform params). Round-trips through from_saved
+        with no re-estimation. `packed` is accepted and ignored: there
+        is one on-disk postings format."""
         from bayesian_bm25_js_spark.sources.index_store import save_index
 
         self._ensure_indexed()
@@ -163,8 +161,6 @@ class BayesianBM25SparkScorer:
                 "alpha": t.alpha, "beta": t.beta, "base_rate": t.base_rate,
             },
             n_buckets=n_buckets,
-            packed=packed,
-            block_size=block_size,
         )
 
     @classmethod
@@ -179,31 +175,24 @@ class BayesianBM25SparkScorer:
         """Reconstruct a queryable scorer from a save()d index: no
         re-estimation, rank/probability-identical retrieval.
 
-        Row layout (packed=False): the term-bucketed on-disk postings
-        are re-partitioned into the runtime doc_id layout at the same
-        data-sized grain a fresh build picks (layout_grain), sorted by
-        term_id within partitions, and cached — the scoring agg then
-        combines map-side exactly as after build_inverted_index.
-        Packed layout: left on its decode-on-scan plan (persisting the
-        decoded stream would defeat the packed store; term In-filters
-        still prune row groups pre-decode)."""
+        The term-bucketed on-disk postings are re-partitioned into the
+        runtime doc_id layout at the same data-sized grain a fresh
+        build picks (layout_grain), sorted by term_id within
+        partitions, and cached — the scoring agg then combines map-side
+        exactly as after build_inverted_index. `packed` is accepted and
+        ignored: every saved index loads this one way (a `packed/`
+        directory left by an older build is not read)."""
         import dataclasses
 
-        from bayesian_bm25_js_spark.sources.index_store import (
-            load_index,
-            load_packed_index,
-        )
+        from bayesian_bm25_js_spark.sources.index_store import load_index
 
-        loader = load_packed_index if packed else load_index
-        index, params = loader(spark, path)
-        if not packed:
-            postings = cached_layout(
-                index.postings, index.n_docs,
-                layout_partitions=layout_partitions,
-            )
-            if cache:
-                postings = postings.persist()
-            index = dataclasses.replace(index, postings=postings)
+        index, params = load_index(spark, path)
+        postings = cached_layout(
+            index.postings, index.n_docs, layout_partitions=layout_partitions,
+        )
+        if cache:
+            postings = postings.persist()
+        index = dataclasses.replace(index, postings=postings)
         scorer = cls(k1=index.k1, b=index.b, method=index.method)
         scorer._index = index
         scorer._transform = BayesianProbabilityTransform(
@@ -251,7 +240,7 @@ class BayesianBM25SparkScorer:
 
     def _spill_free_width(self) -> int:
         # layout partition count memoized per index: .rdd on a cached
-        # packed/complex plan re-triggers driver-side RDD conversion,
+        # complex plan re-triggers driver-side RDD conversion,
         # pure plan-time overhead when paid on EVERY retrieve()
         # (ADVICE r4). Invalidated wherever self._index is replaced.
         if self._layout_parts is None:

@@ -120,21 +120,13 @@ def _terms_filtered(
     tables (postings or block-max), or the table itself when
     terms_filter is None.
 
-    Layouts whose term_id only exists POST-scan (the packed
-    delta+varint store computes it after decode) set
-    index.push_string_filter and ALSO get a STRING In-predicate:
-    term IN (...) reaches the parquet row-group stats, so non-matching
-    blocks are skipped before any varint decode runs. The interned row cache skips
-    it — its term_id filter already batch-prunes, and an extra per-row
-    string compare would cost the hot path. Layouts with NO term_id at
-    all fall back to the string filter unconditionally so terms_filter
+    The filter is `term_id IN (...)`: it batch-prunes the term_id-sorted
+    cached layout and is pushed into a parquet scan. A layout with NO
+    term_id falls back to the string `term IN (...)`, so terms_filter
     is never a silent no-op (the only pruning such a layout can get)."""
     if terms_filter is None:
         return table
-    if "term" in table.columns and (
-        getattr(index, "push_string_filter", False)
-        or "term_id" not in table.columns
-    ):
+    if "term_id" not in table.columns and "term" in table.columns:
         table = table.filter(isin_filter("term", terms_filter))
     if "term_id" in table.columns:
         from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64

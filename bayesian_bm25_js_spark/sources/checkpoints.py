@@ -64,14 +64,13 @@ def checkpointed_build(
     base_rate_method: str = "percentile",
     alpha: Optional[float] = None,
     beta: Optional[float] = None,
-    packed: bool = False,
 ):
     """Build (or resume) a queryable index + calibration params at `path`.
 
     Returns (InvertedIndex, transform_params), the index loaded from the
     saved layout. Safe to re-invoke after a crash: finished stages are
     loaded, not recomputed. `path` is afterwards a save_index layout
-    (packed sidecar when packed=True) that from_saved reads directly.
+    that from_saved reads directly.
     """
     from bayesian_bm25_js_spark.operators.estimate import fit_transform
     from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
@@ -109,7 +108,7 @@ def checkpointed_build(
         t0 = time.time()
         built = build_inverted_index(docs, k1=k1, b=b, method=method)
         try:
-            meta = save_index(built, path, packed=packed)
+            meta = save_index(built, path)
         finally:
             built.unpersist()
         seal_stage(

@@ -29,8 +29,8 @@ Design notes for 100 TB:
   its previous attempt instead of double-appending.
 * **Compaction.** Delta piles accrete small files; `compact_streaming
   _index` folds the piles into the canonical term-bucketed layout of
-  sources/index_store.py (bucket-pruned query scans, optional packed
-  postings), after which query traffic moves to the compacted copy.
+  sources/index_store.py (one term-clustered zstd parquet postings
+  table), after which query traffic moves to the compacted copy.
 
 Doc-id contract: ids must be unique across the stream's lifetime
 (same as addDocuments — re-sending an id double-counts the document;
@@ -175,19 +175,10 @@ def compact_streaming_index(
     path: str,
     out_path: str,
     n_buckets: int = 32,
-    packed: bool = False,
-    block_size: int = 128,
 ) -> dict:
     """Fold the delta piles into the canonical term-bucketed store
-    (sources/index_store.save_index): bucket-pruned scans, optional
-    packed postings. Returns the written meta."""
+    (sources/index_store.save_index). Returns the written meta."""
     from bayesian_bm25_js_spark.sources.index_store import save_index
 
     index = load_streaming_index(spark, path)
-    return save_index(
-        index,
-        out_path,
-        n_buckets=n_buckets,
-        packed=packed,
-        block_size=block_size,
-    )
+    return save_index(index, out_path, n_buckets=n_buckets)

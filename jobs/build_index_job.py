@@ -50,8 +50,6 @@ def main(argv=None) -> int:
                         help="(--format iceberg) pin the scan to this "
                              "snapshot for a reproducible build; default "
                              "= current snapshot, recorded in lineage")
-    parser.add_argument("--packed", action="store_true",
-                        help="also write delta+varint packed postings")
     args = parser.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -111,7 +109,6 @@ def main(argv=None) -> int:
         content_col=args.content_col,
         base_rate=base_rate,
         base_rate_method=args.base_rate_method,
-        packed=args.packed,
     )
     print(json.dumps({"status": "ok", "n_docs": index.n_docs,
                       "avgdl": index.avgdl, "params": params,

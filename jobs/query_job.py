@@ -5,7 +5,7 @@ Usage (cluster):
   spark-submit --py-files dist/bayesian_bm25_js_spark.zip \\
       jobs/query_job.py \\
       --index <index-path> --queries <one query per line, space-separated terms> \\
-      [--k 10] [--strategy auto] [--packed] [--out <parquet-path>]
+      [--k 10] [--strategy auto] [--out <parquet-path>]
 
 Local smoke:
   spark-submit jobs/build_index_job.py --synthesize 2000 --out /tmp/idx
@@ -36,8 +36,6 @@ def main(argv=None) -> int:
     parser.add_argument("--k", type=int, default=10)
     parser.add_argument("--strategy", default="auto",
                         choices=["auto", "wand", "exhaustive"])
-    parser.add_argument("--packed", action="store_true",
-                        help="query through the delta+varint packed layout")
     parser.add_argument("--out", default=None,
                         help="write results parquet here (default: show)")
     args = parser.parse_args(argv)
@@ -54,9 +52,9 @@ def main(argv=None) -> int:
         print("no queries", file=sys.stderr)
         return 1
 
-    out = BayesianBM25SparkScorer.from_saved(
-        spark, args.index, packed=args.packed
-    ).retrieve(queries, k=args.k, strategy=args.strategy)
+    out = BayesianBM25SparkScorer.from_saved(spark, args.index).retrieve(
+        queries, k=args.k, strategy=args.strategy
+    )
 
     if args.out:
         out.repartition(1).sortWithinPartitions("query_id", "rank").write.mode(

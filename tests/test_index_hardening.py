@@ -218,6 +218,13 @@ def test_wand_actually_prunes(spark):
 
 
 def test_save_load_roundtrip(spark, rnd_index, tmp_path):
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+
     corpus, idx = rnd_index
     from bayesian_bm25_js_spark.sources.index_store import load_index, save_index
 
@@ -226,12 +233,22 @@ def test_save_load_roundtrip(spark, rnd_index, tmp_path):
                       packed=True, block_size=64)
     assert meta["n_docs"] == idx.n_docs
     assert meta["lineage"]
-    # exactly what the loaders read back: no write-only component
-    import os
-
+    # exactly what the loader reads back: one postings format, no
+    # write-only component
     assert sorted(os.listdir(path)) == [
-        "doc_stats", "meta.json", "packed", "postings", "term_stats",
+        "doc_stats", "meta.json", "postings", "term_stats",
     ]
+    # the postings are zstd with v2 data pages (v1 pages write
+    # PLAIN_DICTIONARY, v2 RLE_DICTIONARY)
+    files = [f for f in os.listdir(f"{path}/postings") if f.endswith(".parquet")]
+    assert files
+    for name in files:
+        md = pq.ParquetFile(f"{path}/postings/{name}").metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                chunk = md.row_group(g).column(c)
+                assert chunk.compression == "ZSTD", (name, chunk)
+                assert "PLAIN_DICTIONARY" not in chunk.encodings, (name, chunk)
     idx2, params = load_index(spark, path)
     assert params == {"alpha": 1.5, "beta": 0.2}
     assert idx2.n_docs == idx.n_docs and idx2.avgdl == idx.avgdl
@@ -241,6 +258,34 @@ def test_save_load_roundtrip(spark, rnd_index, tmp_path):
     assert [(r["doc_id"], r["score"]) for r in a] == [
         (r["doc_id"], r["score"]) for r in b
     ]
+
+    # a directory in the former two-format layout (a packed/ copy and
+    # its meta keys next to postings/) still loads, from postings/
+    scorer = BayesianBM25SparkScorer(
+        method="lucene", alpha=1.5, beta=0.2, base_rate=0.05
+    ).index(docs_df(spark, corpus))
+    old = str(tmp_path / "two_format_idx")
+    scorer.save(old)
+    pack_postings(scorer.index_, 64).write.parquet(f"{old}/packed")
+    with open(f"{old}/meta.json") as f:
+        old_meta = json.load(f)
+    old_meta.update(packed=True, packed_format=3, block_size=64)
+    with open(f"{old}/meta.json", "w") as f:
+        json.dump(old_meta, f)
+    loaded = BayesianBM25SparkScorer.from_saved(spark, old, packed=True)
+    queries = [["w1", "w2", "w30"], ["w3", "w3", "w44"], ["w0", "w12"]]
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], r["score"], r["probability"])
+            for r in df.collect()
+        )
+
+    assert rows(loaded.retrieve(queries, k=5)) == rows(
+        scorer.retrieve(queries, k=5)
+    )
+    loaded.index_.unpersist()
+    scorer.index_.unpersist()
 
 
 def test_packed_index_query_parity(spark, rnd_index, tmp_path):
@@ -295,32 +340,6 @@ def test_packed_wand_pushes_term_filter(spark, rnd_index, tmp_path):
 
     exhaustive = top_k(score_queries(pidx, qdf, terms_filter=terms), 5)
     assert rows(ranked) == rows(exhaustive)
-
-
-def test_packed_format_version_check(spark, rnd_index, tmp_path):
-    """An index packed by an older layout (no packed_format / stale
-    version in meta.json) fails loudly with a re-pack message instead
-    of an unresolved-column error deep in the decode plan."""
-    import json
-
-    import pytest
-
-    from bayesian_bm25_js_spark.sources.index_store import (
-        load_packed_index,
-        save_index,
-    )
-
-    corpus, idx = rnd_index
-    path = str(tmp_path / "pidx_v1")
-    save_index(idx, path, packed=True, block_size=64)
-    from bayesian_bm25_js_spark.sources.index_store import PACKED_FORMAT_VERSION
-
-    meta = json.load(open(f"{path}/meta.json"))
-    assert meta["packed_format"] == PACKED_FORMAT_VERSION
-    meta.pop("packed_format")  # simulate a pre-versioning pack
-    json.dump(meta, open(f"{path}/meta.json", "w"))
-    with pytest.raises(ValueError, match="older build"):
-        load_packed_index(spark, path)
 
 
 def test_terms_filter_falls_back_to_string_isin(spark, rnd_index):
