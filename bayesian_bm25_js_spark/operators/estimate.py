@@ -29,7 +29,11 @@ from bayesian_bm25_js_spark.functions.prng import (
     sample_without_replacement,
 )
 from bayesian_bm25_js_spark.operators.index_build import InvertedIndex
-from bayesian_bm25_js_spark.operators.scoring import queries_to_df, score_queries
+from bayesian_bm25_js_spark.operators.scoring import (
+    local_frame,
+    queries_to_df,
+    score_queries,
+)
 
 VALID_BASE_RATE_METHODS = ("percentile", "mixture", "elbow")
 
@@ -77,8 +81,8 @@ def pseudo_query_scored_df(index: InvertedIndex, docs_tokens):
     sample_indices = sample_without_replacement(n, sample_size, rng)
 
     spark = index.spark
-    ids_df = spark.createDataFrame(
-        [(int(i),) for i in sample_indices], "doc_id long"
+    ids_df = local_frame(
+        spark, [(int(i),) for i in sample_indices], "doc_id long"
     )
     sampled = (
         docs_tokens.join(F.broadcast(ids_df), "doc_id")

@@ -215,7 +215,7 @@ class MultiFieldSparkScorer:
         all-zero fusion) are absent.
         """
         return self.get_probabilities_batch(
-            [list(query_tokens)], dense=dense
+            [query_tokens], dense=dense
         ).drop("query_id")
 
     def retrieve(
@@ -234,7 +234,7 @@ class MultiFieldSparkScorer:
         through one window task (VERDICT r02 "What's wrong" #4).
         Ranking is on the raw fused probability (round_dp=None) —
         exactly the single-window order."""
-        return self.retrieve_batch([list(query_tokens)], k, dense=dense).drop(
+        return self.retrieve_batch([query_tokens], k, dense=dense).drop(
             "query_id"
         )
 

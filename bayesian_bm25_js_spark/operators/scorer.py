@@ -32,8 +32,10 @@ from bayesian_bm25_js_spark.operators.index_build import (
 from bayesian_bm25_js_spark.operators.scoring import (
     calibrate,
     densify_scores,
+    local_frame,
     queries_to_df,
     score_queries,
+    token_lists,
     top_k,
 )
 
@@ -208,8 +210,8 @@ class BayesianBM25SparkScorer:
         qdf = queries_to_df(spark, queries)
         scores = score_queries(self._index, qdf)
         if dense:
-            qids = spark.createDataFrame(
-                [(i,) for i in range(len(queries))], "query_id long"
+            qids = local_frame(
+                spark, [(i,) for i in range(len(queries))], "query_id long"
             )
             scores = densify_scores(self._index, scores, qids)
         return scores
@@ -334,7 +336,7 @@ class BayesianBM25SparkScorer:
                 f"got {strategy!r}"
             )
         t = self._transform
-        qlists = [list(q) for q in queries]
+        qlists = token_lists(queries)
         cap = max_batch_width or self._spill_free_width()
         if len(qlists) > cap and not dense:
             from functools import reduce
@@ -381,7 +383,7 @@ class BayesianBM25SparkScorer:
         batch WIDTH; see bench.py's pipelining A/B)."""
         self._ensure_indexed()
         t = self._transform
-        scores = self._score([list(q) for q in queries], dense=dense)
+        scores = self._score(token_lists(queries), dense=dense)
         return calibrate(
             scores,
             self._index,
@@ -401,7 +403,7 @@ class BayesianBM25SparkScorer:
         exactly 0.0; dense=False emits matched docs only (the scale
         shape — absent rows are semantically 0.0)."""
         return self.get_probabilities_batch(
-            [list(query_tokens)], dense=dense
+            [query_tokens], dense=dense
         ).select("doc_id", "score", "tf_overlap", "dl", "probability")
 
     # -- explain --------------------------------------------------------------

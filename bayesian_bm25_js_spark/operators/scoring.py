@@ -28,10 +28,11 @@ Float64 parity details:
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -61,8 +62,74 @@ def isin_filter(col_name: str, values) -> "F.Column":
     return F.expr(f"`{col_name}` IN ({lst})")
 
 
+# Arrow types of the DDL names local_frame accepts.
+_ARROW_TYPES = {
+    "long": pa.int64(),
+    "int": pa.int32(),
+    "string": pa.string(),
+    "boolean": pa.bool_(),
+}
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: str) -> DataFrame:
+    """Small driver-side rows -> a DataFrame planned as a JVM
+    LocalRelation (LocalTableScan), never as a Python RDD.
+
+    rows and schema as for spark.createDataFrame(rows, schema), with the
+    schema a "name type, ..." DDL string over long/int/string/boolean;
+    every field is nullable, as there. The rows become a typed
+    pyarrow.Table that spark.createDataFrame(table) ships to the JVM
+    once; Spark plans it as a LocalRelation while it stays under
+    spark.sql.execution.arrow.localRelationThreshold (48 MB by
+    default), so the optimizer folds projections such as
+    xxhash64(term) into it. A list of tuples plans a pickled Python RDD
+    (Scan ExistingRDD) instead, and every job reading it starts Python
+    workers to unpickle the rows: each query-side broadcast of a warm
+    WAND batch measured 0.23-0.80 s of wall time that way, 20-34 ms
+    as a local relation (3000 files, 200 queries, local[4])."""
+    fields = [f.split() for f in schema.split(",")]
+    columns = list(zip(*rows)) or [()] * len(fields)
+    table = pa.table(
+        [pa.array(c, _ARROW_TYPES[t]) for (_, t), c in zip(fields, columns)],
+        names=[name for name, _ in fields],
+    )
+    return spark.createDataFrame(table)
+
+
+def token_lists(queries: Sequence[Sequence[str]]) -> List[List[str]]:
+    """The query batch as one list of str tokens per query; a TypeError
+    names the first query that is not one. A str where a token list
+    belongs would otherwise split into one-character tokens and answer
+    silently."""
+    hint = "pass one token list per query, e.g. line.split()"
+    if isinstance(queries, (str, bytes)):
+        raise TypeError(
+            f"queries is a {type(queries).__name__}, not a list of token "
+            f"lists; {hint}"
+        )
+    out = []
+    for qid, tokens in enumerate(queries):
+        if isinstance(tokens, (str, bytes)):
+            raise TypeError(
+                f"query {qid} is a {type(tokens).__name__} ({tokens!r:.40}), "
+                f"not a token list; {hint}"
+            )
+        tokens = list(tokens)
+        for t in tokens:
+            if not isinstance(t, str):
+                raise TypeError(
+                    f"query {qid} has a {type(t).__name__} token ({t!r:.40}); "
+                    f"tokens must be str; {hint}"
+                )
+        out.append(tokens)
+    return out
+
+
 def queries_to_df(spark: SparkSession, queries: Sequence[Sequence[str]]) -> DataFrame:
-    """[[token,...], ...] -> (query_id, pos, term, is_first).
+    """[[token,...], ...] -> (query_id, pos, term, is_first), a local
+    relation (local_frame): no job reading the query side starts a
+    Python worker. Raises TypeError on anything but str token lists
+    (token_lists).
 
     Duplicates preserved (they contribute twice to the score,
     bm25.ts:110). is_first marks the first occurrence of a term within
@@ -70,13 +137,13 @@ def queries_to_df(spark: SparkSession, queries: Sequence[Sequence[str]]) -> Data
     terms with a plain conditional sum instead of a per-group hash set
     (the overlap count feeds the tf prior, scorer.ts:549-564)."""
     rows = []
-    for qid, tokens in enumerate(queries):
+    for qid, tokens in enumerate(token_lists(queries)):
         seen = set()
         for pos, term in enumerate(tokens):
             rows.append((qid, pos, term, term not in seen))
             seen.add(term)
-    return spark.createDataFrame(
-        rows, "query_id long, pos int, term string, is_first boolean"
+    return local_frame(
+        spark, rows, "query_id long, pos int, term string, is_first boolean"
     )
 
 

@@ -46,7 +46,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from bayesian_bm25_js_spark.operators.compression import (
     DEFAULT_BLOCK_SIZE,
@@ -78,19 +77,20 @@ DEFAULT_ROUTER_FLOOR = 50_000_000
 def _query_blocks(block_max: DataFrame, query_terms: DataFrame) -> tuple:
     """-> (join_key, qb): the block-max rows of every query token, each
     carrying (query_id, is_first) from the broadcast query side — the
-    shared preamble of _bounds_and_tau and _fused_survivors."""
+    preamble of _fused_survivors, and of the pure-Catalyst reference
+    phases its parity tests compare it with
+    (tests/test_index_hardening.py)."""
     key, block_max, qt = _probe(block_max, query_terms)
     return key, block_max.join(
         F.broadcast(qt.select("query_id", key, "is_first")), key
     )
 
 
-def _bounds_and_tau(
-    block_max: DataFrame, query_terms: DataFrame, k: int
-) -> tuple[DataFrame, DataFrame]:
-    """One block_max scan -> (bounds, tau): the pure-Catalyst reference
-    formulation of the phases _fused_survivors runs in production (the
-    parity tests compare the two).
+def _fused_survivors(
+    block_max: DataFrame, query_terms: DataFrame, k: int,
+    with_stats: bool = False,
+) -> DataFrame:
+    """bounds → τ → surviving blocks in ONE shuffle + one Arrow pass.
 
     τ(q) = max of two witness rules:
 
@@ -104,73 +104,13 @@ def _bounds_and_tau(
     yields k distinct docs scoring ≥ that block's min_contrib. Taking
     the best term maximizes the bound; witnesses never mix terms, so
     no doc is double-counted.
-    """
-    # ONE scan of block_max; the repartition materializes an exchange
-    # that both downstream aggregations reuse (profiled: without it the
-    # 20M-row cache is scanned once per phase).
-    key, qb = _query_blocks(block_max, query_terms)
-    qb = qb.repartition("query_id")
 
-    bounds = qb.groupBy("query_id", "block_id").agg(
-        F.sum("max_contrib").alias("ub"),
-        F.max("max_contrib").alias("lb"),
-    )
-
-    # rule 1
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("lb"), F.asc("block_id"))
-    rule1 = (
-        bounds.withColumn("__rn", F.row_number().over(w1))
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.min(F.when(F.col("__rn") <= k, F.col("lb"))).alias("kth_lb"),
-        )
-        .select(
-            "query_id",
-            F.when(F.col("n_blocks") >= k, F.col("kth_lb")).alias("tau1"),
-        )
-    )
-
-    # rule 2 (is_first dedupes duplicate query tokens)
-    per_term = qb.filter(F.col("is_first"))
-    w2 = Window.partitionBy("query_id", key).orderBy(
-        F.desc("min_contrib"), F.asc("block_id")
-    )
-    cum = per_term.withColumn("__cum", F.sum("n").over(w2))
-    tau_t = (
-        cum.filter((F.col("__cum") >= k) & (F.col("__cum") - F.col("n") < k))
-        .groupBy("query_id", key)
-        .agg(F.max("min_contrib").alias("tau_t"))
-    )
-    rule2 = tau_t.groupBy("query_id").agg(F.max("tau_t").alias("tau2"))
-
-    tau = (
-        rule1.join(rule2, "query_id", "outer")
-        .select(
-            "query_id",
-            F.coalesce(
-                F.greatest("tau1", "tau2"),
-                F.col("tau1"),
-                F.col("tau2"),
-                F.lit(float("-inf")),
-            ).alias("tau"),
-        )
-    )
-    return bounds, tau
-
-
-def _fused_survivors(
-    block_max: DataFrame, query_terms: DataFrame, k: int,
-    with_stats: bool = False,
-) -> DataFrame:
-    """bounds → τ → surviving blocks in ONE shuffle + one Arrow pass.
-
-    Semantically identical to _bounds_and_tau + the ub ≥ τ − ε filter
-    (same two witness rules, same tie-breaks — see _bounds_and_tau's
-    docstring for the math), but run as one segmented NumPy pass per
-    Arrow batch: the rows are exchanged on query_id, sorted by it, and
-    a mapInPandas hands every complete query group of a batch to
-    _kept_blocks at once. The Catalyst formulation costs ~6 small
+    The parity tests keep these phases in pure Catalyst as the reference
+    (_bounds_and_tau in tests/test_index_hardening.py: same witness
+    rules, same tie-breaks, then the ub ≥ τ − ε filter). Here they run
+    as one segmented NumPy pass per Arrow batch: the rows are exchanged
+    on query_id, sorted by it, and a mapInPandas hands every complete
+    query group of a batch to _kept_blocks at once. The Catalyst formulation costs ~6 small
     stages (bounds groupBy, two τ windows + three aggregations, the τ
     join) whose walls are scheduling latency, not work; a grouped
     pandas UDF pays 7-11 ms of Python per query, run back to back in

@@ -22,28 +22,33 @@ def simple_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def count_exchanges(df: DataFrame) -> int:
-    """Number of shuffle boundaries the plan will actually EXECUTE.
-
-    Walks the physical plan tree JVM-side counting ShuffleExchange
-    nodes (nodeName "Exchange"): a printed-plan regex over-counts
-    because formatted/simple explain both include cached relations'
-    DEFINITION subtrees for provenance — those exchanges already ran
+def plan_nodes(df: DataFrame) -> list:
+    """Node names of the physical plan the query will actually EXECUTE,
+    in pre-order. Walks the tree JVM-side: a printed-plan regex
+    over-matches because formatted/simple explain both include cached
+    relations' DEFINITION subtrees for provenance — those already ran
     at cache-build time and don't re-execute per query. The walk stops
-    at InMemoryTableScan leaves, excludes BroadcastExchange (not a
-    shuffle) and ReusedExchange (a reference, not an extra shuffle).
-    """
+    at InMemoryTableScan leaves and enters an adaptive plan through its
+    initial plan."""
 
-    def walk(node) -> int:
+    def walk(node) -> list:
         if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
             return walk(node.initialPlan())
-        n = 1 if node.nodeName() == "Exchange" else 0
+        names = [node.nodeName()]
         children = node.children()
         for i in range(children.size()):
-            n += walk(children.apply(i))
-        return n
+            names += walk(children.apply(i))
+        return names
 
     return walk(df._jdf.queryExecution().executedPlan())
+
+
+def count_exchanges(df: DataFrame) -> int:
+    """Number of shuffle boundaries the plan will actually EXECUTE
+    (plan_nodes): ShuffleExchange nodes (nodeName "Exchange"), not
+    BroadcastExchange (not a shuffle) or ReusedExchange (a reference,
+    not an extra shuffle)."""
+    return plan_nodes(df).count("Exchange")
 
 
 def has_broadcast_join(df: DataFrame) -> bool:

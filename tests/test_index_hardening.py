@@ -11,7 +11,9 @@ import pytest
 from tests.conftest import SMALL_CORPUS, docs_df
 from tests.oracle import OracleBM25
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from bayesian_bm25_js_spark.functions.prng import mulberry32
 from bayesian_bm25_js_spark.operators.compression import (
@@ -27,7 +29,7 @@ from bayesian_bm25_js_spark.operators.scoring import (
     score_queries,
     top_k,
 )
-from bayesian_bm25_js_spark.operators.wand import wand_topk
+from bayesian_bm25_js_spark.operators.wand import _query_blocks, wand_topk
 
 
 def random_corpus(n_docs=400, vocab=50, seed=5):
@@ -672,6 +674,67 @@ def _arrow_batch_rows(spark, rows):
             spark.conf.set(conf, prev)
 
 
+def _bounds_and_tau(
+    block_max: DataFrame, query_terms: DataFrame, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """One block_max scan -> (bounds, tau): the pure-Catalyst reference
+    formulation of the phases wand._fused_survivors runs in production
+    (the parity tests below compare the two). τ(q) is the max of the
+    two witness rules of _fused_survivors' docstring."""
+    # ONE scan of block_max; the repartition materializes an exchange
+    # that both downstream aggregations reuse (profiled: without it the
+    # 20M-row cache is scanned once per phase).
+    key, qb = _query_blocks(block_max, query_terms)
+    qb = qb.repartition("query_id")
+
+    bounds = qb.groupBy("query_id", "block_id").agg(
+        F.sum("max_contrib").alias("ub"),
+        F.max("max_contrib").alias("lb"),
+    )
+
+    # rule 1
+    w1 = Window.partitionBy("query_id").orderBy(F.desc("lb"), F.asc("block_id"))
+    rule1 = (
+        bounds.withColumn("__rn", F.row_number().over(w1))
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_blocks"),
+            F.min(F.when(F.col("__rn") <= k, F.col("lb"))).alias("kth_lb"),
+        )
+        .select(
+            "query_id",
+            F.when(F.col("n_blocks") >= k, F.col("kth_lb")).alias("tau1"),
+        )
+    )
+
+    # rule 2 (is_first dedupes duplicate query tokens)
+    per_term = qb.filter(F.col("is_first"))
+    w2 = Window.partitionBy("query_id", key).orderBy(
+        F.desc("min_contrib"), F.asc("block_id")
+    )
+    cum = per_term.withColumn("__cum", F.sum("n").over(w2))
+    tau_t = (
+        cum.filter((F.col("__cum") >= k) & (F.col("__cum") - F.col("n") < k))
+        .groupBy("query_id", key)
+        .agg(F.max("min_contrib").alias("tau_t"))
+    )
+    rule2 = tau_t.groupBy("query_id").agg(F.max("tau_t").alias("tau2"))
+
+    tau = (
+        rule1.join(rule2, "query_id", "outer")
+        .select(
+            "query_id",
+            F.coalesce(
+                F.greatest("tau1", "tau2"),
+                F.col("tau1"),
+                F.col("tau2"),
+                F.lit(float("-inf")),
+            ).alias("tau"),
+        )
+    )
+    return bounds, tau
+
+
 def test_fused_survivors_matches_catalyst_phases(spark, rnd_index):
     """The fused survivors kernel must keep exactly the blocks the
     Catalyst bounds/tau phases keep — same witness rules, same
@@ -681,7 +744,6 @@ def test_fused_survivors_matches_catalyst_phases(spark, rnd_index):
     from bayesian_bm25_js_spark.operators.compression import block_max_table
     from bayesian_bm25_js_spark.operators.wand import (
         ROUND_SLACK,
-        _bounds_and_tau,
         _fused_survivors,
     )
 
@@ -718,11 +780,7 @@ def test_fused_stats_match_catalyst_stats(spark, rnd_index):
     that keep zero blocks (the null-marker row) and unknown-term
     queries (no candidate blocks at all)."""
     from bayesian_bm25_js_spark.operators.compression import block_max_table
-    from bayesian_bm25_js_spark.operators.wand import (
-        ROUND_SLACK,
-        _bounds_and_tau,
-        wand_topk,
-    )
+    from bayesian_bm25_js_spark.operators.wand import ROUND_SLACK
 
     corpus, idx = rnd_index
     queries = [["w0", "w1"], ["w40", "w49"], ["nope"], ["w2", "w2", "w3"]]

@@ -179,6 +179,14 @@ def test_missing_field_raises(spark):
         MultiFieldSparkScorer(fields=["title"]).retrieve(["x"])
 
 
+def test_str_query_raises(mf):
+    """A bare string is not split into one-character tokens."""
+    with pytest.raises(TypeError, match=r"query 0 .*line\.split\(\)"):
+        mf.get_probabilities("quick fox")
+    with pytest.raises(TypeError, match=r"query 0 .*line\.split\(\)"):
+        mf.retrieve("quick fox")
+
+
 def test_retrieve_batch_matches_per_query_loop(mf):
     """Batched multi-field retrieve == a loop of single retrieves: same
     doc order, same fused probabilities, per query."""

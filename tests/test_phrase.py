@@ -8,6 +8,7 @@ streams, plus BM25 algebra recomputed directly for the score check.
 import math
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -379,14 +380,44 @@ def test_candidate_pruning_parity(spark):
         _ph.CANDIDATE_PRUNE_MIN_DOCS = _orig_floor
 
 
+def _min_cover_counts_ref(rows, window: int) -> np.ndarray:
+    """Reference scalar minimal-cover counter (classic two-pointer
+    enumeration), the parity oracle for phrase._min_cover_counts_vec.
+    rows: iterable of slot-position-list rows (None slots allowed).
+    tf = number of minimal windows whose span fits."""
+    out = np.zeros(len(rows), dtype="int32")
+    for i, row in enumerate(rows):
+        lists = [lst for lst in row if lst is not None]
+        k = len(lists)
+        if k == 1:
+            out[i] = len(lists[0])
+            continue
+        events = sorted((int(p), s) for s, lst in enumerate(lists) for p in lst)
+        counts = [0] * k
+        covered = left = tf = 0
+        for right, (pos_r, slot_r) in enumerate(events):
+            if counts[slot_r] == 0:
+                covered += 1
+            counts[slot_r] += 1
+            if covered < k:
+                continue
+            while counts[events[left][1]] > 1:
+                counts[events[left][1]] -= 1
+                left += 1
+            if pos_r - events[left][0] + 1 <= window:
+                tf += 1
+            counts[events[left][1]] -= 1
+            covered -= 1
+            left += 1
+        out[i] = tf
+    return out
+
+
 def test_min_cover_vectorized_kernel_parity():
     """_min_cover_counts_vec must equal the two-pointer reference on
     randomized slot-position rows (None slots, duplicate-free positions,
     k 1-5, windows 1-100)."""
-    from bayesian_bm25_js_spark.operators.phrase import (
-        _min_cover_counts_ref,
-        _min_cover_counts_vec,
-    )
+    from bayesian_bm25_js_spark.operators.phrase import _min_cover_counts_vec
 
     rng = random.Random(13)
     for _ in range(120):

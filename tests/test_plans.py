@@ -266,3 +266,75 @@ def test_wand_survivors_are_one_arrow_pass(spark, idx):
     plan = plan_string(ranked)
     assert "MapInPandas" in plan, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "queries",
+    [
+        [["cat", "dog", "cat"], ["the"]],  # duplicate token
+        [["cat"], [], ["dog"]],  # empty token list
+        [],  # empty batch
+        [["it's", "back\\slash", "naïve", "日本", "it's"]],
+    ],
+)
+def test_query_frame_is_local_relation(spark, queries):
+    """queries_to_df keeps the rows and schema of the list-of-tuples
+    frame it replaced, and plans as a JVM LocalRelation: no job that
+    reads the query side starts a Python worker."""
+    rows = []
+    for qid, tokens in enumerate(queries):
+        for pos, term in enumerate(tokens):
+            rows.append((qid, pos, term, term not in tokens[:pos]))
+    want = spark.createDataFrame(
+        rows, "query_id long, pos int, term string, is_first boolean"
+    )
+    qdf = queries_to_df(spark, queries)
+    assert qdf.schema == want.schema
+    assert qdf.collect() == want.collect()
+    plan = qdf._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+
+
+@pytest.fixture(scope="module")
+def warm_wand(spark):
+    """A scorer whose routed WAND retrieve() is warm: the df memo and
+    the block-max cache are filled by one earlier batch."""
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+
+    scorer = BayesianBM25SparkScorer(
+        method="lucene", alpha=1.0, beta=0.5, base_rate=0.05
+    ).index(docs_df(spark, SMALL_CORPUS))
+    queries = [["cat", "dog"], ["the", "cat", "the"], ["machine", "learning"]]
+    scorer.retrieve(queries, k=3, router_floor=0).collect()
+    assert scorer.index_._last_route["decision"] == "wand"
+    return scorer, queries
+
+
+def test_warm_wand_retrieve_scans_no_python_rdd(spark, warm_wand):
+    """Both query-side broadcasts of a routed WAND batch read a
+    LocalTableScan, never a pickled Python RDD (Scan ExistingRDD)."""
+    from bayesian_bm25_js_spark.plans.audit import plan_nodes
+
+    scorer, queries = warm_wand
+    out = scorer.retrieve(queries, k=3, router_floor=0)
+    out.collect()
+    nodes = plan_nodes(out)
+    assert not [n for n in nodes if "ExistingRDD" in n], nodes
+    assert nodes.count("LocalTableScan") == 2, nodes
+
+
+def test_warm_wand_batch_job_count(spark, warm_wand):
+    """A warm routed WAND batch runs 7 Spark jobs (AQE on, the test
+    session): the two query-side broadcasts, the survivor exchange and
+    broadcast, the scoring aggregate's exchange, the top-k exchange and
+    the result. A new action on the hot path shows up here."""
+    scorer, queries = warm_wand
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-wand-batch", "warm routed WAND retrieve")
+    try:
+        scorer.retrieve(queries, k=3, router_floor=0).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert scorer.index_._last_route["decision"] == "wand"
+    assert len(sc.statusTracker().getJobIdsForGroup("warm-wand-batch")) == 7

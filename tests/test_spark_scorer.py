@@ -331,3 +331,36 @@ def test_retrieve_router_floor_passthrough(spark_scorer):
     )
     c = collect_retrieve(spark_scorer.retrieve(queries, 3))
     assert a == b == c
+
+
+def test_queries_to_df_rejects_non_token_lists(spark):
+    """A str where a token list belongs would split into one-character
+    tokens; a non-str token would be stringified. Both fail loudly,
+    naming the query."""
+    from bayesian_bm25_js_spark.operators.scoring import queries_to_df
+
+    for bad, where in (
+        (["static void main"], "query 0"),
+        ([["cat"], ["dog", 7]], "query 1"),
+        ("cat", "queries"),
+    ):
+        with pytest.raises(TypeError, match=where) as err:
+            queries_to_df(spark, bad)
+        assert "split()" in str(err.value)
+
+
+def test_retrieve_rejects_str_queries(spark_scorer):
+    with pytest.raises(TypeError, match=r"query 1 .*line\.split\(\)"):
+        spark_scorer.retrieve([["cat"], "static void main"])
+    with pytest.raises(TypeError, match="queries is a str"):
+        spark_scorer.retrieve("cat")
+
+
+def test_get_probabilities_batch_rejects_str_queries(spark_scorer):
+    with pytest.raises(TypeError, match=r"query 0 .*line\.split\(\)"):
+        spark_scorer.get_probabilities_batch(["static void main"])
+
+
+def test_get_probabilities_rejects_str_query(spark_scorer):
+    with pytest.raises(TypeError, match=r"query 0 .*line\.split\(\)"):
+        spark_scorer.get_probabilities("static void main")
