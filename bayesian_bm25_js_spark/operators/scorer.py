@@ -276,11 +276,16 @@ class BayesianBM25SparkScorer:
         floor = {"wand": 0, "exhaustive": float("inf")}.get(strategy, router_floor)
         # provider keeps block-max construction lazy: batches the
         # router sends to the exhaustive path never build it
-        return auto_topk(
+        ranked = auto_topk(
             self._index, qlists, k,
             block_max_provider=self._block_max_cached,
             min_prunable_postings=DEFAULT_ROUTER_FLOOR if floor is None else floor,
         )
+        if strategy != "auto":
+            self._index._last_route["floor_source"] = "forced"
+        elif router_floor is not None:
+            self._index._last_route["floor_source"] = "router_floor"
+        return ranked
 
     def retrieve(
         self,
@@ -302,18 +307,24 @@ class BayesianBM25SparkScorer:
         (tie-broken by ascending doc_id) via a bounded cross join —
         fixture scale only (VERDICT r01 "What's wrong" #2).
 
-        strategy: "auto" (default) routes each query by selectivity —
-        block-max WAND for selective queries, the salted exhaustive
-        scorer when even the rarest term is ubiquitous (wand.auto_topk;
-        all three strategies are rank-identical under the 6-dp policy).
-        "wand" / "exhaustive" force one path: the same router with its
-        floor at 0 / infinity. dense=True implies exhaustive (pruning
-        cannot zero-fill). router_floor overrides the router's
+        strategy: "auto" (default) routes each batch by a cost model
+        over index metadata (wand.auto_topk / route_queries): block-max
+        WAND when the postings it is estimated to skip reach the
+        router floor, the salted exhaustive scorer otherwise. The
+        estimate (wand.estimate_prunable_volume) takes from each query
+        its rarest term with df ≥ k, which sets WAND's threshold, and
+        counts the blocks outside that term as skippable; a query with
+        no such term skips nothing. All three strategies are
+        rank-identical under the 6-dp policy. "wand" / "exhaustive"
+        force one path: the same router with its floor at 0 /
+        infinity. dense=True implies exhaustive (pruning cannot
+        zero-fill). router_floor overrides the router's
         min_prunable_postings (wand.DEFAULT_ROUTER_FLOOR) with a
         box-fitted value (wand.fit_router_floor with proxy_volume — fit
         it once from one measured wand/exhaustive pair on a
         representative batch; the floor must be in the proxy units of
-        estimate_prunable_volume).
+        estimate_prunable_volume). index_._last_route records the
+        decision and why (route_queries).
 
         Batch width: throughput rises with queries-per-call (the
         per-batch plan/broadcast cost amortizes) until the scoring

@@ -69,9 +69,13 @@ from bayesian_bm25_js_spark.operators.scoring import (
 # kth score, so pruned ≡ exhaustive under the rounded ranking.
 ROUND_SLACK = 1e-6
 
-# The router's hand-set min_prunable_postings (route_queries), in the
-# proxy units of estimate_prunable_volume.
-DEFAULT_ROUTER_FLOOR = 50_000_000
+# The router's min_prunable_postings (route_queries), in the proxy
+# units of estimate_prunable_volume (avoidable postings). Bracketed by
+# forced WAND/exhaustive pairs on perfbench corpora (seed 7, 200-query
+# wide batches, local[4], 6 interleaved pairs per shape): exhaustive
+# won every pair up to a proxy of 237,757 (6k files; 9,078 at 3k), and
+# WAND won from 818,236 (8k files, 5/6 pairs; 4,115,944 at 15k, 6/6).
+DEFAULT_ROUTER_FLOOR = 500_000
 
 
 def _query_blocks(block_max: DataFrame, query_terms: DataFrame) -> tuple:
@@ -236,29 +240,30 @@ def route_queries(
     queries,
     hot_df_frac: float = 0.10,
     min_prunable_postings: int = DEFAULT_ROUTER_FLOOR,
+    k: int = 10,
+    block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> tuple:
     """Route a query batch -> (exhaustive_ids, wand_ids); one side is
-    always empty — routing is BINARY per batch, by a measured cost
-    model:
+    always empty — routing is BINARY per batch, by a cost model over
+    index metadata:
 
-    * WAND's three extra phases (bounds, τ, survivor join) are a FIXED
-      per-batch cost (~1s of stage overhead at local[32]) that only
-      pays off when the avoidable scoring fan-out is large. The
-      avoidable volume is estimated as (1 - typical kept fraction
-      ~0.2) * Σ df over the tokens of queries that have at least one
-      selective term (min df < hot_df_frac * n_docs — queries whose
-      every term is ubiquitous have kept≈1, nothing to avoid). Below
-      min_prunable_postings the whole batch takes the salted
-      exhaustive scorer; above it, the whole batch takes WAND.
-    * Measured regimes: at 100k files / 200 queries exhaustive wins
-      outright (2.1s vs wand 3.0s — under the floor); at 300k files /
-      1000 queries WAND wins 4x (13.5s vs 54.7s — over the floor).
+    * WAND's extra phases (bounds, τ, survivor join) are a FIXED
+      per-batch cost that pays off only when the scoring fan-out they
+      avoid is large. estimate_prunable_volume estimates that avoidable
+      volume, in postings, from n_docs, block_size, k and the batch's
+      df. Below min_prunable_postings the whole batch takes the salted
+      exhaustive scorer; at or above it, the whole batch takes WAND.
     * Why not split the batch and send stop-word queries to their own
-      exhaustive pipeline? Measured at the 300k shape: split 18.1s /
-      374s CPU vs all-WAND 13.5s / 274s CPU — two pipelines duplicate
-      the scans of shared terms that one batch amortizes, and a folded
-      stop-word query costs WAND only its (unprunable) fan-out plus
-      bounded per-block bounds work.
+      exhaustive pipeline? Two pipelines duplicate the scans of shared
+      terms that one batch amortizes, and a folded stop-word query
+      costs WAND only its (unprunable) fan-out plus bounded per-block
+      bounds work.
+
+    The decision is a pure function of the index metadata and the
+    batch. It is recorded on index._last_route: decision, proxy_volume,
+    floor, floor_source ("default" for the library floor, else
+    "router_floor"; retrieve() records "forced" for a forced strategy),
+    n_queries, k, n_blocks and the batch's est_kept_frac.
 
     The df lookup costs at most ONE bounded driver action per batch —
     term_stats In-filtered to the batch's UNSEEN terms (never the
@@ -266,15 +271,22 @@ def route_queries(
     driver-side df cache (index.df_lookup): a warm workload routes
     entirely at plan-construction time."""
     all_ids = list(range(len(queries)))
-    prunable, _ = estimate_prunable_volume(index, queries, hot_df_frac)
+    prunable, _, volume, n_blocks = _estimate(
+        index, queries, hot_df_frac, k, block_size
+    )
     decision = "exhaustive" if prunable < min_prunable_postings else "wand"
-    # diagnostic breadcrumb: the bench and tests can read WHY a batch
-    # routed where it did without re-running the estimator
     index._last_route = {
         "decision": decision,
         "proxy_volume": prunable,
         "floor": min_prunable_postings,
+        "floor_source": (
+            "default" if min_prunable_postings == DEFAULT_ROUTER_FLOOR
+            else "router_floor"
+        ),
         "n_queries": len(queries),
+        "k": k,
+        "n_blocks": n_blocks,
+        "est_kept_frac": 1.0 - prunable / volume if volume else 1.0,
     }
     if decision == "exhaustive":
         return all_ids, []
@@ -285,32 +297,52 @@ def estimate_prunable_volume(
     index: InvertedIndex,
     queries,
     hot_df_frac: float = 0.10,
-    avoidable_frac: float = 0.8,
+    k: int = 10,
+    block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> tuple:
     """-> (proxy avoidable posting volume, prunable query ids): the
-    router's estimator of how much scoring fan-out WAND could skip for
-    this batch. Queries whose every term is ubiquitous (min df >=
-    hot_df_frac * n_docs) contribute nothing (their kept fraction ~1);
-    the rest contribute avoidable_frac of their df sum. ONE bounded
-    driver action at most (df cache, index.df_lookup).
+    router's estimate of how many postings WAND would skip for this
+    batch — the sum over queries of (1 - kept_q) * Σ df over the
+    query's tokens. ONE bounded driver action at most (df cache,
+    index.df_lookup).
+
+    kept_q, the fraction of a query's postings WAND still scores, comes
+    from index metadata only. τ needs a witness: a term with df ≥ k
+    (rule 2 of _fused_survivors); without one, τ comes from the k-th
+    best block of the query's ubiquitous terms and prunes almost
+    nothing, so kept_q = 1. With one, the smallest such df is the
+    witness, and WAND keeps about the blocks it occupies: kept_q =
+    min(witness_df, n_blocks) / n_blocks, n_blocks = ceil(n_docs /
+    block_size). A witness in ≥ hot_df_frac of the docs counts as
+    unselective (kept_q = 1); with block_size ≥ 1 / hot_df_frac such a
+    witness covers every block anyway. The estimate errs high on kept
+    (perfbench wide batches, k = 10): 0.99-1.0 at 3k files where WAND
+    keeps 0.80 of the blocks, 0.15-0.18 at 15k against 0.12-0.13, and
+    0.14 at 40k against 0.046.
 
     This function is the single source of truth for the proxy: the
-    floor the estimate is compared against must be fitted in the SAME
-    units (fit_router_floor's proxy_volume arg) — r4 found a 1.35x
-    routing miss at 100k docs/200 queries from the fit using full
-    batch volume x (1-kept) while the router compared this (smaller)
-    prunable-only proxy against it."""
+    floor it is compared against must be in the same units
+    (fit_router_floor's proxy_volume arg)."""
+    prunable, ids, _, _ = _estimate(index, queries, hot_df_frac, k, block_size)
+    return prunable, ids
+
+
+def _estimate(index, queries, hot_df_frac, k, block_size) -> tuple:
+    """-> (proxy, prunable query ids, batch volume Σ df, n_blocks); see
+    estimate_prunable_volume."""
     df_by_term = index.df_lookup([t for q in queries for t in q])
-    thresh = float(hot_df_frac) * index.n_docs
-    prunable_ids = [
-        qid
-        for qid, q in enumerate(queries)
-        if any(df_by_term[t] < thresh for t in q if t in df_by_term)
-    ]
-    prunable = avoidable_frac * sum(
-        df_by_term.get(t, 0) for i in prunable_ids for t in queries[i]
-    )
-    return prunable, prunable_ids
+    n_blocks = max(1, -(-index.n_docs // block_size))
+    hot = float(hot_df_frac) * index.n_docs
+    prunable, ids, volume = 0.0, [], 0
+    for qid, q in enumerate(queries):
+        dfs = [df_by_term.get(t, 0) for t in q]
+        volume += sum(dfs)
+        witness = min((df for df in dfs if df >= k), default=None)
+        if witness is None or witness >= hot or witness >= n_blocks:
+            continue
+        ids.append(qid)
+        prunable += (1.0 - witness / n_blocks) * sum(dfs)
+    return prunable, ids, volume, n_blocks
 
 
 def fit_router_floor(
@@ -323,8 +355,7 @@ def fit_router_floor(
     proxy_volume: Optional[float] = None,
 ) -> int:
     """Fit min_prunable_postings from one measured pair of branch
-    timings on the SAME workload (the bench measures both), replacing
-    the hand-calibrated 50M constant with this box's own numbers.
+    timings on the SAME workload (the bench measures both).
 
     Cost model: exhaustive ≈ c_e·V (V = Σ df over batch tokens);
     WAND ≈ a_w + c_e·kept·V, so its fixed overhead is
@@ -332,14 +363,12 @@ def fit_router_floor(
     V·(1−kept) exceeds a_w/c_e.
 
     proxy_volume: the router does NOT observe V·(1−kept) — it compares
-    its own estimate (estimate_prunable_volume: avoidable_frac x
-    prunable-query df sum, a smaller number) against the floor. Pass
+    its own estimate (estimate_prunable_volume) against the floor. Pass
     the estimator's value for THIS fit workload and the floor is
     rescaled into proxy units, keeping the decision sign-consistent
-    with the measured timings at the fit point (without it, a batch
-    where WAND measured faster can still route exhaustive — seen at
-    100k docs / 200 queries: proxy 10.1M < unscaled floor 10.7M while
-    the model's avoided volume was 13.1M).
+    with the measured timings at the fit point. A zero proxy carries no
+    scale: the floor is 0 (route WAND) when WAND measured faster, and
+    the unscaled floor (> 0, route exhaustive) when it did not.
 
     Degenerate inputs (no volume, non-positive timings) fall back to
     `default`; a_w ≤ 0 (WAND strictly dominating) returns 0 so every
@@ -353,7 +382,10 @@ def fit_router_floor(
     floor = a_w / c_e
     avoided = (1.0 - kept_frac) * batch_volume
     if proxy_volume is not None and avoided > 0:
-        floor *= proxy_volume / avoided
+        if proxy_volume > 0:
+            floor *= proxy_volume / avoided
+        elif wand_seconds < exhaustive_seconds:
+            return 0
     return int(safety * floor)
 
 
@@ -370,14 +402,17 @@ def auto_topk(
     """Selectivity router: pick block-max-WAND or the salted exhaustive
     scorer for the batch — both rank-identical under the 6-dp policy,
     so routing is purely a cost decision (see route_queries for the
-    binary per-batch cost model).
+    binary per-batch cost model, estimate_prunable_volume for the
+    kept-fraction estimate it rests on).
 
-    BENCH_r02 measured the crossover: on a stop-word workload (every
-    query's min-df term in 88% of docs) WAND was 3.8x SLOWER than the
-    salted exhaustive path — when even the rarest query term is
-    ubiquitous, the top-10 is irreducibly a full postings walk and the
-    bounds/τ/survivor phases are pure overhead. Conversely, selective
-    queries keep ~20% of blocks and skip 80% of the scoring fan-out.
+    WAND pays only when τ can prune. When no query term reaches df ≥ k,
+    or the rarest one that does is in every block, the top-k is close
+    to a full postings walk and the bounds/τ/survivor phases are pure
+    overhead. Measured at local[4] on 200-query perfbench wide batches
+    (one rare identifier and 1-3 keywords per query): at 3k and 6k
+    files the rare terms mostly have df < k and exhaustive wins; from
+    8k files on they witness τ in a shrinking share of the blocks and
+    WAND wins (timings in CHANGES.md).
 
     queries: the batch as Python token lists (driver knowledge — the
     same shape retrieve() takes); query_id in the result indexes into
@@ -388,7 +423,7 @@ def auto_topk(
     exhaustive; _last_route then carries that range as key_bound.
     """
     _, wand_ids = route_queries(
-        index, queries, hot_df_frac, min_prunable_postings
+        index, queries, hot_df_frac, min_prunable_postings, k, block_size
     )
     # the packed survivor key leaves 63 - shift bits for query_id
     max_ids = 1 << (63 - _survivor_pack_shift(index.n_docs, block_size))

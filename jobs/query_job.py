@@ -17,7 +17,9 @@ into the input line order. The job is
 BayesianBM25SparkScorer.from_saved(...).retrieve(...): --strategy auto
 routes each batch between block-max WAND and the salted exhaustive
 scorer (operators/wand.route_queries); wand/exhaustive force one path
-by pinning the router's floor at 0 / infinity.
+by pinning the router's floor at 0 / infinity. The route record
+(decision, proxy volume against the floor, estimated kept fraction) is
+printed to stderr as one `route {...}` JSON line.
 All strategies are rank-identical under the engine's round(score, 6)
 policy.
 """
@@ -25,6 +27,7 @@ policy.
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -52,9 +55,10 @@ def main(argv=None) -> int:
         print("no queries", file=sys.stderr)
         return 1
 
-    out = BayesianBM25SparkScorer.from_saved(spark, args.index).retrieve(
-        queries, k=args.k, strategy=args.strategy
-    )
+    scorer = BayesianBM25SparkScorer.from_saved(spark, args.index)
+    out = scorer.retrieve(queries, k=args.k, strategy=args.strategy)
+    # the router's decision and why (wand.route_queries), one JSON line
+    print("route " + json.dumps(scorer.index_._last_route), file=sys.stderr)
 
     if args.out:
         out.repartition(1).sortWithinPartitions("query_id", "rank").write.mode(

@@ -579,7 +579,10 @@ def test_df_lookup_caches_across_batches(spark, rnd_index, kind, monkeypatch):
 
 
 def test_fit_router_floor():
-    from bayesian_bm25_js_spark.operators.wand import fit_router_floor
+    from bayesian_bm25_js_spark.operators.wand import (
+        DEFAULT_ROUTER_FLOOR,
+        fit_router_floor,
+    )
 
     # typical shape: wand 3.6s with 20% kept, exhaustive 2.3s over 10M
     # postings -> c_e = 2.3e-7 s/posting, a_w = 3.6 - 0.2*2.3 = 3.14s,
@@ -589,8 +592,8 @@ def test_fit_router_floor():
     # WAND strictly dominating -> floor 0 (always route to WAND)
     assert fit_router_floor(0.1, 5.0, 10_000_000, 0.1) == 0
     # degenerate measurements fall back to the default constant
-    assert fit_router_floor(0.0, 2.0, 1000, 0.2) == 50_000_000
-    assert fit_router_floor(2.0, 2.0, 0, 0.2) == 50_000_000
+    assert fit_router_floor(0.0, 2.0, 1000, 0.2) == DEFAULT_ROUTER_FLOOR
+    assert fit_router_floor(2.0, 2.0, 0, 0.2) == DEFAULT_ROUTER_FLOOR
     # proxy rescale: the router compares its (smaller) prunable-only
     # estimate against the floor, so the floor must shrink by
     # proxy/avoided — decision stays sign-consistent with the timings
@@ -609,6 +612,11 @@ def test_fit_router_floor():
     # and when exhaustive measured faster, the scaled floor sits ABOVE
     # the proxy (batch routes exhaustive)
     assert fit_router_floor(7.19, 5.32, v, kept, proxy_volume=proxy) > proxy
+    # a zero proxy carries no scale: the floor still routes it the way
+    # the timings went — exhaustive when WAND lost, WAND when it won
+    assert fit_router_floor(5.0, 2.0, 10**6, 0.8, proxy_volume=0) > 0
+    assert 0 < fit_router_floor(3.0, 5.0, 10**6, 0.2) < 800_000
+    assert fit_router_floor(3.0, 5.0, 10**6, 0.2, proxy_volume=0) == 0
 
 
 def test_for_codec_roundtrip():

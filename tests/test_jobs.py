@@ -33,7 +33,7 @@ def _sealed_state(path):
     return {f.name: f.read_text() for f in files}
 
 
-def test_build_then_query_job_roundtrip(spark, tmp_path):
+def test_build_then_query_job_roundtrip(spark, tmp_path, capsys):
     build, query = _job("build_index_job"), _job("query_job")
     idx_dir = tmp_path / "idx"
     idx = str(idx_dir)
@@ -46,6 +46,11 @@ def test_build_then_query_job_roundtrip(spark, tmp_path):
     res = str(tmp_path / "res")
     argv = ["--index", idx, "--queries", str(qfile), "--out", res]
     assert query.main(argv) == 0
+    # the job prints the router's decision record to stderr
+    line = [ln for ln in capsys.readouterr().err.splitlines() if ln.startswith("route ")]
+    route = json.loads(line[-1][len("route "):])
+    assert route["decision"] == "exhaustive" and route["floor_source"] == "default"
+    assert route["k"] == 10 and route["n_queries"] == len(QUERIES)
     got = _rows(spark.read.parquet(res))
     expected = _rows(
         BayesianBM25SparkScorer.from_saved(spark, idx).retrieve(QUERIES, k=10)
