@@ -160,6 +160,18 @@ def memo_df(cache: dict, table: DataFrame, key: str, keys: Sequence) -> dict:
     return {t: cache[t] for t in want}
 
 
+def memo_doc_id_range(index, table: DataFrame) -> tuple:
+    """(min, max) doc_id of `table`, memoized on index._doc_id_range:
+    one column-pruned aggregate on first use, none after. It sizes the
+    packed (hi, doc_id)-derived keys (scoring.packed_key), because doc
+    ids need not be dense or non-negative (hash-derived ids, raw
+    monotonically_increasing_id values). (0, 0) for an empty table."""
+    if index._doc_id_range is None:
+        row = table.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
+        index._doc_id_range = (int(row[0] or 0), int(row[1] or 0))
+    return index._doc_id_range
+
+
 @dataclass(eq=False)
 class InvertedIndex:
     """Distributed index state: three tables + driver scalars."""
@@ -175,17 +187,47 @@ class InvertedIndex:
     method: str
     # Driver-side term -> df cache for the selectivity router (memo_df)
     _df_cache: dict = field(default_factory=dict, repr=False, compare=False)
+    # Memos of tables derived from postings/doc_stats; init=False, so a
+    # dataclasses.replace copy (from_saved's re-laid-out postings)
+    # starts without them.
+    _doc_id_range: Optional[tuple] = field(default=None, init=False, repr=False)
+    _block_max: dict = field(default_factory=dict, init=False, repr=False)
 
     def df_lookup(self, terms: Sequence[str]) -> dict:
         """term -> df for the given terms, memoized across batches over
         the vocab-sized term_stats table (memo_df)."""
         return memo_df(self._df_cache, self.term_stats, "term", terms)
 
+    def doc_id_range(self) -> tuple:
+        """(min, max) doc_id over doc_stats (memo_doc_id_range)."""
+        return memo_doc_id_range(self, self.doc_stats)
+
+    def block_max(self, block_size: int) -> DataFrame:
+        """compression.block_max_table at `block_size`, laid out by
+        term_id (cached_layout) and persisted on first use: every WAND
+        batch after the first reads the cache. release_block_max()
+        drops it."""
+        if block_size not in self._block_max:
+            from bayesian_bm25_js_spark.operators.compression import (
+                block_max_table,
+            )
+
+            self._block_max[block_size] = cached_layout(
+                block_max_table(self, block_size), self.n_docs, key="term_id"
+            ).persist()
+        return self._block_max[block_size]
+
+    def release_block_max(self) -> None:
+        for table in self._block_max.values():
+            table.unpersist()
+        self._block_max.clear()
+
     def tf_norm_column(self, tf_col, dl_col):
         """bm25_tf_norm with this index's k1, b and avgdl."""
         return bm25_tf_norm(tf_col, dl_col, self.k1, self.b, self.avgdl)
 
     def unpersist(self) -> None:
+        self.release_block_max()
         for df in (self.postings, self.term_stats, self.doc_stats):
             try:
                 df.unpersist()

@@ -53,10 +53,12 @@ from bayesian_bm25_js_spark.operators.index_build import (
     doc_length_stats,
     idf_column,
     memo_df,
+    memo_doc_id_range,
 )
 from bayesian_bm25_js_spark.operators.scoring import (
     isin_filter,
     local_frame,
+    packed_key,
     top_k,
 )
 
@@ -65,9 +67,8 @@ from bayesian_bm25_js_spark.operators.scoring import (
 # more than the whole fan-in (measured at 5k docs: 1.7s vs 1.0s).
 CANDIDATE_PRUNE_MIN_DOCS = 50_000
 # Selectivity gate: a batch probes the candidate set only when EVERY
-# query's rarest term's df is under this fraction of the corpus — the
-# same "nothing selective to exploit" threshold the WAND router uses
-# (route_queries hot_df_frac).
+# query's rarest term's df is under this fraction of the corpus; a
+# rarer-than-this term is what leaves the probe something to prune.
 PRUNE_HOT_DF_FRAC = 0.10
 
 
@@ -86,7 +87,7 @@ class PositionalIndex:
     # phrase/proximity call was the round-5 perf-weak (~1s fixed driver
     # cost per batch at >=50k docs).
     _df_cache: dict = field(default_factory=dict, repr=False)
-    _doc_id_range: Optional[tuple] = field(default=None, repr=False)
+    _doc_id_range: Optional[tuple] = field(default=None, init=False, repr=False)
 
     def df_lookup(self, term_ids: Sequence[int]) -> dict:
         """term_id -> df for the given ids, memoized across batches
@@ -100,15 +101,9 @@ class PositionalIndex:
         return memo_df(self._df_cache, df_table, "term_id", term_ids)
 
     def doc_id_range(self) -> tuple:
-        """(min, max) doc_id in the index (memoized; one column-pruned
-        agg). Bounds-checks the candidate-pruning pack key: doc ids need
-        not be dense or non-negative (hash-derived 64-bit ids)."""
-        if self._doc_id_range is None:
-            row = self.postings.agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-            ).collect()[0]
-            self._doc_id_range = (int(row["lo"] or 0), int(row["hi"] or 0))
-        return self._doc_id_range
+        """(min, max) doc_id over the postings (memo_doc_id_range); it
+        sizes the candidate-pruning pack key."""
+        return memo_doc_id_range(self, self.postings)
 
     def unpersist(self) -> None:
         try:
@@ -205,8 +200,8 @@ def _slot_pivot(
     100k docs with the kernel saving a wash), and splitting a batch
     into probed and pass-through queries costs a left probe plus a
     filter over every joined row. The probe is also skipped when the
-    packed key would not fit 63 bits (negative doc ids, or query and
-    doc id bits overflowing) — it is only ever an optimization."""
+    batch's query ids do not fit the packed key (scoring.packed_key over
+    the index's doc-id range) — it is only ever an optimization."""
     spark = index.postings.sparkSession
     slots = _phrases_to_slots(spark, slot_lists)
     max_len = max(len(p) for p in slot_lists)
@@ -241,17 +236,15 @@ def _slot_pivot(
             all(df < hot_floor for df, _, _ in rare)
             and sum(df for df, _, _ in rare) <= candidate_limit
         ):
-            # shift sized from the ACTUAL max doc id, not n_docs: sparse
-            # (e.g. hash-derived) ids would otherwise collide packed keys
-            lo, hi = index.doc_id_range()
-            shift = max(32, max(1, hi).bit_length() + 1)
-            if lo >= 0 and shift + len(slot_lists).bit_length() <= 63:
+            pack, max_qid = packed_key(
+                "query_id", "doc_id", index.doc_id_range()
+            )
+            if len(slot_lists) - 1 <= max_qid:
                 rare_df = local_frame(
                     spark,
                     [(qid, tid) for _, qid, tid in rare],
                     "query_id long, term_id long",
                 )
-                pack = F.shiftleft(F.col("query_id"), shift) + F.col("doc_id")
                 cand = post.join(F.broadcast(rare_df), "term_id").select(
                     pack.alias("__qd")
                 )
@@ -451,25 +444,18 @@ def _min_cover_counts_vec(rows, window: int) -> np.ndarray:
     return out
 
 
-def _min_cover_count_udf(window: int, counter=None):
+def _min_cover_count_udf(window: int):
     """Arrow-batched minimal-cover counter over pivoted slot position
     arrays (see _min_cover_counts_vec for the math and the scale
     argument; the scalar two-pointer reference in tests/test_phrase.py
-    pins parity). The
-    heavy filtering (term pruning, full-slot coverage) already
-    happened in Catalyst before this kernel sees a row.
-
-    counter: kernel implementation to close over (default the
-    vectorized one) — an explicit argument because executors re-import
-    this module, so driver-side monkeypatching of the module global
-    never reaches them (kernel A/Bs must inject here)."""
+    pins parity). The heavy filtering (term pruning, full-slot
+    coverage) already happened in Catalyst before this kernel sees a
+    row."""
     from pyspark.sql.functions import pandas_udf
-
-    impl = counter or _min_cover_counts_vec
 
     @pandas_udf("int")
     def cover_count(arrs: pd.Series) -> pd.Series:
-        return pd.Series(impl(list(arrs), window))
+        return pd.Series(_min_cover_counts_vec(list(arrs), window))
 
     # The kernel is pure; asNondeterministic only stops Catalyst from
     # substituting the UDF into the pushed-down tf > 0 filter, which

@@ -73,7 +73,6 @@ class BayesianBM25SparkScorer:
         self._index: Optional[InvertedIndex] = None
         self._docs: Optional[DataFrame] = None
         self._transform: Optional[BayesianProbabilityTransform] = None
-        self._block_max: Optional[DataFrame] = None
         self._layout_parts: Optional[int] = None
 
     # -- state accessors -----------------------------------------------------
@@ -115,9 +114,8 @@ class BayesianBM25SparkScorer:
         estimate parameters (scorer.ts:163-197; estimate.fit_transform,
         which also documents estimation_cap)."""
         self._docs = docs
-        if self._block_max is not None:
-            self._block_max.unpersist()
-            self._block_max = None
+        if self._index is not None:
+            self._index.release_block_max()
         self._index = build_inverted_index(
             docs, k1=self.k1, b=self.b, method=self.method
         )
@@ -208,28 +206,14 @@ class BayesianBM25SparkScorer:
     def _score(self, queries: Sequence[Sequence[str]], dense: bool) -> DataFrame:
         spark = self._index.spark
         qdf = queries_to_df(spark, queries)
-        scores = score_queries(self._index, qdf)
+        terms = sorted({t for q in queries for t in q})
+        scores = score_queries(self._index, qdf, terms_filter=terms)
         if dense:
             qids = local_frame(
                 spark, [(i,) for i in range(len(queries))], "query_id long"
             )
             scores = densify_scores(self._index, scores, qids)
         return scores
-
-    def _block_max_cached(self) -> DataFrame:
-        """Lazily built + persisted block-max metadata, shared by every
-        WAND/routed retrieve until the next index()."""
-        if self._block_max is None:
-            from bayesian_bm25_js_spark.operators.compression import (
-                block_max_table,
-            )
-
-            # keyed by term_id: query-time bounds joins filter on it
-            self._block_max = cached_layout(
-                block_max_table(self._index), self._index.n_docs,
-                key="term_id",
-            ).persist()
-        return self._block_max
 
     # One scoring-agg combine-map entry per (query, matched doc) per
     # layout partition; the measured spill-free operating point (width
@@ -274,17 +258,17 @@ class BayesianBM25SparkScorer:
         )
 
         floor = {"wand": 0, "exhaustive": float("inf")}.get(strategy, router_floor)
-        # provider keeps block-max construction lazy: batches the
+        # a WAND batch reads the index's memoized block-max; batches the
         # router sends to the exhaustive path never build it
         ranked = auto_topk(
             self._index, qlists, k,
-            block_max_provider=self._block_max_cached,
             min_prunable_postings=DEFAULT_ROUTER_FLOOR if floor is None else floor,
         )
-        if strategy != "auto":
-            self._index._last_route["floor_source"] = "forced"
-        elif router_floor is not None:
-            self._index._last_route["floor_source"] = "router_floor"
+        self._index._last_route["floor_source"] = (
+            "forced" if strategy != "auto"
+            else "default" if router_floor is None
+            else "router_floor"
+        )
         return ranked
 
     def retrieve(

@@ -62,6 +62,24 @@ def isin_filter(col_name: str, values) -> "F.Column":
     return F.expr(f"`{col_name}` IN ({lst})")
 
 
+def packed_key(hi: str, lo: str, lo_range: tuple) -> tuple:
+    """-> (key column, max_hi): the one 64-bit packing of two long
+    columns, (hi << shift) + (lo - lo_min), for a join on one long key
+    instead of two columns.
+
+    lo_range is (lo_min, lo_max), known on the driver to bound every lo
+    value; shift is the bit length of its span, so negative and sparse
+    lo values pack as tightly as dense ones. max_hi is the largest hi
+    whose keys stay within 63 bits: callers check their hi range against
+    it before they build a plan on the key. It is negative when the span
+    alone needs 64 bits, and then no key fits."""
+    lo_min, lo_max = lo_range
+    span = lo_max - lo_min
+    shift = span.bit_length()
+    key = F.shiftleft(F.col(hi), shift) + (F.col(lo) - F.lit(lo_min))
+    return key, ((1 << 63) - 1 - span) >> shift
+
+
 # Arrow types of the DDL names local_frame accepts.
 _ARROW_TYPES = {
     "long": pa.int64(),

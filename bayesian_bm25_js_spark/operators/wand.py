@@ -25,14 +25,17 @@ of round; see the surviving-filter comment). Verified in
 tests/test_index_hardening.py.
 
 Physical shape (profiled at 400k docs / 150 queries / local[32]):
-  * block_max is scanned ONCE per batch, and phases A-C run in ONE
-    exchange: the token join result is repartitioned by query_id,
+  * block_max is the index's memo (InvertedIndex.block_max: laid out
+    by term_id, persisted by the first WAND batch), scanned ONCE per
+    batch, and phases A-C run in ONE exchange: the token join result is repartitioned by query_id,
     sorted by it, and one mapInPandas computes bounds, τ and the kept
     blocks for every complete query of an Arrow batch in a segmented
     NumPy pass (_fused_survivors) — no per-query Python call;
-  * the surviving (query, token, block) table is BROADCAST into the
-    postings join, so postings keep their doc_id partitioning (full
-    map-side combining) and pruned blocks never emit a fan-out row;
+  * the surviving (query, block) pairs are BROADCAST into the postings
+    join as one packed long each (scoring.packed_key over the index's
+    block-id range, _survivor_key), so postings keep their doc_id
+    partitioning (full map-side combining) and pruned blocks never
+    emit a fan-out row;
   * callers that know the workload's term set pass terms_filter so the
     sorted in-memory caches batch-prune the scans (the in-memory
     analogue of the term-bucketed parquet layout's bucket pruning).
@@ -40,6 +43,7 @@ Physical shape (profiled at 400k docs / 150 queries / local[32]):
 
 from __future__ import annotations
 
+import math
 from typing import Optional, Sequence
 
 import numpy as np
@@ -47,15 +51,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bayesian_bm25_js_spark.operators.compression import (
-    DEFAULT_BLOCK_SIZE,
-    block_max_table,
-)
+from bayesian_bm25_js_spark.operators.compression import DEFAULT_BLOCK_SIZE
 from bayesian_bm25_js_spark.operators.index_build import InvertedIndex
 from bayesian_bm25_js_spark.operators.scoring import (
     _probe,
     _score_aggregate,
     _terms_filtered,
+    packed_key,
     queries_to_df,
     score_queries,
     top_k,
@@ -238,14 +240,12 @@ def _kept_blocks(pdf: pd.DataFrame, key: str, k: int) -> tuple:
 def route_queries(
     index: InvertedIndex,
     queries,
-    hot_df_frac: float = 0.10,
     min_prunable_postings: int = DEFAULT_ROUTER_FLOOR,
     k: int = 10,
     block_size: int = DEFAULT_BLOCK_SIZE,
-) -> tuple:
-    """Route a query batch -> (exhaustive_ids, wand_ids); one side is
-    always empty — routing is BINARY per batch, by a cost model over
-    index metadata:
+) -> dict:
+    """Route a query batch: the one place that decides and records it.
+    Routing is BINARY per batch, by a cost model over index metadata:
 
     * WAND's extra phases (bounds, τ, survivor join) are a FIXED
       per-batch cost that pays off only when the scoring fan-out they
@@ -258,45 +258,44 @@ def route_queries(
       terms that one batch amortizes, and a folded stop-word query
       costs WAND only its (unprunable) fan-out plus bounded per-block
       bounds work.
+    * A WAND batch must fit the packed survivor key (_survivor_key):
+      key_bound is the number of query ids it holds, and a wider batch
+      routes exhaustive.
 
     The decision is a pure function of the index metadata and the
-    batch. It is recorded on index._last_route: decision, proxy_volume,
-    floor, floor_source ("default" for the library floor, else
-    "router_floor"; retrieve() records "forced" for a forced strategy),
-    n_queries, k, n_blocks and the batch's est_kept_frac.
+    batch. Returns the route record, also left on index._last_route:
+    decision, proxy_volume, floor, n_queries, k, n_blocks, the batch's
+    est_kept_frac, and key_bound when the proxy chose WAND. retrieve()
+    adds floor_source ("default", "router_floor" or "forced").
 
     The df lookup costs at most ONE bounded driver action per batch —
     term_stats In-filtered to the batch's UNSEEN terms (never the
     vocab) — and ZERO once the batch's terms are in the index's
-    driver-side df cache (index.df_lookup): a warm workload routes
-    entirely at plan-construction time."""
-    all_ids = list(range(len(queries)))
-    prunable, _, volume, n_blocks = _estimate(
-        index, queries, hot_df_frac, k, block_size
-    )
-    decision = "exhaustive" if prunable < min_prunable_postings else "wand"
-    index._last_route = {
-        "decision": decision,
+    driver-side df cache (index.df_lookup); the key bound reads the
+    memoized doc-id range (one small aggregate on the first WAND
+    batch). A warm workload routes entirely at plan-construction
+    time."""
+    prunable, _, volume, n_blocks = _estimate(index, queries, k, block_size)
+    route = {
+        "decision": "exhaustive" if prunable < min_prunable_postings else "wand",
         "proxy_volume": prunable,
         "floor": min_prunable_postings,
-        "floor_source": (
-            "default" if min_prunable_postings == DEFAULT_ROUTER_FLOOR
-            else "router_floor"
-        ),
         "n_queries": len(queries),
         "k": k,
         "n_blocks": n_blocks,
         "est_kept_frac": 1.0 - prunable / volume if volume else 1.0,
     }
-    if decision == "exhaustive":
-        return all_ids, []
-    return [], all_ids
+    if route["decision"] == "wand":
+        route["key_bound"] = _survivor_key(index, block_size)[1] + 1
+        if len(queries) > route["key_bound"]:
+            route["decision"] = "exhaustive"
+    index._last_route = route
+    return route
 
 
 def estimate_prunable_volume(
     index: InvertedIndex,
     queries,
-    hot_df_frac: float = 0.10,
     k: int = 10,
     block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> tuple:
@@ -313,32 +312,29 @@ def estimate_prunable_volume(
     nothing, so kept_q = 1. With one, the smallest such df is the
     witness, and WAND keeps about the blocks it occupies: kept_q =
     min(witness_df, n_blocks) / n_blocks, n_blocks = ceil(n_docs /
-    block_size). A witness in ≥ hot_df_frac of the docs counts as
-    unselective (kept_q = 1); with block_size ≥ 1 / hot_df_frac such a
-    witness covers every block anyway. The estimate errs high on kept
-    (perfbench wide batches, k = 10): 0.99-1.0 at 3k files where WAND
-    keeps 0.80 of the blocks, 0.15-0.18 at 15k against 0.12-0.13, and
-    0.14 at 40k against 0.046.
+    block_size). The estimate errs high on kept (perfbench wide
+    batches, k = 10): 0.99-1.0 at 3k files where WAND keeps 0.80 of
+    the blocks, 0.15-0.18 at 15k against 0.12-0.13, and 0.14 at 40k
+    against 0.046.
 
     This function is the single source of truth for the proxy: the
     floor it is compared against must be in the same units
     (fit_router_floor's proxy_volume arg)."""
-    prunable, ids, _, _ = _estimate(index, queries, hot_df_frac, k, block_size)
+    prunable, ids, _, _ = _estimate(index, queries, k, block_size)
     return prunable, ids
 
 
-def _estimate(index, queries, hot_df_frac, k, block_size) -> tuple:
+def _estimate(index, queries, k, block_size) -> tuple:
     """-> (proxy, prunable query ids, batch volume Σ df, n_blocks); see
     estimate_prunable_volume."""
     df_by_term = index.df_lookup([t for q in queries for t in q])
     n_blocks = max(1, -(-index.n_docs // block_size))
-    hot = float(hot_df_frac) * index.n_docs
     prunable, ids, volume = 0.0, [], 0
     for qid, q in enumerate(queries):
         dfs = [df_by_term.get(t, 0) for t in q]
         volume += sum(dfs)
         witness = min((df for df in dfs if df >= k), default=None)
-        if witness is None or witness >= hot or witness >= n_blocks:
+        if witness is None or witness >= n_blocks:
             continue
         ids.append(qid)
         prunable += (1.0 - witness / n_blocks) * sum(dfs)
@@ -395,15 +391,14 @@ def auto_topk(
     k: int,
     block_max: DataFrame = None,
     block_size: int = DEFAULT_BLOCK_SIZE,
-    hot_df_frac: float = 0.10,
+    hot_df_frac: Optional[float] = None,
     min_prunable_postings: int = DEFAULT_ROUTER_FLOOR,
-    block_max_provider=None,
 ) -> DataFrame:
     """Selectivity router: pick block-max-WAND or the salted exhaustive
     scorer for the batch — both rank-identical under the 6-dp policy,
-    so routing is purely a cost decision (see route_queries for the
-    binary per-batch cost model, estimate_prunable_volume for the
-    kept-fraction estimate it rests on).
+    so routing is purely a cost decision (route_queries decides and
+    records it; estimate_prunable_volume is the kept-fraction estimate
+    it rests on).
 
     WAND pays only when τ can prune. When no query term reaches df ≥ k,
     or the rarest one that does is in every block, the top-k is close
@@ -417,30 +412,21 @@ def auto_topk(
     queries: the batch as Python token lists (driver knowledge — the
     same shape retrieve() takes); query_id in the result indexes into
     `queries`. Routing costs one bounded df lookup (route_queries); a
-    batch routed to the exhaustive path never builds block-max
-    (block_max_provider is called lazily). A batch wider than the
-    packed survivor key's query_id range (_survivor_pack_shift) routes
-    exhaustive; _last_route then carries that range as key_bound.
+    batch routed to the exhaustive path never builds block-max (a WAND
+    batch with block_max=None reads index.block_max). hot_df_frac is
+    accepted and ignored: a witness that common already covers every
+    block, so it never changed a route.
     """
-    _, wand_ids = route_queries(
-        index, queries, hot_df_frac, min_prunable_postings, k, block_size
-    )
-    # the packed survivor key leaves 63 - shift bits for query_id
-    max_ids = 1 << (63 - _survivor_pack_shift(index.n_docs, block_size))
-    if wand_ids and len(queries) > max_ids:
-        wand_ids = []
-        index._last_route.update(decision="exhaustive", key_bound=max_ids)
+    route = route_queries(index, queries, min_prunable_postings, k, block_size)
     qdf = queries_to_df(index.spark, queries)
     terms = sorted({t for q in queries for t in q})
     est = len(queries) * index.n_docs
-    if not wand_ids:
+    if route["decision"] == "exhaustive":
         return top_k(
             score_queries(index, qdf, terms_filter=terms),
             k,
             est_rows=est,
         )
-    if block_max is None and block_max_provider is not None:
-        block_max = block_max_provider()
     return wand_topk(
         index,
         qdf,
@@ -452,18 +438,15 @@ def auto_topk(
     )
 
 
-def _survivor_pack_shift(n_docs: int, block_size: int) -> int:
-    """Bits reserved for block_id in the packed (query_id << shift) +
-    block_id survivor key: enough for the largest possible block_id of
-    THIS index, never fewer than the historical 32. The remaining
-    63 - shift bits bound the batch-local query_id range: auto_topk
-    checks it on the driver from the batch width and routes a wider
-    batch exhaustive. wand_topk sees only a DataFrame (an extra driver
-    action or per-row guard would tax every batch), so its direct
-    callers must keep query ids under 2^(63 - shift), which spill-free
-    batch widths (thousands) clear by orders of magnitude even at
-    10^14 docs."""
-    return max(32, (max(1, n_docs) // block_size).bit_length() + 1)
+def _survivor_key(index: InvertedIndex, block_size: int) -> tuple:
+    """-> (packed (query_id, block_id) survivor key, largest query_id it
+    holds): scoring.packed_key over the index's block-id range. Block
+    ids are floor(double(doc_id) / block_size), as Spark evaluates them
+    in block_max_table and wand_topk; that is monotone in doc_id, so the
+    memoized doc-id range bounds every block id."""
+    lo, hi = index.doc_id_range()
+    blocks = [math.floor(float(d) / block_size) for d in (lo, hi)]
+    return packed_key("query_id", "block_id", blocks)
 
 
 def wand_topk(
@@ -490,6 +473,13 @@ def wand_topk(
       final top-k's phase-1 grain (scoring.top_k) — callers that know
       the batch width should pass it so narrow batches keep the coarse
       exchange.
+    block_max: the block-max table to bound with; None (the default)
+      takes the index's memo, index.block_max(block_size).
+    The survivor key (_survivor_key) holds query ids up to a bound
+    derived from the index's block-id range; auto_topk/route_queries
+    check a batch against it on the driver, and direct callers must
+    keep their query ids under it (2^56 ids at 10^4 dense docs, 2^30 at
+    10^12 — far above any spill-free batch width).
     The bounds/τ/survivor phases run as ONE exchange and one
     vectorized mapInPandas pass (_fused_survivors). Returns the ranked
     DataFrame (query_id, doc_id, score, tf_overlap, dl, rank); with
@@ -497,7 +487,7 @@ def wand_topk(
     SAME survivor path the ranking used.
     """
     if block_max is None:
-        block_max = block_max_table(index, block_size)
+        block_max = index.block_max(block_size)
 
     block_max = _terms_filtered(index, block_max, terms_filter)
 
@@ -545,15 +535,9 @@ def wand_topk(
     # combining of the score aggregation. The survivor side is bounded
     # by Σ_q tokens(q)·blocks(q) of one spill-free-width batch.
     #
-    # The shift is sized from the index itself (_survivor_pack_shift):
-    # block ids reach n_docs // block_size, which overflows the 32 low
-    # bits past ~2.7e11 docs (ADVICE r4) — so reserve exactly enough
-    # bits for the largest block_id and give query_id the rest.
-    # Batch-local query ids are bounded by the spill-free batch width
-    # (thousands), far under 2^(63-shift) even at 10^14 docs
-    # (shift 40 -> 8M ids).
-    shift = _survivor_pack_shift(index.n_docs, block_size)
-    pack = F.shiftleft(F.col("query_id"), shift) + F.col("block_id")
+    # The key is sized from the index's block-id range (_survivor_key),
+    # so sparse or negative doc ids never share a key across queries.
+    pack, _ = _survivor_key(index, block_size)
     surv = F.broadcast(surviving.select(pack.alias("__qb")))
     joined = (
         postings.withColumn(

@@ -38,15 +38,11 @@ def get_spark(
     if not local_dir and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/spark-local"
         os.makedirs(local_dir, exist_ok=True)
-    # AQE default-on (skew-join splitting, shuffle coalescing); SPARK_AQE=0
-    # disables it for A/B runs — each AQE query stage costs a driver
-    # re-plan, which is pure serial time in the N->4N scaling pair.
-    aqe = "false" if os.environ.get("SPARK_AQE") == "0" else "true"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", aqe)
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

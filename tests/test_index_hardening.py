@@ -179,8 +179,7 @@ def test_auto_topk_routes_and_matches_exhaustive(spark, rnd_index):
     ]
     for floor in (0, 50_000_000):  # wand regime / exhaustive regime
         routed = auto_topk(
-            idx, queries, 5, block_size=64, hot_df_frac=0.25,
-            min_prunable_postings=floor,
+            idx, queries, 5, block_size=64, min_prunable_postings=floor,
         )
         b = [
             (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 12))
@@ -190,12 +189,12 @@ def test_auto_topk_routes_and_matches_exhaustive(spark, rnd_index):
     # binary routing: floor=0 -> whole batch through WAND; default
     # floor -> this tiny batch's avoidable fan-out can't pay WAND's
     # fixed phase cost -> whole batch exhaustive
-    exh, wand_side = route_queries(
-        idx, queries, hot_df_frac=0.25, min_prunable_postings=0
-    )
-    assert exh == [] and wand_side == [0, 1, 2, 3, 4]
-    exh, wand_side = route_queries(idx, queries, hot_df_frac=0.25)
-    assert wand_side == [] and exh == [0, 1, 2, 3, 4]
+    route = route_queries(idx, queries, min_prunable_postings=0)
+    assert route["decision"] == "wand" and route["n_queries"] == 5
+    assert route["key_bound"] >= 5 and idx._last_route is route
+    route = route_queries(idx, queries)
+    assert route["decision"] == "exhaustive" and "key_bound" not in route
+    assert idx._last_route is route
 
 
 def test_wand_actually_prunes(spark):
@@ -312,9 +311,10 @@ def test_packed_index_query_parity(spark, rnd_index, tmp_path):
 
 def test_packed_wand_pushes_term_filter(spark, rnd_index, tmp_path):
     """WAND over the packed store gets the exhaustive scorer's parquet
-    term pruning: term IN (...) is pushed into every packed and
-    term_stats scan (term_id only exists after decode), and the pruned
-    ranking still equals the exhaustive one."""
+    term pruning: term IN (...) is pushed into every parquet scan the
+    batch runs, the block-max side reads the index's memo through a
+    term_id IN predicate, and the pruned ranking still equals the
+    exhaustive one. (The memo's own one-off build scans every term.)"""
     import re
 
     from bayesian_bm25_js_spark.sources.index_store import (
@@ -330,9 +330,23 @@ def test_packed_wand_pushes_term_filter(spark, rnd_index, tmp_path):
     terms = sorted({t for q in queries for t in q})
     qdf = queries_to_df(spark, queries)
     ranked = wand_topk(pidx, qdf, 5, block_size=64, terms_filter=terms)
-    plan = ranked._jdf.queryExecution().executedPlan().toString()
-    pushed = re.findall(r"PushedFilters: \[[^\]]*\]", plan)
+    plan = ranked._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    leaves = plan.collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    pushed = [
+        m
+        for leaf in leaves
+        if leaf.nodeName().startswith("Scan")
+        for m in re.findall(r"PushedFilters: \[[^\]\n]*", leaf.toString())
+    ]
     assert pushed and all("In(term" in p for p in pushed), pushed
+    memo = [
+        leaf.predicates().toString() for leaf in leaves
+        if leaf.nodeName() == "InMemoryTableScan"
+    ]
+    assert len(memo) == 1 and re.search(r"term_id#\d+L IN \(", memo[0]), memo
 
     def rows(df):
         return sorted(
@@ -494,8 +508,14 @@ def test_wand_key_bound_routes_exhaustive(spark, rnd_index, monkeypatch):
         )
 
     want = rows(scorer.retrieve(queries, k=5, strategy="exhaustive"))
-    # shift 62 leaves one bit: room for query ids 0 and 1 only
-    monkeypatch.setattr(wand, "_survivor_pack_shift", lambda n, bs: 62)
+    packed_key = wand.packed_key
+
+    def wide(hi, lo, lo_range):
+        # a block-id span of 2^61 leaves a 62-bit shift: room for query
+        # ids 0 and 1 only
+        return packed_key(hi, lo, (lo_range[0], lo_range[0] + (1 << 61)))
+
+    monkeypatch.setattr(wand, "packed_key", wide)
     got = rows(scorer.retrieve(queries, k=5, strategy="wand"))
     route = scorer.index_._last_route
     assert (route["decision"], route["key_bound"]) == ("exhaustive", 2), route
@@ -821,26 +841,71 @@ def test_fused_stats_match_catalyst_stats(spark, rnd_index):
     assert got == {None: expected, 2: expected}
 
 
-def test_survivor_pack_shift_scales_past_int32_blocks():
-    """The packed survivor key must widen its block_id field when the
-    corpus outgrows 2^31 blocks (ADVICE r4: 10^12 docs / 128-block =
-    7.8e9 block ids > int32)."""
-    from bayesian_bm25_js_spark.operators.wand import _survivor_pack_shift
+def test_packed_key_bounds(spark):
+    """scoring.packed_key sizes its shift from lo's span and says which
+    hi values fit 63 bits: 10^12 dense docs (7.8e9 block ids, past
+    int32) still leave a million query ids, a negative range packs from
+    its minimum, and a span of 2^63 fits no key at all. At the bound,
+    keys stay distinct, non-negative and ordered by (hi, lo)."""
+    from bayesian_bm25_js_spark.operators.scoring import packed_key
 
-    assert _survivor_pack_shift(100_000, 128) == 32  # historical layout
-    big = 10**12
-    shift = _survivor_pack_shift(big, 128)
-    max_block = big // 128
-    assert shift > 32 and max_block < (1 << shift)
-    # query ids keep a workable range even at extreme scale
-    assert (1 << (63 - shift)) >= 1_000_000
+    blocks = (0, 10**12 // 128)
+    _, max_hi = packed_key("hi", "lo", blocks)
+    assert max_hi >= 1_000_000
+    assert packed_key("hi", "lo", (-(1 << 62), 1 << 62))[1] < 0
+    for lo_range in (blocks, (-(1 << 40) - 7, -3), (-(1 << 60), 1 << 60)):
+        key, max_hi = packed_key("hi", "lo", lo_range)
+        assert max_hi >= 1
+        rows = [
+            (hi, lo) for hi in sorted({0, 1, max_hi - 1, max_hi})
+            for lo in lo_range
+        ]
+        got = [
+            r[0]
+            for r in spark.createDataFrame(rows, "hi long, lo long")
+            .select(key)
+            .collect()
+        ]
+        assert got == sorted(set(got)) and got[0] == 0, lo_range
+
+
+def test_wand_sparse_and_negative_doc_ids(spark):
+    """WAND answers like the exhaustive scorer whatever the doc ids:
+    raw monotonically_increasing_id values ((partition << 33) + row, 64
+    partitions apart) and negative ids. The survivor key is sized from
+    the doc-id range, so no two queries' survivors share a key."""
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+
+    corpus = random_corpus(n_docs=600)
+    sparse = [(p << 33) + r for p in (0, 64) for r in range(300)]
+    queries = [["w1", "w2", "w30"], ["w3", "w3", "w44"], ["w0", "w12"], ["w45"]]
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6),
+             round(r["probability"], 6))
+            for r in df.collect()
+        )
+
+    for ids in (sparse, [-1 - d for d in sparse]):
+        docs = spark.createDataFrame(
+            list(zip(ids, corpus)), "doc_id long, tokens array<string>"
+        )
+        scorer = BayesianBM25SparkScorer(
+            method="lucene", alpha=1.0, beta=0.5, base_rate=0.05
+        ).index(docs)
+        want = rows(scorer.retrieve(queries, k=5, strategy="exhaustive"))
+        got = rows(scorer.retrieve(queries, k=5, strategy="wand"))
+        assert scorer.index_._last_route["decision"] == "wand"
+        assert got and got == want, ids[0]
+        scorer.index_.unpersist()
 
 
 def test_one_cached_layout_rule(spark, tmp_path):
     """Every cached postings-shaped table takes the same partition count
     for the same corpus and config: the in-memory build, from_saved, the
-    positional build and load, the streaming reader and the facade's
-    block-max cache all go through index_build.cached_layout."""
+    positional build and load, the streaming reader and the index's
+    block-max memo all go through index_build.cached_layout."""
     import json
 
     from bayesian_bm25_js_spark.operators.index_build import layout_grain
@@ -877,10 +942,9 @@ def test_one_cached_layout_rule(spark, tmp_path):
         "build_positional_index": n_parts(pidx.postings),
         "load_positional_index": n_parts(pload.postings),
         "load_streaming_index": n_parts(streamed.postings),
-        "block_max_cache": n_parts(scorer._block_max_cached()),
+        "block_max_memo": n_parts(scorer.index_.block_max(128)),
     }
     scorer.index_.unpersist()
-    scorer._block_max.unpersist()
     expected = layout_grain(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         spark.sparkContext.defaultParallelism,

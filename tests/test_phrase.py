@@ -525,9 +525,10 @@ def test_proximity_topk_passes_candidate_limit(spark):
 
 
 def test_candidate_pack_key_bounds_fall_back(spark):
-    """The packed (query_id << shift) + doc_id probe key is checked on
-    the driver: negative doc ids, or ids too wide for the shift, fall
-    back to the unpruned join with identical results."""
+    """The packed (query_id, doc_id) probe key (scoring.packed_key) is
+    sized from the doc-id range: negative and near-2^62 ids probe, and
+    ids spanning 2^63, which no key fits, fall back to the unpruned
+    join; every case answers like the unpruned join."""
     import bayesian_bm25_js_spark.operators.phrase as _ph
 
     rng = random.Random(5)
@@ -543,8 +544,10 @@ def test_candidate_pack_key_bounds_fall_back(spark):
     try:
         for ids, probes in (
             (list(range(len(corpus))), True),  # control: dense ids probe
-            ([-(i + 1) * 7919 for i in range(len(corpus))], False),
-            ([(1 << 62) - i for i in range(len(corpus))], False),  # 63-bit
+            ([-(i + 1) * 7919 for i in range(len(corpus))], True),
+            ([(1 << 62) - i for i in range(len(corpus))], True),  # 63-bit
+            # a span of 2^63: no key fits
+            ([-(1 << 62)] + list(range(len(corpus) - 2)) + [1 << 62], False),
         ):
             docs = spark.createDataFrame(
                 list(zip(ids, corpus)), "doc_id long, tokens array<string>"

@@ -338,3 +338,37 @@ def test_warm_wand_batch_job_count(spark, warm_wand):
         sc.setLocalProperty("spark.job.description", None)
     assert scorer.index_._last_route["decision"] == "wand"
     assert len(sc.statusTracker().getJobIdsForGroup("warm-wand-batch")) == 7
+
+
+def test_probabilities_batch_prunes_postings_scan(spark, warm_wand):
+    """get_probabilities_batch scores through the term_id IN filter the
+    routed exhaustive path uses: the cached postings scan carries it.
+    The rows are those of the unfiltered scorer, and an empty token
+    list still scores 0 for every doc."""
+    from bayesian_bm25_js_spark.operators.scoring import calibrate
+
+    scorer, queries = warm_wand
+    out = scorer.get_probabilities_batch(queries)
+    plan = out._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    leaves = plan.collectLeaves()
+    scans = [
+        leaves.apply(i).predicates().toString()
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "InMemoryTableScan"
+        and "tf" in leaves.apply(i).output().toString()
+    ]
+    assert scans and all(re.search(r"term_id#\d+L IN \(", p) for p in scans), scans
+
+    t = scorer.transform
+    unfiltered = calibrate(
+        score_queries(scorer.index_, queries_to_df(spark, queries)),
+        scorer.index_, t.alpha, t.beta, t.base_rate,
+    )
+    cols = ["query_id", "doc_id", "score", "tf_overlap", "dl", "probability"]
+    assert sorted(out.collect()) == sorted(unfiltered.select(*cols).collect())
+
+    empty = scorer.get_probabilities([], dense=True).collect()
+    assert len(empty) == len(SMALL_CORPUS)
+    assert {(r["score"], r["probability"]) for r in empty} == {(0.0, 0.0)}

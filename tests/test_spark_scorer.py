@@ -241,7 +241,7 @@ def test_explain_trace_matches_probabilities(spark_scorer):
 def test_block_max_is_lazy_in_routed_retrieve(spark):
     """retrieve(strategy='auto') must not build block-max metadata when
     the router sends the batch to the exhaustive path (small batches);
-    a wand retrieve builds and caches it."""
+    a wand retrieve builds and caches it on the index."""
     from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
 
     docs = spark.createDataFrame(
@@ -250,12 +250,15 @@ def test_block_max_is_lazy_in_routed_retrieve(spark):
     )
     s = BayesianBM25SparkScorer(alpha=1.0, beta=0.5, base_rate=0.05).index(docs)
     s.retrieve([["common", "t1"]], k=3).collect()
-    assert s._block_max is None
+    assert s.index_._block_max == {}
     s.retrieve([["common", "t1"]], k=3, strategy="wand").collect()
-    assert s._block_max is not None
-    # re-index drops the cached metadata
+    old = s.index_
+    (table,) = old._block_max.values()
+    assert table.storageLevel.useMemory
+    # re-index releases the old index's memo
     s.index(docs)
-    assert s._block_max is None
+    assert old._block_max == {} and not table.storageLevel.useMemory
+    assert s.index_._block_max == {}
 
 
 def test_chunked_retrieve_matches_single_batch(spark_scorer):
