@@ -28,6 +28,7 @@ full shuffle (see sources/index_store.py).
 
 from __future__ import annotations
 
+import dataclasses
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
@@ -127,57 +128,28 @@ def doc_length_stats(doc_lengths: DataFrame) -> tuple:
 
 
 def attach_idf(tf: DataFrame, term_stats: DataFrame) -> DataFrame:
-    """(term, doc_id, tf, dl) rows -> the denormalized postings
-    (term_id, term, doc_id, tf, dl, idf): idf joined on from the
-    vocab-sized term_stats. term_id is the interned 64-bit term key
-    (xxhash64, seed 42): scoring and WAND probe/filter on longs, so the
-    columnar scan never touches the string column and the hot-path
-    InSet/join hashing works on 8-byte keys."""
+    """(term, doc_id, tf, dl[, positions]) rows -> the denormalized
+    postings (term_id, term, doc_id, tf, dl, idf[, positions]): idf
+    joined on from the vocab-sized term_stats. term_id is the interned
+    64-bit term key (xxhash64, seed 42): scoring and WAND probe/filter
+    on longs, so the columnar scan never touches the string column and
+    the hot-path InSet/join hashing works on 8-byte keys."""
+    positions = [c for c in tf.columns if c == "positions"]
     return tf.join(term_stats.select("term", "idf"), "term").select(
-        F.xxhash64("term").alias("term_id"), "term", "doc_id", "tf", "dl", "idf"
+        F.xxhash64("term").alias("term_id"), "term", "doc_id", "tf", "dl", "idf",
+        *positions,
     )
-
-
-def memo_df(cache: dict, table: DataFrame, key: str, keys: Sequence) -> dict:
-    """key -> df for `keys`, memoized in `cache` across calls.
-
-    `table` is a (key, df) table. First sight of a key costs one bounded
-    In-filtered collect over it; keys absent from it cache df=0 so they
-    never re-trigger a lookup, and a warm batch (every key seen before)
-    runs ZERO Spark jobs — routing and prune-gate decisions then happen
-    entirely at plan-construction time. The cache is bounded by the
-    query-side vocabulary actually seen, not by the index."""
-    want = set(keys)
-    missing = sorted(want - cache.keys())
-    if missing:
-        from bayesian_bm25_js_spark.operators.scoring import isin_filter
-
-        rows = table.filter(isin_filter(key, missing)).select(key, "df").collect()
-        for r in rows:
-            cache[r[key]] = int(r["df"])
-        for t in missing:
-            cache.setdefault(t, 0)
-    return {t: cache[t] for t in want}
-
-
-def memo_doc_id_range(index, table: DataFrame) -> tuple:
-    """(min, max) doc_id of `table`, memoized on index._doc_id_range:
-    one column-pruned aggregate on first use, none after. It sizes the
-    packed (hi, doc_id)-derived keys (scoring.packed_key), because doc
-    ids need not be dense or non-negative (hash-derived ids, raw
-    monotonically_increasing_id values). (0, 0) for an empty table."""
-    if index._doc_id_range is None:
-        row = table.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-        index._doc_id_range = (int(row[0] or 0), int(row[1] or 0))
-    return index._doc_id_range
 
 
 @dataclass(eq=False)
 class InvertedIndex:
-    """Distributed index state: three tables + driver scalars."""
+    """Distributed index state: three tables + driver scalars.
+
+    The postings of build_positional_index also carry `positions`, the
+    sorted token offsets of the term in the doc (phrase/proximity)."""
 
     spark: SparkSession
-    postings: DataFrame  # (term, doc_id, tf, dl) — doc-sorted per term
+    postings: DataFrame  # (term_id, term, doc_id, tf, dl, idf[, positions])
     term_stats: DataFrame  # (term, df, idf)
     doc_stats: DataFrame  # (doc_id, dl)
     n_docs: int
@@ -185,22 +157,66 @@ class InvertedIndex:
     k1: float
     b: float
     method: str
-    # Driver-side term -> df cache for the selectivity router (memo_df)
+    # Driver-side term -> df cache for the selectivity router and the
+    # phrase prune gate (df_lookup)
     _df_cache: dict = field(default_factory=dict, repr=False, compare=False)
     # Memos of tables derived from postings/doc_stats; init=False, so a
-    # dataclasses.replace copy (from_saved's re-laid-out postings)
+    # dataclasses.replace copy (laid_out's re-laid-out postings)
     # starts without them.
     _doc_id_range: Optional[tuple] = field(default=None, init=False, repr=False)
     _block_max: dict = field(default_factory=dict, init=False, repr=False)
 
     def df_lookup(self, terms: Sequence[str]) -> dict:
         """term -> df for the given terms, memoized across batches over
-        the vocab-sized term_stats table (memo_df)."""
-        return memo_df(self._df_cache, self.term_stats, "term", terms)
+        the vocab-sized term_stats table.
+
+        First sight of a term costs one bounded In-filtered collect;
+        terms absent from the index cache df=0 so they never re-trigger
+        a lookup, and a warm batch (every term seen before) runs ZERO
+        Spark jobs — routing and prune-gate decisions then happen
+        entirely at plan-construction time. The cache is bounded by the
+        query-side vocabulary actually seen, not by the index."""
+        want = set(terms)
+        missing = sorted(want - self._df_cache.keys())
+        if missing:
+            from bayesian_bm25_js_spark.operators.scoring import isin_filter
+
+            rows = (
+                self.term_stats.filter(isin_filter("term", missing))
+                .select("term", "df")
+                .collect()
+            )
+            for r in rows:
+                self._df_cache[r["term"]] = int(r["df"])
+            for t in missing:
+                self._df_cache.setdefault(t, 0)
+        return {t: self._df_cache[t] for t in want}
 
     def doc_id_range(self) -> tuple:
-        """(min, max) doc_id over doc_stats (memo_doc_id_range)."""
-        return memo_doc_id_range(self, self.doc_stats)
+        """(min, max) doc_id over doc_stats, memoized: one column-pruned
+        aggregate on first use, none after. It sizes the packed
+        (hi, doc_id)-derived keys (scoring.packed_key), because doc ids
+        need not be dense or non-negative (hash-derived ids, raw
+        monotonically_increasing_id values). (0, 0) for an empty index."""
+        if self._doc_id_range is None:
+            row = self.doc_stats.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
+            self._doc_id_range = (int(row[0] or 0), int(row[1] or 0))
+        return self._doc_id_range
+
+    def laid_out(
+        self, cache: bool = True, layout_partitions: Optional[int] = None
+    ) -> "InvertedIndex":
+        """A copy whose postings take the runtime layout (cached_layout)
+        and, with `cache`, are persisted: the one step that makes the
+        term-bucketed postings load_index scans queryable, with or
+        without positions. The copy starts without the doc-id-range and
+        block-max memos."""
+        postings = cached_layout(
+            self.postings, self.n_docs, layout_partitions=layout_partitions
+        )
+        if cache:
+            postings = postings.persist()
+        return dataclasses.replace(self, postings=postings)
 
     def block_max(self, block_size: int) -> DataFrame:
         """compression.block_max_table at `block_size`, laid out by
@@ -270,6 +286,42 @@ def build_inverted_index(
     tools/width_sweep.py for the measured throughput-vs-width curve
     and its spill cliff.
     """
+    return _build_index(docs, k1, b, method, cache, layout_partitions, False)
+
+
+def build_positional_index(
+    docs: DataFrame,
+    k1: float = 1.2,
+    b: float = 0.75,
+    method: str = "robertson",
+    cache: bool = True,
+    layout_partitions: Optional[int] = None,
+) -> InvertedIndex:
+    """build_inverted_index whose postings also carry `positions`: the
+    0-based sorted offsets of `term` in `doc_id`, and tf = their count.
+    phrase/proximity matching (operators/phrase.py) reads them; BM25
+    scoring never scans the column.
+
+    The tf shuffle is a posexplode → groupBy(doc_id, term) that collects
+    the positions instead of counting them. Each list is bounded by that
+    term's tf in that doc, and each doc arrives as one source row, so
+    partial aggregation builds each list inside a single map task;
+    array_sort pins the order regardless of merge order. Everything
+    else (doc_stats, term_stats, idf, the term_id collision check, the
+    cached layout) is the plain build's.
+    """
+    return _build_index(docs, k1, b, method, cache, layout_partitions, True)
+
+
+def _build_index(
+    docs: DataFrame,
+    k1: float,
+    b: float,
+    method: str,
+    cache: bool,
+    layout_partitions: Optional[int],
+    positions: bool,
+) -> InvertedIndex:
     if method not in VALID_METHODS:
         raise ValueError(f"method must be one of {VALID_METHODS}, got {method!r}")
     spark = docs.sparkSession
@@ -288,11 +340,19 @@ def build_inverted_index(
     n_docs, avgdl = doc_length_stats(doc_stats)
 
     # shuffle 1: per-(doc, term) tf with map-side partial aggregation
-    tf_df = (
-        base.select("doc_id", "dl", F.explode("tokens").alias("term"))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-    )
+    if positions:
+        tf_df = (
+            base.select("doc_id", "dl", F.posexplode("tokens").alias("pos", "term"))
+            .groupBy("doc_id", "dl", "term")
+            .agg(F.array_sort(F.collect_list("pos")).alias("positions"))
+            .withColumn("tf", F.size("positions"))
+        )
+    else:
+        tf_df = (
+            base.select("doc_id", "dl", F.explode("tokens").alias("term"))
+            .groupBy("doc_id", "dl", "term")
+            .agg(F.count(F.lit(1)).cast("int").alias("tf"))
+        )
 
     # shuffle 2: document frequency (tiny stream after partial agg)
     term_stats = (

@@ -1,17 +1,19 @@
-"""Positional postings + exact-phrase BM25 retrieval (engine addition).
+"""Exact-phrase and proximity BM25 retrieval (engine addition).
 
 The reference engine is strictly bag-of-words — no token positions
 exist anywhere in its index or scoring (bm25.ts:52-148 consumes
 `string[][]` and keeps only per-(doc,term) counts). A production
 fulltext engine over source code needs exact-phrase queries
-("hash join", "import numpy"), so this module adds a positional
-index and phrase-scored top-k as new engine surface, Spark-first:
+("hash join", "import numpy"), so this module adds phrase-scored
+top-k as new engine surface, Spark-first:
 
-* Positional postings are ONE extra aggregation over the same
-  exploded-token stream the main index uses: groupBy(doc_id, term)
-  with a per-(doc,term) position list. The collected array is bounded
-  by that term's tf in that doc — not an unbounded global collect.
-* Phrase matching is pure Catalyst: filter the positional postings to
+* Positions live in the one index: index_build.build_positional_index
+  returns an InvertedIndex whose postings also carry a per-(doc, term)
+  `positions` list (bounded by that term's tf in that doc), built,
+  saved (sources/index_store.save_index) and reloaded
+  (InvertedIndex.laid_out) like any index. The prune gate reads df
+  through the index's term-keyed memo (InvertedIndex.df_lookup).
+* Phrase matching is pure Catalyst: filter the postings to
   the phrase's terms (term_id In-predicate → columnar batch pruning,
   same as the scoring path), pivot each phrase slot's position array
   with conditional max, and intersect slot arrays shifted by their
@@ -27,10 +29,10 @@ Batch-first like the rest of the query path: `phrase_topk` takes a
 whole batch of phrases and runs ONE plan; per-batch cost amortizes
 across queries exactly as in operators/scoring.score_queries.
 
-Scale notes (100 TB): the positional cache layout is hash-partitioned
-by doc_id by the same rule as the main postings cache
-(index_build.cached_layout), so the phrase-match groupBy(query_id,
-doc_id) combines map-side and the shuffle carries one row per matched (query, doc); the slot pivot is a
+Scale notes (100 TB): the cached postings are hash-partitioned by
+doc_id (index_build.cached_layout), so the phrase-match
+groupBy(query_id, doc_id) combines map-side and the shuffle carries
+one row per matched (query, doc); the slot pivot is a
 conditional max, never a collect over docs. The join's query side is
 broadcast (slots × batch rows). Skewed phrase terms ("the", "table")
 cost a wide scan but never a single-task funnel: matching is
@@ -39,21 +41,18 @@ per-partition until the (query, doc)-keyed agg.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Optional, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bayesian_bm25_js_spark.operators.index_build import (
+from bayesian_bm25_js_spark.operators.index_build import (  # noqa: F401
+    InvertedIndex,
     bm25_tf_norm,
-    cached_layout,
-    doc_length_stats,
+    build_positional_index,  # re-exported: phrase's public entry point
     idf_column,
-    memo_df,
-    memo_doc_id_range,
 )
 from bayesian_bm25_js_spark.operators.scoring import (
     isin_filter,
@@ -72,85 +71,6 @@ CANDIDATE_PRUNE_MIN_DOCS = 50_000
 PRUNE_HOT_DF_FRAC = 0.10
 
 
-@dataclass(eq=False)
-class PositionalIndex:
-    """Positional postings + the corpus constants BM25 needs."""
-
-    postings: DataFrame  # (term_id, term, doc_id, dl, positions)
-    n_docs: int
-    avgdl: float
-    k1: float
-    b: float
-    method: str
-    # Driver-side term_id -> df cache for the rarest-term candidate
-    # pruning (memo_df): paying a groupBy+collect on EVERY
-    # phrase/proximity call was the round-5 perf-weak (~1s fixed driver
-    # cost per batch at >=50k docs).
-    _df_cache: dict = field(default_factory=dict, repr=False)
-    _doc_id_range: Optional[tuple] = field(default=None, init=False, repr=False)
-
-    def df_lookup(self, term_ids: Sequence[int]) -> dict:
-        """term_id -> df for the given ids, memoized across batches
-        (memo_df) over the per-term posting counts. The In-filter on
-        the grouping key sits below the aggregate in the optimized
-        plan, so the lookup scans only the term_id column of the
-        matching postings — position arrays are never read."""
-        df_table = self.postings.groupBy("term_id").agg(
-            F.count(F.lit(1)).alias("df")
-        )
-        return memo_df(self._df_cache, df_table, "term_id", term_ids)
-
-    def doc_id_range(self) -> tuple:
-        """(min, max) doc_id over the postings (memo_doc_id_range); it
-        sizes the candidate-pruning pack key."""
-        return memo_doc_id_range(self, self.postings)
-
-    def unpersist(self) -> None:
-        try:
-            self.postings.unpersist()
-        except Exception:
-            pass
-
-
-def build_positional_index(
-    docs: DataFrame,
-    k1: float = 1.2,
-    b: float = 0.75,
-    method: str = "robertson",
-    cache: bool = True,
-    layout_partitions: Optional[int] = None,
-) -> PositionalIndex:
-    """docs (doc_id, tokens array<string>) -> PositionalIndex.
-
-    (term_id, term, doc_id, dl, positions): 0-based sorted token
-    positions of `term` in `doc_id`. dl rides denormalized exactly as
-    in the main postings layout (no doc_stats join at query time).
-
-    One shuffle: posexplode → groupBy(doc_id, term). The position list
-    is per-(doc, term) — size bounded by tf — and each doc arrives as
-    one source row, so partial aggregation builds each list inside a
-    single map task; array_sort pins the order deterministically
-    regardless of merge order. Layout shuffle (paid once, cached):
-    index_build.cached_layout, the main postings cache's rule, so
-    phrase matching's (query, doc)-keyed agg combines map-side.
-    """
-    base = docs.select("doc_id", F.size("tokens").alias("dl"), "tokens")
-
-    n_docs, avgdl = doc_length_stats(base)
-
-    postings = (
-        base.select("doc_id", "dl", F.posexplode("tokens").alias("pos", "term"))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.array_sort(F.collect_list("pos")).alias("positions"))
-        .withColumn("term_id", F.xxhash64("term"))
-        .select("term_id", "term", "doc_id", "dl", "positions")
-    )
-    postings = cached_layout(postings, n_docs, layout_partitions=layout_partitions)
-    if cache:
-        postings = postings.persist()
-    return PositionalIndex(postings, n_docs, avgdl, k1, b, method)
-
-
 def _phrases_to_slots(
     spark: SparkSession, phrases: Sequence[Sequence[str]]
 ) -> DataFrame:
@@ -167,11 +87,11 @@ def _phrases_to_slots(
 
 
 def _slot_pivot(
-    index: PositionalIndex, slot_lists: Sequence[Sequence[str]],
+    index: InvertedIndex, slot_lists: Sequence[Sequence[str]],
     candidate_limit: int = 2_000_000,
 ) -> tuple[DataFrame, int]:
     """Shared match frontend for phrase/proximity: join the term_id-
-    pruned positional postings to the broadcast slot table, then ONE
+    pruned postings to the broadcast slot table, then ONE
     (query, doc)-keyed agg pivots each slot's position array via
     conditional max. Returns (g, max_len) where g has columns
     (query_id, doc_id, dl, plen, p0..p{max_len-1}) and keeps only
@@ -183,8 +103,8 @@ def _slot_pivot(
     bounded by Σ_q min-df(q) — usually a tiny fraction of the hot
     slots' fan-in ("import numpy": every doc has `import`, few have
     `numpy`). The candidate set is built from a scan that touches ONLY
-    the rare terms' postings plus one term_id-column-only df lookup,
-    packed into (query_id << shift | doc_id) longs and chain-broadcast
+    the rare terms' postings plus the index's memoized term-keyed df
+    lookup (InvertedIndex.df_lookup, over term_stats), packed into (query_id << shift | doc_id) longs and chain-broadcast
     into the main join — a hot slot's row then dies at the probe
     BEFORE its position array is ever materialized out of the columnar
     cache (probe columns term_id/doc_id precede the array access in
@@ -202,6 +122,11 @@ def _slot_pivot(
     filter over every joined row. The probe is also skipped when the
     batch's query ids do not fit the packed key (scoring.packed_key over
     the index's doc-id range) — it is only ever an optimization."""
+    if "positions" not in index.postings.columns:
+        raise ValueError(
+            "phrase and proximity queries need token positions: build the "
+            "index with build_positional_index (save_index/load_index keep them)"
+        )
     spark = index.postings.sparkSession
     slots = _phrases_to_slots(spark, slot_lists)
     max_len = max(len(p) for p in slot_lists)
@@ -223,13 +148,13 @@ def _slot_pivot(
     # broadcast build (measured: 5k docs — pruned 1.7s vs unpruned
     # 1.0s), so small corpora skip straight to the plain join.
     if candidate_limit > 0 and index.n_docs >= CANDIDATE_PRUNE_MIN_DOCS:
-        df_by_id = index.df_lookup(ids)
+        df_by_term = index.df_lookup(all_terms)
         term_ids = dict(zip(all_terms, ids))
         hot_floor = PRUNE_HOT_DF_FRAC * index.n_docs
         rare = []  # (min_df, query_id, rare_term_id)
         for qid, terms in enumerate(slot_lists):
             min_df, rare_id = min(
-                (df_by_id.get(term_ids[t], 0), term_ids[t]) for t in set(terms)
+                (df_by_term[t], term_ids[t]) for t in set(terms)
             )
             rare.append((min_df, qid, rare_id))
         if (
@@ -256,7 +181,7 @@ def _slot_pivot(
         for i in range(max_len)
     ]
     # count, not countDistinct: slot values inside a (query, doc) group
-    # are distinct by construction — positional postings hold ONE row
+    # are distinct by construction — postings hold ONE row
     # per (term, doc), and each (query, slot) maps to one term, so the
     # join emits at most one row per (query, doc, slot) (duplicate
     # phrase terms occupy different slots and fan out one row each).
@@ -272,7 +197,7 @@ def _slot_pivot(
 
 
 def phrase_match(
-    index: PositionalIndex, phrases: Sequence[Sequence[str]],
+    index: InvertedIndex, phrases: Sequence[Sequence[str]],
     candidate_limit: int = 2_000_000,
 ) -> DataFrame:
     """-> (query_id, doc_id, dl, tf): docs containing each exact phrase,
@@ -314,7 +239,7 @@ def phrase_match(
 
 
 def phrase_topk(
-    index: PositionalIndex,
+    index: InvertedIndex,
     phrases: Sequence[Sequence[str]],
     k: int = 10,
     candidate_limit: int = 2_000_000,
@@ -327,7 +252,7 @@ def phrase_topk(
 
 
 def _pseudo_term_topk(
-    index: PositionalIndex, matched: DataFrame, n_queries: int, k: int
+    index: InvertedIndex, matched: DataFrame, n_queries: int, k: int
 ) -> DataFrame:
     """Shared scoring tail of phrase_topk/proximity_topk: matched
     (query_id, doc_id, dl, tf) scored as a pseudo-term — df =
@@ -465,7 +390,7 @@ def _min_cover_count_udf(window: int):
 
 
 def proximity_match(
-    index: PositionalIndex,
+    index: InvertedIndex,
     queries: Sequence[Sequence[str]],
     window: int,
     candidate_limit: int = 2_000_000,
@@ -500,7 +425,7 @@ def proximity_match(
 
 
 def proximity_topk(
-    index: PositionalIndex,
+    index: InvertedIndex,
     queries: Sequence[Sequence[str]],
     window: int,
     k: int = 10,

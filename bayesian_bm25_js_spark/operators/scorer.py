@@ -27,7 +27,6 @@ from bayesian_bm25_js_spark.operators.index_build import (
     SPILL_FREE_ENTRIES_PER_TASK,
     InvertedIndex,
     build_inverted_index,
-    cached_layout,
 )
 from bayesian_bm25_js_spark.operators.scoring import (
     calibrate,
@@ -177,22 +176,15 @@ class BayesianBM25SparkScorer:
 
         The term-bucketed on-disk postings are re-partitioned into the
         runtime doc_id layout at the same data-sized grain a fresh
-        build picks (layout_grain), sorted by term_id within
+        build picks (InvertedIndex.laid_out), sorted by term_id within
         partitions, and cached — the scoring agg then combines map-side
         exactly as after build_inverted_index. `packed` is accepted and
         ignored: every saved index loads this one way (a `packed/`
         directory left by an older build is not read)."""
-        import dataclasses
-
         from bayesian_bm25_js_spark.sources.index_store import load_index
 
         index, params = load_index(spark, path)
-        postings = cached_layout(
-            index.postings, index.n_docs, layout_partitions=layout_partitions,
-        )
-        if cache:
-            postings = postings.persist()
-        index = dataclasses.replace(index, postings=postings)
+        index = index.laid_out(cache, layout_partitions)
         scorer = cls(k1=index.k1, b=index.b, method=index.method)
         scorer._index = index
         scorer._transform = BayesianProbabilityTransform(

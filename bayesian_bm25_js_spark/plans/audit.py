@@ -2,7 +2,7 @@
 
 Used by tests to pin the plan shapes that matter at 100 TB: broadcast
 joins on the query side, filter/column pushdown into parquet scans,
-bounded shuffle (Exchange) counts, wide whole-stage-codegen spans.
+bounded shuffle (Exchange) counts, the columns a cached scan reads.
 """
 
 from __future__ import annotations
@@ -16,10 +16,6 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     jvm = df.sparkSession._jvm
     j_mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return df._jdf.queryExecution().explainString(j_mode)
-
-
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def plan_nodes(df: DataFrame) -> list:
@@ -86,7 +82,3 @@ def inmemory_scan_columns(df: DataFrame) -> list:
         attrs = leaf.output()
         out.append({attrs.apply(j).name() for j in range(attrs.size())})
     return out
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan_string(df))))

@@ -6,16 +6,15 @@ Layout under <path>/:
                    within files — co-locates each term's postings for
                    merge/compaction and gives the term column tight
                    per-row-group min/max stats (the one on-disk
-                   postings format)
+                   postings format). An index from build_positional_index
+                   also stores its `positions` column here; phrase term
+                   In-filters prune row groups before any position
+                   array is decoded
   term_stats/      (term, df, idf)
   doc_stats/       (doc_id, dl)
   meta.json        scalars (n_docs, avgdl, k1, b, method), calibration
                    params (alpha, beta, base_rate), build metrics and
                    per-partition lineage
-  positional/ + positional_meta.json
-                   optional positional postings for phrase/proximity
-                   retrieval (save_positional_index), same term-bucketed
-                   layout
 No block-max table is stored: from_saved rebuilds it lazily from the
 postings on the first batch routed to WAND. A `packed/` directory left
 by an older build is ignored; its `postings/` load as before.
@@ -31,10 +30,7 @@ from typing import Optional
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from bayesian_bm25_js_spark.operators.index_build import (
-    InvertedIndex,
-    cached_layout,
-)
+from bayesian_bm25_js_spark.operators.index_build import InvertedIndex
 
 def _partition_lineage(df, key: str) -> list:
     """Per-output-partition row counts — the lineage/metrics sidecar."""
@@ -117,8 +113,22 @@ def save_index(
 
 def load_index(spark: SparkSession, path: str) -> tuple:
     """-> (InvertedIndex, transform_params dict), scanning the saved
-    postings lazily (from_saved lays them out and caches them)."""
-    with open(f"{path}/meta.json") as f:
+    postings lazily (InvertedIndex.laid_out lays them out and caches
+    them, as from_saved does). Raises ValueError when `path` holds no
+    saved index."""
+    meta_path = f"{path}/meta.json"
+    if not os.path.exists(meta_path):
+        if os.path.exists(f"{path}/positional_meta.json"):
+            raise ValueError(
+                f"{path} was written by the removed save_positional_index; "
+                "rebuild the index with build_positional_index and save it "
+                "with save_index"
+            )
+        raise ValueError(
+            f"no saved index at {path} (missing meta.json): pass the "
+            "directory save_index (or BayesianBM25SparkScorer.save) wrote"
+        )
+    with open(meta_path) as f:
         meta = json.load(f)
     index = InvertedIndex(
         spark=spark,
@@ -136,83 +146,3 @@ def load_index(spark: SparkSession, path: str) -> tuple:
 
 # The former packed-store loader's name, kept for existing callers.
 load_packed_index = load_index
-
-
-# -- positional index (operators/phrase.py) --------------------------------
-
-POSITIONAL_FORMAT_VERSION = 1
-
-
-def save_positional_index(pidx, path: str, n_buckets: int = 32) -> dict:
-    """Persist a PositionalIndex under <path>/: positional/ parquet
-    bucketed by hash(term) and sorted (term, doc_id) within files —
-    the same layout rationale as the main store (term dictionary pages
-    compress, a phrase's term In-filter prunes whole row groups via
-    stats before any position array is decoded) — plus meta.json.
-    Position arrays stay per-(doc, term) lists bounded by tf."""
-    t0 = time.time()
-    (
-        pidx.postings.repartition(n_buckets, "term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .parquet(f"{path}/positional")
-    )
-    meta = {
-        "positional_format": POSITIONAL_FORMAT_VERSION,
-        "n_docs": pidx.n_docs,
-        "avgdl": pidx.avgdl,
-        "k1": pidx.k1,
-        "b": pidx.b,
-        "method": pidx.method,
-        "n_buckets": n_buckets,
-        "build_seconds": round(time.time() - t0, 3),
-    }
-    os.makedirs(path, exist_ok=True)
-    with open(f"{path}/positional_meta.json", "w") as f:
-        json.dump(meta, f, indent=2)
-    return meta
-
-
-def load_positional_index(
-    spark: SparkSession,
-    path: str,
-    cache: bool = True,
-    layout_partitions: Optional[int] = None,
-):
-    """-> PositionalIndex over the saved layout. The scan stays
-    term-bucketed on disk (phrase term In-filters prune row groups);
-    the runtime cache takes the one cached layout rule
-    (index_build.cached_layout) so phrase/proximity matching's
-    (query, doc)-keyed agg combines map-side, as after
-    build_positional_index."""
-    from bayesian_bm25_js_spark.operators.phrase import PositionalIndex
-
-    meta_path = f"{path}/positional_meta.json"
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"no positional index at {path} (missing positional_meta.json "
-            "— was this index saved with save_positional_index?)"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
-    fmt = meta.get("positional_format") or 0
-    if fmt != POSITIONAL_FORMAT_VERSION:
-        raise ValueError(
-            f"positional index at {path} has format {fmt}; this build "
-            f"reads {POSITIONAL_FORMAT_VERSION} — re-run "
-            "save_positional_index with the current code"
-        )
-    postings = cached_layout(
-        spark.read.parquet(f"{path}/positional"), meta["n_docs"],
-        layout_partitions=layout_partitions,
-    )
-    if cache:
-        postings = postings.persist()
-    return PositionalIndex(
-        postings,
-        meta["n_docs"],
-        meta["avgdl"],
-        meta["k1"],
-        meta["b"],
-        meta["method"],
-    )

@@ -50,7 +50,6 @@ from bayesian_bm25_js_spark.operators.index_build import (
     VALID_METHODS,
     InvertedIndex,
     attach_idf,
-    cached_layout,
     doc_length_stats,
     idf_column,
 )
@@ -155,11 +154,9 @@ def load_streaming_index(spark: SparkSession, path: str) -> InvertedIndex:
         .withColumn("term_id", F.xxhash64("term"))
     )
 
-    postings = cached_layout(attach_idf(deltas, term_stats), n_docs)
-
     return InvertedIndex(
         spark=spark,
-        postings=postings,
+        postings=attach_idf(deltas, term_stats),
         term_stats=term_stats,
         doc_stats=doc_stats,
         n_docs=n_docs,
@@ -167,7 +164,7 @@ def load_streaming_index(spark: SparkSession, path: str) -> InvertedIndex:
         k1=meta["k1"],
         b=meta["b"],
         method=meta["method"],
-    )
+    ).laid_out(cache=False)
 
 
 def compact_streaming_index(

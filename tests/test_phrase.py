@@ -294,42 +294,86 @@ def test_proximity_plan_shape(spark, pidx):
     assert plan.count("ArrowEvalPython") == 1
 
 
-def test_positional_save_load_roundtrip(spark, pidx, tmp_path):
-    """phrase/proximity results from a loaded positional index are
-    row-identical to the in-memory build; the saved layout carries a
-    format version and rejects unknown ones."""
-    from bayesian_bm25_js_spark.sources.index_store import (
-        load_positional_index,
-        save_positional_index,
+def test_positional_build_matches_plain_build(spark):
+    """build_positional_index is build_inverted_index plus a positions
+    column: the same n_docs, avgdl, term_stats and doc_stats, and each
+    posting's tf is the size of its position list."""
+    from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
+
+    docs = _docs_df(spark, PHRASE_CORPUS)
+    plain = build_inverted_index(docs, method="lucene", cache=False)
+    pos = build_positional_index(docs, method="lucene", cache=False)
+    assert (pos.n_docs, pos.avgdl) == (plain.n_docs, plain.avgdl)
+    for table in ("term_stats", "doc_stats"):
+        a, b = getattr(plain, table), getattr(pos, table)
+        assert sorted(a.collect()) == sorted(b.select(*a.columns).collect())
+    cols = ["term_id", "term", "doc_id", "tf", "dl", "idf"]
+    assert sorted(plain.postings.select(*cols).collect()) == sorted(
+        pos.postings.select(*cols).collect()
     )
+    assert pos.postings.filter(F.col("tf") != F.size("positions")).count() == 0
+
+
+def test_bm25_over_positional_index(spark, pidx):
+    """BM25 scoring over a positions index answers like the plain index,
+    and its cached postings scan reads no positions column."""
+    from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
+    from bayesian_bm25_js_spark.operators.scoring import (
+        queries_to_df,
+        score_queries,
+        top_k,
+    )
+    from bayesian_bm25_js_spark.plans.audit import inmemory_scan_columns
+
+    plain = build_inverted_index(_docs_df(spark, PHRASE_CORPUS), method="lucene")
+    queries = [["hash", "join"], ["table", "scan", "runs"], ["big"]]
+
+    def ranked(index):
+        return top_k(score_queries(index, queries_to_df(spark, queries)), 5)
+
+    want = ranked(plain).orderBy("query_id", "rank").collect()
+    plain.unpersist()
+    got = ranked(pidx)
+    assert want and got.orderBy("query_id", "rank").collect() == want
+    scans = inmemory_scan_columns(got)
+    assert any("tf" in names for names in scans), scans
+    assert not any("positions" in names for names in scans), scans
+
+
+def test_positional_save_load_laid_out(spark, pidx, tmp_path):
+    """save_index -> load_index -> InvertedIndex.laid_out keeps the
+    positions: phrase/proximity results are row-identical to the
+    in-memory build."""
+    from bayesian_bm25_js_spark.sources.index_store import load_index, save_index
 
     path = str(tmp_path / "pidx")
-    meta = save_positional_index(pidx, path, n_buckets=4)
+    meta = save_index(pidx, path, n_buckets=4)
     assert meta["n_docs"] == pidx.n_docs
-    loaded = load_positional_index(spark, path, cache=False)
+    loaded, _ = load_index(spark, path)
+    loaded = loaded.laid_out(cache=False)
     assert loaded.avgdl == pidx.avgdl and loaded.method == pidx.method
 
     phrases = [["hash", "join"], ["table", "scan"]]
     a = phrase_topk(pidx, phrases, k=5).orderBy("query_id", "rank").collect()
     b = phrase_topk(loaded, phrases, k=5).orderBy("query_id", "rank").collect()
-    assert a == b
+    assert a and a == b
     pa = proximity_topk(pidx, PROX_QUERIES, 4, k=5).orderBy(
         "query_id", "rank"
     ).collect()
     pb = proximity_topk(loaded, PROX_QUERIES, 4, k=5).orderBy(
         "query_id", "rank"
     ).collect()
-    assert pa == pb
+    assert pa and pa == pb
 
-    # version gate: a stale format must fail loudly
-    import json as _json
 
-    mp = f"{path}/positional_meta.json"
-    m = _json.load(open(mp))
-    m["positional_format"] = 0
-    _json.dump(m, open(mp, "w"))
-    with pytest.raises(ValueError, match="format"):
-        load_positional_index(spark, path)
+def test_phrase_needs_positions(spark):
+    """A plain index has no positions: phrase queries say which build
+    to use instead of failing in the analyzer."""
+    from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
+
+    idx = build_inverted_index(_docs_df(spark, PHRASE_CORPUS), cache=False)
+    with pytest.raises(ValueError, match="build_positional_index"):
+        phrase_topk(idx, [["hash", "join"]])
 
 
 def test_candidate_pruning_parity(spark):
@@ -337,8 +381,6 @@ def test_candidate_pruning_parity(spark):
     an optimization: phrase and proximity matches identical with the
     pruning disabled (candidate_limit=0), on a corpus where one term is
     ubiquitous and the others rare — the shape the pruning exists for."""
-    from bayesian_bm25_js_spark.operators.phrase import _slot_pivot
-
     rng = random.Random(7)
     corpus = []
     for i in range(60):
@@ -363,18 +405,10 @@ def test_candidate_pruning_parity(spark):
                 (r["query_id"], r["doc_id"]): r["tf"]
                 for r in fn(idx, phrases, **kwargs).collect()
             }
-            # disable pruning via the shared frontend's limit
-            import bayesian_bm25_js_spark.operators.phrase as ph
-
-            orig = ph._slot_pivot
-            ph._slot_pivot = lambda i, s, candidate_limit=0: orig(i, s, 0)
-            try:
-                off = {
-                    (r["query_id"], r["doc_id"]): r["tf"]
-                    for r in fn(idx, phrases, **kwargs).collect()
-                }
-            finally:
-                ph._slot_pivot = orig
+            off = {
+                (r["query_id"], r["doc_id"]): r["tf"]
+                for r in fn(idx, phrases, candidate_limit=0, **kwargs).collect()
+            }
             assert base == off, fn.__name__
     finally:
         _ph.CANDIDATE_PRUNE_MIN_DOCS = _orig_floor
