@@ -482,18 +482,13 @@ def block_max_table(
     contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
     # term rides along for inspection/oracle queries (1:1 with term_id);
     # hot paths join/filter on term_id and column-prune the string away.
-    keys = (
-        ["term_id", "term", "block_id"]
-        if "term_id" in index.postings.columns
-        else ["term", "block_id"]
-    )
     return (
         index.postings.withColumn(
             # long: block ids reach n_docs // block_size, which outgrows
             # int32 past ~2.7e11 docs (ADVICE r4)
             "block_id", F.floor(F.col("doc_id") / block_size).cast("long")
         )
-        .groupBy(*keys)
+        .groupBy("term_id", "term", "block_id")
         .agg(
             F.max(contrib).alias("max_contrib"),
             F.min(contrib).alias("min_contrib"),

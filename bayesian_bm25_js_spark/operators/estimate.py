@@ -111,7 +111,7 @@ def sample_pseudo_query_scores(
     """Per-pseudo-query positive score arrays (scorer.ts:199-226) —
     DRIVER materialization: bit-exact reference estimator input, but
     bounded only by the pseudo-queries' match counts. fit_transform
-    switches to the distributed estimators past `estimation_cap`
+    switches to the distributed estimators past ESTIMATION_CAP
     positives (see estimate_parameters_distributed).
 
     scored: a prebuilt (ideally persisted) pseudo_query_scored_df —
@@ -409,21 +409,18 @@ def fit_transform(
     beta: Optional[float],
     base_rate,
     base_rate_method: str,
-    estimation_cap: Optional[int] = None,
 ) -> Tuple[float, float, Optional[float]]:
     """The calibration fit (scorer.ts:163-197) -> (alpha, beta,
     base_rate): user values where given, pseudo-query estimates for the
     rest (base_rate None | float | "auto").
 
-    estimation_cap (default ESTIMATION_CAP): when the pseudo-query
-    sample matches more than this many positive (query, doc) scores,
-    estimation switches from the bit-exact driver estimators to the
-    distributed ones (exact median/std; percentile thresholds via
+    When the pseudo-query sample matches more than ESTIMATION_CAP
+    (read at call time) positive (query, doc) scores, estimation
+    switches from the bit-exact driver estimators to the distributed
+    ones (exact median/std; percentile thresholds via
     streaming windows; EM/elbow over a bounded deterministic
     reservoir) so a hot pseudo-query over a 10^12-doc corpus can never
     OOM the driver."""
-    if estimation_cap is None:
-        estimation_cap = ESTIMATION_CAP
     fitted_rate = None
     if alpha is None or beta is None or base_rate == "auto":
         # ONE scoring pipeline per fit: the pseudo-query scored DF is
@@ -437,7 +434,7 @@ def fit_transform(
             n_pos = (
                 0 if scored is None else scored.filter(F.col("score") > 0).count()
             )
-            if n_pos <= estimation_cap:
+            if n_pos <= ESTIMATION_CAP:
                 per_query_scores = sample_pseudo_query_scores(
                     index, docs, scored=scored
                 )

@@ -1,19 +1,27 @@
 """Inverted-index construction as a Catalyst dataflow.
 
 Re-expresses the reference's in-memory index build (bm25.ts:52-102) as
-DataFrame jobs designed for 100 TB corpora:
+DataFrame jobs designed for 100 TB corpora. Every index is made by the
+same two steps:
 
-  docs (doc_id, tokens)
-    └─ doc_stats (doc_id, dl)                  narrow projection
-    └─ explode → groupBy(doc_id, term) tf      shuffle 1 (partial agg
+  term_frequencies (the tf step)
+    docs (doc_id, tokens)
+      └─ doc_stats (doc_id, dl)                narrow projection
+      └─ explode → groupBy(doc_id, term) tf    shuffle 1 (partial agg
                                                map-side combines dup
                                                tokens before shuffle)
-         └─ groupBy(term) df → idf             shuffle 2 (tiny after
+  assemble_index (the assembly step)
+      └─ groupBy(term) df → idf, term_id       shuffle 2 (tiny after
                                                map-side combine: ≤ one
                                                row per (partition, term))
-         └─ postings = tf ⋈ term_stats         AQE-planned; broadcast
+      └─ postings = tf ⋈ term_stats            AQE-planned; broadcast
                                                when vocab is small,
                                                skew-split otherwise
+      └─ cached layout, persist, term_id collision check
+
+build_inverted_index and build_positional_index run both steps; the
+streaming ingest (streaming/index_ingest.py) runs the tf step per
+micro-batch and the assembly over the piles it wrote.
 
 `dl` rides along the explode (functionally dependent on doc_id) so
 postings are denormalized (term, doc_id, tf, dl) and query scoring
@@ -286,7 +294,9 @@ def build_inverted_index(
     tools/width_sweep.py for the measured throughput-vs-width curve
     and its spill cliff.
     """
-    return _build_index(docs, k1, b, method, cache, layout_partitions, False)
+    return assemble_index(
+        *term_frequencies(docs), k1, b, method, cache, layout_partitions
+    )
 
 
 def build_positional_index(
@@ -300,33 +310,66 @@ def build_positional_index(
     """build_inverted_index whose postings also carry `positions`: the
     0-based sorted offsets of `term` in `doc_id`, and tf = their count.
     phrase/proximity matching (operators/phrase.py) reads them; BM25
-    scoring never scans the column.
-
-    The tf shuffle is a posexplode → groupBy(doc_id, term) that collects
-    the positions instead of counting them. Each list is bounded by that
-    term's tf in that doc, and each doc arrives as one source row, so
-    partial aggregation builds each list inside a single map task;
-    array_sort pins the order regardless of merge order. Everything
-    else (doc_stats, term_stats, idf, the term_id collision check, the
-    cached layout) is the plain build's.
+    scoring never scans the column. Only the tf step differs from the
+    plain build (term_frequencies with positions); the assembly is the
+    same.
     """
-    return _build_index(docs, k1, b, method, cache, layout_partitions, True)
+    return assemble_index(
+        *term_frequencies(docs, positions=True), k1, b, method, cache,
+        layout_partitions,
+    )
 
 
-def _build_index(
-    docs: DataFrame,
+def term_frequencies(docs: DataFrame, positions: bool = False) -> tuple:
+    """The tf step: docs (doc_id, tokens) -> (doc_stats (doc_id, dl),
+    tf (doc_id, dl, term, tf[, positions])).
+
+    dl is the raw token count, duplicates included (bm25.ts:54), and
+    rides along the explode (functionally dependent on doc_id). The tf
+    shuffle is one groupBy(doc_id, dl, term) with map-side partial
+    aggregation: it counts the tokens, or with `positions` collects
+    their sorted 0-based offsets (tf = their count). Each doc arrives as
+    one source row, so partial aggregation builds each list inside a
+    single map task; array_sort pins the order regardless of merge
+    order."""
+    base = docs.select("doc_id", F.size("tokens").alias("dl"), "tokens")
+    if positions:
+        tf = (
+            base.select("doc_id", "dl", F.posexplode("tokens").alias("pos", "term"))
+            .groupBy("doc_id", "dl", "term")
+            .agg(F.array_sort(F.collect_list("pos")).alias("positions"))
+            .withColumn("tf", F.size("positions"))
+        )
+    else:
+        tf = (
+            base.select("doc_id", "dl", F.explode("tokens").alias("term"))
+            .groupBy("doc_id", "dl", "term")
+            .agg(F.count(F.lit(1)).cast("int").alias("tf"))
+        )
+    return base.select("doc_id", "dl"), tf
+
+
+def check_method(method: str) -> None:
+    if method not in VALID_METHODS:
+        raise ValueError(f"method must be one of {VALID_METHODS}, got {method!r}")
+
+
+def assemble_index(
+    doc_stats: DataFrame,
+    tf: DataFrame,
     k1: float,
     b: float,
     method: str,
-    cache: bool,
-    layout_partitions: Optional[int],
-    positions: bool,
+    cache: bool = True,
+    layout_partitions: Optional[int] = None,
 ) -> InvertedIndex:
-    if method not in VALID_METHODS:
-        raise ValueError(f"method must be one of {VALID_METHODS}, got {method!r}")
-    spark = docs.sparkSession
+    """The assembly step: (doc_stats, tf) from the tf step (or read back
+    from piles of its output) -> InvertedIndex.
 
-    base = docs.select("doc_id", F.size("tokens").alias("dl"), "tokens")
+    n_docs/avgdl, term_stats (df per term, idf, term_id), the idf join,
+    the cached layout, the optional persist and the term_id collision
+    check. Every index the engine builds goes through here."""
+    check_method(method)
 
     # One tokenize pass serves both the scalar stats AND the doc_stats
     # cache: persisting doc_stats BEFORE the agg materializes the
@@ -334,29 +377,13 @@ def _build_index(
     # later doc_stats consumers never re-tokenize the corpus (they used
     # to: the lazy persist was only materialized on first downstream
     # use, which cost a full corpus scan + tokenize).
-    doc_stats = base.select("doc_id", "dl")
     if cache:
         doc_stats = doc_stats.persist()
     n_docs, avgdl = doc_length_stats(doc_stats)
 
-    # shuffle 1: per-(doc, term) tf with map-side partial aggregation
-    if positions:
-        tf_df = (
-            base.select("doc_id", "dl", F.posexplode("tokens").alias("pos", "term"))
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.array_sort(F.collect_list("pos")).alias("positions"))
-            .withColumn("tf", F.size("positions"))
-        )
-    else:
-        tf_df = (
-            base.select("doc_id", "dl", F.explode("tokens").alias("term"))
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-        )
-
     # shuffle 2: document frequency (tiny stream after partial agg)
     term_stats = (
-        tf_df.groupBy("term")
+        tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .withColumn("idf", idf_column(F.col("df"), n_docs, method))
         .withColumn("term_id", F.xxhash64("term"))
@@ -369,7 +396,7 @@ def _build_index(
     # (~n_terms^2 / 2^65); build-time uniqueness is asserted cheaply
     # over term_stats (see below) so a collision fails loudly instead
     # of silently merging two terms' postings.
-    postings = attach_idf(tf_df, term_stats)
+    postings = attach_idf(tf, term_stats)
 
     # Layout shuffle, paid once per build: hash-partition postings by
     # doc_id. Two effects measured at 400k docs / 150 queries:
@@ -422,13 +449,19 @@ def _build_index(
         .collect()
     )
     if dup:
+        tid = dup[0]["term_id"]
+        terms = sorted(
+            r["term"]
+            for r in term_stats.filter(F.col("term_id") == tid).limit(2).collect()
+        )
         raise RuntimeError(
-            f"xxhash64 term_id collision detected (term_id={dup[0]['term_id']});"
-            " rebuild with string-keyed postings"
+            f"xxhash64 term_id collision detected (term_id={tid}): terms "
+            f"{terms} would share postings; rewrite one of them in the "
+            "docs' tokens and rebuild"
         )
 
     return InvertedIndex(
-        spark=spark,
+        spark=doc_stats.sparkSession,
         postings=postings,
         term_stats=term_stats,
         doc_stats=doc_stats,

@@ -106,12 +106,11 @@ class BayesianBM25SparkScorer:
             raise RuntimeError("Call index() before querying.")
 
     # -- build ----------------------------------------------------------------
-    def index(
-        self, docs: DataFrame, estimation_cap: Optional[int] = None
-    ) -> "BayesianBM25SparkScorer":
+    def index(self, docs: DataFrame) -> "BayesianBM25SparkScorer":
         """docs (doc_id long, tokens array<string>) -> build index +
         estimate parameters (scorer.ts:163-197; estimate.fit_transform,
-        which also documents estimation_cap)."""
+        which switches to the distributed estimators past
+        estimate.ESTIMATION_CAP positive pseudo-query scores)."""
         self._docs = docs
         if self._index is not None:
             self._index.release_block_max()
@@ -122,7 +121,7 @@ class BayesianBM25SparkScorer:
         self._transform = BayesianProbabilityTransform(
             *fit_transform(
                 self._index, docs, self._user_alpha, self._user_beta,
-                self._user_base_rate, self._base_rate_method, estimation_cap,
+                self._user_base_rate, self._base_rate_method,
             )
         )
         return self

@@ -201,30 +201,22 @@ def _terms_filtered(
     table: DataFrame,
     terms_filter: Optional[Sequence[str]],
 ) -> DataFrame:
-    """The term-key In-filter for one of the index's postings-shaped
+    """The term_id In-filter for one of the index's postings-shaped
     tables (postings or block-max), or the table itself when
-    terms_filter is None.
-
-    The filter is `term_id IN (...)`: it batch-prunes the term_id-sorted
-    cached layout and is pushed into a parquet scan. A layout with NO
-    term_id falls back to the string `term IN (...)`, so terms_filter
-    is never a silent no-op (the only pruning such a layout can get)."""
+    terms_filter is None. It batch-prunes the term_id-sorted cached
+    layout and is pushed into a parquet scan."""
     if terms_filter is None:
         return table
-    if "term_id" not in table.columns and "term" in table.columns:
-        table = table.filter(isin_filter("term", terms_filter))
-    if "term_id" in table.columns:
-        from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64
+    from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64
 
-        ids = [spark_xxhash64(t) for t in terms_filter]
-        table = table.filter(isin_filter("term_id", ids))
-    return table
+    ids = [spark_xxhash64(t) for t in terms_filter]
+    return table.filter(isin_filter("term_id", ids))
 
 
 def _probe(table: DataFrame, query_terms: DataFrame) -> tuple:
-    """-> (join_key, table, query side): the interned hot path probes on
-    8-byte term_id keys (the columnar scan then prunes the string column
-    entirely) whenever the table carries term_id; else on term.
+    """-> (table, query side), both keyed on term_id: the probe joins
+    8-byte term_id keys, and the columnar scan prunes the string column
+    entirely.
 
     A query frame without is_first (the documented (query_id, pos, term)
     input) gets it from a row_number over (query_id, term) by pos, so a
@@ -234,10 +226,8 @@ def _probe(table: DataFrame, query_terms: DataFrame) -> tuple:
     if "is_first" not in qt.columns:
         w = Window.partitionBy("query_id", "term").orderBy("pos")
         qt = qt.withColumn("is_first", F.row_number().over(w) == 1)
-    if "term_id" not in table.columns:
-        return "term", table, qt
     qt = qt.withColumn("term_id", F.xxhash64("term")).drop("term")
-    return "term_id", table.drop("term"), qt
+    return table.drop("term"), qt
 
 
 def _score_aggregate(
@@ -295,9 +285,9 @@ def score_queries(
     # it on the query side (a term_stats join per batch) measured a fixed
     # per-batch cost with no scan saving (50k docs: warm WAND CPU +51%).
     postings = _terms_filtered(index, index.postings, terms_filter)
-    key, postings, qt = _probe(postings, query_terms)
+    postings, qt = _probe(postings, query_terms)
     return _score_aggregate(
-        index, postings.join(F.broadcast(qt), key), exact_order
+        index, postings.join(F.broadcast(qt), "term_id"), exact_order
     )
 
 

@@ -3,27 +3,23 @@
 The reference consumes pre-tokenized `string[][]` corpora (bm25.ts:52);
 our production input is the Iceberg-style table
 (repo, path, commit, lang, content) per the north rule, so tokenization
-is new engine surface. Two implementations:
+is new engine surface. There is one tokenizer, `tokenize_column`: a
+pure Catalyst expression (lower + regexp split + empty filter),
+JVM-side and whole-stage-codegen'd, so no row crosses into Python.
+`zip_with_index_docs` is the one doc-id rule for a corpus that carries
+no doc_id.
 
-* `tokenize_column` — pure Catalyst expression (lower + regexp split +
-  empty filter). JVM-side, whole-stage-codegen'd, zero Python cost:
-  the default and the fast path at 100 TB.
-* `tokenize_arrow_udf` — vectorized Arrow/pandas UDF hook for custom
-  tokenizers (language-aware splitting, stemming); same default regex
-  so both paths agree.
-
-The DuckDB oracle mirror of the default is
+The DuckDB oracle mirror of the tokenizer is
 ``string_split_regex(lower(content), '[^a-z0-9]+')`` minus empties,
 so Spark results are cross-checkable by the correctness driver.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 TOKEN_SPLIT_REGEX = "[^a-z0-9]+"
 
@@ -35,72 +31,9 @@ def tokenize_column(content: Column) -> Column:
     )
 
 
-# Type object (not DDL string) so the UDF can be declared without an
-# active SparkSession at import time.
-@pandas_udf(ArrayType(StringType()))
-def tokenize_arrow_udf(content: pd.Series) -> pd.Series:
-    """Arrow-batched tokenizer (same semantics as tokenize_column)."""
-    import re
-
-    pattern = re.compile(TOKEN_SPLIT_REGEX)
-    return content.map(
-        lambda text: [t for t in pattern.split(text.lower()) if t]
-        if text is not None
-        else None
-    )
-
-
-def corpus_to_docs(
-    corpus_df: DataFrame,
-    content_col: str = "content",
-    id_cols: tuple = ("repo", "path", "commit"),
-    use_arrow_udf: bool = False,
-    id_strategy: str = "zip",
-) -> DataFrame:
-    """(repo, path, commit, lang, content) -> (doc_id, tokens [, id cols]).
-
-    id_strategy="zip" (default, the scale path): zipWithIndex-style
-    per-partition offsets — no global sort, no data shuffle; ids are
-    stable for a fixed input partitioning (deterministic for a given
-    snapshot layout). id_strategy="dense_rank": ids are a dense rank
-    over the natural key, identical across ANY re-partitioning of the
-    same snapshot — but it funnels the whole corpus through one
-    sort-based window task, so it is for fixture-scale deterministic
-    snapshots only (VERDICT r01 "What's wrong" #3).
-    """
-    tok = (
-        tokenize_arrow_udf(F.col(content_col))
-        if use_arrow_udf
-        else tokenize_column(F.col(content_col))
-    )
-    if id_strategy == "zip":
-        return zip_with_index_docs(
-            corpus_df,
-            content_col=content_col,
-            use_arrow_udf=use_arrow_udf,
-            extra_cols=id_cols,
-        )
-    if id_strategy != "dense_rank":
-        raise ValueError(
-            f"id_strategy must be 'zip' or 'dense_rank', got {id_strategy!r}"
-        )
-    from pyspark.sql.window import Window
-
-    w = Window.orderBy(*[F.col(c) for c in id_cols])
-    return corpus_df.select(
-        (F.row_number().over(w) - F.lit(1)).cast("long").alias("doc_id"),
-        tok.alias("tokens"),
-        *[F.col(c) for c in id_cols],
-    )
-
-
-def zip_with_index_docs(
-    corpus_df: DataFrame,
-    content_col: str = "content",
-    use_arrow_udf: bool = False,
-    extra_cols: tuple = (),
-) -> DataFrame:
-    """Scale path for doc_id assignment: stable per-partition offsets.
+def zip_with_index_docs(corpus_df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """corpus -> (doc_id, *cols): dense ids 0..n-1 from stable
+    per-partition offsets.
 
     Two passes: count rows per partition (tiny), then assign
     offset[p] + row_in_partition. No global sort, no shuffle of the
@@ -108,16 +41,9 @@ def zip_with_index_docs(
     (deterministic for a given snapshot layout)."""
     from pyspark.sql.window import Window
 
-    tok = (
-        tokenize_arrow_udf(F.col(content_col))
-        if use_arrow_udf
-        else tokenize_column(F.col(content_col))
-    )
-    part = F.spark_partition_id()
     df = corpus_df.select(
-        tok.alias("tokens"),
-        *[F.col(c) for c in extra_cols],
-        part.alias("__pid"),
+        *[F.col(c) for c in cols],
+        F.spark_partition_id().alias("__pid"),
         F.monotonically_increasing_id().alias("__mid"),
     )
     w_in = Window.partitionBy("__pid").orderBy("__mid")
@@ -132,7 +58,6 @@ def zip_with_index_docs(
             (F.col("__offset") + F.row_number().over(w_in) - 1)
             .cast("long")
             .alias("doc_id"),
-            "tokens",
-            *[F.col(c) for c in extra_cols],
+            *[F.col(c) for c in cols],
         )
     )

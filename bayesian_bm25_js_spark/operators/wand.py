@@ -80,15 +80,14 @@ ROUND_SLACK = 1e-6
 DEFAULT_ROUTER_FLOOR = 500_000
 
 
-def _query_blocks(block_max: DataFrame, query_terms: DataFrame) -> tuple:
-    """-> (join_key, qb): the block-max rows of every query token, each
-    carrying (query_id, is_first) from the broadcast query side — the
-    preamble of _fused_survivors, and of the pure-Catalyst reference
-    phases its parity tests compare it with
-    (tests/test_index_hardening.py)."""
-    key, block_max, qt = _probe(block_max, query_terms)
-    return key, block_max.join(
-        F.broadcast(qt.select("query_id", key, "is_first")), key
+def _query_blocks(block_max: DataFrame, query_terms: DataFrame) -> DataFrame:
+    """The block-max rows of every query token, each carrying
+    (query_id, is_first) from the broadcast query side — the preamble of
+    _fused_survivors, and of the pure-Catalyst reference phases its
+    parity tests compare it with (tests/test_index_hardening.py)."""
+    block_max, qt = _probe(block_max, query_terms)
+    return block_max.join(
+        F.broadcast(qt.select("query_id", "term_id", "is_first")), "term_id"
     )
 
 
@@ -141,13 +140,13 @@ def _fused_survivors(
     re-derivation (ADVICE r4: the stats path must not validate a path
     the default query never runs).
     """
-    key, qb = _query_blocks(block_max, query_terms)
-    qb = qb.select(
-        "query_id", key, "block_id", "max_contrib", "min_contrib", "n", "is_first"
+    qb = _query_blocks(block_max, query_terms).select(
+        "query_id", "term_id", "block_id", "max_contrib", "min_contrib", "n",
+        "is_first",
     )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        qids, gq, gblk, n_blocks, keep = _kept_blocks(pdf, key, k)
+        qids, gq, gblk, n_blocks, keep = _kept_blocks(pdf, k)
         out = pd.DataFrame({"query_id": qids[gq[keep]], "block_id": gblk[keep]})
         if not with_stats:
             return out
@@ -187,7 +186,7 @@ def _fused_survivors(
     )
 
 
-def _kept_blocks(pdf: pd.DataFrame, key: str, k: int) -> tuple:
+def _kept_blocks(pdf: pd.DataFrame, k: int) -> tuple:
     """Rows of complete query groups (any order) -> (qids, gq, gblk,
     n_blocks, keep): one entry of gq (index into qids), gblk and keep
     per (query, block), n_blocks per query. Every step is a segmented
@@ -221,7 +220,7 @@ def _kept_blocks(pdf: pd.DataFrame, key: str, k: int) -> tuple:
     # crosses k is a witness (the best term wins)
     f = pdf["is_first"].to_numpy(bool)
     tq = np.searchsorted(qids, q[f])
-    term = pd.factorize(pdf[key].to_numpy()[f])[0]
+    term = pd.factorize(pdf["term_id"].to_numpy()[f])[0]
     mn = pdf["min_contrib"].to_numpy(np.float64)[f]
     n = pdf["n"].to_numpy(np.int64)[f]
     o = np.lexsort((blk[f], -mn, term, tq))
@@ -519,7 +518,7 @@ def wand_topk(
     # the exhaustive scorer's probe: same term-key filter, same query
     # side (score_queries)
     postings = _terms_filtered(index, index.postings, terms_filter)
-    join_key, postings, qt = _probe(postings, query_terms)
+    postings, qt = _probe(postings, query_terms)
 
     # Push the pruning into the scoring stage as TWO chained broadcast
     # hash joins: postings probe the (tiny, token-count-sized) query
@@ -543,7 +542,7 @@ def wand_topk(
         postings.withColumn(
             "block_id", F.floor(F.col("doc_id") / block_size).cast("long")
         )
-        .join(F.broadcast(qt), join_key)
+        .join(F.broadcast(qt), "term_id")
         .withColumn("__qb", pack)
         .join(surv, "__qb")
     )

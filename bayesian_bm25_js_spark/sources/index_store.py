@@ -115,7 +115,7 @@ def load_index(spark: SparkSession, path: str) -> tuple:
     """-> (InvertedIndex, transform_params dict), scanning the saved
     postings lazily (InvertedIndex.laid_out lays them out and caches
     them, as from_saved does). Raises ValueError when `path` holds no
-    saved index."""
+    saved index, or one whose postings lack term_id."""
     meta_path = f"{path}/meta.json"
     if not os.path.exists(meta_path):
         if os.path.exists(f"{path}/positional_meta.json"):
@@ -130,9 +130,15 @@ def load_index(spark: SparkSession, path: str) -> tuple:
         )
     with open(meta_path) as f:
         meta = json.load(f)
+    postings = spark.read.parquet(f"{path}/postings")
+    if "term_id" not in postings.columns:
+        raise ValueError(
+            f"{path}/postings has no term_id column (saved by an older "
+            "build): rebuild the index and save it again with save_index"
+        )
     index = InvertedIndex(
         spark=spark,
-        postings=spark.read.parquet(f"{path}/postings"),
+        postings=postings,
         term_stats=spark.read.parquet(f"{path}/term_stats"),
         doc_stats=spark.read.parquet(f"{path}/doc_stats"),
         n_docs=meta["n_docs"],

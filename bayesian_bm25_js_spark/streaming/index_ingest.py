@@ -13,16 +13,18 @@ is the *streaming* embodiment for a corpus that never stops arriving:
 
 Design notes for 100 TB:
 
-* **Per-batch work is local.** A micro-batch computes only its own
-  (doc, term) tf rows and doc lengths — one explode + one map-side-
-  combined groupBy, no join against existing state and no global
-  shuffle over the accumulated corpus. Cost per batch is O(batch),
-  not O(corpus).
+* **Per-batch work is local.** A micro-batch runs only the build's tf
+  step (index_build.term_frequencies): its own (doc, term) tf rows and
+  doc lengths, no join against existing state and no global shuffle
+  over the accumulated corpus. Cost per batch is O(batch), not
+  O(corpus).
 * **Global stats are deferred to read time.** df/idf/avgdl depend on
-  the whole corpus, so the reader aggregates them once per snapshot
-  (`load_streaming_index`) instead of every batch rewriting a global
-  term table — the same split the reference makes (addDocuments
-  appends; statistics are recomputed before scoring).
+  the whole corpus, so the reader runs the build's assembly step
+  (index_build.assemble_index) once per snapshot over the piles
+  (`load_streaming_index`), term_id collision check included, instead
+  of every batch rewriting a global term table — the same split the
+  reference makes (addDocuments appends; statistics are recomputed
+  before scoring).
 * **Exactly-once effect.** Each epoch writes with dynamic overwrite
   into its own `epoch=N` partition directory: a retried/replayed batch
   (Spark redelivers the same epoch_id from the checkpoint) overwrites
@@ -44,31 +46,23 @@ import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bayesian_bm25_js_spark.operators.index_build import (
-    VALID_METHODS,
     InvertedIndex,
-    attach_idf,
-    doc_length_stats,
-    idf_column,
+    assemble_index,
+    check_method,
+    term_frequencies,
 )
 
 
 def ingest_epoch(batch_df: DataFrame, epoch_id: int, path: str) -> None:
     """foreachBatch body: fold one micro-batch of (doc_id, tokens) into
-    the delta piles. Idempotent per epoch (overwrite of epoch=N only).
-    Usable directly for batch backfills with hand-assigned epoch ids.
+    the delta piles (the build's tf step, index_build.term_frequencies).
+    Idempotent per epoch (overwrite of epoch=N only). Usable directly
+    for batch backfills with hand-assigned epoch ids.
     """
-    base = batch_df.select(
-        "doc_id", F.size("tokens").alias("dl"), "tokens"
-    )
-    tf = (
-        base.select("doc_id", "dl", F.explode("tokens").alias("term"))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-        .select("term", "doc_id", "tf", "dl")
-    )
+    doc_stats, tf = term_frequencies(batch_df)
+    tf = tf.select("term", "doc_id", "tf", "dl")
     # the two delta writes are independent jobs over the same batch;
     # overlapping them lets the (tiny) doc_stats write back-fill the
     # executor slots freed by the tf job's tail instead of running as
@@ -87,8 +81,7 @@ def ingest_epoch(batch_df: DataFrame, epoch_id: int, path: str) -> None:
             )
         ))
         f2 = pool.submit(tagged(
-            lambda: base.select("doc_id", "dl")
-            .write.mode("overwrite")
+            lambda: doc_stats.write.mode("overwrite")
             .parquet(f"{path}/doc_stats_delta/epoch={int(epoch_id)}")
         ))
         f1.result()
@@ -111,8 +104,7 @@ def start_index_ingest(
     stops (deterministic for tests/backfills); processing_time sets a
     micro-batch cadence for continuous ingest.
     """
-    if method not in VALID_METHODS:
-        raise ValueError(f"method must be one of {VALID_METHODS}, got {method!r}")
+    check_method(method)
     os.makedirs(path, exist_ok=True)
     with open(f"{path}/meta.json", "w") as f:
         json.dump({"k1": k1, "b": b, "method": method}, f, indent=2)
@@ -130,10 +122,12 @@ def start_index_ingest(
 def load_streaming_index(spark: SparkSession, path: str) -> InvertedIndex:
     """Reconstitute a queryable InvertedIndex from the delta piles.
 
-    One pass recomputes the global statistics the deltas defer
+    The build's assembly step (index_build.assemble_index, cache=False)
+    over the piles recomputes the global statistics the deltas defer
     (df → idf with the current n_docs; avgdl) — the streaming analogue
-    of addDocuments' post-append refresh (scorer.ts:453-459). The
-    result feeds score_queries/top_k/calibrate unchanged.
+    of addDocuments' post-append refresh (scorer.ts:453-459) — and runs
+    the build's term_id collision check. The result feeds
+    score_queries/top_k/calibrate unchanged.
     """
     with open(f"{path}/meta.json") as f:
         meta = json.load(f)
@@ -144,27 +138,9 @@ def load_streaming_index(spark: SparkSession, path: str) -> InvertedIndex:
     doc_stats = spark.read.parquet(f"{path}/doc_stats_delta").select(
         "doc_id", "dl"
     )
-
-    n_docs, avgdl = doc_length_stats(doc_stats)
-
-    term_stats = (
-        deltas.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("idf", idf_column(F.col("df"), n_docs, meta["method"]))
-        .withColumn("term_id", F.xxhash64("term"))
+    return assemble_index(
+        doc_stats, deltas, meta["k1"], meta["b"], meta["method"], cache=False
     )
-
-    return InvertedIndex(
-        spark=spark,
-        postings=attach_idf(deltas, term_stats),
-        term_stats=term_stats,
-        doc_stats=doc_stats,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        k1=meta["k1"],
-        b=meta["b"],
-        method=meta["method"],
-    ).laid_out(cache=False)
 
 
 def compact_streaming_index(

@@ -89,11 +89,8 @@ def main(argv=None) -> int:
         from bayesian_bm25_js_spark.operators.tokenize import zip_with_index_docs
 
         # dense per-partition offsets, stable for a fixed input
-        # partitioning; content rides along for the docs stage
-        corpus = zip_with_index_docs(
-            corpus, content_col=args.content_col,
-            extra_cols=(args.content_col,),
-        )
+        # partitioning; the docs stage tokenizes the content once
+        corpus = zip_with_index_docs(corpus, (args.content_col,))
 
     base_rate = args.base_rate
     if base_rate not in (None, "auto"):

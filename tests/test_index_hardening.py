@@ -358,33 +358,61 @@ def test_packed_wand_pushes_term_filter(spark, rnd_index, tmp_path):
     assert rows(ranked) == rows(exhaustive)
 
 
-def test_terms_filter_falls_back_to_string_isin(spark, rnd_index):
-    """A custom postings layout with NO term_id column still gets the
-    string In-filter from terms_filter (it is the only scan pruning
-    such a layout can have) — regression for the silent-drop case."""
-    from bayesian_bm25_js_spark.operators.index_build import InvertedIndex
+def test_load_index_without_term_id_says_to_rebuild(spark, rnd_index, tmp_path):
+    """A saved postings/ table with no term_id (an older build's) fails
+    at load_index with a ValueError that names the path and says to
+    rebuild: every scoring path keys on term_id."""
+    from bayesian_bm25_js_spark.sources.index_store import load_index, save_index
 
-    corpus, idx = rnd_index
-    plain = InvertedIndex(
-        spark=spark,
-        postings=idx.postings.drop("term_id"),
-        term_stats=idx.term_stats,
-        doc_stats=idx.doc_stats,
-        n_docs=idx.n_docs,
-        avgdl=idx.avgdl,
-        k1=idx.k1,
-        b=idx.b,
-        method=idx.method,
+    _, idx = rnd_index
+    path = tmp_path / "idx"
+    save_index(idx, str(path))
+    (
+        spark.read.parquet(str(path / "postings")).drop("term_id")
+        .write.parquet(str(tmp_path / "postings_without_term_id"))
     )
-    qdf = queries_to_df(spark, [["w0", "w5"]])
-    scored = score_queries(plain, qdf, terms_filter=["w0", "w5"])
-    plan = scored._jdf.queryExecution().optimizedPlan().toString()
-    assert "term" in plan and " IN " in plan, plan
-    a = top_k(scored, 5).orderBy("rank").collect()
-    b = top_k(score_queries(idx, qdf), 5).orderBy("rank").collect()
-    assert [(r["doc_id"], round(r["score"], 9)) for r in a] == [
-        (r["doc_id"], round(r["score"], 9)) for r in b
-    ]
+    shutil.rmtree(path / "postings")
+    (tmp_path / "postings_without_term_id").rename(path / "postings")
+    with pytest.raises(ValueError, match="term_id") as err:
+        load_index(spark, str(path))
+    assert str(path) in str(err.value) and "rebuild" in str(err.value)
+
+
+@pytest.mark.parametrize("build", ["inverted", "positional", "streaming"])
+def test_term_id_collision_fails_loudly(spark, tmp_path, monkeypatch, build):
+    """Every assembly runs the term_id collision check: with xxhash64
+    patched to a constant, every term shares one term_id, and the batch
+    builds and the streaming loader all raise instead of merging the
+    terms' postings."""
+    import json
+
+    from pyspark.sql import functions as pyspark_functions
+
+    from bayesian_bm25_js_spark.operators.index_build import (
+        build_positional_index,
+    )
+    from bayesian_bm25_js_spark.streaming.index_ingest import (
+        ingest_epoch,
+        load_streaming_index,
+    )
+
+    docs = docs_df(spark, SMALL_CORPUS)
+    if build == "streaming":
+        path = str(tmp_path / "stream")
+        ingest_epoch(docs, 0, path)
+        with open(f"{path}/meta.json", "w") as f:
+            json.dump({"k1": 1.2, "b": 0.75, "method": "lucene"}, f)
+    lit = pyspark_functions.lit
+    monkeypatch.setattr(
+        pyspark_functions, "xxhash64", lambda *cols: lit(7).cast("long")
+    )
+    with pytest.raises(RuntimeError, match="term_id collision"):
+        if build == "inverted":
+            build_inverted_index(docs)
+        elif build == "positional":
+            build_positional_index(docs, cache=False)
+        else:
+            load_streaming_index(spark, path)
 
 
 def test_checkpointed_build_resumes(spark, tmp_path):
@@ -430,13 +458,13 @@ def test_checkpointed_build_shares_the_scorer_fit(spark, tmp_path, monkeypatch):
         "doc_id long, content string",
     )
 
-    def fit(path, **kw):
+    def fit(path):
         _, params = checkpointed_build(
             spark, corpus, str(tmp_path / path), method="lucene", base_rate="auto"
         )
         docs = spark.read.parquet(str(tmp_path / path / "docs"))
         t = BayesianBM25SparkScorer(method="lucene", base_rate="auto").index(
-            docs, **kw
+            docs
         ).transform
         want = {"alpha": t.alpha, "beta": t.beta, "base_rate": t.base_rate}
         assert params == pytest.approx(want, rel=1e-12)
@@ -452,7 +480,7 @@ def test_checkpointed_build_shares_the_scorer_fit(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(estimate, "ESTIMATION_CAP", 0)
     monkeypatch.setattr(estimate, "estimate_parameters_distributed", spy)
-    fit("distributed", estimation_cap=0)
+    fit("distributed")
     assert len(calls) == 2  # the build job and index() both took it
 
 
@@ -726,8 +754,7 @@ def _bounds_and_tau(
     # ONE scan of block_max; the repartition materializes an exchange
     # that both downstream aggregations reuse (profiled: without it the
     # 20M-row cache is scanned once per phase).
-    key, qb = _query_blocks(block_max, query_terms)
-    qb = qb.repartition("query_id")
+    qb = _query_blocks(block_max, query_terms).repartition("query_id")
 
     bounds = qb.groupBy("query_id", "block_id").agg(
         F.sum("max_contrib").alias("ub"),
@@ -751,13 +778,13 @@ def _bounds_and_tau(
 
     # rule 2 (is_first dedupes duplicate query tokens)
     per_term = qb.filter(F.col("is_first"))
-    w2 = Window.partitionBy("query_id", key).orderBy(
+    w2 = Window.partitionBy("query_id", "term_id").orderBy(
         F.desc("min_contrib"), F.asc("block_id")
     )
     cum = per_term.withColumn("__cum", F.sum("n").over(w2))
     tau_t = (
         cum.filter((F.col("__cum") >= k) & (F.col("__cum") - F.col("n") < k))
-        .groupBy("query_id", key)
+        .groupBy("query_id", "term_id")
         .agg(F.max("min_contrib").alias("tau_t"))
     )
     rule2 = tau_t.groupBy("query_id").agg(F.max("tau_t").alias("tau2"))

@@ -64,3 +64,19 @@ def test_build_then_query_job_roundtrip(spark, tmp_path, capsys):
     assert _sealed_state(idx_dir) == before
     assert query.main(argv) == 0
     assert _rows(spark.read.parquet(res)) == got
+
+
+def test_build_job_assigns_dense_ids_to_a_corpus_without_doc_id(spark, tmp_path):
+    """A --corpus without doc_id gets dense ids 0..n-1 from
+    zip_with_index_docs; the docs stage tokenizes its content once."""
+    from bayesian_bm25_js_spark.sources.corpus import synthesize_code_corpus
+
+    n = 60
+    corpus = str(tmp_path / "corpus")
+    synthesize_code_corpus(spark, n).drop("doc_id").repartition(3).write.parquet(corpus)
+    idx_dir = tmp_path / "idx"
+    assert _job("build_index_job").main(["--corpus", corpus, "--out", str(idx_dir)]) == 0
+    docs = spark.read.parquet(str(idx_dir / "docs"))
+    assert docs.columns == ["doc_id", "tokens"]
+    assert sorted(r["doc_id"] for r in docs.collect()) == list(range(n))
+    assert json.loads((idx_dir / "meta.json").read_text())["n_docs"] == n

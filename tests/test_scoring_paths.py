@@ -154,9 +154,10 @@ def test_distributed_estimators_match_driver(spark, small_idx):
     scored.unpersist()
 
 
-def test_scorer_distributed_estimation_path(spark, small_idx):
-    """estimation_cap=0 forces the distributed estimators; parameters
-    agree with the driver path on the same corpus."""
+def test_scorer_distributed_estimation_path(spark, small_idx, monkeypatch):
+    """estimate.ESTIMATION_CAP = 0 forces the distributed estimators;
+    parameters agree with the driver path on the same corpus."""
+    from bayesian_bm25_js_spark.operators import estimate
     from bayesian_bm25_js_spark.functions.prng import mulberry32
     from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
 
@@ -169,7 +170,8 @@ def test_scorer_distributed_estimation_path(spark, small_idx):
         [(i, t) for i, t in enumerate(corpus)], "doc_id long, tokens array<string>"
     )
     s_driver = BayesianBM25SparkScorer(base_rate="auto").index(docs)
-    s_dist = BayesianBM25SparkScorer(base_rate="auto").index(docs, estimation_cap=0)
+    monkeypatch.setattr(estimate, "ESTIMATION_CAP", 0)
+    s_dist = BayesianBM25SparkScorer(base_rate="auto").index(docs)
     assert s_dist.transform.beta == pytest.approx(s_driver.transform.beta, rel=1e-12)
     assert s_dist.transform.alpha == pytest.approx(s_driver.transform.alpha, rel=1e-9)
     assert s_dist.base_rate == pytest.approx(s_driver.base_rate, rel=1e-6)
