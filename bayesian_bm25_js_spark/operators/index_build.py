@@ -72,7 +72,7 @@ def layout_grain(base_partitions: int, parallelism: int, n_docs: int) -> int:
     wave — measured at 100k docs / 32 slots, a 40-partition layout ran
     the cache build as 32 + 8 straggler tasks at 10.7s wall vs 4.9s for
     the even 64 (two full waves). Rounding to the BASE grain keeps the
-    result a pure function of (est_rows, config) — never of core count
+    result a pure function of (n_docs, config) — never of core count
     — so every local[N] level of the scaling sweep still plans
     identically (that protocol pins the layout explicitly anyway)."""
     need = -(-DESIGN_BATCH_WIDTH * max(0, n_docs) // SPILL_FREE_ENTRIES_PER_TASK)
@@ -454,6 +454,10 @@ def assemble_index(
             r["term"]
             for r in term_stats.filter(F.col("term_id") == tid).limit(2).collect()
         )
+        if cache:
+            # no caller gets a handle on the failed build's caches
+            for table in (term_stats, postings, doc_stats):
+                table.unpersist()
         raise RuntimeError(
             f"xxhash64 term_id collision detected (term_id={tid}): terms "
             f"{terms} would share postings; rewrite one of them in the "

@@ -22,8 +22,8 @@ top-k as new engine surface, Spark-first:
 * Scoring treats the phrase as a pseudo-term: df = docs containing
   the phrase (window count per query — no driver action, no second
   pass over the match), idf from the index's idf policy, tf-normalized
-  BM25 exactly like a single-term query, then the engine's two-phase
-  salted top-k.
+  BM25 exactly like a single-term query, then the engine's top-k
+  (scoring.top_k).
 
 Batch-first like the rest of the query path: `phrase_topk` takes a
 whole batch of phrases and runs ONE plan; per-batch cost amortizes
@@ -247,19 +247,19 @@ def phrase_topk(
     """-> (query_id, rank, doc_id, tf, score): exact-phrase BM25 top-k
     (the phrase scored as a pseudo-term, see _pseudo_term_topk)."""
     return _pseudo_term_topk(
-        index, phrase_match(index, phrases, candidate_limit), len(phrases), k
+        index, phrase_match(index, phrases, candidate_limit), k
     )
 
 
 def _pseudo_term_topk(
-    index: InvertedIndex, matched: DataFrame, n_queries: int, k: int
+    index: InvertedIndex, matched: DataFrame, k: int
 ) -> DataFrame:
     """Shared scoring tail of phrase_topk/proximity_topk: matched
     (query_id, doc_id, dl, tf) scored as a pseudo-term — df =
     matched-doc count per query (a window count over the already-
     (query)-keyed match output — no second match pass, no driver
     action), idf via the index's idf policy, standard tf
-    normalization, then the engine's two-phase salted top-k with the
+    normalization, then the engine's top-k (scoring.top_k) with the
     (desc round(score,6), asc doc_id) tie-break."""
     from pyspark.sql.window import Window
 
@@ -271,11 +271,7 @@ def _pseudo_term_topk(
         "score",
         idf_column(pdf, index.n_docs, index.method) * tf_norm,
     )
-    out = top_k(
-        scored.select("query_id", "doc_id", "tf", "score"),
-        k,
-        est_rows=n_queries * max(1, index.n_docs),
-    )
+    out = top_k(scored.select("query_id", "doc_id", "tf", "score"), k)
     return out.select(
         "query_id",
         F.col("rank").cast("int").alias("rank"),
@@ -436,8 +432,5 @@ def proximity_topk(
     Same pseudo-term scoring as phrase_topk — df = docs with ≥1
     qualifying window, tf = minimal-cover count (_pseudo_term_topk)."""
     return _pseudo_term_topk(
-        index,
-        proximity_match(index, queries, window, candidate_limit),
-        len(queries),
-        k,
+        index, proximity_match(index, queries, window, candidate_limit), k
     )

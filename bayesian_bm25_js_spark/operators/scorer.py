@@ -241,8 +241,7 @@ class BayesianBM25SparkScorer:
         it, WAND; inf: none does, exhaustive). Only the densified
         scorer, which pruning cannot serve, bypasses it."""
         if dense:
-            est = len(qlists) * max(1, self._index.n_docs)
-            return top_k(self._score(qlists, dense), k, est_rows=est)
+            return top_k(self._score(qlists, dense), k)
         from bayesian_bm25_js_spark.operators.wand import (
             DEFAULT_ROUTER_FLOOR,
             auto_topk,
@@ -285,7 +284,7 @@ class BayesianBM25SparkScorer:
         strategy: "auto" (default) routes each batch by a cost model
         over index metadata (wand.auto_topk / route_queries): block-max
         WAND when the postings it is estimated to skip reach the
-        router floor, the salted exhaustive scorer otherwise. The
+        router floor, the exhaustive scorer otherwise. The
         estimate (wand.estimate_prunable_volume) takes from each query
         its rarest term with df ≥ k, which sets WAND's threshold, and
         counts the blocks outside that term as skippable; a query with

@@ -13,8 +13,8 @@ The reference's postings walk (bm25.ts:105-127) becomes:
                 scorer.ts:549-564)
         dl    = first(dl)
     → window top-k (desc score, asc doc_id)           rank-identical
-                                                      tie-break (JS
-                                                      stable sort)
+      partial limit per doc_id partition, then one    tie-break (JS
+      query_id exchange of ≤ k rows per partition     stable sort)
     → calibration pandas UDF (Arrow-vectorized NumPy kernel)
 
 Float64 parity details:
@@ -310,13 +310,6 @@ def densify_scores(
     )
 
 
-# Phase-1 grain target: rows one phase-1 task can sort entirely in
-# execution memory without spilling (profiled: ~1.9M rows/task spilled
-# ~2 GB at 2000 queries x 300k docs x 32 partitions; 470k/task at 128
-# partitions stayed in memory with headroom).
-P1_TARGET_ROWS = 500_000
-
-
 def top_k(
     scores: DataFrame,
     k: int,
@@ -326,7 +319,8 @@ def top_k(
     est_rows: Optional[int] = None,
 ) -> DataFrame:
     """Per-query top-k with the mandatory (desc score, asc doc_id)
-    tie-break (bm25.ts:139-144 via JS stable sort).
+    tie-break (bm25.ts:139-144 via JS stable sort): one row_number
+    window over query_id, filtered to rank <= k.
 
     round_dp (default 6): rank on round(score, 6) — the engine's float
     policy (see __spark_entry__ docstring). With the plain-sum scoring
@@ -336,54 +330,26 @@ def top_k(
     6 dp, equal-at-6dp docs tie-break deterministically by doc_id.
     round_dp=None ranks raw-score bits (exact_order fixture parity).
 
-    two_phase=True (default, the scale path): a single window
-    partitioned only by query_id funnels EVERY scored doc of a query
-    through one task — the per-query skew bottleneck at 10^9 matched
-    docs. Phase 1 takes local top-k within (query_id, hash(doc_id) %
-    salt) slices — JVM-side window, never Python (an Arrow round-trip
-    of the full scored stream measured 3x slower); phase 2 ranks the
-    ≤ salt·k survivors per query. The global top-k is contained in the
-    union of slice top-ks, so the result is identical (same tie-break
-    in both phases).
+    Skew is bounded by Spark itself: for `row_number() <= k` its
+    optimizer (InferWindowGroupLimit, while k is at most
+    spark.sql.optimizer.windowGroupLimitThreshold) plans a partial
+    WindowGroupLimit under the query_id exchange. score_queries and
+    wand_topk rows arrive partitioned by doc_id (the cached layout), so
+    the sort and the partial limit run in the scoring aggregate's
+    stage, and the one query_id exchange carries at most k rows per
+    (query, partition) instead of the whole scored stream. Rows already
+    partitioned by query_id (phrase's df window) need no exchange and
+    get no partial limit. Above the threshold the plan is the plain
+    window, with the same rows.
+
+    two_phase, salt and est_rows are accepted and ignored: they sized
+    an explicit salted pre-ranking exchange that the partial limit
+    replaces, and bench.py and perfbench still pass them.
     """
     sort_score = (
         F.col("score") if round_dp is None else F.round(F.col("score"), round_dp)
     )
-    order = [F.desc(sort_score), F.asc("doc_id")]
-    if two_phase:
-        # Phase 1 sorts the ENTIRE scored stream within its window
-        # groups; at the default shuffle grain (~1 partition per core)
-        # each task sorts scored_rows/partitions rows and spills
-        # (measured: 2 GB/batch at 2000 queries x 300k docs x 32
-        # partitions). Pin this one exchange explicitly on exactly the
-        # window keys, so the window adds NO second exchange, and pick
-        # its grain from est_rows (callers pass the driver-known upper
-        # bound n_queries x n_docs): coarse (= shuffle.partitions) when
-        # the stream fits one sort per task, up to 4x finer when it
-        # would spill. A FIXED 4x grain measured 1.8x slower on narrow
-        # batches (200 queries x 50k docs: tiny fine partitions with
-        # AQE off can't coalesce); without est_rows the scale-safe 4x
-        # is kept. The grain is a pure function of (est_rows, config),
-        # never of core count — every local[N] level of the scaling
-        # sweep runs the identical plan (the cap argument requires it).
-        scores = scores.withColumn(
-            "__slice", F.pmod(F.xxhash64("doc_id"), F.lit(salt))
-        )
-        base = int(
-            scores.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        if est_rows is None:
-            n_p1 = 4 * base
-        else:
-            n_p1 = base * min(
-                4, max(1, -(-int(est_rows) // (P1_TARGET_ROWS * base)))
-            )
-        scores = scores.repartition(n_p1, "query_id", "__slice")
-        w1 = Window.partitionBy("query_id", "__slice").orderBy(*order)
-        scores = scores.withColumn("__r1", F.row_number().over(w1)).filter(
-            F.col("__r1") <= k
-        ).drop("__r1", "__slice")
-    w = Window.partitionBy("query_id").orderBy(*order)
+    w = Window.partitionBy("query_id").orderBy(F.desc(sort_score), F.asc("doc_id"))
     return (
         scores.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

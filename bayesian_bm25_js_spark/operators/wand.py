@@ -250,7 +250,7 @@ def route_queries(
       per-batch cost that pays off only when the scoring fan-out they
       avoid is large. estimate_prunable_volume estimates that avoidable
       volume, in postings, from n_docs, block_size, k and the batch's
-      df. Below min_prunable_postings the whole batch takes the salted
+      df. Below min_prunable_postings the whole batch takes the
       exhaustive scorer; at or above it, the whole batch takes WAND.
     * Why not split the batch and send stop-word queries to their own
       exhaustive pipeline? Two pipelines duplicate the scans of shared
@@ -393,8 +393,8 @@ def auto_topk(
     hot_df_frac: Optional[float] = None,
     min_prunable_postings: int = DEFAULT_ROUTER_FLOOR,
 ) -> DataFrame:
-    """Selectivity router: pick block-max-WAND or the salted exhaustive
-    scorer for the batch — both rank-identical under the 6-dp policy,
+    """Selectivity router: pick block-max-WAND or the exhaustive scorer
+    for the batch — both rank-identical under the 6-dp policy,
     so routing is purely a cost decision (route_queries decides and
     records it; estimate_prunable_volume is the kept-fraction estimate
     it rests on).
@@ -419,13 +419,8 @@ def auto_topk(
     route = route_queries(index, queries, min_prunable_postings, k, block_size)
     qdf = queries_to_df(index.spark, queries)
     terms = sorted({t for q in queries for t in q})
-    est = len(queries) * index.n_docs
     if route["decision"] == "exhaustive":
-        return top_k(
-            score_queries(index, qdf, terms_filter=terms),
-            k,
-            est_rows=est,
-        )
+        return top_k(score_queries(index, qdf, terms_filter=terms), k)
     return wand_topk(
         index,
         qdf,
@@ -433,7 +428,6 @@ def auto_topk(
         block_max=block_max,
         block_size=block_size,
         terms_filter=terms,
-        est_rows=est,
     )
 
 
@@ -468,10 +462,8 @@ def wand_topk(
     terms_filter: the workload's distinct terms, when known client-side
       — prunes the cached columnar scans batch-wise (sorted-by-term
       caches make the In-filter stats-effective).
-    est_rows: scored-stream size bound (n_queries × n_docs) for the
-      final top-k's phase-1 grain (scoring.top_k) — callers that know
-      the batch width should pass it so narrow batches keep the coarse
-      exchange.
+    est_rows: accepted and ignored (scoring.top_k sizes nothing from
+      it any more); bench.py and perfbench still pass it.
     block_max: the block-max table to bound with; None (the default)
       takes the index's memo, index.block_max(block_size).
     The survivor key (_survivor_key) holds query ids up to a bound
@@ -546,7 +538,7 @@ def wand_topk(
         .withColumn("__qb", pack)
         .join(surv, "__qb")
     )
-    ranked = top_k(_score_aggregate(index, joined), k, est_rows=est_rows)
+    ranked = top_k(_score_aggregate(index, joined), k)
     if not return_stats:
         return ranked
     return ranked, stats

@@ -18,25 +18,32 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     return df._jdf.queryExecution().explainString(j_mode)
 
 
-def plan_nodes(df: DataFrame) -> list:
-    """Node names of the physical plan the query will actually EXECUTE,
-    in pre-order. Walks the tree JVM-side: a printed-plan regex
-    over-matches because formatted/simple explain both include cached
-    relations' DEFINITION subtrees for provenance — those already ran
-    at cache-build time and don't re-execute per query. The walk stops
-    at InMemoryTableScan leaves and enters an adaptive plan through its
-    initial plan."""
+def plan_tree(df: DataFrame) -> list:
+    """(depth, JVM node) for each node of the physical plan the query
+    will actually EXECUTE, in pre-order. Walks the tree JVM-side: a
+    printed-plan regex over-matches because formatted/simple explain
+    both include cached relations' DEFINITION subtrees for provenance —
+    those already ran at cache-build time and don't re-execute per
+    query. The walk stops at InMemoryTableScan leaves and enters an
+    adaptive plan through its initial plan."""
+    out = []
 
-    def walk(node) -> list:
+    def walk(node, depth: int) -> None:
         if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            return walk(node.initialPlan())
-        names = [node.nodeName()]
+            return walk(node.initialPlan(), depth)
+        out.append((depth, node))
         children = node.children()
         for i in range(children.size()):
-            names += walk(children.apply(i))
-        return names
+            walk(children.apply(i), depth + 1)
 
-    return walk(df._jdf.queryExecution().executedPlan())
+    walk(df._jdf.queryExecution().executedPlan(), 0)
+    return out
+
+
+def plan_nodes(df: DataFrame) -> list:
+    """Node names of the executed physical plan (plan_tree), in
+    pre-order."""
+    return [node.nodeName() for _, node in plan_tree(df)]
 
 
 def count_exchanges(df: DataFrame) -> int:

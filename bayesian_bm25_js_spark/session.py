@@ -67,7 +67,7 @@ def query_mode(spark: SparkSession):
     between shuffle stages — pure serial time that does not shrink
     with executor count. The query path's intermediates are bounded
     (bounds/τ tables ~ Σ_q tokens×blocks; survivors broadcast) and its
-    skew is handled explicitly (salted two-phase top-k, term_id
+    skew is bounded by the plan itself (partial top-k limit, term_id
     interning), so AQE has nothing left to fix there: disabling it
     measured 19.6s → 13.4s per warm batch (+46% q/s) and cut the
     driver-serial residual 3.1s → 1.8s. Index BUILDS keep AQE — their

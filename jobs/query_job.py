@@ -15,8 +15,8 @@ Local smoke:
 Results: (query_id, rank, doc_id, score, probability) — query_id indexes
 into the input line order. The job is
 BayesianBM25SparkScorer.from_saved(...).retrieve(...): --strategy auto
-routes each batch between block-max WAND and the salted exhaustive
-scorer (operators/wand.route_queries); wand/exhaustive force one path
+routes each batch between block-max WAND and the exhaustive scorer
+(operators/wand.route_queries); wand/exhaustive force one path
 by pinning the router's floor at 0 / infinity. The route record
 (decision, proxy volume against the floor, estimated kept fraction) is
 printed to stderr as one `route {...}` JSON line.

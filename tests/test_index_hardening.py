@@ -383,7 +383,8 @@ def test_term_id_collision_fails_loudly(spark, tmp_path, monkeypatch, build):
     """Every assembly runs the term_id collision check: with xxhash64
     patched to a constant, every term shares one term_id, and the batch
     builds and the streaming loader all raise instead of merging the
-    terms' postings."""
+    terms' postings. A failed build leaves nothing persisted: the
+    caller holds no handle to unpersist its tables."""
     import json
 
     from pyspark.sql import functions as pyspark_functions
@@ -406,6 +407,7 @@ def test_term_id_collision_fails_loudly(spark, tmp_path, monkeypatch, build):
     monkeypatch.setattr(
         pyspark_functions, "xxhash64", lambda *cols: lit(7).cast("long")
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match="term_id collision"):
         if build == "inverted":
             build_inverted_index(docs)
@@ -413,6 +415,7 @@ def test_term_id_collision_fails_loudly(spark, tmp_path, monkeypatch, build):
             build_positional_index(docs, cache=False)
         else:
             load_streaming_index(spark, path)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_checkpointed_build_resumes(spark, tmp_path):

@@ -2,10 +2,11 @@
 
 These pin the plans, not just the results: query side broadcast, filter
 pushdown into parquet scans, column pruning, bounded shuffle counts,
-and two-phase top-k equivalence.
+and a top-k that ships at most k rows per (query, partition).
 """
 
 import re
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +23,7 @@ from bayesian_bm25_js_spark.plans.audit import (
     count_exchanges,
     has_broadcast_join,
     plan_string,
+    plan_tree,
     pushed_filters,
     read_schema,
 )
@@ -62,14 +64,63 @@ def test_saved_postings_pushdown(spark, idx, tmp_path):
     assert "idf" not in rs and "dl" not in rs, rs
 
 
-def test_two_phase_topk_identical(spark, idx):
-    qdf = queries_to_df(spark, [["cat"], ["dog", "the"], ["machine", "learning"]])
+def topk_exchange(df) -> tuple:
+    """-> (the first shuffle exchange the executed plan meets from its
+    root, the node strings below it). For a ranked frame that exchange
+    is the top-k window's."""
+    tree = [(d, n.nodeName(), n.simpleString(100)) for d, n in plan_tree(df)]
+    i = next(i for i, (_, name, _) in enumerate(tree) if name == "Exchange")
+    below = []
+    for depth, _, text in tree[i + 1:]:
+        if depth <= tree[i][0]:
+            break
+        below.append(text)
+    return tree[i][2], below
+
+
+def assert_partial_topk(df):
+    """The executed plan ranks through ONE query_id exchange with
+    Spark's partial WindowGroupLimit below it, and holds no salted or
+    explicitly repartitioned pre-ranking phase."""
+    text = "\n".join(n.simpleString(100) for _, n in plan_tree(df))
+    assert "__slice" not in text and "REPARTITION_BY_NUM" not in text, text
+    on_query_id = r"Exchange hashpartitioning\(query_id#\d+L?, \d+\), ENSURE_REQ"
+    assert len(re.findall(on_query_id, text)) == 1, text
+    exchange, below = topk_exchange(df)
+    assert re.match(on_query_id, exchange), text
+    assert [n for n in below if re.match(r"WindowGroupLimit .*, Partial$", n)], text
+
+
+def _driver_topk(rows, k, key):
+    out, ranks = [], {}
+    for r in sorted(rows, key=key):
+        rank = ranks[r["query_id"]] = ranks.get(r["query_id"], 0) + 1
+        if rank <= k:
+            out.append((r["query_id"], rank, r["doc_id"], r["score"]))
+    return out
+
+
+def test_topk_matches_driver_sort(spark, idx):
+    """top_k equals a driver-side sort of the collected scores by
+    (query_id, -round(score, 6), doc_id), ties included, for every k;
+    round_dp=None ranks on the raw score."""
+    qdf = queries_to_df(
+        spark, [["cat"], ["dog", "the"], ["machine", "learning"], ["the"]]
+    )
     scores = score_queries(idx, qdf)
-    one = top_k(scores, 3, two_phase=False).orderBy("query_id", "rank").collect()
-    two = top_k(scores, 3, two_phase=True, salt=4).orderBy("query_id", "rank").collect()
-    assert [(r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in one] == [
-        (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in two
-    ]
+    rows = scores.withColumn("r6", F.round("score", 6)).collect()
+    for k in (1, 2, 3, 10):
+        got = [
+            (r["query_id"], r["rank"], r["doc_id"], r["score"])
+            for r in top_k(scores, k).orderBy("query_id", "rank").collect()
+        ]
+        assert got == _driver_topk(
+            rows, k, lambda r: (r["query_id"], -r["r6"], r["doc_id"])
+        )
+        raw = top_k(scores, k, round_dp=None).orderBy("query_id", "rank")
+        assert [
+            (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in raw.collect()
+        ] == _driver_topk(rows, k, lambda r: (r["query_id"], -r["score"], r["doc_id"]))
 
 
 def test_dense_path_not_used_by_default_retrieve_sparse(spark, idx):
@@ -120,9 +171,10 @@ def test_wand_scoring_join_is_broadcast(spark, idx):
 
 
 def test_multi_field_retrieve_two_phase_topk(spark):
-    """Multi-field retrieve must not rank through a single-partition
-    window: phase 1 slices candidates by (query_id, hash(doc_id)%salt)
-    before the constant-query_id phase-2 window (VERDICT r02 #4)."""
+    """Multi-field retrieve must not funnel every candidate of a query
+    through one window task: Spark's partial WindowGroupLimit keeps at
+    most k rows per (query, partition) below the query_id exchange
+    (VERDICT r02 #4)."""
     from bayesian_bm25_js_spark.operators.multi_field import MultiFieldSparkScorer
 
     docs = spark.createDataFrame(
@@ -134,9 +186,7 @@ def test_multi_field_retrieve_two_phase_topk(spark):
     )
     mf = MultiFieldSparkScorer(["title", "body"]).index(docs)
     out = mf.retrieve(["cat", "dog"], k=5)
-    plan = plan_string(out)
-    # phase-1 salt expression must appear among the window partition keys
-    assert "pmod" in plan.lower(), plan
+    assert_partial_topk(out)
     rows = out.orderBy("rank").collect()
     assert [r["rank"] for r in rows] == list(range(1, 6))
 
@@ -172,44 +222,92 @@ def test_postings_scan_idf_carry_modes(spark, idx):
     assert any("idf" in names for names in scans), scans
 
 
-def test_topk_phase1_single_fine_exchange(spark, idx):
-    """Phase-1 top-k repartitions on exactly the window keys at 4x the
-    shuffle grain: the window must reuse that exchange (no second
-    shuffle of the full scored stream) — the 2 GB/batch sort-spill fix
-    depends on both properties."""
+def test_topk_adds_one_query_id_exchange(spark, idx):
+    """top_k adds exactly one exchange on top of the scoring plan, on
+    query_id, with the partial limit below it: the scored stream never
+    crosses a shuffle whole, and the aggregate stays in the doc_id
+    layout partitions."""
     scores = score_queries(idx, queries_to_df(spark, [["cat", "dog"]]))
-    base = count_exchanges(scores)
     ranked = top_k(scores, 3)
-    # phase-1 repartition + phase-2 query_id exchange: exactly two on
-    # top of the scoring plan — a third would mean the window re-added
-    # its own shuffle after the explicit repartition.
-    assert count_exchanges(ranked) == base + 2, plan_string(ranked)
-    expected = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    plan = plan_string(ranked)
-    assert "hashpartitioning(query_id" in plan, plan
-    assert f", {expected})" in plan, plan
+    assert count_exchanges(ranked) == count_exchanges(scores) + 1, plan_string(ranked)
+    assert_partial_topk(ranked)
 
 
-def test_topk_phase1_grain_adapts_to_est_rows(spark, idx):
-    """The phase-1 grain is a pure function of the caller's scored-row
-    estimate: coarse (= shuffle.partitions) for narrow batches — a
-    fixed 4x grain measured 1.8x slower at 200 queries x 50k docs with
-    AQE off — and 4x finer when the stream would spill a per-task
-    sort. Never a function of core count (scaling-sweep invariance)."""
-    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
+def _masked_plan(df) -> str:
+    text = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"plan_id=\d+", "plan_id=_", re.sub(r"#\d+L?\b", "#_", text))
+
+
+def test_topk_plan_ignores_est_rows(spark, idx):
+    """est_rows, two_phase and salt are accepted and ignored: the plan
+    is byte-identical whatever the caller passes."""
     scores = score_queries(idx, queries_to_df(spark, [["cat", "dog"]]))
+    plans = {
+        _masked_plan(top_k(scores, 3, **kw))
+        for kw in (
+            {"est_rows": 1000},
+            {"est_rows": 10**9},
+            {"est_rows": None},
+            {"two_phase": False, "salt": 4},
+        )
+    }
+    assert len(plans) == 1, plans
 
-    def p1_grains(df):
-        plan = plan_string(df)
-        return {
-            int(m)
-            for m in re.findall(
-                r"hashpartitioning\(query_id#\d+L?, __slice#\d+L?, (\d+)\)", plan
-            )
-        }
 
-    assert p1_grains(top_k(scores, 3, est_rows=1000)) == {base}
-    assert p1_grains(top_k(scores, 3, est_rows=10**9)) == {4 * base}
+@pytest.mark.parametrize("strategy", ["exhaustive", "wand", "dense"])
+def test_retrieve_plans_take_the_partial_limit(spark, warm_wand, strategy):
+    scorer, queries = warm_wand
+    if strategy == "dense":
+        out = scorer.retrieve(queries, k=3, dense=True)
+    else:
+        out = scorer.retrieve(queries, k=3, strategy=strategy)
+        assert scorer.index_._last_route["decision"] == strategy
+    assert_partial_topk(out)
+
+
+def test_phrase_topk_ranks_in_its_df_exchange(spark):
+    """phrase/proximity count the pseudo-term df with a window over
+    query_id, so the match stream is already partitioned by query_id:
+    the top-k window adds no exchange of its own, and the plan has one
+    query_id exchange and no salted phase."""
+    from bayesian_bm25_js_spark.operators.index_build import build_positional_index
+    from bayesian_bm25_js_spark.operators.phrase import phrase_topk, proximity_topk
+
+    pidx = build_positional_index(docs_df(spark, SMALL_CORPUS), method="lucene")
+    try:
+        for out in (
+            phrase_topk(pidx, [["the", "cat"], ["the", "dog"]], 3),
+            proximity_topk(pidx, [["the", "cat"]], 3, 3),
+        ):
+            text = "\n".join(n.simpleString(100) for _, n in plan_tree(out))
+            assert "__slice" not in text and "REPARTITION_BY_NUM" not in text, text
+            assert text.count("Exchange hashpartitioning(query_id") == 1, text
+            assert count_exchanges(out) == 1, text
+    finally:
+        pidx.unpersist()
+
+
+def test_topk_without_window_group_limit(spark, warm_wand):
+    """With k above spark.sql.optimizer.windowGroupLimitThreshold Spark
+    plans the plain window: no WindowGroupLimit, identical rows. This is
+    the plan every k > 1000 gets at the default threshold."""
+    scorer, queries = warm_wand
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    cols = ["query_id", "rank", "doc_id", F.round("score", 6), F.round("probability", 6)]
+    want = scorer.retrieve(queries, k=3).select(*cols).collect()
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        out = scorer.retrieve(queries, k=3)
+        nodes = [n.nodeName() for _, n in plan_tree(out)]
+        got = out.select(*cols).collect()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert "WindowGroupLimit" not in nodes, nodes
+    assert sorted(got) == sorted(want)
 
 
 def test_layout_grain_sizing():
@@ -322,21 +420,83 @@ def test_warm_wand_retrieve_scans_no_python_rdd(spark, warm_wand):
     assert nodes.count("LocalTableScan") == 2, nodes
 
 
-def test_warm_wand_batch_job_count(spark, warm_wand):
-    """A warm routed WAND batch runs 7 Spark jobs (AQE on, the test
-    session): the two query-side broadcasts, the survivor exchange and
-    broadcast, the scoring aggregate's exchange, the top-k exchange and
-    the result. A new action on the hot path shows up here."""
-    scorer, queries = warm_wand
+def _batch_jobs(spark, group: str, run) -> int:
+    """Spark jobs one call of run() starts (status tracker, its own job
+    group)."""
     sc = spark.sparkContext
-    sc.setJobGroup("warm-wand-batch", "warm routed WAND retrieve")
+    sc.setJobGroup(group, "one warm retrieve batch")
     try:
-        scorer.retrieve(queries, k=3, router_floor=0).collect()
+        run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_wand_batch_job_count(spark, warm_wand):
+    """A warm routed WAND batch runs 6 Spark jobs (AQE on, the test
+    session): the two query-side broadcasts, the survivor exchange and
+    broadcast, the scoring stage (aggregate, sort and partial top-k
+    limit, query_id exchange) and the result. A new action on the hot
+    path shows up here."""
+    scorer, queries = warm_wand
+    jobs = _batch_jobs(
+        spark,
+        "warm-wand-batch",
+        lambda: scorer.retrieve(queries, k=3, router_floor=0).collect(),
+    )
     assert scorer.index_._last_route["decision"] == "wand"
-    assert len(sc.statusTracker().getJobIdsForGroup("warm-wand-batch")) == 7
+    assert jobs == 6
+
+
+def test_warm_exhaustive_batch_job_count(spark, warm_wand):
+    """A warm routed exhaustive batch whose terms the df memo has seen
+    runs 3 Spark jobs: the query-side broadcast, the scoring stage
+    (aggregate, sort and partial top-k limit, query_id exchange) and
+    the result. A batch with unseen terms adds the router's one df
+    lookup."""
+    scorer, queries = warm_wand
+    scorer.retrieve(queries, k=3).collect()
+    jobs = _batch_jobs(
+        spark,
+        "warm-exhaustive-batch",
+        lambda: scorer.retrieve(queries, k=3).collect(),
+    )
+    assert scorer.index_._last_route["decision"] == "exhaustive"
+    assert jobs == 3
+
+
+# py4j round trips that building one warm batch's plan makes, at most
+# (ROADMAP direction 1); lower them with each change that cuts calls.
+WARM_PLAN_PY4J_CALLS = {"exhaustive": 618, "wand": 950}
+
+
+@pytest.mark.parametrize("strategy", ["exhaustive", "wand"])
+def test_warm_batch_py4j_calls(spark, warm_wand, strategy):
+    """Building a warm routed batch's plan, all terms seen, costs at
+    most the pinned number of gateway calls: every Column, operator and
+    conf look-up is one round trip before the first action runs."""
+    scorer, queries = warm_wand
+    floor = 0 if strategy == "wand" else None
+    scorer.retrieve(queries, k=3, router_floor=floor).collect()
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    calls = []
+
+    def counting(*args, **kwargs):
+        # py4j's own thread deletes collected proxies through this call
+        if threading.get_ident() == caller:
+            calls.append(args)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        scorer.retrieve(queries, k=3, router_floor=floor)
+    finally:
+        client.send_command = send
+    assert scorer.index_._last_route["decision"] == strategy
+    assert len(calls) <= WARM_PLAN_PY4J_CALLS[strategy]
 
 
 def test_probabilities_batch_prunes_postings_scan(spark, warm_wand):

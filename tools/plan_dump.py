@@ -16,6 +16,11 @@ optimized and physical plans) of
   streaming.{postings,term_stats,doc_stats}   load_streaming_index over
                                               two ingest_epoch piles
   retrieve.search_wide                        one 200-query wide_batch
+  retrieve.wand                               the same batch, forced WAND
+  multi_field.retrieve                        MultiFieldSparkScorer
+                                              retrieve_batch of that batch
+                                              over (head, body) fields
+  phrase.phrase_topk                          50 phrase_batch phrases
 
 Expression ids, plan ids and the scratch directory are masked, so the
 same code on the same input gives the same bytes. Compare two checkouts with
@@ -40,6 +45,8 @@ sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
 CORES = 4
 K = 10
 WIDE_QUERIES = 200
+PHRASES = 50
+HEAD_TOKENS = 8
 
 
 def masked(text: str, work: str) -> str:
@@ -67,6 +74,8 @@ def main(argv=None) -> int:
         build_inverted_index,
         build_positional_index,
     )
+    from bayesian_bm25_js_spark.operators.multi_field import MultiFieldSparkScorer
+    from bayesian_bm25_js_spark.operators.phrase import phrase_topk
     from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
     from bayesian_bm25_js_spark.operators.tokenize import tokenize_column
     from bayesian_bm25_js_spark.session import get_spark
@@ -132,6 +141,8 @@ def main(argv=None) -> int:
 
         pindex = build_positional_index(docs, method="lucene")
         keep_tables("positional", pindex)
+        phrases = gen.phrase_batch(random.Random(args.seed), PHRASES)
+        keep("phrase.phrase_topk", phrase_topk(pindex, phrases, K))
         pindex.unpersist()
 
         stream = os.path.join(work, "stream")
@@ -153,7 +164,22 @@ def main(argv=None) -> int:
                 batch, k=K, router_floor=router_floor(args.files, WIDE_QUERIES)
             ),
         )
+        keep("retrieve.wand", scorer.retrieve(batch, k=K, strategy="wand"))
         scorer.index_.unpersist()
+
+        mf = MultiFieldSparkScorer(
+            ["head", "body"], method="lucene", base_rate=0.05,
+            transform_alpha=1.0, transform_beta=0.5,
+        ).index(
+            docs.select(
+                "doc_id",
+                F.slice("tokens", 1, HEAD_TOKENS).alias("head"),
+                F.col("tokens").alias("body"),
+            )
+        )
+        keep("multi_field.retrieve", mf.retrieve_batch(batch, k=K))
+        for field_scorer in mf.scorers.values():
+            field_scorer.index_.unpersist()
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
