@@ -13,7 +13,8 @@ Port of the reference's pseudo-query sampling + estimators
    used (parity requirement, SURVEY §2.4).
 
 fit_transform is the one entry point: BayesianBM25SparkScorer.index()
-and the build job's params stage (sources/checkpoints.py) both call it.
+calls it, and so does the build job, whose index stage
+(sources/checkpoints.py) runs index().
 """
 
 from __future__ import annotations
@@ -43,6 +44,9 @@ PSEUDO_QUERY_LEN = 5  # scorer.ts:212
 # Positive pseudo-query scores the driver estimators may collect; past
 # it, fit_transform switches to the distributed estimators.
 ESTIMATION_CAP = 2_000_000
+# Positive scores the distributed mixture/elbow estimators collect and
+# pool (a deterministic stride sample past it); read at call time.
+RESERVOIR = 200_000
 
 
 def median_js(values: np.ndarray) -> float:
@@ -270,7 +274,7 @@ def estimate_base_rate(
 #     row_number window (sorts spill; never materializes a group);
 #   * mixture/elbow base rate: pooled over a deterministic hash-strided
 #     reservoir (xxhash64(query_id, doc_id) % stride == 0) capped at
-#     `reservoir` rows — exact whenever total positives <= reservoir,
+#     RESERVOIR rows — exact whenever total positives <= RESERVOIR,
 #     documented approximation beyond.
 # ---------------------------------------------------------------------------
 
@@ -347,9 +351,7 @@ def estimate_parameters_distributed(
         pos.unpersist()
 
 
-def estimate_base_rate_distributed(
-    scored_df, n_docs: int, method: str, reservoir: int = 200_000
-) -> float:
+def estimate_base_rate_distributed(scored_df, n_docs: int, method: str) -> float:
     """Distributed twins of the base-rate estimators."""
     if method not in VALID_BASE_RATE_METHODS:
         raise ValueError(f'Unknown baseRateMethod: "{method}"')
@@ -387,7 +389,7 @@ def estimate_base_rate_distributed(
     total = pos.count()
     if total == 0:
         return 1e-6
-    stride = max(1, math.ceil(total / reservoir))
+    stride = max(1, math.ceil(total / RESERVOIR))
     sample = pos
     if stride > 1:
         sample = pos.filter(
@@ -418,7 +420,7 @@ def fit_transform(
     (read at call time) positive (query, doc) scores, estimation
     switches from the bit-exact driver estimators to the distributed
     ones (exact median/std; percentile thresholds via
-    streaming windows; EM/elbow over a bounded deterministic
+    streaming windows; EM/elbow over a RESERVOIR-sized deterministic
     reservoir) so a hot pseudo-query over a 10^12-doc corpus can never
     OOM the driver."""
     fitted_rate = None

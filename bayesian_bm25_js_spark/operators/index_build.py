@@ -211,19 +211,15 @@ class InvertedIndex:
             self._doc_id_range = (int(row[0] or 0), int(row[1] or 0))
         return self._doc_id_range
 
-    def laid_out(
-        self, cache: bool = True, layout_partitions: Optional[int] = None
-    ) -> "InvertedIndex":
+    def laid_out(self, layout_partitions: Optional[int] = None) -> "InvertedIndex":
         """A copy whose postings take the runtime layout (cached_layout)
-        and, with `cache`, are persisted: the one step that makes the
-        term-bucketed postings load_index scans queryable, with or
-        without positions. The copy starts without the doc-id-range and
-        block-max memos."""
+        and are persisted: the one step that makes the term-bucketed
+        postings load_index scans queryable, with or without positions.
+        The copy starts without the doc-id-range and block-max memos;
+        its unpersist() releases the persisted postings."""
         postings = cached_layout(
             self.postings, self.n_docs, layout_partitions=layout_partitions
-        )
-        if cache:
-            postings = postings.persist()
+        ).persist()
         return dataclasses.replace(self, postings=postings)
 
     def block_max(self, block_size: int) -> DataFrame:
@@ -264,10 +260,10 @@ def build_inverted_index(
     k1: float = 1.2,
     b: float = 0.75,
     method: str = "robertson",
-    cache: bool = True,
     layout_partitions: int | None = None,
 ) -> InvertedIndex:
-    """docs (doc_id, tokens array<string>) -> InvertedIndex.
+    """docs (doc_id, tokens array<string>) -> InvertedIndex, persisted
+    (its unpersist() releases the caches).
 
     Matches reference semantics: dl = raw token count including
     duplicates (bm25.ts:54), avgdl = total/n (bm25.ts:60), tf = exact
@@ -295,7 +291,8 @@ def build_inverted_index(
     and its spill cliff.
     """
     return assemble_index(
-        *term_frequencies(docs), k1, b, method, cache, layout_partitions
+        *term_frequencies(docs), k1, b, method,
+        layout_partitions=layout_partitions,
     )
 
 
@@ -304,7 +301,6 @@ def build_positional_index(
     k1: float = 1.2,
     b: float = 0.75,
     method: str = "robertson",
-    cache: bool = True,
     layout_partitions: Optional[int] = None,
 ) -> InvertedIndex:
     """build_inverted_index whose postings also carry `positions`: the
@@ -315,8 +311,8 @@ def build_positional_index(
     same.
     """
     return assemble_index(
-        *term_frequencies(docs, positions=True), k1, b, method, cache,
-        layout_partitions,
+        *term_frequencies(docs, positions=True), k1, b, method,
+        layout_partitions=layout_partitions,
     )
 
 
@@ -367,8 +363,10 @@ def assemble_index(
     from piles of its output) -> InvertedIndex.
 
     n_docs/avgdl, term_stats (df per term, idf, term_id), the idf join,
-    the cached layout, the optional persist and the term_id collision
-    check. Every index the engine builds goes through here."""
+    the cached layout, the persist and the term_id collision check.
+    Every index the engine builds goes through here; only
+    load_streaming_index, whose index stays a lazy plan over its delta
+    piles, passes cache=False."""
     check_method(method)
 
     # One tokenize pass serves both the scalar stats AND the doc_stats

@@ -254,7 +254,7 @@ class MultiFieldSparkScorer:
     # -- persistence -----------------------------------------------------------
     MULTI_FIELD_FORMAT_VERSION = 1
 
-    def save(self, path: str, n_buckets: int = 32) -> dict:
+    def save(self, path: str) -> dict:
         """Persist every per-field index (save_index layout under
         <path>/fields/<field>/, each with its estimated calibration)
         plus the fusion config in <path>/multi_field_meta.json.
@@ -264,7 +264,7 @@ class MultiFieldSparkScorer:
 
         self._ensure_indexed()
         for f in self._fields:
-            self._scorers[f].save(f"{path}/fields/{f}", n_buckets=n_buckets)
+            self._scorers[f].save(f"{path}/fields/{f}")
         meta = {
             "multi_field_format": self.MULTI_FIELD_FORMAT_VERSION,
             "fields": self._fields,
@@ -284,9 +284,7 @@ class MultiFieldSparkScorer:
         return meta
 
     @classmethod
-    def load(
-        cls, spark, path: str, cache: bool = True
-    ) -> "MultiFieldSparkScorer":
+    def load(cls, spark, path: str) -> "MultiFieldSparkScorer":
         """Reconstruct a queryable multi-field scorer from save():
         per-field indexes re-enter the runtime doc_id layout (see
         BayesianBM25SparkScorer.from_saved) and calibration params load
@@ -323,9 +321,7 @@ class MultiFieldSparkScorer:
             transform_beta=meta["transform_beta"],
         )
         scorer._scorers = {
-            f: BayesianBM25SparkScorer.from_saved(
-                spark, f"{path}/fields/{f}", cache=cache
-            )
+            f: BayesianBM25SparkScorer.from_saved(spark, f"{path}/fields/{f}")
             for f in meta["fields"]
         }
         scorer._num_docs = meta["num_docs"]

@@ -142,12 +142,12 @@ class BayesianBM25SparkScorer:
         return self
 
     # -- persistence -----------------------------------------------------------
-    def save(self, path: str, n_buckets: int = 32, packed: bool = False) -> dict:
+    def save(self, path: str, packed: bool = False) -> dict:
         """Persist index + estimated calibration under <path>/ (the
-        save_index layout: term-bucketed zstd parquet, meta.json
-        carrying the transform params). Round-trips through from_saved
-        with no re-estimation. `packed` is accepted and ignored: there
-        is one on-disk postings format."""
+        save_index layout: index_store.N_BUCKETS term buckets of zstd
+        parquet, meta.json carrying the transform params). Round-trips
+        through from_saved with no re-estimation. `packed` is accepted
+        and ignored: there is one on-disk postings format."""
         from bayesian_bm25_js_spark.sources.index_store import save_index
 
         self._ensure_indexed()
@@ -158,7 +158,6 @@ class BayesianBM25SparkScorer:
             transform_params={
                 "alpha": t.alpha, "beta": t.beta, "base_rate": t.base_rate,
             },
-            n_buckets=n_buckets,
         )
 
     @classmethod
@@ -167,7 +166,6 @@ class BayesianBM25SparkScorer:
         spark: SparkSession,
         path: str,
         packed: bool = False,
-        cache: bool = True,
         layout_partitions: Optional[int] = None,
     ) -> "BayesianBM25SparkScorer":
         """Reconstruct a queryable scorer from a save()d index: no
@@ -183,7 +181,7 @@ class BayesianBM25SparkScorer:
         from bayesian_bm25_js_spark.sources.index_store import load_index
 
         index, params = load_index(spark, path)
-        index = index.laid_out(cache, layout_partitions)
+        index = index.laid_out(layout_partitions)
         scorer = cls(k1=index.k1, b=index.b, method=index.method)
         scorer._index = index
         scorer._transform = BayesianProbabilityTransform(
@@ -268,7 +266,6 @@ class BayesianBM25SparkScorer:
         explain: bool = False,
         dense: bool = False,
         strategy: str = "auto",
-        max_batch_width: Optional[int] = None,
         router_floor: Optional[int] = None,
     ) -> DataFrame:
         """-> (query_id, rank, doc_id, score, probability [, trace cols]).
@@ -310,9 +307,9 @@ class BayesianBM25SparkScorer:
         offset per chunk — output is identical to one wide batch; each
         chunk's aggregate keeps its own chunk-width combine state, so
         per-task memory never crosses the cliff at the cost of one
-        extra postings-cache scan per chunk). max_batch_width overrides
-        the derived cap; for wider standing batches, size the index
-        build's layout_partitions up instead (see build_inverted_index).
+        extra postings-cache scan per chunk). For wider standing
+        batches, size the index build's layout_partitions up (see
+        build_inverted_index).
         """
         self._ensure_indexed()
         if strategy not in ("auto", "wand", "exhaustive"):
@@ -322,7 +319,7 @@ class BayesianBM25SparkScorer:
             )
         t = self._transform
         qlists = token_lists(queries)
-        cap = max_batch_width or self._spill_free_width()
+        cap = self._spill_free_width()
         if len(qlists) > cap and not dense:
             from functools import reduce
 

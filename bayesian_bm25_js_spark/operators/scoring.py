@@ -230,25 +230,15 @@ def _probe(table: DataFrame, query_terms: DataFrame) -> tuple:
     return table.drop("term"), qt
 
 
-def _score_aggregate(
-    index: InvertedIndex, joined: DataFrame, exact_order: bool = False
-) -> DataFrame:
+def _score_aggregate(index: InvertedIndex, joined: DataFrame) -> DataFrame:
     """(query_id, doc_id, pos, is_first, tf, dl, idf) rows -> per-(query,
-    doc) (score, tf_overlap, dl); see score_queries for exact_order."""
+    doc) (score, tf_overlap, dl); see score_queries for the sum."""
     contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
     joined = joined.select(
         "query_id", "doc_id", "pos", "is_first", "dl", contrib.alias("contrib")
     )
-    if exact_order:
-        score_agg = F.aggregate(
-            F.array_sort(F.collect_list(F.struct("pos", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        )
-    else:
-        score_agg = F.sum("contrib")
     return joined.groupBy("query_id", "doc_id").agg(
-        score_agg.alias("score"),
+        F.sum("contrib").alias("score"),
         F.sum(F.when(F.col("is_first"), 1).otherwise(0))
         .cast("int")
         .alias("tf_overlap"),
@@ -259,7 +249,6 @@ def _score_aggregate(
 def score_queries(
     index: InvertedIndex,
     query_terms: DataFrame,
-    exact_order: bool = False,
     terms_filter: Optional[Sequence[str]] = None,
 ) -> DataFrame:
     """-> (query_id, doc_id, score, tf_overlap, dl) for matched docs only.
@@ -267,28 +256,22 @@ def score_queries(
     Sparse output: docs with no matching term are absent (score
     semantically 0).
 
-    exact_order=False (default, the scale path): plain float64 SUM —
-    whole-stage-codegen'd HashAggregate with map-side combine; shuffle
-    carries one double per (query, doc). Differs from the reference's
-    left-to-right accumulation by ≤ a few ulp, invisible at the 6-dp
-    contract every oracle/rank comparison uses (profiled: the
-    collect_list variant spilled 28 GB per 150-query batch at 400k docs
-    and broke 8→32 scaling).
-
-    exact_order=True: bit-exact JS parity — per-doc contributions are
-    summed in query-token order via array_sort(collect_list(...)) +
-    aggregate(), because float64 addition is not associative
-    (SURVEY §4.4; bm25.ts:117-123). ObjectHashAggregate, memory-heavy:
-    fixture-parity runs only.
+    The score is a plain float64 SUM: whole-stage-codegen'd
+    HashAggregate with map-side combine; the shuffle carries one double
+    per (query, doc). float64 addition is not associative (SURVEY §4.4),
+    so it differs from the reference's left-to-right accumulation in
+    query-token order (bm25.ts:117-123) by ≤ a few ulp, invisible at the
+    6-dp contract every oracle/rank comparison uses
+    (tests/test_scoring_paths.py keeps the ordered sum as its reference;
+    profiled: that collect_list variant spilled 28 GB per 150-query
+    batch at 400k docs and broke 8→32 scaling).
     """
     # idf is read straight from the denormalized postings cache: carrying
     # it on the query side (a term_stats join per batch) measured a fixed
     # per-batch cost with no scan saving (50k docs: warm WAND CPU +51%).
     postings = _terms_filtered(index, index.postings, terms_filter)
     postings, qt = _probe(postings, query_terms)
-    return _score_aggregate(
-        index, postings.join(F.broadcast(qt), "term_id"), exact_order
-    )
+    return _score_aggregate(index, postings.join(F.broadcast(qt), "term_id"))
 
 
 def densify_scores(
@@ -328,7 +311,7 @@ def top_k(
     (combine order is plan-dependent), so ranking raw bits would make
     near-ties nondeterministic across plans (exhaustive vs WAND). At
     6 dp, equal-at-6dp docs tie-break deterministically by doc_id.
-    round_dp=None ranks raw-score bits (exact_order fixture parity).
+    round_dp=None ranks raw-score bits.
 
     Skew is bounded by Spark itself: for `row_number() <= k` its
     optimizer (InferWindowGroupLimit, while k is at most

@@ -11,12 +11,11 @@ atomicity; the markers give job-level idempotence.
 
 Stages:
   docs        tokenized (doc_id, tokens) parquet under <path>/docs
-  postings    build_inverted_index + save_index(path): the queryable
-              index layout (sources/index_store.py) at <path> itself
-  params      (alpha, beta, base_rate) from estimate.fit_transform,
-              the fit BayesianBM25SparkScorer.index() runs, written
-              into meta.json's "transform" so from_saved/load_index
-              see them
+  index       BayesianBM25SparkScorer.index(docs) then save(path): the
+              build, calibration fit and save the library runs, so
+              <path> itself is the queryable index layout
+              (sources/index_store.py) and its meta.json, written once
+              by save_index, carries the fitted transform
 """
 
 from __future__ import annotations
@@ -28,9 +27,6 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-_PARAMS = ("alpha", "beta", "base_rate")
 
 
 def _marker(path: str, stage: str) -> str:
@@ -72,13 +68,11 @@ def checkpointed_build(
     loaded, not recomputed. `path` is afterwards a save_index layout
     that from_saved reads directly.
     """
-    from bayesian_bm25_js_spark.operators.estimate import fit_transform
-    from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
     from bayesian_bm25_js_spark.operators.tokenize import tokenize_column
     from bayesian_bm25_js_spark.sources.index_store import (
         _partition_lineage,
         load_index,
-        save_index,
     )
 
     os.makedirs(path, exist_ok=True)
@@ -101,19 +95,20 @@ def checkpointed_build(
                 "partitions": lineage,
             },
         )
-    docs = spark.read.parquet(docs_path)
 
-    # -- stage: postings -------------------------------------------------------
-    if not stage_done(path, "postings"):
+    # -- stage: index ----------------------------------------------------------
+    if not stage_done(path, "index"):
         t0 = time.time()
-        built = build_inverted_index(docs, k1=k1, b=b, method=method)
+        scorer = BayesianBM25SparkScorer(
+            k1, b, method, alpha, beta, base_rate, base_rate_method
+        ).index(spark.read.parquet(docs_path))
         try:
-            meta = save_index(built, path)
+            meta = scorer.save(path)
         finally:
-            built.unpersist()
+            scorer.index_.unpersist()
         seal_stage(
             path,
-            "postings",
+            "index",
             {
                 "rows": sum(p["rows"] for p in meta["lineage"]),
                 "n_docs": meta["n_docs"],
@@ -121,24 +116,4 @@ def checkpointed_build(
                 "elapsed": round(time.time() - t0, 3),
             },
         )
-    index, _ = load_index(spark, path)
-
-    # -- stage: params ----------------------------------------------------------
-    if not stage_done(path, "params"):
-        t0 = time.time()
-        transform = dict(zip(_PARAMS, fit_transform(
-            index, docs, alpha, beta, base_rate, base_rate_method
-        )))
-        with open(f"{path}/meta.json") as f:
-            meta = json.load(f)
-        meta["transform"] = transform
-        with open(f"{path}/meta.json.tmp", "w") as f:
-            json.dump(meta, f, indent=2)
-        os.replace(f"{path}/meta.json.tmp", f"{path}/meta.json")
-        seal_stage(
-            path,
-            "params",
-            {**transform, "elapsed": round(time.time() - t0, 3)},
-        )
-    params = read_metrics(path, "params")
-    return index, {k: params[k] for k in _PARAMS}
+    return load_index(spark, path)

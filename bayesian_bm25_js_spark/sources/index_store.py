@@ -2,7 +2,8 @@
 
 Layout under <path>/:
   postings/        parquet (zstd, format v2 data pages), repartitioned by
-                   hash(term) into n_buckets, rows sorted (term, doc_id)
+                   hash(term) into N_BUCKETS (32, recorded in meta.json
+                   as n_buckets), rows sorted (term, doc_id)
                    within files — co-locates each term's postings for
                    merge/compaction and gives the term column tight
                    per-row-group min/max stats (the one on-disk
@@ -32,6 +33,10 @@ from pyspark.sql import functions as F
 
 from bayesian_bm25_js_spark.operators.index_build import InvertedIndex
 
+# Hash(term) buckets of the saved postings: one file per bucket.
+N_BUCKETS = 32
+
+
 def _partition_lineage(df, key: str) -> list:
     """Per-output-partition row counts — the lineage/metrics sidecar."""
     rows = (
@@ -46,11 +51,11 @@ def save_index(
     index: InvertedIndex,
     path: str,
     transform_params: Optional[dict] = None,
-    n_buckets: int = 32,
     packed: bool = False,
     block_size: int = 128,
 ) -> dict:
-    """Persist the index; returns the metadata dict written to meta.json.
+    """Persist the index; returns the metadata dict written to meta.json
+    (the one writer of an index's meta.json).
 
     `packed` and `block_size` are accepted and ignored: the postings
     are written once, as zstd parquet rows (see the module docstring).
@@ -66,7 +71,7 @@ def save_index(
 
     def _write_postings():
         (
-            index.postings.repartition(n_buckets, "term")
+            index.postings.repartition(N_BUCKETS, "term")
             .sortWithinPartitions("term", "doc_id")
             .write.mode("overwrite")
             .option("compression", "zstd")
@@ -100,7 +105,7 @@ def save_index(
         "k1": index.k1,
         "b": index.b,
         "method": index.method,
-        "n_buckets": n_buckets,
+        "n_buckets": N_BUCKETS,
         "transform": transform_params or {},
         "build_seconds": round(time.time() - t0, 3),
         "lineage": lineage,

@@ -143,15 +143,10 @@ def load_streaming_index(spark: SparkSession, path: str) -> InvertedIndex:
     )
 
 
-def compact_streaming_index(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    n_buckets: int = 32,
-) -> dict:
+def compact_streaming_index(spark: SparkSession, path: str, out_path: str) -> dict:
     """Fold the delta piles into the canonical term-bucketed store
     (sources/index_store.save_index). Returns the written meta."""
     from bayesian_bm25_js_spark.sources.index_store import save_index
 
     index = load_streaming_index(spark, path)
-    return save_index(index, out_path, n_buckets=n_buckets)
+    return save_index(index, out_path)

@@ -13,9 +13,12 @@ Local smoke:
 
 --out is the queryable index itself (the sources/index_store.py layout
 that jobs/query_job.py and BayesianBM25SparkScorer.from_saved read). The
-job is idempotent: re-submitting after a failure resumes from the last
-sealed stage (sources/checkpoints.py); a finished build re-submits as a
-no-op.
+job runs two sealed stages (sources/checkpoints.py): `docs` tokenizes
+the corpus to parquet, and `index` runs
+BayesianBM25SparkScorer(...).index(docs).save(--out), the build,
+calibration fit and save the library runs. It is idempotent:
+re-submitting after a failure resumes from the last sealed stage; a
+finished build re-submits as a no-op.
 """
 
 from __future__ import annotations

@@ -412,7 +412,7 @@ def test_term_id_collision_fails_loudly(spark, tmp_path, monkeypatch, build):
         if build == "inverted":
             build_inverted_index(docs)
         elif build == "positional":
-            build_positional_index(docs, cache=False)
+            build_positional_index(docs)
         else:
             load_streaming_index(spark, path)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
@@ -432,8 +432,10 @@ def test_checkpointed_build_resumes(spark, tmp_path):
     )
     idx, params = checkpointed_build(spark, corpus, path, method="lucene")
     assert idx.n_docs == len(SMALL_CORPUS)
-    assert stage_done(path, "docs") and stage_done(path, "postings") and stage_done(path, "params")
+    assert stage_done(path, "docs") and stage_done(path, "index")
     assert params["alpha"] is not None
+    index_metrics = read_metrics(path, "index")
+    assert index_metrics["n_docs"] == len(SMALL_CORPUS) and index_metrics["rows"] > 0
 
     # Resume with a DIFFERENT corpus: sealed stages must be loaded, not
     # recomputed — result still reflects the original build.
@@ -449,7 +451,7 @@ def test_checkpointed_build_resumes(spark, tmp_path):
 
 
 def test_checkpointed_build_shares_the_scorer_fit(spark, tmp_path, monkeypatch):
-    """The build job's params stage is the facade's calibration fit:
+    """The build job's index stage runs the facade's calibration fit:
     the same (alpha, beta, base_rate) as index() on the same docs, and
     past the estimation cap the same distributed estimators."""
     from bayesian_bm25_js_spark.operators import estimate
@@ -963,11 +965,11 @@ def test_one_cached_layout_rule(spark, tmp_path):
     docs = docs_df(spark, SMALL_CORPUS)
     n_parts = lambda df: df.rdd.getNumPartitions()  # noqa: E731
 
-    idx = build_inverted_index(docs, method="lucene", cache=False)
+    idx = build_inverted_index(docs, method="lucene")
     scorer = BayesianBM25SparkScorer(method="lucene", alpha=1.0, beta=0.5).index(docs)
     scorer.save(str(tmp_path / "idx"))
-    loaded = BayesianBM25SparkScorer.from_saved(spark, str(tmp_path / "idx"), cache=False)
-    pidx = build_positional_index(docs, method="lucene", cache=False)
+    loaded = BayesianBM25SparkScorer.from_saved(spark, str(tmp_path / "idx"))
+    pidx = build_positional_index(docs, method="lucene")
     spath = str(tmp_path / "stream")
     ingest_epoch(docs, 0, spath)
     with open(f"{spath}/meta.json", "w") as f:
@@ -981,13 +983,60 @@ def test_one_cached_layout_rule(spark, tmp_path):
         "load_streaming_index": n_parts(streamed.postings),
         "block_max_memo": n_parts(scorer.index_.block_max(128)),
     }
-    scorer.index_.unpersist()
+    for index in (idx, scorer.index_, loaded.index_, pidx):
+        index.unpersist()
     expected = layout_grain(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         spark.sparkContext.defaultParallelism,
         len(SMALL_CORPUS),
     )
     assert counts == dict.fromkeys(counts, expected), counts
+
+
+def test_built_and_loaded_postings_are_persisted(spark, tmp_path):
+    """Both index builds, InvertedIndex.laid_out, from_saved and
+    MultiFieldSparkScorer.load all return persisted postings: no caller
+    chooses whether to cache."""
+    from bayesian_bm25_js_spark.operators.multi_field import MultiFieldSparkScorer
+    from bayesian_bm25_js_spark.operators.phrase import build_positional_index
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+    from bayesian_bm25_js_spark.sources.index_store import load_index
+    from tests.conftest import TWO_FIELD_DOCS
+
+    docs = docs_df(spark, SMALL_CORPUS)
+    path = str(tmp_path / "idx")
+    fields = spark.createDataFrame(
+        [(i, d["title"], d["body"]) for i, d in enumerate(TWO_FIELD_DOCS)],
+        "doc_id long, title array<string>, body array<string>",
+    )
+    mf = MultiFieldSparkScorer(
+        fields=["title", "body"], transform_alpha=1.0, transform_beta=0.5
+    ).index(fields)
+    mf.save(str(tmp_path / "mf"))
+    saved = BayesianBM25SparkScorer(method="lucene", alpha=1.0, beta=0.5)
+    saved.index(docs).save(path)
+    for s in (saved, *mf.scorers.values()):
+        s.index_.unpersist()
+
+    indexes = {
+        "build_inverted_index": build_inverted_index(docs),
+        "build_positional_index": build_positional_index(docs),
+        "laid_out": load_index(spark, path)[0].laid_out(),
+        "from_saved": BayesianBM25SparkScorer.from_saved(spark, path).index_,
+        **{
+            f"MultiFieldSparkScorer.load.{f}": s.index_
+            for f, s in MultiFieldSparkScorer.load(
+                spark, str(tmp_path / "mf")
+            ).scorers.items()
+        },
+    }
+    levels = {
+        name: index.postings.storageLevel.useMemory
+        for name, index in indexes.items()
+    }
+    for index in indexes.values():
+        index.unpersist()
+    assert levels == dict.fromkeys(levels, True), levels
 
 
 def test_index_dataclasses_compare_by_identity(spark):
@@ -999,11 +1048,10 @@ def test_index_dataclasses_compare_by_identity(spark):
     from bayesian_bm25_js_spark.operators.phrase import build_positional_index
 
     docs = docs_df(spark, SMALL_CORPUS)
-    for built in (
-        build_inverted_index(docs, cache=False),
-        build_positional_index(docs, cache=False),
-    ):
+    for build in (build_inverted_index, build_positional_index):
+        built = build(docs)
         twin = dataclasses.replace(built)
         assert built == built and built != twin
         assert len({built, twin, built}) == 2
         assert hash(built) == hash(built) != hash(twin)
+        built.unpersist()

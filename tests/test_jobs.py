@@ -59,7 +59,7 @@ def test_build_then_query_job_roundtrip(spark, tmp_path, capsys):
 
     # re-submission: every stage is sealed, nothing is rewritten
     before = _sealed_state(idx_dir)
-    assert set(before) == {"meta.json", "docs.json", "postings.json", "params.json"}
+    assert set(before) == {"meta.json", "docs.json", "index.json"}
     assert build.main(["--synthesize", "300", "--out", idx, "--base-rate", "auto"]) == 0
     assert _sealed_state(idx_dir) == before
     assert query.main(argv) == 0

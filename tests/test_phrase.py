@@ -100,11 +100,12 @@ def test_phrase_match_randomized_parity(spark):
     phrases = [
         [rng.choice(vocab) for _ in range(rng.randint(1, 4))] for _ in range(12)
     ]
-    idx = build_positional_index(_docs_df(spark, corpus), cache=False)
+    idx = build_positional_index(_docs_df(spark, corpus))
     got = {
         (r["query_id"], r["doc_id"]): r["tf"]
         for r in phrase_match(idx, phrases).collect()
     }
+    idx.unpersist()
     assert got == _brute_counts(corpus, phrases)
 
 
@@ -229,13 +230,14 @@ def test_proximity_randomized_parity(spark):
     queries = [
         [rng.choice(vocab) for _ in range(rng.randint(1, 3))] for _ in range(10)
     ]
-    idx = build_positional_index(_docs_df(spark, corpus), cache=False)
+    idx = build_positional_index(_docs_df(spark, corpus))
     for window in (1, 3, 6):
         got = {
             (r["query_id"], r["doc_id"]): r["tf"]
             for r in proximity_match(idx, queries, window).collect()
         }
         assert got == _brute_prox(corpus, queries, window), window
+    idx.unpersist()
 
 
 def test_proximity_order_free_vs_phrase(spark, pidx):
@@ -301,8 +303,8 @@ def test_positional_build_matches_plain_build(spark):
     from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
 
     docs = _docs_df(spark, PHRASE_CORPUS)
-    plain = build_inverted_index(docs, method="lucene", cache=False)
-    pos = build_positional_index(docs, method="lucene", cache=False)
+    plain = build_inverted_index(docs, method="lucene")
+    pos = build_positional_index(docs, method="lucene")
     assert (pos.n_docs, pos.avgdl) == (plain.n_docs, plain.avgdl)
     for table in ("term_stats", "doc_stats"):
         a, b = getattr(plain, table), getattr(pos, table)
@@ -312,6 +314,8 @@ def test_positional_build_matches_plain_build(spark):
         pos.postings.select(*cols).collect()
     )
     assert pos.postings.filter(F.col("tf") != F.size("positions")).count() == 0
+    plain.unpersist()
+    pos.unpersist()
 
 
 def test_bm25_over_positional_index(spark, pidx):
@@ -340,17 +344,19 @@ def test_bm25_over_positional_index(spark, pidx):
     assert not any("positions" in names for names in scans), scans
 
 
-def test_positional_save_load_laid_out(spark, pidx, tmp_path):
+def test_positional_save_load_laid_out(spark, pidx, tmp_path, monkeypatch):
     """save_index -> load_index -> InvertedIndex.laid_out keeps the
     positions: phrase/proximity results are row-identical to the
     in-memory build."""
+    from bayesian_bm25_js_spark.sources import index_store
     from bayesian_bm25_js_spark.sources.index_store import load_index, save_index
 
+    monkeypatch.setattr(index_store, "N_BUCKETS", 4)
     path = str(tmp_path / "pidx")
-    meta = save_index(pidx, path, n_buckets=4)
-    assert meta["n_docs"] == pidx.n_docs
+    meta = save_index(pidx, path)
+    assert meta["n_docs"] == pidx.n_docs and meta["n_buckets"] == 4
     loaded, _ = load_index(spark, path)
-    loaded = loaded.laid_out(cache=False)
+    loaded = loaded.laid_out()
     assert loaded.avgdl == pidx.avgdl and loaded.method == pidx.method
 
     phrases = [["hash", "join"], ["table", "scan"]]
@@ -363,6 +369,7 @@ def test_positional_save_load_laid_out(spark, pidx, tmp_path):
     pb = proximity_topk(loaded, PROX_QUERIES, 4, k=5).orderBy(
         "query_id", "rank"
     ).collect()
+    loaded.unpersist()
     assert pa and pa == pb
 
 
@@ -371,9 +378,10 @@ def test_phrase_needs_positions(spark):
     to use instead of failing in the analyzer."""
     from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
 
-    idx = build_inverted_index(_docs_df(spark, PHRASE_CORPUS), cache=False)
+    idx = build_inverted_index(_docs_df(spark, PHRASE_CORPUS))
     with pytest.raises(ValueError, match="build_positional_index"):
         phrase_topk(idx, [["hash", "join"]])
+    idx.unpersist()
 
 
 def test_candidate_pruning_parity(spark):
@@ -389,7 +397,7 @@ def test_candidate_pruning_parity(spark):
             doc += ["rare", "hot", "pair"]
         rng.shuffle(doc)
         corpus.append(doc)
-    idx = build_positional_index(_docs_df(spark, corpus), cache=False)
+    idx = build_positional_index(_docs_df(spark, corpus))
     phrases = [["hot", "pair"], ["rare"], ["hot"], ["nope", "hot"]]
     import bayesian_bm25_js_spark.operators.phrase as _ph
 
@@ -412,6 +420,7 @@ def test_candidate_pruning_parity(spark):
             assert base == off, fn.__name__
     finally:
         _ph.CANDIDATE_PRUNE_MIN_DOCS = _orig_floor
+        idx.unpersist()
 
 
 def _min_cover_counts_ref(rows, window: int) -> np.ndarray:
@@ -491,7 +500,7 @@ def _gate_corpus_index(spark):
             doc += ["rare", "hot"]
         rng.shuffle(doc)
         corpus.append(doc)
-    return build_positional_index(_docs_df(spark, corpus), cache=False)
+    return build_positional_index(_docs_df(spark, corpus))
 
 
 def _plans_probe(df):
@@ -537,6 +546,7 @@ def test_prune_hot_query_gate(spark):
         assert base and base == off
     finally:
         _ph.CANDIDATE_PRUNE_MIN_DOCS = orig
+        idx.unpersist()
 
 
 def test_proximity_topk_passes_candidate_limit(spark):
@@ -556,6 +566,7 @@ def test_proximity_topk_passes_candidate_limit(spark):
         assert on and on == off.orderBy("query_id", "rank").collect()
     finally:
         _ph.CANDIDATE_PRUNE_MIN_DOCS = orig
+        idx.unpersist()
 
 
 def test_candidate_pack_key_bounds_fall_back(spark):
@@ -586,12 +597,13 @@ def test_candidate_pack_key_bounds_fall_back(spark):
             docs = spark.createDataFrame(
                 list(zip(ids, corpus)), "doc_id long, tokens array<string>"
             )
-            idx = build_positional_index(docs, cache=False)
+            idx = build_positional_index(docs)
             pruned = phrase_topk(idx, phrases, k=5)
             assert _plans_probe(pruned) == probes, ids[:2]
             rows = pruned.orderBy("query_id", "rank").collect()
             off = phrase_topk(idx, phrases, k=5, candidate_limit=0)
             assert rows and rows == off.orderBy("query_id", "rank").collect()
             assert {r["doc_id"] for r in rows} <= set(ids)
+            idx.unpersist()
     finally:
         _ph.CANDIDATE_PRUNE_MIN_DOCS = orig

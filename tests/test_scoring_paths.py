@@ -1,7 +1,7 @@
 """Contracts of the scale-path scoring choices added in round 2:
 
-* plain-sum scoring (exact_order=False, the default) equals the
-  bit-exact ordered-sum path at the engine's 6-dp float policy;
+* plain-sum scoring equals the reference's bit-exact ordered sum
+  (ordered_sum_scores below) at the engine's 6-dp float policy;
 * terms_filter is physically load-bearing but semantically a no-op;
 * top_k's rounded ranking breaks 6-dp ties deterministically by doc_id
   regardless of ulp-level score noise.
@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from bayesian_bm25_js_spark.operators.index_build import build_inverted_index
 from bayesian_bm25_js_spark.operators.scoring import (
+    _probe,
     queries_to_df,
     score_queries,
     top_k,
@@ -39,10 +40,33 @@ def small_idx(spark):
 QUERIES = [["w0", "w3"], ["w1", "w1", "w7"], ["w49"], ["zzz"]]
 
 
+def ordered_sum_scores(index, query_terms):
+    """score_queries' output with the reference's bit-exact accumulation
+    (bm25.ts:117-123): each doc's contributions summed in query-token
+    order via array_sort(collect_list(struct(pos, contrib))) +
+    aggregate(), because float64 addition is not associative."""
+    postings, qt = _probe(index.postings, query_terms)
+    contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
+    joined = postings.join(F.broadcast(qt), "term_id").select(
+        "query_id", "doc_id", "pos", "is_first", "dl", contrib.alias("contrib")
+    )
+    return joined.groupBy("query_id", "doc_id").agg(
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct("pos", "contrib"))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["contrib"],
+        ).alias("score"),
+        F.sum(F.when(F.col("is_first"), 1).otherwise(0))
+        .cast("int")
+        .alias("tf_overlap"),
+        F.first("dl").alias("dl"),
+    )
+
+
 def test_plain_sum_matches_exact_order_at_policy(spark, small_idx):
     qdf = queries_to_df(spark, QUERIES)
-    fast = score_queries(small_idx, qdf, exact_order=False)
-    exact = score_queries(small_idx, qdf, exact_order=True)
+    fast = score_queries(small_idx, qdf)
+    exact = ordered_sum_scores(small_idx, qdf)
     a = {
         (r["query_id"], r["doc_id"]): (round(r["score"], 6), r["tf_overlap"], r["dl"])
         for r in fast.collect()
@@ -124,6 +148,7 @@ def test_distributed_estimators_match_driver(spark, small_idx):
     equal the driver (reference-port) estimators on the same scores."""
     import numpy as np
 
+    from bayesian_bm25_js_spark.operators import estimate
     from bayesian_bm25_js_spark.operators.estimate import (
         estimate_base_rate,
         estimate_base_rate_distributed,
@@ -147,10 +172,13 @@ def test_distributed_estimators_match_driver(spark, small_idx):
     assert a_x == pytest.approx(a_d, rel=1e-9)
 
     n = small_idx.n_docs
-    for method in ("percentile", "mixture", "elbow"):
-        want = estimate_base_rate(per_query, n, method)
-        got = estimate_base_rate_distributed(scored, n, method, reservoir=10**9)
-        assert got == pytest.approx(want, rel=1e-6), method
+    # a reservoir past every score count keeps mixture/elbow exact
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(estimate, "RESERVOIR", 10**9)
+        for method in ("percentile", "mixture", "elbow"):
+            want = estimate_base_rate(per_query, n, method)
+            got = estimate_base_rate_distributed(scored, n, method)
+            assert got == pytest.approx(want, rel=1e-6), method
     scored.unpersist()
 
 

@@ -261,24 +261,31 @@ def test_block_max_is_lazy_in_routed_retrieve(spark):
     assert s.index_._block_max == {}
 
 
-def test_chunked_retrieve_matches_single_batch(spark_scorer):
-    """Batches wider than max_batch_width split into width-capped
+def test_chunked_retrieve_matches_single_batch(spark_scorer, monkeypatch):
+    """Batches wider than the spill-free width split into width-capped
     sub-batches whose union is row-identical to the one-batch plan
-    (query_id offsets re-aligned per chunk), for every strategy."""
+    (query_id offsets re-aligned per chunk), for every strategy. A zero
+    entries-per-task budget drops the cap to its 256-query floor."""
     queries = [
         ["cat"], ["dog", "bird"], ["cat", "dog"], ["xyzzy"],
         ["bird"], ["cat", "cat"], ["dog"],
-    ]
-    for strategy in ("exhaustive", "wand", "auto"):
-        wide = collect_retrieve(
+    ] * 37
+    wide = {
+        strategy: collect_retrieve(
             spark_scorer.retrieve(queries, 3, strategy=strategy)
         )
+        for strategy in ("exhaustive", "wand", "auto")
+    }
+    assert spark_scorer._spill_free_width() >= len(queries)
+    monkeypatch.setattr(
+        BayesianBM25SparkScorer, "_SPILL_FREE_ENTRIES_PER_TASK", 0
+    )
+    assert spark_scorer._spill_free_width() == 256 < len(queries)
+    for strategy, rows in wide.items():
         chunked = collect_retrieve(
-            spark_scorer.retrieve(
-                queries, 3, strategy=strategy, max_batch_width=2
-            )
+            spark_scorer.retrieve(queries, 3, strategy=strategy)
         )
-        assert chunked == wide, strategy
+        assert chunked == rows, strategy
 
 
 def test_spill_free_width_scales_with_layout(spark_scorer):

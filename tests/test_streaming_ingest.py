@@ -68,7 +68,7 @@ def test_streaming_ingest_matches_batch_build(spark, tmp_path):
     q.awaitTermination(120)
 
     streamed = load_streaming_index(spark, idx_path)
-    batch = build_inverted_index(docs_df(spark, SMALL_CORPUS), cache=False)
+    batch = build_inverted_index(docs_df(spark, SMALL_CORPUS))
 
     assert streamed.n_docs == batch.n_docs
     assert streamed.avgdl == pytest.approx(batch.avgdl)
@@ -84,6 +84,7 @@ def test_streaming_ingest_matches_batch_build(spark, tmp_path):
         (r["query_id"], r["doc_id"], round(r["score"], 10))
         for r in top_k(score_queries(batch, qdf), 3).collect()
     )
+    batch.unpersist()
     assert got == want
 
 
@@ -104,8 +105,9 @@ def test_ingest_epoch_idempotent_retry(spark, tmp_path):
 
     idx = load_streaming_index(spark, idx_path)
     assert idx.n_docs == 3
-    batch = build_inverted_index(docs_df(spark, SMALL_CORPUS[:3]), cache=False)
+    batch = build_inverted_index(docs_df(spark, SMALL_CORPUS[:3]))
     assert _index_tables(idx) == _index_tables(batch)
+    batch.unpersist()
 
 
 def test_incremental_growth_refreshes_global_stats(spark, tmp_path):
@@ -129,10 +131,11 @@ def test_incremental_growth_refreshes_global_stats(spark, tmp_path):
     )
     ingest_epoch(extra, 1, idx_path)
     grown = load_streaming_index(spark, idx_path)
-    batch = build_inverted_index(docs_df(spark, SMALL_CORPUS), cache=False)
+    batch = build_inverted_index(docs_df(spark, SMALL_CORPUS))
     assert grown.n_docs == batch.n_docs
     assert grown.avgdl == pytest.approx(batch.avgdl)
     assert _index_tables(grown) == _index_tables(batch)
+    batch.unpersist()
 
     # idf actually moved for a term whose df grew ('the' appears in the
     # added docs): stale idf from the first snapshot must not survive.
@@ -141,12 +144,14 @@ def test_incremental_growth_refreshes_global_stats(spark, tmp_path):
     assert idf1["the"] != idf0["the"]
 
 
-def test_compact_streaming_index_roundtrip(spark, tmp_path):
+def test_compact_streaming_index_roundtrip(spark, tmp_path, monkeypatch):
     import json
     import os
 
+    from bayesian_bm25_js_spark.sources import index_store
     from bayesian_bm25_js_spark.sources.index_store import load_index
 
+    monkeypatch.setattr(index_store, "N_BUCKETS", 4)
     idx_path = str(tmp_path / "idx")
     out_path = str(tmp_path / "compacted")
     os.makedirs(idx_path, exist_ok=True)
@@ -154,9 +159,10 @@ def test_compact_streaming_index_roundtrip(spark, tmp_path):
         json.dump({"k1": 1.2, "b": 0.75, "method": "robertson"}, f)
     ingest_epoch(docs_df(spark, SMALL_CORPUS), 0, idx_path)
 
-    meta = compact_streaming_index(spark, idx_path, out_path, n_buckets=4)
-    assert meta["n_docs"] == len(SMALL_CORPUS)
+    meta = compact_streaming_index(spark, idx_path, out_path)
+    assert meta["n_docs"] == len(SMALL_CORPUS) and meta["n_buckets"] == 4
 
     compacted, _ = load_index(spark, out_path)
-    batch = build_inverted_index(docs_df(spark, SMALL_CORPUS), cache=False)
+    batch = build_inverted_index(docs_df(spark, SMALL_CORPUS))
     assert _index_tables(compacted) == _index_tables(batch)
+    batch.unpersist()

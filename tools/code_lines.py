@@ -1,11 +1,16 @@
 """Count code lines: no blank, comment-only or docstring lines.
 
 Usage:
-  python tools/code_lines.py [ROOT ...]
+  python tools/code_lines.py [--options] [ROOT ...]
 
 ROOT defaults to bayesian_bm25_js_spark/ and jobs/ under the repo
 root. Prints one "<lines>  <file>" row per .py file, then the total, so
 two revisions can be compared with diff.
+
+--options counts, instead of lines, the defaulted parameters of public
+functions and methods (every def whose name does not start with "_",
+nested ones included; keyword-only parameters count when they have a
+default): the size of the option surface callers can set.
 """
 
 from __future__ import annotations
@@ -57,7 +62,20 @@ def code_lines(source: str) -> int:
     return len(lines)
 
 
+def defaulted_options(source: str) -> int:
+    """Defaulted parameters of the public functions and methods."""
+    return sum(
+        len(node.args.defaults)
+        + sum(d is not None for d in node.args.kw_defaults)
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not node.name.startswith("_")
+    )
+
+
 def py_files(root: str) -> list:
+    if os.path.isfile(root):
+        return [root]
     out = []
     for dirpath, dirnames, files in os.walk(root):
         dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
@@ -66,14 +84,17 @@ def py_files(root: str) -> list:
 
 
 def main(argv=None) -> int:
-    roots = (argv if argv is not None else sys.argv[1:]) or [
-        os.path.join(REPO, r) for r in DEFAULT_ROOTS
-    ]
+    args = list(argv if argv is not None else sys.argv[1:])
+    count = code_lines
+    if "--options" in args:
+        args.remove("--options")
+        count = defaulted_options
+    roots = args or [os.path.join(REPO, r) for r in DEFAULT_ROOTS]
     total = 0
     for root in roots:
         for path in py_files(root):
             with open(path, encoding="utf-8") as f:
-                n = code_lines(f.read())
+                n = count(f.read())
             total += n
             print(f"{n:6d}  {os.path.relpath(path, REPO)}")
     print(f"{total:6d}  total")
